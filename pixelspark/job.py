@@ -78,7 +78,14 @@ def run_daily_billing(
         "status",
         F.when(F.col("amount") <= 0, F.lit("skipped")).otherwise(F.lit("pending")),
     )
-    results = X.charge_shops(plan, target_date, charge_fn, ledger_dir)
+    # the charge stage runs exactly once, here, and both consumers (the
+    # outcome append and the report's status counts) read its stored
+    # rows: a second run would find every ledger key claimed and report
+    # 'duplicate' where the table holds 'success'.  localCheckpoint, not
+    # cache(): a lost block fails the job instead of re-running charges.
+    results = X.charge_shops(plan, target_date, charge_fn, ledger_dir).localCheckpoint(
+        eager=True
+    )
 
     # stage 9: append outcomes as NEW rows (append-as-update)
     enriched = X.enrich_with_results(

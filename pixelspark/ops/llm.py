@@ -11,13 +11,17 @@ pushdown/codegen.
 
 Scale notes per operator:
 * exact dedup          — hash groupBy on the dedup key: one shuffle.
-* MinHash-LSH near-dup — banded: signatures via one explode+groupBy
-  (map-side partial min), candidates via an equi-join on
-  (band, band_hash) buckets.  NO all-pairs crossJoin anywhere; cost is
-  O(sum of bucket^2) which the band/row parameters keep tiny.
+* MinHash-LSH near-dup — ONE banded pipeline: shingle sets, signatures
+  via one explode+groupBy (map-side partial min), candidates via an
+  equi-join on (band_idx, band_key) buckets, exact Jaccard verify.
+  NO all-pairs crossJoin anywhere; cost is O(sum of bucket^2) which
+  the band/row parameters keep tiny.  Two hash families run it and
+  differ only in the per-shingle hash: xxhash64 (fastest) and a
+  portable md5 + mod-p family DuckDB reproduces bit for bit.
 * SimHash              — one explode+groupBy producing a 64-bit
-  fingerprint; near-dup candidates via 16-bit chunk buckets (pigeonhole:
-  hamming<=3 pairs share at least one of 4 chunks).
+  (xxhash64) or 60-bit (portable) fingerprint; near-dup candidates via
+  16-bit chunk buckets (pigeonhole: hamming<=3 pairs share at least
+  one of 4 chunks).
 * ANN                  — brute-force top-k is a broadcast of the (few)
   query vectors over the corpus: embarrassingly parallel, no shuffle of
   the corpus; the LSH variant buckets by hyperplane signs first so the
@@ -27,12 +31,16 @@ Scale notes per operator:
 from __future__ import annotations
 
 import math
-from typing import Iterator
+import operator
+from functools import reduce
+from typing import Callable, Iterator, NamedTuple
 
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from pixelspark.metrics import observed_long
 
 # ---------------------------------------------------------------------------
 # text analysis
@@ -418,6 +426,204 @@ def word_shingles(toks: Column, k: int = 3) -> Column:
     )
 
 
+# ---------------------------------------------------------------------------
+# MinHash-LSH and SimHash: one pipeline, two hash families
+# ---------------------------------------------------------------------------
+#
+# Near-dup detection is ONE pipeline: shingle sets -> signatures -> band
+# buckets -> optional hot-bucket cap -> banded candidate join -> exact
+# Jaccard verification.  The hash family is the only part that differs:
+#   * xxhash64 (near_dup_pairs, minhash_signatures, simhash64): the
+#     fastest JVM-side hash, mh_j = min(xxhash64(xxhash64(shingle), j)).
+#     It exists in no other engine, so these outputs are checked
+#     rows-only.
+#   * portable (portable_near_dup_pairs, cross_corpus_near_dup,
+#     DedupIndex, portable_simhash): md5 + mod-p universal hashing that
+#     DuckDB computes bit for bit, so the oracles check the pipeline
+#     value for value:
+#       h    = int(first 15 hex chars of md5(s), 16)   (< 2^60)
+#       mh_j = (A_j * (h mod p) + B_j) mod p,  p = 2^31 - 1
+#     Products stay < 2^62, so no engine hits integer overflow.
+MERSENNE_P = 2_147_483_647
+
+
+def _portable_coeffs(num_hashes: int) -> list[tuple[int, int]]:
+    coeffs = []
+    a, b = 1, 0
+    for j in range(num_hashes):
+        a = (a * 7919 + 104729) % MERSENNE_P or 1
+        b = (b * 104729 + 7919) % MERSENNE_P
+        coeffs.append((a, b))
+    return coeffs
+
+
+def _md5_60(s: Column) -> Column:
+    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+
+
+class _HashFamily(NamedTuple):
+    hash: Callable[[Column], Column]  # string -> bigint
+    bits: int  # SimHash fingerprint width: the low bits `hash` fills
+    # hash(shingle) -> the num_hashes permuted values MinHash takes the min of
+    minhashes: Callable[[Column, int], list[Column]]
+
+
+_XXHASH = _HashFamily(
+    F.xxhash64, 64, lambda h, n: [F.xxhash64(h, F.lit(j)) for j in range(n)]
+)
+_PORTABLE = _HashFamily(
+    _md5_60,
+    60,
+    lambda h, n: [
+        (F.lit(a) * (h % MERSENNE_P) + F.lit(b)) % MERSENNE_P
+        for a, b in _portable_coeffs(n)
+    ],
+)
+
+# bucket key of one LSH band: the band's signature values joined by
+# "_" — exact (a band collision is a real match, never a hash
+# collision), and the same string the DuckDB oracles and the stored
+# DedupIndex bucket table use
+_BAND = ["band_idx", "band_key"]
+
+
+def _shingle_sets(
+    docs: DataFrame, id_col: str, text_col: str, shingle_k: int
+) -> DataFrame:
+    """(id, shset) — each document's DISTINCT k-shingle set, the one
+    artifact both signatures and Jaccard verification read.  min()
+    over the distinct set equals min() over the multiset, so hashing
+    each distinct shingle once is free."""
+    return spread(docs).select(
+        F.col(id_col),
+        F.array_distinct(word_shingles(tokens(text_col), shingle_k)).alias("shset"),
+    )
+
+
+def _signatures(
+    shingle_sets: DataFrame, id_col: str, num_hashes: int, family: _HashFamily
+) -> DataFrame:
+    """(id, mh_0 .. mh_{num_hashes-1}): explode the shingles once and
+    take every per-permutation min in a single groupBy (partial
+    aggregation makes it one map-combined shuffle).  Each shingle
+    string is hashed ONCE and the permutations derive from that 8-byte
+    value — string hashing dominates the cost, so this is ~num_hashes
+    x cheaper than num_hashes seeded string hashes."""
+    perms = family.minhashes(F.col("h0"), num_hashes)
+    return (
+        shingle_sets.select(F.col(id_col), F.explode("shset").alias("shingle"))
+        .select(F.col(id_col), family.hash(F.col("shingle")).alias("h0"))
+        .groupBy(id_col)
+        .agg(*[F.min(p).alias(f"mh_{j}") for j, p in enumerate(perms)])
+    )
+
+
+def _band_buckets(
+    sigs: DataFrame, id_col: str, bands: int, rows_per_band: int
+) -> DataFrame:
+    """(id, band_idx, band_key): one bucket row per document and band."""
+    keys = F.array(
+        *[
+            F.concat_ws(
+                "_", *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
+            )
+            for b in range(bands)
+        ]
+    )
+    return sigs.select(F.col(id_col), F.posexplode(keys).alias("band_idx", "band_key"))
+
+
+def _capped(buckets: DataFrame, keys: list[str], max_size: int | None) -> DataFrame:
+    """The 100-TB hot-bucket guard: drop the rows of every bucket (one
+    `keys` group) holding more than `max_size` rows; None keeps all.
+    Candidate count inside a bucket is quadratic in its size, and real
+    corpora have pathological buckets (boilerplate headers, templated
+    pages) that would turn the bucket equi-join into an accidental
+    cross join.  The survivor list is one row per bucket, semi-joined
+    on the same key the candidate join shuffles on."""
+    if max_size is None:
+        return buckets
+    ok = (
+        buckets.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__bsz"))
+        .where(F.col("__bsz") <= max_size)
+        .drop("__bsz")
+    )
+    return buckets.join(ok, keys, "left_semi")
+
+
+def _candidate_pairs(
+    a: DataFrame,
+    b: DataFrame | None,
+    keys: list[str],
+    id_col: str,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The banded candidate join: distinct (id_a, id_b) of bucket rows
+    of `a` and `b` that share a `keys` bucket, plus each side's `carry`
+    columns as <col>_a / <col>_b.  `b=None` joins `a` with itself and
+    keeps each unordered pair once (id_a < id_b).  An equi-join, never
+    an all-pairs product: cost is O(sum of bucket^2)."""
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    if b is None:
+        b = a
+        on.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    cols = [F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")]
+    cols += [F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"]
+    return a.alias("a").join(b.alias("b"), on).select(*cols).distinct()
+
+
+def _verified(
+    cands: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    id_col: str,
+    threshold: float,
+) -> DataFrame:
+    """(id_a, id_b, jaccard) of the candidates whose exact shingle-set
+    Jaccard is >= threshold.  Verification reads the SAME k-shingle
+    space the signatures hash — MinHash estimates shingle-set Jaccard,
+    so verifying on another token space would filter with an
+    unrelated similarity."""
+    return (
+        cands.join(sets_a.select(F.col(id_col).alias("id_a"), F.col("shset").alias("sh_a")), "id_a")
+        .join(sets_b.select(F.col(id_col).alias("id_b"), F.col("shset").alias("sh_b")), "id_b")
+        .select("id_a", "id_b", jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
+def _near_dup_pairs(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    threshold: float,
+    num_hashes: int,
+    shingle_k: int,
+    bands: int,
+    max_bucket_size: int | None,
+    family: _HashFamily,
+) -> DataFrame:
+    """The within-corpus pipeline both families run.
+
+    The shingle sets are computed ONCE and materialized (lazy
+    localCheckpoint): the signature explode and both verification
+    joins read the stored arrays (~40% faster than recomputing the
+    shingling; localCheckpoint persists MEMORY_AND_DISK so the reuse
+    survives executor memory pressure at scale).  The signatures are
+    materialized too, so the bucket self-join reads one computed stage
+    instead of re-running the explode+hash+groupBy per join side.
+    localCheckpoint rather than .cache() (r12): CacheManager matches
+    cached plans globally, so a second identical invocation — e.g. a
+    later bench pass — would silently read the first invocation's
+    blocks instead of recomputing; checkpoint blocks are scoped to
+    this DataFrame."""
+    sets = _shingle_sets(docs, id_col, text_col, shingle_k).localCheckpoint(eager=False)
+    sigs = _signatures(sets, id_col, num_hashes, family).localCheckpoint(eager=False)
+    cands = lsh_candidate_pairs(sigs, id_col, bands, num_hashes // bands, max_bucket_size)
+    return _verified(cands, sets, sets, id_col, threshold)
+
+
 def minhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -425,23 +631,24 @@ def minhash_signatures(
     num_hashes: int = 32,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """MinHash signature per document: explode shingles once, take the
-    per-seed min of xxhash64(shingle, seed) in a single groupBy (partial
-    aggregation makes this one map-combined shuffle)."""
-    # no dropDuplicates: min() is duplicate-insensitive, so deduping
-    # shingles first would only add a shuffle without changing results.
-    # Hash the (variable-length) shingle string ONCE, then derive the
-    # hash family from the 8-byte value — string hashing dominates the
-    # cost, so this is ~num_hashes x cheaper than num_hashes string
-    # hashes with different seeds.
-    sh = spread(docs).select(
-        F.col(id_col),
-        F.explode(word_shingles(tokens(text_col), shingle_k)).alias("shingle"),
-    ).select(F.col(id_col), F.xxhash64("shingle").alias("h0"))
-    aggs = [
-        F.min(F.xxhash64("h0", F.lit(j))).alias(f"mh_{j}") for j in range(num_hashes)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
+    """MinHash signature (mh_0 .. mh_{num_hashes-1}) per document on the
+    xxhash64 family."""
+    return _signatures(
+        _shingle_sets(docs, id_col, text_col, shingle_k), id_col, num_hashes, _XXHASH
+    )
+
+
+def portable_minhash_signatures(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 32,
+    shingle_k: int = 3,
+) -> DataFrame:
+    """MinHash signatures on the portable (md5, mod-p) family."""
+    return _signatures(
+        _shingle_sets(docs, id_col, text_col, shingle_k), id_col, num_hashes, _PORTABLE
+    )
 
 
 def lsh_candidate_pairs(
@@ -451,54 +658,24 @@ def lsh_candidate_pairs(
     rows_per_band: int = 4,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Banded LSH: hash each band of the signature, bucket-join on
-    (band_idx, band_hash), emit unordered candidate pairs (a < b).
-    This is the scale path — candidate generation is an equi-join, not
-    an all-pairs product.
+    """Banded LSH over a signature table of either family: split each
+    signature into `bands` bands of `rows_per_band` values, bucket-join
+    on (band_idx, band_key), emit unordered candidate pairs (a < b).
+    These are exactly the candidates near_dup_pairs and
+    portable_near_dup_pairs verify.
 
-    `max_bucket_size` is the 100-TB hot-bucket guard: candidate count
-    inside one bucket is quadratic in its size, and real corpora have
-    pathological buckets (boilerplate headers, templated pages — one
-    shared band hash over millions of docs turns the equi-join into an
-    accidental cross join).  Buckets above the cap are DROPPED before
-    the join: standard LSH practice (a bucket that common is
-    boilerplate, not near-duplication, and its members still pair in
-    their other bands when genuinely similar).  The cap bounds
-    worst-case join output at buckets x cap^2 regardless of input
-    skew.  None (default) keeps exact parity with the cross-engine
-    oracles; production callers at scale should set it."""
-    band_hashes = F.array(
-        *[
-            F.hash(*[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)])
-            for b in range(bands)
-        ]
+    `max_bucket_size` is the opt-in hot-bucket guard (see _capped):
+    buckets above the cap are DROPPED before the join — standard LSH
+    practice, since a bucket that common is boilerplate, not
+    near-duplication, and its members still pair in their other bands
+    when genuinely similar.  The cap bounds worst-case join output at
+    buckets x cap^2 regardless of input skew.  None (default) keeps
+    exact parity with the cross-engine oracles; production callers at
+    scale should set it."""
+    buckets = _capped(
+        _band_buckets(signatures, id_col, bands, rows_per_band), _BAND, max_bucket_size
     )
-    buckets = signatures.select(
-        F.col(id_col), F.posexplode(band_hashes).alias("band_idx", "band_hash")
-    )
-    if max_bucket_size is not None:
-        w_count = (
-            buckets.groupBy("band_idx", "band_hash")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .where(F.col("__bsz") <= max_bucket_size)
-            .drop("__bsz")
-        )
-        # keep only rows in surviving buckets: broadcast-free semi join
-        # on the bucket key (the survivor list is one row per bucket,
-        # shuffled on the same key the candidate join uses)
-        buckets = buckets.join(w_count, ["band_idx", "band_hash"], "left_semi")
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    return _candidate_pairs(buckets, None, _BAND, id_col)
 
 
 def jaccard(tok_a: Column, tok_b: Column) -> Column:
@@ -518,45 +695,32 @@ def near_dup_pairs(
     bands: int = 8,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """MinHash-LSH near-duplicate pipeline: signatures -> banded
-    candidates -> exact Jaccard verification >= threshold.
-    `max_bucket_size` forwards to lsh_candidate_pairs (hot-bucket
-    guard for skewed corpora; None keeps oracle parity).
-
-    Verification uses the SAME k-shingle space the signatures hash —
-    MinHash approximates shingle-set Jaccard, so verifying on a
-    different token space would filter with an unrelated similarity.
-
-    The shingle sets are computed ONCE and materialized (lazy
-    localCheckpoint): both the signature explode and the verification
-    join read the stored arrays (~40% faster than recomputing the
-    shingling; localCheckpoint persists MEMORY_AND_DISK so the reuse
-    survives executor memory pressure at scale).  localCheckpoint
-    rather than .cache() (r12): CacheManager matches cached plans
-    globally, so a *second identical invocation* — e.g. a later bench
-    pass — would silently read the first invocation's blocks instead
-    of recomputing; checkpoint blocks are scoped to this DataFrame.
-    The signature table is materialized too, so the bucket self-join
-    inside lsh_candidate_pairs reads one computed stage instead of
-    duplicating the explode+groupBy pipeline per join side.
-    """
-    rows_per_band = num_hashes // bands
-    shingle_sets = spread(docs).select(
-        F.col(id_col),
-        F.array_distinct(word_shingles(tokens(text_col), shingle_k)).alias("shset"),
-    ).localCheckpoint(eager=False)
-    sh = shingle_sets.select(F.col(id_col), F.explode("shset").alias("shingle")).select(
-        F.col(id_col), F.xxhash64("shingle").alias("h0")
+    """MinHash-LSH near-duplicate pairs on the xxhash64 family:
+    signatures -> banded candidates -> exact Jaccard verification
+    >= threshold, as (id_a < id_b, jaccard).  `max_bucket_size`
+    forwards to lsh_candidate_pairs (hot-bucket guard for skewed
+    corpora; None keeps oracle parity)."""
+    return _near_dup_pairs(
+        docs, id_col, text_col, threshold, num_hashes, shingle_k, bands,
+        max_bucket_size, _XXHASH,
     )
-    sigs = sh.groupBy(id_col).agg(
-        *[F.min(F.xxhash64("h0", F.lit(j))).alias(f"mh_{j}") for j in range(num_hashes)]
-    ).localCheckpoint(eager=False)
-    cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band, max_bucket_size)
-    return (
-        cands.join(shingle_sets.withColumnRenamed(id_col, "id_a").withColumnRenamed("shset", "sh_a"), "id_a")
-        .join(shingle_sets.withColumnRenamed(id_col, "id_b").withColumnRenamed("shset", "sh_b"), "id_b")
-        .select("id_a", "id_b", jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
+
+
+def portable_near_dup_pairs(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    threshold: float = 0.5,
+    num_hashes: int = 32,
+    shingle_k: int = 3,
+    bands: int = 8,
+) -> DataFrame:
+    """near_dup_pairs on the portable (md5, mod-p) family: signatures,
+    banding, candidates AND verification are reproducible in DuckDB,
+    so the driver's oracle checks the pipeline value for value."""
+    return _near_dup_pairs(
+        docs, id_col, text_col, threshold, num_hashes, shingle_k, bands,
+        None, _PORTABLE,
     )
 
 
@@ -587,12 +751,9 @@ def ngram_jaccard_pairs(
             "pairs) — bound the input with max_id/max_rows or use the bucketed "
             "near_dup_pairs / minhash_lsh_pairs path"
         )
-    grams = d.select(
-        F.col(id_col),
-        F.array_distinct(word_shingles(tokens(text_col), n)).alias("grams"),
-    )
-    a = grams.select(F.col(id_col).alias("id_a"), F.col("grams").alias("g_a"))
-    b = grams.select(F.col(id_col).alias("id_b"), F.col("grams").alias("g_b"))
+    grams = _shingle_sets(d, id_col, text_col, n)
+    a = grams.select(F.col(id_col).alias("id_a"), F.col("shset").alias("g_a"))
+    b = grams.select(F.col(id_col).alias("id_b"), F.col("shset").alias("g_b"))
     return (
         a.crossJoin(b)
         .where(F.col("id_a") < F.col("id_b"))
@@ -626,56 +787,6 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.size(tokens(text_col)).alias("n_tokens"),
         quality_expr(text_col).alias("quality"),
     )
-
-
-_OBSERVED_LONG_WARNED = False
-
-
-def _observed_long(obs, key: str) -> int | None:
-    """Bounded read of an Observation metric (same discipline as
-    table.py's observed(): getOrEmpty polls, never the blocking get;
-    give up after ~0.5 s and let the caller run its fallback job).
-
-    Depends on PySpark's private Observation._jo / JVM getOrEmpty; if
-    a Spark upgrade removes them every convergence round would
-    silently pay the 0.5 s poll plus the fallback probe job — so the
-    first fallback logs a one-time warning (r12 advice) instead of
-    degrading invisibly."""
-    import time as _time
-
-    jo = getattr(obs, "_jo", None)
-    if jo is None:
-        _warn_observed_long_dead("Observation._jo is missing")
-        return None
-    for _ in range(10):
-        try:
-            m = jo.getOrEmpty()
-            if not m.isEmpty():
-                return int(m.apply(key))
-        except Exception as e:
-            # getOrEmpty legitimately throws while the row is unset on
-            # this build — only a MISSING METHOD (py4j "does not
-            # exist") means the private API moved under us
-            if "does not exist" in str(e):
-                _warn_observed_long_dead("JVM getOrEmpty is gone")
-                return None
-        _time.sleep(0.05)
-    return None
-
-
-def _warn_observed_long_dead(why: str) -> None:
-    global _OBSERVED_LONG_WARNED
-    if not _OBSERVED_LONG_WARNED:
-        _OBSERVED_LONG_WARNED = True
-        import warnings
-
-        warnings.warn(
-            f"observe-based convergence counter unavailable ({why}); "
-            "every dedup round will poll ~0.5s then run a fallback "
-            "probe job — a Spark-internals change likely broke "
-            "_observed_long",
-            RuntimeWarning,
-        )
 
 
 def dedup_clusters(
@@ -744,7 +855,7 @@ def dedup_clusters(
             .localCheckpoint(eager=True)
         )
         labels = ckpt.select("id", "cluster_id")
-        n_changed = _observed_long(obs, "n_changed")
+        n_changed = observed_long(obs, "n_changed")
         if n_changed is None:  # listener missed: fall back to a probe job
             n_changed = ckpt.where("changed").limit(1).count()
         if n_changed == 0:
@@ -877,157 +988,16 @@ def dedup_clusters_star(
     )
 
 
-# Portable MinHash family: the production path uses xxhash64 (fastest
-# JVM-side), but xxhash64 exists in no other engine — so for
-# cross-engine verification we provide a second family built from
-# md5 + mod-p universal hashing that DuckDB can compute bit-for-bit:
-#   h   = int(first 15 hex chars of md5(shingle), 16)   (< 2^60)
-#   mh_j = (A_j * (h mod p) + B_j) mod p,  p = 2^31 - 1
-# Products stay < 2^62, so no engine hits integer overflow.
-MERSENNE_P = 2_147_483_647
-
-
-def _portable_coeffs(num_hashes: int) -> list[tuple[int, int]]:
-    coeffs = []
-    a, b = 1, 0
-    for j in range(num_hashes):
-        a = (a * 7919 + 104729) % MERSENNE_P or 1
-        b = (b * 104729 + 7919) % MERSENNE_P
-        coeffs.append((a, b))
-    return coeffs
-
-
-def _portable_shingle_sets(
-    docs: DataFrame, id_col: str, text_col: str, shingle_k: int
-) -> DataFrame:
-    """(id, shset) — each document's DISTINCT k-shingle set, the one
-    artifact both signature generation and Jaccard verification read."""
-    return spread(docs).select(
-        F.col(id_col),
-        F.array_distinct(word_shingles(tokens(text_col), shingle_k)).alias("shset"),
-    )
-
-
-def _portable_sigs_from_sets(
-    shingle_sets: DataFrame, id_col: str, num_hashes: int
-) -> DataFrame:
-    """Portable MinHash signatures from precomputed shingle SETS.
-    min() over the distinct set equals min() over the raw shingle
-    multiset, so hashing each distinct shingle once is free — md5 is
-    the dominant per-row cost of this family."""
-    sh = shingle_sets.select(
-        F.col(id_col), F.explode("shset").alias("shingle")
-    ).select(
-        F.col(id_col),
-        (F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long") % MERSENNE_P).alias("hp"),
-    )
-    aggs = [
-        F.min((F.lit(a) * F.col("hp") + F.lit(b)) % MERSENNE_P).alias(f"mh_{j}")
-        for j, (a, b) in enumerate(_portable_coeffs(num_hashes))
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
-
-
-def portable_minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """MinHash signatures from the portable (md5, mod-p) family."""
-    return _portable_sigs_from_sets(
-        _portable_shingle_sets(docs, id_col, text_col, shingle_k),
-        id_col,
-        num_hashes,
-    )
-
-
-def portable_near_dup_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    num_hashes: int = 32,
-    shingle_k: int = 3,
-    bands: int = 8,
-) -> DataFrame:
-    """The full banded MinHash-LSH pipeline on the portable family —
-    candidate generation AND verification reproducible in DuckDB, so
-    the driver's oracle checks the pipeline value-for-value.
-
-    Shape (r12 optimization, guide §2.3/§2.4): the distinct shingle
-    sets are materialized ONCE (lazy localCheckpoint) and feed BOTH
-    the signature explode and the Jaccard verification joins — before
-    this the self-join on buckets duplicated the entire
-    shingle+md5+groupBy pipeline per side and the verification re-ran
-    the shingling twice more (4 executions total; the before/after
-    plans are plans/r12/q_minhash_pairs_*.txt).  md5 now hashes each
-    DISTINCT shingle once — min() over the distinct set equals min()
-    over the multiset — and the bucket table is materialized so the
-    candidate self-join reads one stage, not two pipeline copies.
-    localCheckpoint (not .cache()) on purpose: it is scoped to this
-    DataFrame, so a later identical invocation can never silently
-    reuse a previous run's blocks the way CacheManager plan-matching
-    does — every bench pass recomputes from parquet."""
-    rows_per_band = num_hashes // bands
-    shingle_sets = _portable_shingle_sets(
-        docs, id_col, text_col, shingle_k
-    ).localCheckpoint(eager=False)
-    sigs = _portable_sigs_from_sets(shingle_sets, id_col, num_hashes)
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                "_", *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-            )
-            for b in range(bands)
-        ]
-    )
-    buckets = sigs.select(
-        F.col(id_col), F.posexplode(band_keys).alias("band_idx", "band_key")
-    ).localCheckpoint(eager=False)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    return (
-        cands.join(shingle_sets.withColumnRenamed(id_col, "id_a").withColumnRenamed("shset", "sh_a"), "id_a")
-        .join(shingle_sets.withColumnRenamed(id_col, "id_b").withColumnRenamed("shset", "sh_b"), "id_b")
-        .select("id_a", "id_b", jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
-def _buckets_from_sigs(
-    sigs: DataFrame, id_col: str, num_hashes: int, bands: int
-) -> DataFrame:
-    """(id, band_idx, band_key) from a signature table."""
-    rows_per_band = num_hashes // bands
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                "_", *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-            )
-            for b in range(bands)
-        ]
-    )
-    return sigs.select(F.col(id_col), F.posexplode(band_keys).alias("band_idx", "band_key"))
-
-
-def _portable_band_buckets(
+def _portable_artifacts(
     docs: DataFrame, id_col: str, text_col: str, num_hashes: int, shingle_k: int, bands: int
-) -> DataFrame:
-    """(id, band_idx, band_key) bucket table from portable signatures —
-    the precomputable/storable artifact of incremental dedup."""
-    sigs = portable_minhash_signatures(docs, id_col, text_col, num_hashes, shingle_k)
-    return _buckets_from_sigs(sigs, id_col, num_hashes, bands)
+) -> tuple[DataFrame, DataFrame]:
+    """(shingle sets, band buckets) of one side of an incremental dedup
+    on the portable family — the artifacts DedupIndex stores.  The
+    sets materialize once (lazy localCheckpoint) and feed both the
+    bucket table and the verification join (r12; guide §2.3)."""
+    sets = _shingle_sets(docs, id_col, text_col, shingle_k).localCheckpoint(eager=False)
+    sigs = _signatures(sets, id_col, num_hashes, _PORTABLE)
+    return sets, _band_buckets(sigs, id_col, bands, num_hashes // bands)
 
 
 def cross_corpus_near_dup(
@@ -1042,12 +1012,12 @@ def cross_corpus_near_dup(
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Incremental dedup: find near-dups of a NEW batch against an
-    EXISTING corpus only — no within-side pairs.
+    EXISTING corpus only — no within-side pairs.  Portable family.
 
     This is the shape dedup actually takes at 100 TB: the corpus's
-    bucket table (see _portable_band_buckets) is computed once and
-    stored; each daily ingest builds buckets for its own batch (tiny)
-    and equi-joins them against the stored table — O(batch), never
+    bucket table (see DedupIndex) is computed once and stored; each
+    daily ingest builds buckets for its own batch (tiny) and
+    equi-joins them against the stored table — O(batch), never
     O(corpus^2) or even O(corpus) re-hashing.  Candidates are verified
     by exact Jaccard on the shingle sets of the matched rows only.
 
@@ -1057,79 +1027,61 @@ def cross_corpus_near_dup(
     million candidates.  None = exact oracle parity.
 
     Returns (id_a = existing doc, id_b = new doc, jaccard)."""
-    # each side's distinct shingle sets materialize once (lazy
-    # localCheckpoint) and feed both its bucket table and the
-    # verification join — same single-pass shape as
-    # portable_near_dup_pairs (r12; guide §2.3)
-    ss_e = _portable_shingle_sets(existing, id_col, text_col, shingle_k).localCheckpoint(eager=False)
-    ss_n = _portable_shingle_sets(new, id_col, text_col, shingle_k).localCheckpoint(eager=False)
-    be = _buckets_from_sigs(
-        _portable_sigs_from_sets(ss_e, id_col, num_hashes), id_col, num_hashes, bands
-    ).alias("a")
-    bn = _buckets_from_sigs(
-        _portable_sigs_from_sets(ss_n, id_col, num_hashes), id_col, num_hashes, bands
-    ).alias("b")
-    if max_bucket_size is not None:
-        survivors = (
-            be.groupBy("band_idx", "band_key")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .where(F.col("__bsz") <= max_bucket_size)
-            .drop("__bsz")
-        )
-        be = be.join(survivors, ["band_idx", "band_key"], "left_semi").alias("a")
-    cands = (
-        be.join(
-            bn,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-
-    return (
-        cands.join(
-            ss_e.select(F.col(id_col).alias("id_a"), F.col("shset").alias("sh_a")),
-            "id_a",
-        )
-        .join(
-            ss_n.select(F.col(id_col).alias("id_b"), F.col("shset").alias("sh_b")),
-            "id_b",
-        )
-        .select("id_a", "id_b", jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    ss_e, be = _portable_artifacts(existing, id_col, text_col, num_hashes, shingle_k, bands)
+    ss_n, bn = _portable_artifacts(new, id_col, text_col, num_hashes, shingle_k, bands)
+    cands = _candidate_pairs(_capped(be, _BAND, max_bucket_size), bn, _BAND, id_col)
+    return _verified(cands, ss_e, ss_n, id_col, threshold)
 
 
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash64(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+def _simhash(
+    docs: DataFrame, id_col: str, text_col: str, family: _HashFamily
 ) -> DataFrame:
-    """64-bit SimHash per document: per-token xxhash64, per-bit vote
-    (+1 if set else -1) summed across tokens, bit j of the fingerprint
-    set iff the vote is positive.  One explode + one groupBy (64 sum
-    aggregates fuse into a single partial-aggregated shuffle)."""
-    tok = docs.select(
+    """(id, simhash) per document: hash each distinct token, vote per
+    bit (+1 if set else -1) summed across tokens, bit j of the
+    fingerprint set iff the vote is positive.  One explode + one
+    groupBy (the per-bit sum aggregates fuse into a single
+    partial-aggregated shuffle)."""
+    h = docs.select(
         F.col(id_col), F.explode(F.array_distinct(tokens(text_col))).alias("tok")
-    ).withColumn("h", F.xxhash64("tok"))
-    votes = tok.groupBy(id_col).agg(
+    ).select(F.col(id_col), family.hash(F.col("tok")).alias("h"))
+    votes = h.groupBy(id_col).agg(
         *[
             F.sum(
                 F.when(F.shiftrightunsigned(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
             ).alias(f"v_{j}")
-            for j in range(64)
+            for j in range(family.bits)
         ]
     )
-    fp = None
-    for j in range(64):
-        # building the bit pattern by adding disjoint powers of two is
-        # exact in two's complement, including the sign bit (j=63)
-        term = F.when(F.col(f"v_{j}") > 0, F.lit(1).cast("long") * F.lit(2 ** j if j < 63 else -(2 ** 63)).cast("long")).otherwise(F.lit(0).cast("long"))
-        fp = term if fp is None else fp + term
+    # adding disjoint powers of two is exact in two's complement,
+    # including the sign bit (j=63)
+    fp = reduce(
+        operator.add,
+        [
+            F.when(F.col(f"v_{j}") > 0, F.lit(1 << j if j < 63 else -(1 << 63)).cast("long"))
+            .otherwise(F.lit(0).cast("long"))
+            for j in range(family.bits)
+        ],
+    )
     return votes.select(F.col(id_col), fp.alias("simhash"))
+
+
+def simhash64(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """64-bit SimHash per document on the xxhash64 family."""
+    return _simhash(docs, id_col, text_col, _XXHASH)
+
+
+def portable_simhash(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """60-bit SimHash per document on the portable md5-derived token
+    hash, which the DuckDB oracle reproduces bit for bit."""
+    return _simhash(docs, id_col, text_col, _PORTABLE)
 
 
 def simhash_chunks(sim_col: Column, chunk_bits: int = 16) -> Column:
@@ -1157,36 +1109,18 @@ def simhash_near_pairs(
     shared by a boilerplate cluster makes its bucket quadratic; capped
     buckets are dropped before the join (None = exact parity with the
     cross-engine oracles)."""
-    buckets = sims.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.posexplode(simhash_chunks(F.col("simhash"))).alias("chunk_idx", "chunk_val"),
+    keys = ["chunk_idx", "chunk_val"]
+    buckets = _capped(
+        sims.select(
+            F.col(id_col),
+            F.col("simhash"),
+            F.posexplode(simhash_chunks(F.col("simhash"))).alias(*keys),
+        ),
+        keys,
+        max_bucket_size,
     )
-    if max_bucket_size is not None:
-        survivors = (
-            buckets.groupBy("chunk_idx", "chunk_val")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .where(F.col("__bsz") <= max_bucket_size)
-            .drop("__bsz")
-        )
-        buckets = buckets.join(survivors, ["chunk_idx", "chunk_val"], "left_semi")
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+    cands = _candidate_pairs(buckets, None, keys, id_col, carry=("simhash",))
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return cands.select("id_a", "id_b", hamming.alias("hamming")).where(
         F.col("hamming") <= max_hamming
     )
@@ -2134,15 +2068,11 @@ def duplicate_spans(
     # per join side (r12; guide §2.4 — at scale the two sides are the
     # same relation and should be computed once, locally the broadcast
     # conversion of one side was defeating ReusedExchange)
-    g = positioned_grams(docs, k, id_col, text_col).localCheckpoint(eager=False)
-    if max_postings is not None:
-        survivors = (
-            g.groupBy("gram_fp")
-            .agg(F.count(F.lit(1)).alias("__psz"))
-            .where(F.col("__psz") <= max_postings)
-            .drop("__psz")
-        )
-        g = g.join(survivors, "gram_fp", "left_semi")
+    g = _capped(
+        positioned_grams(docs, k, id_col, text_col).localCheckpoint(eager=False),
+        ["gram_fp"],
+        max_postings,
+    )
     a = g.alias("a")
     b = g.alias("b")
     pairs = a.join(
@@ -2619,19 +2549,6 @@ class DedupIndex:
         self.buckets = SnapshotTable(spark, f"{root.rstrip('/')}/buckets")
         self.shingles = SnapshotTable(spark, f"{root.rstrip('/')}/shingles")
 
-    def _batch_artifacts(self, docs: DataFrame):
-        b = _portable_band_buckets(
-            docs, self.id_col, self.text_col, self.num_hashes,
-            self.shingle_k, self.bands,
-        )
-        sh = docs.select(
-            F.col(self.id_col),
-            F.array_distinct(
-                word_shingles(tokens(self.text_col), self.shingle_k)
-            ).alias("sh"),
-        )
-        return b, sh
-
     @staticmethod
     def _pre_batch_version(table, app_id: str, batch_id: int) -> int | None:
         """Version of `table` just BEFORE (app_id, batch_id) committed —
@@ -2658,21 +2575,6 @@ class DedupIndex:
             "commit is no longer in history (vacuumed); cannot replay pairs"
         )
 
-    def _capped(self, be: DataFrame) -> DataFrame:
-        """The hot-bucket cap as ONE rule shared by probe time
-        (ingest's corpus side) and maintenance time (compact's
-        recap): bucket rows whose (band_idx, band_key) group exceeds
-        max_bucket_size are excluded.  No-op when uncapped."""
-        if self.max_bucket_size is None:
-            return be
-        ok = (
-            be.groupBy("band_idx", "band_key")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .where(F.col("__bsz") <= self.max_bucket_size)
-            .drop("__bsz")
-        )
-        return be.join(ok, ["band_idx", "band_key"], "left_semi")
-
     def ingest(
         self,
         docs: DataFrame,
@@ -2683,7 +2585,13 @@ class DedupIndex:
         jaccard) of `docs` against the index as of before this batch,
         then append the batch's artifacts (exactly-once when
         `batch_id` is given)."""
-        b_new, sh_new = self._batch_artifacts(docs)
+        # the batch is shingled once: its sets feed its buckets, its
+        # stored `sh` rows and the verification join
+        sets_new, b_new = _portable_artifacts(
+            docs, self.id_col, self.text_col, self.num_hashes,
+            self.shingle_k, self.bands,
+        )
+        sh_new = sets_new.withColumnRenamed("shset", "sh")
         if batch_id is not None:
             read_v = self._pre_batch_version(self.buckets, app_id, batch_id)
             sh_v = self._pre_batch_version(self.shingles, app_id, batch_id)
@@ -2698,32 +2606,11 @@ class DedupIndex:
                 [], "id_a long, id_b long, jaccard double"
             )
         else:
-            be = self._capped(self.buckets.read(version=read_v)).alias("a")
-            cands = (
-                be.join(
-                    b_new.alias("b"),
-                    (F.col("a.band_idx") == F.col("b.band_idx"))
-                    & (F.col("a.band_key") == F.col("b.band_key")),
-                )
-                .select(
-                    F.col(f"a.{self.id_col}").alias("id_a"),
-                    F.col(f"b.{self.id_col}").alias("id_b"),
-                )
-                .distinct()
-            )
-            corpus_sh = self.shingles.read(version=sh_v).select(
-                F.col(self.id_col).alias("id_a"), F.col("sh").alias("sh_a")
-            )
-            pairs = (
-                cands.join(corpus_sh, "id_a")
-                .join(
-                    sh_new.select(F.col(self.id_col).alias("id_b"),
-                                  F.col("sh").alias("sh_b")),
-                    "id_b",
-                )
-                .select("id_a", "id_b",
-                        jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
-                .where(F.col("jaccard") >= self.threshold)
+            be = _capped(self.buckets.read(version=read_v), _BAND, self.max_bucket_size)
+            corpus_sets = self.shingles.read(version=sh_v).withColumnRenamed("sh", "shset")
+            pairs = _verified(
+                _candidate_pairs(be, b_new, _BAND, self.id_col),
+                corpus_sets, sets_new, self.id_col, self.threshold,
             )
 
         if batch_id is not None:
@@ -2773,7 +2660,9 @@ class DedupIndex:
             # the overwrite IS the buckets compaction (one new dir);
             # the SAME cap rule probes apply at query time (_capped)
             # is what gets materialized, so the two can never drift
-            self.buckets.overwrite(self._capped(self.buckets.read()))
+            self.buckets.overwrite(
+                _capped(self.buckets.read(), _BAND, self.max_bucket_size)
+            )
         else:
             self.buckets.compact(num_files=num_files)
         self.shingles.compact(num_files=num_files)

@@ -3106,7 +3106,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     token hash: the whole fingerprint computation is reproduced by the
     DuckDB oracle.  The 64-bit xxhash64 production variant is
     registered as q_simhash_fast."""
-    return _portable_simhash_df(spark, sf_dir)
+    return L.portable_simhash(_t(spark, sf_dir, "documents"))
 
 
 @query("q_simhash_fast")  # xxhash64 has no DuckDB equivalent -> rows-only
@@ -4969,38 +4969,11 @@ def _portable_simhash_oracle(bits: int = 60) -> str:
     """
 
 
-def _portable_simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """60-bit SimHash on the portable md5-derived token hash — the
-    computation _portable_simhash_oracle reproduces in DuckDB.  Shared
-    by the driver-contract name q_simhash and its registry alias
-    q_simhash_portable."""
-    d = _t(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", F.explode(F.array_distinct(L.tokens("text"))).alias("tok")
-    ).select(
-        "doc_id",
-        F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long").alias("h"),
-    )
-    votes = tok.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftrightunsigned(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"v_{j}")
-            for j in range(60)
-        ]
-    )
-    fp = None
-    for j in range(60):
-        term = F.when(F.col(f"v_{j}") > 0, F.lit(1 << j).cast("long")).otherwise(F.lit(0).cast("long"))
-        fp = term if fp is None else fp + term
-    return votes.select("doc_id", fp.alias("simhash"))
-
-
 @query("q_simhash_portable", None)
 def q_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LLM — 60-bit SimHash on the portable md5-derived token hash
     (alias of q_simhash, kept for registry continuity)."""
-    return _portable_simhash_df(spark, sf_dir)
+    return L.portable_simhash(_t(spark, sf_dir, "documents"))
 
 
 ORACLES["q_simhash_portable"] = _portable_simhash_oracle()

@@ -81,6 +81,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from pixelspark.metrics import observed_long
 from pixelspark.storage import (
     NON_ATOMIC_CREATE_SCHEMES,
     Storage,
@@ -103,28 +104,6 @@ _PRED_OPS = {
     ">": lambda c, v: c > v,
     ">=": lambda c, v: c >= v,
 }
-
-
-def _observed_metric(obs, key: str) -> int | None:
-    """Bounded read of an Observation metric: poll the JVM-side
-    getOrEmpty (never the blocking get — it hangs if the listener bus
-    dropped the event) and give up after ~1 s so the caller can run
-    its fallback job instead.  Shared by _write_snap's row-count
-    observation and the dv-merge emptiness probe (r13)."""
-    import time as _time
-
-    jo = getattr(obs, "_jo", None)
-    if jo is None:
-        return None
-    for _ in range(10):
-        try:
-            m = jo.getOrEmpty()
-            if not m.isEmpty():
-                return int(m.apply(key))
-        except Exception:
-            pass
-        _time.sleep(0.05)
-    return None
 
 
 def entry_layout(e: dict) -> str | None:
@@ -1024,7 +1003,7 @@ class SnapshotTable:
         def observed() -> int | None:
             # bounded wait, shared helper (r13): listener missed ->
             # None, and the caller falls back to a count job
-            return _observed_metric(obs, "n")
+            return observed_long(obs, "n")
 
         def write(w):
             try:
@@ -3094,7 +3073,7 @@ class SnapshotTable:
             hits.select("__dv_file", "__dv_row").observe(
                 obs_dv, F.count(F.lit(1)).alias("n")
             ).write.mode("errorifexists").parquet(full_dv)
-            n_dv = _observed_metric(obs_dv, "n")
+            n_dv = observed_long(obs_dv, "n")
             has_dv = (
                 n_dv > 0
                 if n_dv is not None

@@ -54,6 +54,46 @@ def test_full_job_and_state(spark, sf_dir, tmp_path):
     assert len(charged) == len(set(charged))  # no shop charged twice
 
 
+def test_charged_shops_charge_once_and_report_matches_table(spark, tmp_path):
+    """With shops that are actually charged (sf0.001 never charges:
+    every amount rounds to $0.00), the charge stage runs once per
+    day: charge_fn is called once per charged shop, and the report's
+    status counts equal the statuses the table reads back."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    sf = tmp_path / "sf"
+    spark.createDataFrame(
+        [(1, "Customer#1"), (2, "Customer#2"), (3, "Customer#3")],
+        "c_custkey long, c_name string",
+    ).write.parquet(str(sf / "customer.parquet"))
+    # 10 per million views, rounded to cents: 1,000 views bill $0.01,
+    # 10 views bill $0.00 and are skipped
+    spark.range(2510).select(
+        F.when(F.col("id") < 1000, 1).when(F.col("id") < 2500, 2).otherwise(3)
+        .cast("long").alias("user_id"),
+        F.lit("view").alias("event_type"),
+        F.lit("2024-01-02 12:00:00").cast("timestamp").alias("ts"),
+    ).write.parquet(str(sf / "events.parquet"))
+    calls = tmp_path / "calls.log"
+
+    def charge(shop, amount):  # runs in a Python worker: record to a file
+        with open(calls, "a") as f:
+            f.write(f"{shop}\n")
+        return f"gid://charge/{shop}"
+
+    table = str(tmp_path / "usage_records")
+    out = J.run_daily_billing(
+        spark, str(sf), "2024-01-02", table_path=table,
+        ledger_dir=str(tmp_path / "ledger"), charge_fn=charge,
+    )
+    assert sorted(calls.read_text().split()) == ["1", "2"]
+    state = J.current_billing_state(spark, table).collect()
+    assert out["status_counts"] == {"success": 2, "skipped": 1}
+    assert out["status_counts"] == Counter(r["shopify_billing_status"] for r in state)
+
+
 def test_safe_run_returns_error_shape(spark, tmp_path):
     out = J.run_daily_billing_safe(spark, "/nonexistent/dir", "2024-01-02", dry_run=True)
     assert out["success"] is False

@@ -30,13 +30,25 @@ def test_exact_dedup_counts(spark, docs):
     assert out.count() == docs.select("text").distinct().count()
 
 
-def test_minhash_recall_vs_exact(spark, docs):
+_FAMILIES = pytest.mark.parametrize(
+    "pairs_fn, sigs_fn",
+    [
+        (L.near_dup_pairs, L.minhash_signatures),
+        (L.portable_near_dup_pairs, L.portable_minhash_signatures),
+    ],
+    ids=["xxhash", "portable"],
+)
+
+
+@_FAMILIES
+def test_minhash_recall_vs_exact(spark, docs, pairs_fn, sigs_fn):
     """Banded MinHash-LSH must recover the near-duplicate pairs the
     exact shingle-Jaccard baseline finds (same k-shingle space; with
-    8 bands x 4 rows, P[candidate | s=0.5] ~= 0.4, s=0.8 ~= 0.99)."""
+    8 bands x 4 rows, P[candidate | s=0.5] ~= 0.4, s=0.8 ~= 0.99),
+    on either hash family."""
     exact = L.ngram_jaccard_pairs(docs, n=3, threshold=0.5, max_id=10_000).collect()
     exact_pairs = {(r["id_a"], r["id_b"]) for r in exact}
-    found = L.near_dup_pairs(docs, threshold=0.5, shingle_k=3).collect()
+    found = pairs_fn(docs, threshold=0.5, shingle_k=3).collect()
     found_pairs = {(r["id_a"], r["id_b"]) for r in found}
     # precision: the verify step makes every reported pair exact-correct
     assert found_pairs <= exact_pairs
@@ -47,6 +59,20 @@ def test_minhash_recall_vs_exact(spark, docs):
     if strong:
         recall = len(found_pairs & strong) / len(strong)
         assert recall >= 0.9, (recall, len(strong), len(found_pairs))
+
+
+@_FAMILIES
+def test_lsh_candidates_are_what_near_dup_pairs_verifies(spark, docs, pairs_fn, sigs_fn):
+    """lsh_candidate_pairs over a family's signatures yields exactly
+    the candidates that family's near-dup pipeline verifies: at
+    threshold 0 every candidate passes verification (empty documents
+    have no signature, so no candidate has an undefined Jaccard)."""
+    cands = {
+        (r["id_a"], r["id_b"])
+        for r in L.lsh_candidate_pairs(sigs_fn(docs), bands=8, rows_per_band=4).collect()
+    }
+    verified = {(r["id_a"], r["id_b"]) for r in pairs_fn(docs, threshold=0.0).collect()}
+    assert cands == verified and cands
 
 
 def test_simhash_properties(spark, docs):

@@ -1,0 +1,19 @@
+"""The benchmark's own self-test (generator, oracles, event-log
+parser; no Spark) in the fast tier, so an environment change that
+breaks the benchmark fails here rather than in a benchmark run."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_perfbench_selftest_passes():
+    proc = subprocess.run(
+        [sys.executable, "perfbench/selftest.py"],
+        cwd=ROOT, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
