@@ -5,7 +5,7 @@ data-processing capabilities of the reference daily usage-billing batch
 Layout:
   session.py        SparkSession factory (AQE on, UTC, tuned shuffle)
   schemas.py        StructType registry + testdata loaders
-  io.py             sources/sinks: append w/ stamp, schema-align, upsert,
+  io.py             sources/sinks: append w/ stamp, schema-align,
                     tableExists guard (reference: src/services/bigquery.ts)
   ops/scalar.py     scalar function pack F1-F13 (built-in expressions only)
   ops/billing.py    the domain pipeline (reference: src/services/billing.ts)

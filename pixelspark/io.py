@@ -4,14 +4,14 @@ over parquet (reference src/services/bigquery.ts).
 S4  append sink with auto-create + created_at stamp (bigquery.ts:58-137)
 S5  schema evolution on sink (bigquery.ts:74-110)
 S6  missing-table -> empty relation (bigquery.ts:159-165)
-S7  keyed upsert (bigquery.ts:168-190) as left-anti + union rewrite
+S7  keyed upsert (bigquery.ts:168-190): `SnapshotTable.upsert`
+    (pixelspark/table.py), one atomic manifest commit
 W1  latest-state read view over the append-only log (billing.ts:133-163)
 
 Scale posture: appends are blind (cheapest write Spark has — same
-reasoning as the reference's append-instead-of-UPDATE); the upsert
-rewrite is a full-partition rewrite, which at 100 TB you'd bound by
-partitioning the table on billing_date and rewriting only the touched
-date partitions (partitionBy below does exactly that layout).
+reasoning as the reference's append-instead-of-UPDATE).  The billing
+log itself is a SnapshotTable (pixelspark/job.py); the parquet sinks
+here serve the schema-evolution path and the interchange formats.
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pixelspark.schemas import SHOPIFY_STATUS_COLUMNS
 from pixelspark.storage import storage_for
 
 
@@ -57,33 +56,13 @@ def align_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     return out.select(*[f.name for f in schema.fields])
 
 
-def evolve_with_status_columns(df: DataFrame) -> DataFrame:
-    """S5 — ensure the four shopify status columns exist (nullable),
-    exactly the set the reference evolves in (bigquery.ts:95-106)."""
-    existing = {f.name for f in df.schema.fields}
-    out = df
-    for name, dtype in SHOPIFY_STATUS_COLUMNS.items():
-        if name not in existing:
-            out = out.withColumn(name, F.lit(None).cast(dtype))
-    return out
-
-
-def append_records(
-    df: DataFrame,
-    path: str,
-    schema: T.StructType | None = None,
-    stamp: bool = True,
-    partition_by: tuple[str, ...] = (),
-) -> None:
+def append_records(df: DataFrame, path: str, schema: T.StructType | None = None) -> None:
     """S4/P7 — append sink with auto-create and created_at stamp
     (bigquery.ts:112-137, stamp at :130-133)."""
-    out = df.withColumn("created_at", F.current_timestamp()) if stamp else df
+    out = df.withColumn("created_at", F.current_timestamp())
     if schema is not None:
         out = align_to_schema(out, schema)
-    writer = out.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    out.write.mode("append").parquet(path)
 
 
 def latest_state(
@@ -98,27 +77,6 @@ def latest_state(
     order = [F.col(order_col).desc()] + [F.col(c).desc() for c in tiebreak]
     w = Window.partitionBy(*keys).orderBy(*order)
     return df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
-
-
-def compact(spark: SparkSession, path: str, target_files: int = 8) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    `target_files` files (backup-rename swap).  At 100 TB daily appends
-    accumulate thousands of small files per partition; periodic
-    compaction keeps scan task counts sane.  Returns the new file
-    count.
-
-    The staging dir is a SIBLING of the target (same filesystem — a
-    cross-FS rename is a copy) and the swap goes through the storage
-    backend: atomic renames on POSIX/HDFS; on object stores use
-    SnapshotTable.compact() (pixelspark/table.py), whose commit is a
-    manifest publication instead of a rename."""
-    st = storage_for(path, spark)
-    st.recover_swap(path)  # repair any previously interrupted swap
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    staged = st.staging_path(path)
-    df.coalesce(target_files).write.mode("overwrite").parquet(staged)
-    st.swap_dir(staged, path)
-    return len(spark.read.parquet(path).inputFiles())
 
 
 def write_bucketed_table(
@@ -139,30 +97,6 @@ def write_bucketed_table(
     if sort_col:
         writer = writer.sortBy(sort_col)
     writer.saveAsTable(table_name)
-
-
-def upsert(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    keys: tuple[str, ...] = ("shop", "billing_date"),
-) -> None:
-    """S7 — keyed upsert: keep existing rows whose key is NOT updated
-    (left-anti), union the updates, atomically swap the table directory
-    (the vanilla-parquet equivalent of the reference's per-key UPDATE
-    batch, bigquery.ts:168-190; on Delta this is a single MERGE INTO).
-    """
-    st = storage_for(path, spark)
-    st.recover_swap(path)  # repair any previously interrupted swap
-    existing = spark.read.parquet(path) if table_exists(spark, path) else None
-    if existing is None:
-        updates.write.mode("overwrite").parquet(path)
-        return
-    keep = existing.join(F.broadcast(updates.select(*keys).distinct()), list(keys), "left_anti")
-    merged = keep.unionByName(updates, allowMissingColumns=True)
-    staged = st.staging_path(path)
-    merged.write.mode("overwrite").parquet(staged)
-    st.swap_dir(staged, path)
 
 
 # ---------------------------------------------------------------------------
@@ -234,7 +168,7 @@ def write_partitioned(
     without opening a single foreign data file.  Keep partition
     cardinality bounded (day, region — never user_id): each partition
     should hold >= ~1 GB or the small-file problem eats the gain
-    (see compact())."""
+    (see SnapshotTable.compact())."""
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
@@ -263,24 +197,6 @@ def read_xml(
     if schema is not None:
         reader = reader.schema(schema)
     return reader.load(path)
-
-
-def overwrite_partitions(df: DataFrame, path: str, partition_cols: tuple[str, ...]) -> None:
-    """Dynamic partition overwrite: replace ONLY the partitions present
-    in `df`, leave every other partition untouched.  This is what makes
-    a daily batch IDEMPOTENT at the storage layer — re-running day X
-    (after a failure, a backfill, a late correction) rewrites the
-    `day=X` directory atomically and cannot touch the other ~36,499
-    day-partitions of a 100-year 100-TB table.  Static overwrite mode
-    (the default) would drop the whole table first — the config below
-    is the entire difference."""
-    spark = df.sparkSession
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
 
 
 def write_sorted(

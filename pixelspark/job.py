@@ -8,7 +8,9 @@ Preserved semantics:
 * write-before-charge ordering: pending records are durably appended
   BEFORE any external charge call (billing.ts:83-122 — "never charge
   what wasn't durably recorded"); charge outcomes land as new rows,
-  current state is the latest-wins view
+  current state is the latest-wins view.  Both writes are
+  exactly-once SnapshotTable commits keyed by (day, stage), so a rerun
+  of the day records nothing twice
 * dry-run mode = testBilling: pure read replay, no writes, no charges
   (billing.ts:282-325)
 """
@@ -29,6 +31,7 @@ from pixelspark.ops import external as X
 from pixelspark.report import build_report
 from pixelspark.schemas import USAGE_RECORDS, load_table
 from pixelspark.session import get_spark
+from pixelspark.table import ConcurrentWriteConflict, SnapshotTable
 
 
 def default_target_date(tz: str = "Asia/Tokyo", today: datetime.datetime | None = None) -> str:
@@ -61,15 +64,17 @@ def run_daily_billing(
 
     assert table_path and ledger_dir and charge_fn is not None
 
+    # one row per shop, read by the pending write, the charge plan, the
+    # outcome enrich and the report: derive it from the events scan once
+    bill = bill.localCheckpoint(eager=True)
+    records = bill.withColumn("shop", F.col("shop").cast("string"))
+    table = _usage_table(spark, table_path)
+    # each (day, stage) commits once: a rerun of the day, or of a run
+    # that crashed between the two commits, adds no row twice
+    app_id = f"daily_billing/{target_date}"
+
     # stage 7: durably record pending BEFORE charging (billing.ts:83-122)
-    pending = (
-        bill.withColumn("shop", F.col("shop").cast("string"))
-        .withColumn("shopify_billing_status", F.lit("pending"))
-    )
-    # billing_date-partitioned layout: daily reads prune to one partition
-    pio.append_records(
-        pending, table_path, schema=USAGE_RECORDS, partition_by=("billing_date",)
-    )
+    _record(table, records.withColumn("shopify_billing_status", F.lit("pending")), app_id, 1)
 
     # stage 8: bounded, retrying, idempotent external charges
     plan = bill.select(
@@ -79,7 +84,7 @@ def run_daily_billing(
         F.when(F.col("amount") <= 0, F.lit("skipped")).otherwise(F.lit("pending")),
     )
     # the charge stage runs exactly once, here, and both consumers (the
-    # outcome append and the report's status counts) read its stored
+    # outcome write and the report's status counts) read its stored
     # rows: a second run would find every ledger key claimed and report
     # 'duplicate' where the table holds 'success'.  localCheckpoint, not
     # cache(): a lost block fails the job instead of re-running charges.
@@ -87,14 +92,11 @@ def run_daily_billing(
         eager=True
     )
 
-    # stage 9: append outcomes as NEW rows (append-as-update)
+    # stage 9: record outcomes as NEW rows (append-as-update)
     enriched = X.enrich_with_results(
-        bill.withColumn("shop", F.col("shop").cast("string")),
-        results.withColumn("shop", F.col("shop").cast("string")),
+        records, results.withColumn("shop", F.col("shop").cast("string"))
     )
-    pio.append_records(
-        enriched, table_path, schema=USAGE_RECORDS, partition_by=("billing_date",)
-    )
+    _record(table, enriched, app_id, 2)
 
     status_counts = results.groupBy("status").agg(F.count(F.lit(1)).alias("n"))
     return {
@@ -102,6 +104,29 @@ def run_daily_billing(
         "target_date": target_date,
         **build_report(bill, status_counts),
     }
+
+
+def _usage_table(spark: SparkSession, table_path: str) -> SnapshotTable:
+    """The billing log as a snapshot table partitioned by billing_date,
+    created empty on first use so a day's read prunes to its partition."""
+    table = SnapshotTable(spark, table_path)
+    if not table.exists():
+        try:
+            table.overwrite(
+                spark.createDataFrame([], USAGE_RECORDS),
+                partition_col="billing_date",
+                expected_version=None,
+            )
+        except ConcurrentWriteConflict:
+            pass  # a rival run created it first
+    return table
+
+
+def _record(table: SnapshotTable, rows: DataFrame, app_id: str, batch_id: int) -> None:
+    """S4/P7 — stamp created_at, align to the log's schema
+    (bigquery.ts:112-137) and commit the batch once per (app_id, batch_id)."""
+    stamped = rows.withColumn("created_at", F.current_timestamp())
+    table.append_once(pio.align_to_schema(stamped, USAGE_RECORDS), app_id, batch_id)
 
 
 def run_daily_billing_safe(spark: SparkSession, sf_dir: str, target_date: str, **kwargs) -> dict:
@@ -161,10 +186,11 @@ def run_backfill(
     Unlike the daily run's append-as-update path (which preserves the
     reference's audit-log semantics for live operation), a backfill
     re-DERIVES each day from source events, so the right storage
-    semantic is dynamic partition overwrite: each recomputed day
-    replaces exactly its own `billing_date=` partition and nothing
-    else — re-running the backfill (crash recovery, corrected input)
-    converges to the same table instead of growing it.  Each day is
+    semantic is a partition replacement: each recomputed day replaces
+    exactly its own `billing_date=` partition in one manifest commit
+    and nothing else — re-running the backfill (crash recovery,
+    corrected input) converges to the same table instead of growing
+    it.  Each day is
     one independent Spark job over a partition-pruned scan; the loop
     over days is driver-side orchestration, not data movement."""
     customer = load_table(spark, sf_dir, "customer")
@@ -172,13 +198,14 @@ def run_backfill(
     d0 = datetime.date.fromisoformat(start_date)
     d1 = datetime.date.fromisoformat(end_date)
     days = []
+    table = SnapshotTable(spark, table_path)
     d = d0
     while d <= d1:
         day = d.isoformat()
         bill = B.daily_billing(customer, events, day).withColumn(
             "shop", F.col("shop").cast("string")
         )
-        pio.overwrite_partitions(bill, table_path, ("billing_date",))
+        table.replace_partitions(bill, "billing_date")
         days.append(day)
         d += datetime.timedelta(days=1)
     return {"backfilled_days": days, "table_path": table_path}
@@ -186,8 +213,10 @@ def run_backfill(
 
 def current_billing_state(spark: SparkSession, table_path: str) -> DataFrame:
     """Read-back: the current bill per (shop, billing_date) — the
-    latest-wins view over the append-only log."""
-    log = pio.read_table_or_empty(spark, table_path, USAGE_RECORDS)
+    latest-wins view over the append-only log.  A missing table reads
+    as an empty log (S6)."""
+    table = SnapshotTable(spark, table_path)
+    log = table.read() if table.exists() else spark.createDataFrame([], USAGE_RECORDS)
     return pio.latest_state(
         log, keys=("shop", "billing_date"), order_col="created_at",
         tiebreak=("shopify_billing_status",),

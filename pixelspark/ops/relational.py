@@ -217,8 +217,8 @@ def snapshot_diff(
     Presence on each side is tracked with explicit marker columns, not
     value null-ness.  One co-partitioned shuffle join on the key set;
     the classification is pure column logic.  Feed the output to
-    `io.upsert` / `overwrite_partitions` to propagate a diff instead
-    of rewriting a 100-TB table."""
+    `SnapshotTable.upsert` / `replace_partitions` (pixelspark/table.py)
+    to propagate a diff instead of rewriting a 100-TB table."""
     cols = compare_cols or [c for c in new.columns if c not in keys]
     o = old.select(
         *keys, F.lit(True).alias("__in_old"), *[F.col(c).alias(f"old_{c}") for c in cols]

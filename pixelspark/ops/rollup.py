@@ -18,20 +18,17 @@ but a 100 TB events table with late-arriving data wants the TimescaleDB
     At sf=100TB with a daily batch this is O(delta), not O(table).
 
 Non-additive stats (avg) are derived at read time from the exact
-counters.  Two storage backends carry the partition replacement:
-vanilla parquet directories (this module — stage + atomic day=
-subdirectory renames, POSIX/HDFS only) and the snapshot-commit table
-format (`pixelspark.table.refresh_rollup_snapshot` — a manifest-edit
-`replaceWhere`, atomic on object stores too).
+counters.  This module holds the two mergeable-partial functions; the
+rollup table itself is a snapshot-commit table
+(`pixelspark.table.refresh_rollup_snapshot` /
+`read_rollup_snapshot`), whose partition replacement is one
+manifest-edit `replaceWhere`, atomic on every substrate.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from pixelspark.io import table_exists
-from pixelspark.storage import storage_for
 
 # Exact decimal type for additive value sums: double inputs are cast
 # once at ingest; every later merge is decimal+decimal (associative,
@@ -76,89 +73,3 @@ def merge_rollups(existing: DataFrame, delta: DataFrame) -> DataFrame:
         F.min("min_value").cast(_SUM_T).alias("min_value"),
         F.max("max_value").cast(_SUM_T).alias("max_value"),
     )
-
-
-def recover_partition_swaps(st, path: str) -> list[str]:
-    """Repair per-partition swaps interrupted mid-`swap_dir`.  The
-    backup for `day=X` lives at `day=X.bak` INSIDE the table root, so
-    an unrepaired crash has two failure shapes:
-
-    * crash between the two renames: `day=X` missing, `day=X.bak`
-      holds the only copy — restore it (recover_swap);
-    * crash after the second rename but before backup cleanup: both
-      exist — `day=X.bak` is the superseded copy, and left in place it
-      would be picked up by partition discovery as literal partition
-      value 'X.bak' — delete it.
-
-    Idempotent; run before any read or merge of the table.  Returns
-    the repaired partition names."""
-    repaired = []
-    for child in st.list(path):
-        if not (child.startswith("day=") and child.endswith(".bak")):
-            continue
-        target = f"{path.rstrip('/')}/{child[: -len('.bak')]}"
-        if st.recover_swap(target):
-            repaired.append(child[: -len(".bak")])
-        else:  # target survived the crash: the .bak is stale
-            st.delete(target + ".bak")
-            repaired.append(child)
-    return repaired
-
-
-def read_rollup(spark: SparkSession, path: str) -> DataFrame:
-    """Read the rollup with derived (non-additive) columns: avg from
-    the exact counters.  basePath keeps the day partition column.
-    Repairs any interrupted partition swap first — a leftover
-    `day=X.bak` would otherwise surface as a bogus partition value."""
-    recover_partition_swaps(storage_for(path, spark), path)
-    df = spark.read.option("basePath", path).parquet(path)
-    return df.withColumn(
-        "avg_value",
-        F.round((F.col("sum_value") / F.col("n_events")).cast("double"), 6),
-    )
-
-
-def refresh_rollup(spark: SparkSession, path: str, events_batch: DataFrame) -> list[str]:
-    """Incremental refresh: fold one event batch into the rollup table,
-    rewriting only the day-partitions the batch touches.  Returns the
-    list of refreshed partition names (`day=...`).
-
-    Scale shape: the existing-side read is partition-PRUNED to the
-    affected days (`day IN (...)` on the partition column — no data
-    file outside those directories is opened), and the write replaces
-    only those directories.  The affected-day list is collected to the
-    driver: it is bounded by days-per-batch (1 for the daily job,
-    a handful for late-data replays), never by table size."""
-    st = storage_for(path, spark)
-    delta = day_rollup(events_batch)
-    if not table_exists(spark, path):
-        delta.write.partitionBy("day").mode("overwrite").parquet(path)
-        return sorted(d for d in st.list(path) if d.startswith("day="))
-    # Repair any swap a previous refresh left half-done BEFORE reading:
-    # a missing day=X with a day=X.bak behind would silently drop that
-    # day from the merge (and corrupt partition discovery).
-    recover_partition_swaps(st, path)
-    days = [r["day"] for r in delta.select("day").distinct().collect()]
-    existing = (
-        spark.read.option("basePath", path).parquet(path).where(F.col("day").isin(days))
-    )
-    merged = merge_rollups(existing, delta)
-    # Stage the merged partitions in a SIBLING dir (same filesystem),
-    # then swap each day= directory in through the storage backend
-    # (vanilla-parquet stand-in for Delta's replaceWhere: per-partition
-    # rename, atomic on POSIX/HDFS; on object stores use a table
-    # format — see pixelspark/storage.py).
-    staged = st.staging_path(path)
-    merged.write.partitionBy("day").mode("overwrite").parquet(staged)
-    swapped = []
-    for part in st.list(staged):
-        if not part.startswith("day="):
-            continue
-        # backup-rename per partition (not delete-then-rename): a crash
-        # at any point leaves a complete copy of the day either at dst
-        # or at dst.bak — same recovery contract as Storage.swap_dir
-        dst = f"{path.rstrip('/')}/{part}"
-        st.swap_dir(f"{staged.rstrip('/')}/{part}", dst)
-        swapped.append(part)
-    st.delete(staged)
-    return swapped

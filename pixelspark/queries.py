@@ -816,9 +816,7 @@ def q_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
                          "shopify_billing_status", "shopify_charge_id")
 
 
-@query(
-    "q_upsert_roundtrip",
-    f"""
+_UPSERT_ORACLE = f"""
     WITH pv AS (
       SELECT user_id AS shop, COUNT(*) AS event_count
       FROM events
@@ -832,74 +830,27 @@ def q_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS shopify_billing_status,
            CAST(COUNT(*) AS BIGINT) AS n
     FROM bill GROUP BY 1
-    """,
-)
-def q_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6/S7 — missing-table guard + keyed upsert: read-or-empty, write,
-    upsert a subset with new statuses, return the merged table
-    (reference src/services/bigquery.ts:159-190).
+    """
+
+
+def _snapshot_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S6/S7 on the snapshot-commit table (pixelspark/table.py):
+    missing-table guard, write, upsert a subset with new statuses,
+    read back (reference src/services/bigquery.ts:159-190).  Every
+    mutation is one atomic manifest commit — the object-store-safe
+    counterpart of the reference's server-side BigQuery DML.
 
     Value-checked: the upsert replaces exactly the keys with
     page_views > 0 ('success'); everything else stays 'pending'.  The
     oracle derives those two group counts from the raw inputs."""
     import tempfile
 
-    from pixelspark import io as pio
-    from pixelspark.schemas import USAGE_RECORDS
-
-    path = tempfile.mkdtemp(prefix="pixelspark_upsert_") + "/usage_records"
-    empty = pio.read_table_or_empty(spark, path, USAGE_RECORDS)
-    _require(empty.count() == 0, 'S6: missing table -> empty relation')
-    bill = B.daily_billing(_t(spark, sf_dir, "customer"), _t(spark, sf_dir, "events"), TD)
-    base = (
-        bill.withColumn("shop", F.col("shop").cast("string"))
-        .withColumn("shopify_billing_status", F.lit("pending"))
-        .withColumn("created_at", F.current_timestamp())
-    )
-    pio.append_records(base, path, schema=USAGE_RECORDS, stamp=False)
-    updates = (
-        spark.read.parquet(path)
-        .where(F.col("page_views") > 0)
-        .withColumn("shopify_billing_status", F.lit("success"))
-    )
-    pio.upsert(spark, path, updates, keys=("shop", "billing_date"))
-    return (
-        spark.read.parquet(path)
-        .groupBy("shopify_billing_status")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-@query(
-    "q_snapshot_upsert",
-    f"""
-    WITH pv AS (
-      SELECT user_id AS shop, COUNT(*) AS event_count
-      FROM events
-      WHERE event_type = 'view' AND CAST(ts AS DATE) = DATE '{TD}'
-      GROUP BY user_id
-    ), bill AS (
-      SELECT COALESCE(pv.event_count, 0) AS page_views
-      FROM customer c LEFT JOIN pv ON c.c_custkey = pv.shop
-    )
-    SELECT CASE WHEN page_views > 0 THEN 'success' ELSE 'pending' END
-             AS shopify_billing_status,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM bill GROUP BY 1
-    """,
-)
-def q_snapshot_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7 on the snapshot-commit table format (pixelspark/table.py):
-    the same write→upsert→read-back end state as q_upsert_roundtrip,
-    but every table mutation is an atomic manifest commit — the
-    object-store-safe counterpart of the reference's server-side
-    BigQuery DML (src/services/bigquery.ts:168-190).  Same oracle:
-    the end state must be indistinguishable across backends."""
-    import tempfile
-
+    from pixelspark.job import current_billing_state
     from pixelspark.table import SnapshotTable
 
     root = tempfile.mkdtemp(prefix="pixelspark_snap_") + "/usage_records"
+    _require(current_billing_state(spark, root).count() == 0,
+             "S6: missing table -> empty relation")
     t = SnapshotTable(spark, root)
     bill = B.daily_billing(_t(spark, sf_dir, "customer"), _t(spark, sf_dir, "events"), TD)
     base = (
@@ -916,6 +867,20 @@ def q_snapshot_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("shopify_billing_status")
         .agg(F.count(F.lit(1)).alias("n"))
     )
+
+
+@query("q_upsert_roundtrip", _UPSERT_ORACLE)
+def q_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S6/S7 — missing-table guard + keyed upsert (see
+    _snapshot_upsert_roundtrip)."""
+    return _snapshot_upsert_roundtrip(spark, sf_dir)
+
+
+@query("q_snapshot_upsert", _UPSERT_ORACLE)
+def q_snapshot_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S7 on the snapshot-commit table format: the same body and
+    oracle as q_upsert_roundtrip."""
+    return _snapshot_upsert_roundtrip(spark, sf_dir)
 
 
 @query(
@@ -5651,9 +5616,7 @@ def q_late_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_incremental_rollup",
-    """
+_ROLLUP_ORACLE = """
     SELECT user_id AS shop, CAST(ts AS DATE) AS day,
            CAST(COUNT(*) AS BIGINT) AS n_events,
            CAST(ROUND(SUM(CAST(value AS DECIMAL(28,6))), 6) AS DOUBLE) AS sum_value,
@@ -5661,52 +5624,17 @@ def q_late_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(MAX(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS max_value
     FROM events
     GROUP BY user_id, CAST(ts AS DATE)
-    """,
-)
-def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continuous-aggregate rollup (ops/rollup.py): the table is built
-    INCREMENTALLY — two disjoint batches plus a partition-pruned merge
-    refresh — then read back; the oracle is the equivalent one-shot
-    GROUP BY over the raw events.  Exact decimal counters make the
-    incremental result bitwise-equal to the full recompute regardless
-    of merge order."""
-    import tempfile
-
-    from pixelspark.ops import rollup as R
-
-    events = _t(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="pixelspark_q_rollup_") + "/t"
-    R.refresh_rollup(spark, path, events.where(F.to_date("ts") < "2024-01-15"))
-    R.refresh_rollup(spark, path, events.where(F.to_date("ts") >= "2024-01-15"))
-    df = R.read_rollup(spark, path)
-    return df.select(
-        "shop",
-        "day",
-        "n_events",
-        F.round(F.col("sum_value"), 6).cast("double").alias("sum_value"),
-        F.col("min_value").cast("double").alias("min_value"),
-        F.col("max_value").cast("double").alias("max_value"),
-    )
-
-
-@query(
-    "q_snapshot_rollup",
     """
-    SELECT user_id AS shop, CAST(ts AS DATE) AS day,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(ROUND(SUM(CAST(value AS DECIMAL(28,6))), 6) AS DOUBLE) AS sum_value,
-           CAST(MIN(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS min_value,
-           CAST(MAX(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS max_value
-    FROM events
-    GROUP BY user_id, CAST(ts AS DATE)
-    """,
-)
-def q_snapshot_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The incremental rollup on the snapshot-commit backend
-    (pixelspark/table.py refresh_rollup_snapshot): every partition
-    replacement is an atomic manifest edit instead of directory
-    renames.  Same one-shot GROUP BY oracle as q_incremental_rollup —
-    the two backends must be value-indistinguishable."""
+
+
+def _snapshot_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Continuous-aggregate rollup (ops/rollup.py partials on the
+    snapshot table, table.refresh_rollup_snapshot): the table is built
+    INCREMENTALLY — two disjoint batches, each an atomic partition
+    replacement — then read back; the oracle is the equivalent
+    one-shot GROUP BY over the raw events.  Exact decimal counters
+    make the incremental result bitwise-equal to the full recompute
+    regardless of merge order."""
     import tempfile
 
     from pixelspark.table import read_rollup_snapshot, refresh_rollup_snapshot
@@ -5724,6 +5652,19 @@ def q_snapshot_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("min_value").cast("double").alias("min_value"),
         F.col("max_value").cast("double").alias("max_value"),
     )
+
+
+@query("q_incremental_rollup", _ROLLUP_ORACLE)
+def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Continuous-aggregate rollup (see _snapshot_rollup)."""
+    return _snapshot_rollup(spark, sf_dir)
+
+
+@query("q_snapshot_rollup", _ROLLUP_ORACLE)
+def q_snapshot_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The incremental rollup on the snapshot-commit backend: the same
+    body and oracle as q_incremental_rollup."""
+    return _snapshot_rollup(spark, sf_dir)
 
 
 @query(

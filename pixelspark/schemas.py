@@ -30,15 +30,6 @@ USAGE_RECORDS = T.StructType(
     ]
 )
 
-# The 4 columns the reference schema-evolves in when missing
-# (src/services/bigquery.ts:78-110).
-SHOPIFY_STATUS_COLUMNS: dict[str, T.DataType] = {
-    "shopify_charge_id": T.StringType(),
-    "shopify_billing_status": T.StringType(),
-    "shopify_error_message": T.StringType(),
-    "shopify_processed_at": T.TimestampType(),
-}
-
 BILLING_STATUSES = ("pending", "success", "failed", "skipped")
 
 TESTDATA_TABLES = (

@@ -1,33 +1,33 @@
-"""Storage abstraction for the driver-side write-path filesystem ops
-(partition swap, table swap, existence probes).
+"""Storage abstraction for the driver-side filesystem ops the table
+format and the write paths need (listings, existence and parquet
+probes, deletes, small atomic text files).
 
 The reference talks to BigQuery, where table swaps are server-side and
-atomic.  Re-expressed over files, the swap sequence needs real
-filesystem semantics, and those differ by substrate:
+atomic.  Re-expressed over files, every table mutation goes through
+`pixelspark.table.SnapshotTable`: data dirs are immutable, and a
+commit is the atomic publication of one small manifest
+(`write_text_atomic` below), so `replace_partitions`/`upsert`/
+`overwrite` are transactional on every substrate with no rename of
+live data at all:
 
 * POSIX / HDFS: `rename` is atomic; directory listing is consistent.
-* S3 (via s3a): rename is a non-atomic COPY+DELETE, so the
-  backup-rename swaps below are only for POSIX/HDFS substrates.  On
-  object stores use `pixelspark.table.SnapshotTable` — the
-  manifest-logged snapshot-commit format in this repo: data dirs are
-  immutable, a commit is the atomic publication of one small manifest
-  (`write_text_atomic` below), and `replace_partitions`/`upsert`/
-  `overwrite` are transactional on every substrate with no rename of
-  live data at all.  For MULTI-committer exactly-once on object
-  stores, wrap the substrate in `ConditionalPutStorage` bound to the
-  store's conditional-put API (S3 `If-None-Match: *`, GCS
-  generation-match) — the server then arbitrates the commit race
-  atomically.  The idempotency ledger still refuses
-  object-store schemes (see `ledger_precondition`) because its
-  O_EXCL claim files are a POSIX-only contract.
+* S3 (via s3a): rename is a non-atomic COPY+DELETE, which no commit
+  relies on.  For MULTI-committer exactly-once on object stores, wrap
+  the substrate in `ConditionalPutStorage` bound to the store's
+  conditional-put API (S3 `If-None-Match: *`, GCS generation-match) —
+  the server then arbitrates the commit race atomically.  The
+  idempotency ledger still refuses object-store schemes (see
+  `ledger_precondition`) because its O_EXCL claim files are a
+  POSIX-only contract.
 
 `LocalStorage` (os/shutil) is the zero-dependency test backend;
 `HadoopStorage` routes every call through the Hadoop FileSystem API of
 the path's own scheme (file://, hdfs://, s3a://...) via the JVM
 gateway, so the SAME code path Spark uses for its writes handles the
-swaps — no `os.listdir`/`os.rename` POSIX assumptions.  Both backends
-are exercised by tests/test_storage.py; `storage_for` picks Hadoop
-whenever a SparkSession is supplied and the path carries a scheme.
+manifests — no `os.listdir`/`os.rename` POSIX assumptions.  Both
+backends are exercised by tests/test_storage.py; `storage_for` picks
+Hadoop whenever a SparkSession is supplied and the path carries a
+scheme.
 """
 
 from __future__ import annotations
@@ -97,41 +97,6 @@ class Storage:
         assume a single committer per table (same stance as
         delta-on-S3 without a lock service)."""
         raise NotImplementedError
-
-    # -- composite ops ----------------------------------------------------
-
-    def swap_dir(self, staged: str, target: str) -> None:
-        """Replace `target` with `staged` via a backup rename: the
-        pattern every backend shares (on POSIX/HDFS each rename is
-        atomic; on s3a the window is documented as non-atomic).
-
-        Crash safety: the rename order guarantees a complete copy of
-        the table always exists on disk — before the second rename the
-        data is at `.bak`, after it at `target` — so a crash at any
-        point is repaired by `recover_swap`."""
-        back = target.rstrip("/") + ".bak"
-        self.delete(back)
-        if self.exists(target):
-            self.rename(target, back)
-        self.rename(staged, target)
-        self.delete(back)
-
-    def recover_swap(self, target: str) -> bool:
-        """Repair a swap interrupted between its two renames: if
-        `target` is missing but its `.bak` exists, restore the backup.
-        Idempotent; returns True when a recovery happened.  Callers
-        (upsert, compact) run this before reading the table."""
-        back = target.rstrip("/") + ".bak"
-        if not self.exists(target) and self.exists(back):
-            self.rename(back, target)
-            return True
-        return False
-
-    def staging_path(self, target: str) -> str:
-        """A sibling staging directory on the SAME filesystem as the
-        target (a cross-scheme rename is a copy — staging must live
-        next to the data)."""
-        return target.rstrip("/") + f".staging-{uuid.uuid4().hex[:12]}"
 
 
 def _strip_file_scheme(path: str) -> str:
@@ -212,7 +177,7 @@ class HadoopStorage(Storage):
     """Hadoop FileSystem backend: each path resolves its own FileSystem
     from its scheme through the session's Hadoop configuration — the
     identical resolution Spark's writers use, so anything Spark can
-    write to, these swaps can manage.  Driver-side only (needs the JVM
+    write to, these calls can manage.  Driver-side only (needs the JVM
     gateway)."""
 
     def __init__(self, spark: SparkSession):

@@ -11,9 +11,10 @@ count -> amount math.
 
 Sink patterns provided:
 * memory sink (tests / interactive)
-* foreachBatch -> io.upsert: each micro-batch merges its window counts
-  into the billing table keyed by (shop, billing_date) — giving the
-  same latest-state semantics as the batch path.
+* foreachBatch -> SnapshotTable.upsert: each micro-batch merges its
+  window counts into the billing table keyed by (shop, billing_date)
+  in one atomic manifest commit — giving the same latest-state
+  semantics as the batch path.
 """
 
 from __future__ import annotations
@@ -163,14 +164,16 @@ def run_snapshot_rollup_sink(
 
 def run_upsert_sink(df: DataFrame, table_path: str, checkpoint: str):
     """foreachBatch merge sink: each micro-batch upserts its window
-    counts into the billing table keyed by (shop, billing_date) —
-    streaming writes land with the same latest-state semantics the
-    batch path guarantees (reference append-as-update pattern)."""
-    from pixelspark import io as pio
+    counts into the billing snapshot table keyed by (shop,
+    billing_date) — streaming writes land with the same latest-state
+    semantics the batch path guarantees (reference append-as-update
+    pattern).  A replayed batch re-upserts the same keys, so replay
+    is idempotent."""
+    from pixelspark.table import SnapshotTable
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        pio.upsert(
-            batch_df.sparkSession, table_path, batch_df, keys=("shop", "billing_date")
+        SnapshotTable(batch_df.sparkSession, table_path).upsert(
+            batch_df, keys=("shop", "billing_date")
         )
 
     q = (
@@ -325,7 +328,7 @@ def run_fanout_sink(
 ):
     """One streaming query, two sinks: each micro-batch is PERSISTED,
     upserted into the billing table AND appended to a day-level audit
-    aggregate, then unpersisted.
+    aggregate, then unpersisted.  Both are snapshot tables.
 
     The persist is the load-bearing line — without it foreachBatch
     recomputes the batch's whole lineage once per sink (double source
@@ -334,27 +337,28 @@ def run_fanout_sink(
     checkpointed query: one epoch, one batch id, both writes inside
     it — the standard alternative to running two queries (two
     checkpoints, two source scans, and no atomicity between sinks).
+    A batch replayed after a failure re-upserts the same keys (a
+    no-op) and finds its audit batch id already committed
+    (`append_once`), so neither sink lands it twice.
     """
-    from pixelspark import io as pio
+    from pixelspark.table import SnapshotTable
 
     def fanout(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
         batch_df.persist()
         try:
-            pio.upsert(
-                batch_df.sparkSession,
-                table_path,
-                batch_df,
-                keys=("shop", "billing_date"),
+            SnapshotTable(spark, table_path).upsert(
+                batch_df, keys=("shop", "billing_date")
             )
-            (
+            SnapshotTable(spark, audit_path).append_once(
                 batch_df.groupBy("billing_date")
                 .agg(
                     F.sum("event_count").alias("day_events"),
                     F.count(F.lit(1)).alias("n_shops"),
                 )
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(audit_path)
+                .withColumn("batch_id", F.lit(batch_id)),
+                "pixelspark-fanout-audit",
+                batch_id,
             )
         finally:
             batch_df.unpersist()

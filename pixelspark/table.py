@@ -2,11 +2,11 @@
 including object stores.
 
 The reference gets transactional table swaps for free from BigQuery
-(server-side atomic DML, src/services/bigquery.ts:168-190).  The
-bare-parquet write paths in pixelspark/io.py re-create that with
-backup-rename swaps, which are atomic on POSIX/HDFS but NOT on s3a
-(rename = copy+delete).  This module closes that gap the way
-Delta/Iceberg do, with a minimal manifest log:
+(server-side atomic DML, src/services/bigquery.ts:168-190).  Over
+files, directory renames cannot give that on s3a (rename =
+copy+delete), so this module does it the way Delta/Iceberg do, with a
+minimal manifest log — the one table format every production write
+(daily batch, backfill, streaming sinks, rollup) commits through:
 
   table_root/
     _manifests/v00000001.json   immutable snapshot manifests
@@ -2279,22 +2279,60 @@ class SnapshotTable:
         is caught by the layout guard in the commit build and the
         append re-stages under the fresh layout, like a mapping DDL
         race."""
+        return self._append(df, None)
+
+    def append_once(self, df: DataFrame, app_id: str, batch_id: int) -> int | None:
+        """Transactional streaming append (the Delta `txn` appId/version
+        guard): the manifest records the highest committed `batch_id`
+        per `app_id`, and a replayed batch — foreachBatch re-delivery
+        after a sink failure, or a full re-run after checkpoint loss —
+        commits NOTHING.  This is what makes `foreachBatch` + blind
+        append exactly-once instead of at-least-once: epoch commit and
+        data publication are the same atomic manifest write.
+
+        Returns the new version, or None when the batch was already
+        committed (its data dir, if written, is left as vacuum-able
+        garbage).  Assumes the standard deterministic-replay contract:
+        a given (app_id, batch_id) always carries the same rows.  An
+        empty batch still commits, recording only its watermark."""
+        return self._append(df, (app_id, batch_id))
+
+    def _append(self, df: DataFrame, txn: tuple[str, int] | None) -> int | None:
+        """The one stage-and-commit loop behind `append` (txn None)
+        and `append_once` (txn=(app_id, batch_id)).  The two verbs
+        differ only in their empty-batch contract: a blind append of
+        nothing is a no-op, while a txn append must still commit its
+        watermark."""
+        if txn is not None:
+            v = self.latest_version()
+            if v is not None:
+                last = self.manifest(v).get("txn", {}).get(txn[0])
+                if last is not None and last >= txn[1]:
+                    return None  # replay detected before paying the write
+        op = ({"name": "append"} if txn is None else
+              {"name": "append_once", "app_id": txn[0], "batch_id": txn[1]})
         for _ in range(self.max_retries):
             v0 = self.latest_version()
             pcol = (self.manifest(v0).get("partition_col")
                     if v0 is not None else None)
             out_df, highs = self._prepare_ids(df)
+            write_pcol = pcol
             if pcol is not None and pcol not in out_df.columns:
-                # the empty-batch no-op outranks the layout refusal
-                # (docstring contract); isEmpty runs only on this
-                # would-be-error path, never on the hot append
-                if out_df.isEmpty():
+                # the empty-batch contract outranks the layout refusal;
+                # isEmpty runs only on this would-be-error path, never
+                # on the hot append
+                if not out_df.isEmpty():
+                    raise ValueError(
+                        f"append to a table partitioned by {pcol!r} needs "
+                        f"that column in the batch"
+                    )
+                if txn is None:
                     return self.latest_version()
-                raise ValueError(
-                    f"append to a table partitioned by {pcol!r} needs "
-                    f"that column in the batch"
-                )
-            if pcol is not None and not [
+                # the txn watermark must still commit: stage a
+                # dataless, unpartitioned snap — has_data=False
+                # discards the entry, only txn commits
+                write_pcol = None
+            elif pcol is not None and not [
                 c for c in out_df.columns if c != pcol
             ]:
                 # a subset batch carrying ONLY the partition column:
@@ -2310,7 +2348,8 @@ class SnapshotTable:
                         out_df = out_df.withColumn(
                             fld.name, F.lit(None).cast(fld.dataType))
             rel, parts, has_data, wmap, nrows = self._write_snap(
-                out_df, pcol, audit_cols=self._unassigned_id_cols(highs))
+                out_df, write_pcol,
+                audit_cols=self._unassigned_id_cols(highs))
             entry = self._entry_for(rel, sorted(parts) if pcol else [],
                                     has_data, out_df.schema, wmap,
                                     row_count=nrows)
@@ -2321,13 +2360,19 @@ class SnapshotTable:
                 # leaving vacuum garbage on every empty batch (the
                 # dv-merge path already does this; r10 advice)
                 self.st.delete(f"{self.root}/{rel}")
-                v = self.latest_version()
-                if v is not None:
-                    return v
+                if txn is None:
+                    v = self.latest_version()
+                    if v is not None:
+                        return v
 
             def build(prev: dict | None) -> dict:
                 if (prev or {}).get("column_mapping") != wmap:
                     raise _Conflicted
+                tmap = dict((prev or {}).get("txn") or {})
+                if txn is not None:
+                    # raises _SkipCommit when a rival committed this
+                    # batch mid-race
+                    self._txn_apply(tmap, txn)
                 if ((prev or {}).get("partition_col")) != pcol:
                     # partition evolution landed after this append
                     # staged its dir under the old layout — re-stage
@@ -2336,7 +2381,9 @@ class SnapshotTable:
                 if has_data:
                     entries = entries + [entry]
                 out = {"partition_col": pcol, "entries": entries,
-                       "schema": schema, "op": {"name": "append"}}
+                       "schema": schema, "op": op}
+                if txn is not None:
+                    out["txn"] = tmap
                 # a rival that assigned from the range we staged would
                 # collide with our written ids — CAS and re-stage
                 self._stamp_highs(out, prev, highs, cas=True)
@@ -2349,111 +2396,15 @@ class SnapshotTable:
                 # append's translation and its manifest write: the
                 # staged dir carries stale physical names.  Reclaim it
                 # and re-stage under the fresh mapping — an append has
-                # no read set, so the retry is always safe.
+                # no read set, so the retry is always safe (the txn
+                # guard keeps an append_once retry exactly-once).
                 if has_data:
                     self.st.delete(f"{self.root}/{rel}")
                 continue
         raise ConcurrentCommitError(
-            f"append lost the mapping race {self.max_retries} times at "
-            f"{self.root}"
-        )
-
-    def append_once(self, df: DataFrame, app_id: str, batch_id: int) -> int | None:
-        """Transactional streaming append (the Delta `txn` appId/version
-        guard): the manifest records the highest committed `batch_id`
-        per `app_id`, and a replayed batch — foreachBatch re-delivery
-        after a sink failure, or a full re-run after checkpoint loss —
-        commits NOTHING.  This is what makes `foreachBatch` + blind
-        append exactly-once instead of at-least-once: epoch commit and
-        data publication are the same atomic manifest write.
-
-        Returns the new version, or None when the batch was already
-        committed (its data dir, if written, is left as vacuum-able
-        garbage).  Assumes the standard deterministic-replay contract:
-        a given (app_id, batch_id) always carries the same rows."""
-        v = self.latest_version()
-        if v is not None:
-            last = self.manifest(v).get("txn", {}).get(app_id)
-            if last is not None and last >= batch_id:
-                return None  # replay detected before paying the write
-        for _ in range(self.max_retries):
-            v0 = self.latest_version()
-            pcol = (self.manifest(v0).get("partition_col")
-                    if v0 is not None else None)
-            out_df, highs = self._prepare_ids(df)
-            write_pcol = pcol
-            if pcol is not None and pcol not in out_df.columns:
-                # an EMPTY batch must still record its txn watermark
-                # (exactly-once contract), so instead of the append()
-                # no-op it stages a dataless, unpartitioned snap —
-                # has_data=False discards the entry, only txn commits
-                if out_df.isEmpty():
-                    write_pcol = None
-                else:
-                    raise ValueError(
-                        f"append to a table partitioned by {pcol!r} "
-                        f"needs that column in the batch"
-                    )
-            rel, parts, has_data, wmap, nrows = self._write_snap(
-                out_df, write_pcol,
-                audit_cols=self._unassigned_id_cols(highs))
-            entry = self._entry_for(rel, sorted(parts) if pcol else [],
-                                    has_data, out_df.schema, wmap,
-                                    row_count=nrows)
-            schema = out_df.schema.json()
-            if not has_data:
-                # empty batch: only the txn watermark commits — the
-                # schema-only staged dir is never referenced, reclaim
-                # it rather than leaving vacuum garbage (r10 advice)
-                self.st.delete(f"{self.root}/{rel}")
-            try:
-                return self._append_once_commit(
-                    out_df, app_id, batch_id, rel, entry, has_data, wmap,
-                    schema, highs=highs, pcol=pcol,
-                )
-            except ConcurrentWriteConflict:
-                # mapping DDL raced the write (see append): re-stage
-                # under the fresh mapping — the txn guard still makes
-                # the eventual commit exactly-once
-                if has_data:
-                    self.st.delete(f"{self.root}/{rel}")
-                continue
-        raise ConcurrentCommitError(
-            f"append_once lost the mapping race {self.max_retries} times "
+            f"{op['name']} lost the mapping race {self.max_retries} times "
             f"at {self.root}"
         )
-
-    def _append_once_commit(
-        self, df, app_id, batch_id, rel, entry, has_data, wmap, schema,
-        highs: dict | None = None, pcol: str | None = None,
-    ) -> int | None:
-        def build(prev: dict | None) -> dict:
-            if (prev or {}).get("column_mapping") != wmap:
-                raise _Conflicted
-            txn = dict((prev or {}).get("txn") or {})
-            last = txn.get(app_id)
-            if last is not None and last >= batch_id:
-                raise _SkipCommit  # rival committed this batch mid-race
-            if ((prev or {}).get("partition_col")) != pcol:
-                # partition evolution raced the staged write: the dir
-                # is laid out under the old layout — re-stage
-                raise _Conflicted
-            txn[app_id] = batch_id
-            entries = list(prev["entries"]) if prev else []
-            # an empty batch still records its txn watermark (the
-            # exactly-once contract needs the batch_id remembered),
-            # just without a dataless entry
-            if has_data:
-                entries = entries + [entry]
-            out = {"partition_col": pcol, "entries": entries,
-                   "txn": txn, "schema": schema,
-                   "op": {"name": "append_once", "app_id": app_id,
-                          "batch_id": batch_id}}
-            # rival assigned from our staged range → CAS, re-stage
-            self._stamp_highs(out, prev, highs or {}, cas=True)
-            return out
-
-        return self._commit(build)
 
     def replace_partitions(
         self,
@@ -5527,10 +5478,11 @@ def refresh_rollup_snapshot(
     events_batch: DataFrame,
     txn: tuple[str, int] | None = None,
 ) -> list[str]:
-    """`ops/rollup.refresh_rollup` on the snapshot backend: same
-    O(delta) incremental merge, but the partition replacement is an
-    atomic manifest commit instead of per-directory renames — safe on
-    object stores, no .bak recovery windows at all.
+    """Incremental rollup refresh (ops/rollup.py): fold one event
+    batch's `day_rollup` partials into the per-(shop, day) table in
+    O(delta) — only the touched days are read and merged, and the
+    partition replacement is one atomic manifest commit, safe on
+    object stores.
 
     `txn=(app_id, batch_id)` makes the refresh EXACTLY-ONCE under
     replay: merging the same delta twice would double-count the
@@ -5583,7 +5535,8 @@ def refresh_rollup_snapshot(
 
 
 def read_rollup_snapshot(spark: SparkSession, root: str) -> DataFrame:
-    """Snapshot-backend counterpart of `ops/rollup.read_rollup`."""
+    """The rollup with its derived (non-additive) column: avg from the
+    exact counters."""
     df = SnapshotTable(spark, root).read()
     return df.withColumn(
         "avg_value",

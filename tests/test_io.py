@@ -1,6 +1,6 @@
 """Write-path tests: append/stamp, schema evolution, missing-table
-guard, upsert, latest-state equivalence (reference bigquery.ts write
-surface)."""
+guard, keyed upsert, latest-state equivalence, the daily table's
+partition pruning (reference bigquery.ts write surface)."""
 
 from __future__ import annotations
 
@@ -58,19 +58,20 @@ def test_schema_evolution_align(spark, tmp_path):
 
 
 def test_upsert_keyed(spark, tmp_path):
-    path = str(tmp_path / "t")
-    base = _records(spark, [("s1", D, 10, 0.0, 10.0), ("s2", D, 20, 0.0, 10.0)])
-    pio.append_records(base, path, schema=USAGE_RECORDS)
-    updates = pio.align_to_schema(
-        _records(spark, [("s2", D, 99, 1.0, 10.0)]).withColumn(
-            "shopify_billing_status", F.lit("success")
-        ),
-        USAGE_RECORDS,
-    ).withColumn("created_at", F.current_timestamp())
-    pio.upsert(spark, path, updates, keys=("shop", "billing_date"))
-    back = {r["shop"]: r for r in spark.read.parquet(path).collect()}
+    """S7 — keyed upsert on the snapshot table: updated keys replaced,
+    the rest untouched, one row per key."""
+    from pixelspark.table import SnapshotTable
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.overwrite(_records(spark, [("s1", D, 10, 0.0, 10.0), ("s2", D, 20, 0.0, 10.0)]))
+    updates = _records(spark, [("s2", D, 99, 1.0, 10.0)]).withColumn(
+        "shopify_billing_status", F.lit("success")
+    )
+    t.upsert(updates, keys=("shop", "billing_date"))
+    back = {r["shop"]: r for r in t.read().collect()}
     assert len(back) == 2
     assert back["s2"]["page_views"] == 99  # updated
+    assert back["s2"]["shopify_billing_status"] == "success"
     assert back["s1"]["page_views"] == 10  # untouched
 
 
@@ -96,47 +97,50 @@ def test_latest_state_matches_upsert(spark, tmp_path):
     assert rows[0]["shopify_billing_status"] == "success"
 
 
-def test_partitioned_write_prunes(spark, tmp_path):
-    """billing_date-partitioned layout: a single-date read must show a
-    partition filter and touch only that partition's files."""
+def test_daily_table_day_read_prunes_to_one_partition(spark, tmp_path):
+    """The daily job's billing_date-partitioned snapshot table: a
+    single-day read-back through current_billing_state must show a
+    partition filter and open only that day's files."""
     import contextlib
     import io as _io
-    import datetime
 
-    from pyspark.sql import functions as F
+    from pixelspark import job as J
 
-    path = str(tmp_path / "part_table")
-    rows = [
-        ("s1", datetime.date(2024, 1, 1), 10, 0.0, 10.0),
-        ("s2", datetime.date(2024, 1, 2), 20, 0.0, 10.0),
-        ("s3", datetime.date(2024, 1, 3), 30, 0.0, 10.0),
-    ]
-    pio.append_records(
-        _records(spark, rows), path, schema=USAGE_RECORDS,
-        partition_by=("billing_date",),
+    path = str(tmp_path / "usage_records")
+    table = J._usage_table(spark, path)
+    for i, day in enumerate((1, 2, 3), start=1):
+        rows = [(f"s{i}", datetime.date(2024, 1, day), 10 * i, 0.0, 10.0)]
+        J._record(table, _records(spark, rows), f"daily_billing/2024-01-0{day}", 1)
+    back = J.current_billing_state(spark, path).where(
+        F.col("billing_date") == F.lit("2024-01-02").cast("date")
     )
-    back = spark.read.parquet(path).where(F.col("billing_date") == "2024-01-02")
-    assert back.count() == 1
+    assert [r["shop"] for r in back.collect()] == ["s2"]
     buf = _io.StringIO()
     with contextlib.redirect_stdout(buf):
         back.explain("formatted")
     plan = buf.getvalue()
     assert "PartitionFilters" in plan and "2024-01-02" in plan
+    assert _files_read(back) == 1  # one day's one file ...
+    assert _files_read(J.current_billing_state(spark, path)) == 3  # ... of three
 
 
-def test_compact_reduces_files(spark, tmp_path):
-    import datetime
-
-    path = str(tmp_path / "many_files")
-    for day in range(1, 6):
-        rows = [(f"s{day}", datetime.date(2024, 1, day), day, 0.0, 10.0)]
-        pio.append_records(_records(spark, rows), path, schema=USAGE_RECORDS)
-    import os
-
-    before = sum(1 for _r, _d, fs in os.walk(path) for f in fs if f.endswith(".parquet"))
-    n = pio.compact(spark, path, target_files=1)
-    assert n < before
-    assert spark.read.parquet(path).count() == 5  # no data loss
+def _files_read(df) -> int:
+    """Files the executed scan of `df` opened (the scan node's
+    numFiles metric, after partition pruning)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.finalPhysicalPlan()
+    stack, n = [plan], 0
+    while stack:
+        node = stack.pop()
+        if node.nodeName().startswith("Scan parquet"):
+            n += node.metrics().apply("numFiles").value()
+        if "QueryStage" in node.nodeName():  # AQE stage: a leaf wrapping its plan
+            node = node.plan()
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return n
 
 
 def test_csv_roundtrip_explicit_schema(spark, tmp_path):
@@ -304,37 +308,6 @@ def test_xml_roundtrip(spark, sf_dir, tmp_path):
     assert back.schema == df.schema
     assert back.count() == df.count()
     assert back.exceptAll(df).count() == 0
-
-
-def test_dynamic_partition_overwrite_is_idempotent_rerun(spark, sf_dir, tmp_path):
-    """Re-running one day must replace exactly that day's partition:
-    other days byte-identical, and a double-run equals a single run."""
-    from pixelspark.schemas import load_table
-
-    events = load_table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
-    three = events.where(F.col("day").between("2024-01-02", "2024-01-04"))
-    path = str(tmp_path / "events_dyn")
-    pio.write_partitioned(three, path, ("day",))
-
-    # a "corrected" day 3: only view events
-    day3_fixed = events.where((F.col("day") == "2024-01-03") & (F.col("event_type") == "view"))
-    pio.overwrite_partitions(day3_fixed, path, ("day",))
-    back = pio.read_partitioned(spark, path)
-    # day 3 replaced ...
-    assert (
-        back.where(F.col("day") == "2024-01-03").count() == day3_fixed.count()
-    )
-    # ... days 2 and 4 untouched
-    for d in ("2024-01-02", "2024-01-04"):
-        assert (
-            back.where(F.col("day") == d).exceptAll(events.where(F.col("day") == d)).count() == 0
-        )
-    # idempotence: running the same overwrite again changes nothing
-    # (materialize first — the old DataFrame's file index dies with the rewrite)
-    before = sorted(map(tuple, back.collect()))
-    pio.overwrite_partitions(day3_fixed, path, ("day",))
-    after = sorted(map(tuple, pio.read_partitioned(spark, path).collect()))
-    assert after == before
 
 
 def test_file_metadata_lineage_columns(spark, sf_dir, tmp_path):

@@ -25,42 +25,33 @@ def test_dry_run_no_writes(spark, sf_dir, tmp_path):
 
 
 def test_full_job_and_state(spark, sf_dir, tmp_path):
+    from pixelspark.table import SnapshotTable
+
     table = str(tmp_path / "usage_records")
-    ledger = str(tmp_path / "ledger")
-    charged = []
-
-    def charge(shop, amount):
-        charged.append(shop)
-        return f"gid://charge/{shop}"
-
-    out = J.run_daily_billing(
-        spark, sf_dir, "2024-01-02", table_path=table, ledger_dir=ledger,
-        charge_fn=charge, dry_run=False,
+    kwargs = dict(
+        table_path=table, ledger_dir=str(tmp_path / "ledger"),
+        charge_fn=lambda shop, amount: f"gid://charge/{shop}", dry_run=False,
     )
+    out = J.run_daily_billing(spark, sf_dir, "2024-01-02", **kwargs)
     assert out["dry_run"] is False
     assert out["status_counts"].get("skipped", 0) > 0  # zero-amount shops skipped
     # at sf0.001 all amounts are ~0 -> all skipped; nobody charged
-    state = J.current_billing_state(spark, table)
-    rows = state.collect()
-    assert len(rows) == 150  # one current row per shop
+    state = sorted(map(tuple, J.current_billing_state(spark, table).collect()))
+    assert len(state) == 150  # one current row per shop
     # every shop has both a pending and an outcome row in the log
-    log = spark.read.parquet(table)
-    assert log.count() == 300
-    # rerunning the job must not double-charge (idempotency ledger)
-    J.run_daily_billing(
-        spark, sf_dir, "2024-01-02", table_path=table, ledger_dir=ledger,
-        charge_fn=charge, dry_run=False,
-    )
-    assert len(charged) == len(set(charged))  # no shop charged twice
+    log = SnapshotTable(spark, table)
+    version = log.latest_version()
+    assert log.read().count() == 300
+    # a second run for the same day records nothing twice
+    J.run_daily_billing(spark, sf_dir, "2024-01-02", **kwargs)
+    assert log.latest_version() == version
+    assert log.read().count() == 300
+    assert sorted(map(tuple, J.current_billing_state(spark, table).collect())) == state
 
 
-def test_charged_shops_charge_once_and_report_matches_table(spark, tmp_path):
-    """With shops that are actually charged (sf0.001 never charges:
-    every amount rounds to $0.00), the charge stage runs once per
-    day: charge_fn is called once per charged shop, and the report's
-    status counts equal the statuses the table reads back."""
-    from collections import Counter
-
+def _three_shops(spark, tmp_path):
+    """Three shops on 2024-01-02, two of them charged, and a charge_fn
+    that records each call to a file (it runs in Python workers)."""
     from pyspark.sql import functions as F
 
     sf = tmp_path / "sf"
@@ -78,20 +69,72 @@ def test_charged_shops_charge_once_and_report_matches_table(spark, tmp_path):
     ).write.parquet(str(sf / "events.parquet"))
     calls = tmp_path / "calls.log"
 
-    def charge(shop, amount):  # runs in a Python worker: record to a file
+    def charge(shop, amount):
         with open(calls, "a") as f:
             f.write(f"{shop}\n")
         return f"gid://charge/{shop}"
 
-    table = str(tmp_path / "usage_records")
-    out = J.run_daily_billing(
-        spark, str(sf), "2024-01-02", table_path=table,
+    return str(sf), calls, dict(
+        table_path=str(tmp_path / "usage_records"),
         ledger_dir=str(tmp_path / "ledger"), charge_fn=charge,
     )
+
+
+def test_charged_shops_charge_once_and_report_matches_table(spark, tmp_path):
+    """With shops that are actually charged (sf0.001 never charges:
+    every amount rounds to $0.00), the charge stage runs once per
+    day: charge_fn is called once per charged shop, and the report's
+    status counts equal the statuses the table reads back.  A rerun
+    of the day calls nobody again and leaves the state as it was."""
+    from collections import Counter
+
+    sf, calls, kwargs = _three_shops(spark, tmp_path)
+    out = J.run_daily_billing(spark, sf, "2024-01-02", **kwargs)
     assert sorted(calls.read_text().split()) == ["1", "2"]
-    state = J.current_billing_state(spark, table).collect()
+    state = J.current_billing_state(spark, kwargs["table_path"]).collect()
     assert out["status_counts"] == {"success": 2, "skipped": 1}
     assert out["status_counts"] == Counter(r["shopify_billing_status"] for r in state)
+
+    J.run_daily_billing(spark, sf, "2024-01-02", **kwargs)
+    assert sorted(calls.read_text().split()) == ["1", "2"]
+    state = J.current_billing_state(spark, kwargs["table_path"]).collect()
+    assert {r["shop"]: (r["shopify_billing_status"], r["shopify_charge_id"]) for r in state} == {
+        "1": ("success", "gid://charge/1"),
+        "2": ("success", "gid://charge/2"),
+        "3": ("skipped", None),
+    }
+
+
+def test_crash_after_pending_commit_then_rerun_records_each_row_once(
+    spark, tmp_path, monkeypatch
+):
+    """The outcome stage fails after the pending rows committed and the
+    charges ran; the rerun of the day must leave exactly one pending
+    and one outcome row per shop, and call the charge API for nobody
+    a second time."""
+    from collections import Counter
+
+    import pytest
+
+    from pixelspark.ops import external as X
+    from pixelspark.table import SnapshotTable
+
+    sf, calls, kwargs = _three_shops(spark, tmp_path)
+
+    def crash(*args, **kw):
+        raise RuntimeError("outcome stage crashed")
+
+    with monkeypatch.context() as m:
+        m.setattr(X, "enrich_with_results", crash)
+        with pytest.raises(RuntimeError, match="outcome stage crashed"):
+            J.run_daily_billing(spark, sf, "2024-01-02", **kwargs)
+    assert sorted(calls.read_text().split()) == ["1", "2"]
+
+    J.run_daily_billing(spark, sf, "2024-01-02", **kwargs)
+    assert sorted(calls.read_text().split()) == ["1", "2"]
+    log = SnapshotTable(spark, kwargs["table_path"]).read().collect()
+    rows = Counter((r["shop"], r["shopify_billing_status"] == "pending") for r in log)
+    assert rows == {(shop, pending): 1 for shop in "123" for pending in (True, False)}
 
 
 def test_safe_run_returns_error_shape(spark, tmp_path):
@@ -223,28 +266,30 @@ def test_observe_metrics_piggyback(spark, sf_dir):
 
 def test_backfill_idempotent_range(spark, sf_dir, tmp_path):
     """Backfilling a 3-day range then re-running one day must converge
-    to the identical table (dynamic overwrite replaces, never appends)."""
+    to the identical table (partition replacement, never append)."""
     from pyspark.sql import functions as F
 
     from pixelspark.job import run_backfill
     from pixelspark.ops.billing import daily_billing
     from pixelspark.schemas import load_table
+    from pixelspark.table import SnapshotTable
 
     table = str(tmp_path / "bill_backfill")
     out = run_backfill(spark, sf_dir, "2024-01-02", "2024-01-04", table)
     assert out["backfilled_days"] == ["2024-01-02", "2024-01-03", "2024-01-04"]
-    first = sorted(map(tuple, spark.read.parquet(table).collect()))
+    snap = SnapshotTable(spark, table)
+    first = sorted(map(tuple, snap.read().collect()))
 
     # rerun the middle day: nothing may change
     run_backfill(spark, sf_dir, "2024-01-03", "2024-01-03", table)
-    second = sorted(map(tuple, spark.read.parquet(table).collect()))
+    second = sorted(map(tuple, snap.read().collect()))
     assert first == second
 
     # and each day equals a fresh computation
     want = daily_billing(
         load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "events"), "2024-01-03"
     ).withColumn("shop", F.col("shop").cast("string"))
-    got = spark.read.parquet(table).where(F.col("billing_date") == "2024-01-03")
+    got = snap.read().where(F.col("billing_date") == "2024-01-03")
     assert got.count() == want.count()
     assert got.select(*want.columns).exceptAll(want).count() == 0
 

@@ -1,12 +1,11 @@
 """Continuous-aggregate rollup: incremental refresh == full recompute,
 and refreshes only touch the delta's partitions."""
 
-import os
-
 from pyspark.sql import functions as F
 
 from pixelspark.ops import rollup as R
 from pixelspark.schemas import load_table
+from pixelspark.table import SnapshotTable, read_rollup_snapshot, refresh_rollup_snapshot
 
 
 def _full_recompute(events):
@@ -15,17 +14,18 @@ def _full_recompute(events):
 
 def test_incremental_equals_full(spark, sf_dir, tmp_path):
     events = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "rollup")
-    # three arbitrary batches: two day ranges plus a late-data replay
-    # that overlaps the first range (same day seen in two batches)
+    root = str(tmp_path / "rollup")
+    # three arbitrary batches, the late-data replay FIRST: it overlaps
+    # the range folded after it (same day seen in two batches), so the
+    # fold order differs from the data's day order
     b1 = events.where(F.to_date("ts") < "2024-01-10")
     b2 = events.where(F.to_date("ts") >= "2024-01-10")
     late = events.where(F.to_date("ts") == "2024-01-03")
-    R.refresh_rollup(spark, path, b1)
-    R.refresh_rollup(spark, path, b2)
-    R.refresh_rollup(spark, path, late)
+    refresh_rollup_snapshot(spark, root, late)
+    refresh_rollup_snapshot(spark, root, b2)
+    refresh_rollup_snapshot(spark, root, b1)
 
-    got = R.read_rollup(spark, path)
+    got = read_rollup_snapshot(spark, root)
     # the late replay double-counts day 3 by construction; expected =
     # full recompute over b1+b2+late
     want = _full_recompute(events.unionAll(late))
@@ -41,25 +41,25 @@ def test_incremental_equals_full(spark, sf_dir, tmp_path):
 
 
 def test_refresh_touches_only_delta_partitions(spark, sf_dir, tmp_path):
+    """A one-day refresh replaces that day's partition and nothing
+    else: every other day stays in the entry (data dir) that held it."""
     events = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "rollup")
-    R.refresh_rollup(spark, path, events)
-    before = {
-        d: os.path.getmtime(os.path.join(path, d))
-        for d in os.listdir(path)
-        if d.startswith("day=")
-    }
+    root = str(tmp_path / "rollup")
+    refresh_rollup_snapshot(spark, root, events)
+    t = SnapshotTable(spark, root)
+
+    def base_of_day() -> dict:
+        m = t.manifest(t.latest_version())
+        return {p: e["base"] for e in m["entries"] for p in e["parts"]}
+
+    before = base_of_day()
     assert len(before) > 2
-    swapped = R.refresh_rollup(
-        spark, path, events.where(F.to_date("ts") == "2024-01-05")
+    swapped = refresh_rollup_snapshot(
+        spark, root, events.where(F.to_date("ts") == "2024-01-05")
     )
     assert swapped == ["day=2024-01-05"]
-    after = {
-        d: os.path.getmtime(os.path.join(path, d))
-        for d in os.listdir(path)
-        if d.startswith("day=")
-    }
-    # only the refreshed partition's mtime moved
+    after = base_of_day()
+    assert set(after) == set(before)
     changed = {d for d in before if before[d] != after[d]}
     assert changed == {"day=2024-01-05"}
 
@@ -73,33 +73,3 @@ def test_merge_is_associative_and_exact(spark, sf_dir, tmp_path):
     # decimal counters: merge order cannot change any value bitwise
     assert ab.exceptAll(ba).count() == 0
     assert ba.exceptAll(ab).count() == 0
-
-
-def test_recover_partition_swaps_restores_lost_day(spark, sf_dir, tmp_path):
-    """Crash shape 1: between swap_dir's two renames — day=X is gone,
-    day=X.bak holds the only copy.  Both refresh and read must repair
-    it before proceeding (a leftover .bak would otherwise be parsed as
-    partition value 'X.bak' and the day silently dropped)."""
-    import shutil
-
-    events = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "rollup")
-    R.refresh_rollup(spark, path, events)
-    day = "day=2024-01-05"
-    os.rename(os.path.join(path, day), os.path.join(path, day + ".bak"))
-    got = R.read_rollup(spark, path)
-    assert not os.path.exists(os.path.join(path, day + ".bak"))
-    assert os.path.isdir(os.path.join(path, day))
-    assert got.where(F.col("day") == "2024-01-05").count() > 0
-    # no bogus partition value leaked into the schema
-    days = [r["day"] for r in got.select("day").distinct().collect()]
-    assert all(".bak" not in str(d) for d in days)
-
-    # crash shape 2: after the second rename but before backup cleanup
-    # — both day=X and a stale day=X.bak exist; the .bak must be removed
-    shutil.copytree(os.path.join(path, day), os.path.join(path, day + ".bak"))
-    swapped = R.refresh_rollup(
-        spark, path, events.where(F.to_date("ts") == "2024-01-05")
-    )
-    assert swapped == [day]
-    assert not os.path.exists(os.path.join(path, day + ".bak"))

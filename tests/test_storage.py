@@ -49,15 +49,21 @@ def test_hadoop_storage_contract(spark, tmp_path):
 
 
 def test_hadoop_has_parquet_and_swap(spark, tmp_path):
+    """HadoopStorage.has_parquet sees the data a snapshot table writes,
+    and replacing the table through the Hadoop backend is a manifest
+    swap: the new snapshot reads back and no backup or staging dir is
+    left beside the table."""
+    from pixelspark.table import SnapshotTable
+
     st = HadoopStorage(spark)
     target = f"file://{tmp_path}/t"
-    spark.range(10).write.parquet(target)
+    t = SnapshotTable(spark, target, storage=st)
+    assert not st.has_parquet(target)
+    t.overwrite(spark.range(10))
     assert st.has_parquet(target)
-    staged = st.staging_path(target)
-    spark.range(5).write.parquet(staged)
-    st.swap_dir(staged, target)
-    assert spark.read.parquet(target).count() == 5
-    assert not st.exists(target.rstrip("/") + ".bak")
+    t.overwrite(spark.range(5))
+    assert t.read().count() == 5
+    assert st.list(f"file://{tmp_path}") == ["t"]
 
 
 def test_storage_for_picks_backend(spark):
@@ -69,41 +75,40 @@ def test_storage_for_picks_backend(spark):
 
 
 def test_table_exists_via_hadoop_uri(spark, tmp_path):
-    """table_exists / upsert / compact accept scheme-qualified paths —
-    the POSIX os.walk/os.rename assumptions are gone."""
+    """table_exists and the snapshot table's upsert / compact accept
+    scheme-qualified paths — no POSIX os.walk/os.rename assumptions."""
+    from pixelspark.table import SnapshotTable
+
     path = f"file://{tmp_path}/tbl"
     assert not pio.table_exists(spark, path)
-    spark.range(20).select(F.col("id"), (F.col("id") % 3).alias("k")).write.parquet(path)
+    t = SnapshotTable(spark, path)
+    t.overwrite(spark.range(20).select(F.col("id"), (F.col("id") % 3).alias("k")))
     assert pio.table_exists(spark, path)
 
-    updates = spark.range(5).select(F.col("id"), F.lit(99).alias("k"))
-    pio.upsert(spark, path, updates, keys=("id",))
-    got = {r["id"]: r["k"] for r in spark.read.parquet(path).collect()}
+    updates = spark.range(5).select(F.col("id"), F.lit(99).cast("long").alias("k"))
+    t.upsert(updates, keys=("id",))
+    got = {r["id"]: r["k"] for r in t.read().collect()}
     assert len(got) == 20 and got[0] == 99 and got[19] == 19 % 3
 
-    n = pio.compact(spark, path, target_files=2)
-    assert n <= 2
-    assert spark.read.parquet(path).count() == 20
+    t.compact()  # the whole table folds into one data dir
+    assert len(t.manifest(t.latest_version())["entries"]) == 1
+    assert t.read().count() == 20
 
 
 def test_rollup_refresh_via_hadoop_uri(spark, sf_dir, tmp_path):
-    from pixelspark.ops import rollup as R
     from pixelspark.schemas import load_table
+    from pixelspark.table import read_rollup_snapshot, refresh_rollup_snapshot
 
     events = load_table(spark, sf_dir, "events")
     path = f"file://{tmp_path}/rollup"
-    first = R.refresh_rollup(spark, path, events.where(F.to_date("ts") == "2024-01-02"))
+    day = events.where(F.to_date("ts") == "2024-01-02")
+    first = refresh_rollup_snapshot(spark, path, day)
     assert first and all(p.startswith("day=") for p in first)
     # fold in a second batch for the same day: counters must merge, not duplicate
-    again = R.refresh_rollup(spark, path, events.where(F.to_date("ts") == "2024-01-02"))
+    again = refresh_rollup_snapshot(spark, path, day)
     assert again == ["day=2024-01-02"]
-    row = (
-        R.read_rollup(spark, path)
-        .agg(F.sum("n_events").alias("n"))
-        .collect()[0]
-    )
-    base = events.where(F.to_date("ts") == "2024-01-02").count()
-    assert row["n"] == 2 * base
+    row = read_rollup_snapshot(spark, path).agg(F.sum("n_events").alias("n")).collect()[0]
+    assert row["n"] == 2 * day.count()
 
 
 def test_ledger_precondition(tmp_path):
@@ -127,27 +132,6 @@ def test_ledger_probe_leaves_no_residue(tmp_path):
     d = tmp_path / "ledger"
     ledger_precondition(str(d))
     assert list(os.listdir(d)) == []  # probe file cleaned up
-
-
-def test_recover_swap_after_simulated_crash(spark, tmp_path):
-    """A crash between swap renames (target moved to .bak, staged not
-    yet moved in) must be repairable: recover_swap restores the backup
-    and the next upsert proceeds normally."""
-    st = LocalStorage()
-    target = str(tmp_path / "tbl")
-    spark.range(10).select(F.col("id"), F.lit(1).alias("k")).write.parquet(target)
-    # simulate the crash window: target renamed away, staged lost
-    st.rename(target, target + ".bak")
-    assert not st.exists(target)
-    assert st.recover_swap(target) is True
-    assert spark.read.parquet(target).count() == 10
-    assert st.recover_swap(target) is False  # idempotent no-op
-    # and the write paths self-heal: upsert after a crash works end-to-end
-    st.rename(target, target + ".bak")
-    updates = spark.range(3).select(F.col("id"), F.lit(9).alias("k"))
-    pio.upsert(spark, target, updates, keys=("id",))
-    got = {r["id"]: r["k"] for r in spark.read.parquet(target).collect()}
-    assert len(got) == 10 and got[0] == 9 and got[9] == 1
 
 
 def test_ledger_precondition_rejects_unknown_scheme(tmp_path):

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pixelspark.ops.billing import pageviews_agg
 from pixelspark.schemas import load_table
 from pixelspark.streaming import daily as SD
+from pixelspark.table import SnapshotTable
 
 
 def _stage_events(spark, sf_dir, tmp_path):
@@ -46,7 +47,7 @@ def test_streaming_upsert_sink(spark, sf_dir, tmp_path):
     table = str(tmp_path / "billing_table")
     ckpt = str(tmp_path / "ckpt")
     SD.run_upsert_sink(pv, table, ckpt)
-    back = spark.read.parquet(table)
+    back = SnapshotTable(spark, table).read()
     assert back.count() > 0
     # keyed uniqueness: latest-state semantics hold in the sink table
     dup = back.groupBy("shop", "billing_date").count().where(F.col("count") > 1).count()
@@ -211,7 +212,7 @@ def test_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
     run2_rows = sum(p["numInputRows"] for p in q2.recentProgress)
     assert run2_rows == late.count()  # early files NOT reprocessed
 
-    got = spark.read.parquet(table).select("shop", "billing_date", "page_views")
+    got = SnapshotTable(spark, table).read().select("shop", "billing_date", "page_views")
     want = (
         events.where(F.col("event_type") == "view")
         .groupBy(
@@ -438,7 +439,7 @@ def test_foreachbatch_fanout_two_sinks(spark, sf_dir, tmp_path):
     table = str(tmp_path / "fanout_table")
     audit = str(tmp_path / "fanout_audit")
     SD.run_fanout_sink(pv, table, audit, str(tmp_path / "ckpt_fanout"))
-    back = spark.read.parquet(table)
+    back = SnapshotTable(spark, table).read()
     want = {
         (str(r["billing_date"]), r["shop"]): r["event_count"]
         for r in events.where(F.col("event_type") == "view")
@@ -462,7 +463,7 @@ def test_foreachbatch_fanout_two_sinks(spark, sf_dir, tmp_path):
     # final per-day totals (update mode re-emits growing counts)
     import pandas as pd
 
-    audit_pdf = spark.read.parquet(audit).toPandas()
+    audit_pdf = SnapshotTable(spark, audit).read().toPandas()
     last = (
         audit_pdf.sort_values("batch_id")
         .groupby("billing_date")
@@ -478,6 +479,34 @@ def test_foreachbatch_fanout_two_sinks(spark, sf_dir, tmp_path):
     assert len(m) == len(table_days)
     assert (m["day_events_audit"] == m["day_events_table"]).all()
     assert (m["n_shops_audit"] == m["n_shops_table"]).all()
+
+
+def test_fanout_audit_holds_a_replayed_batch_once(spark, sf_dir, tmp_path):
+    """A batch replayed after a failure (its offsets logged, its commit
+    not) must land in the audit sink once: drop the checkpoint's last
+    commit marker and rerun, so Spark re-executes that batch id."""
+    # one source file per batch and no empty watermark-only batches, so
+    # the replayed last batch carries audit rows
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        src = str(tmp_path / "events_replay_in")
+        load_table(spark, sf_dir, "events").repartition(3).write.parquet(src)
+        pv = SD.windowed_pageviews(SD.read_event_stream(spark, src, max_files_per_trigger=1))
+        table, audit = str(tmp_path / "replay_table"), str(tmp_path / "replay_audit")
+        ckpt = tmp_path / "ckpt_replay"
+        SD.run_fanout_sink(pv, table, audit, str(ckpt))
+        first = sorted(map(tuple, SnapshotTable(spark, audit).read().collect()))
+        assert {r[-1] for r in first} == {0, 1, 2}
+        (ckpt / "commits" / "2").unlink()
+        (ckpt / "commits" / ".2.crc").unlink(missing_ok=True)
+
+        q = SD.run_fanout_sink(pv, table, audit, str(ckpt))
+        assert [p["batchId"] for p in q.recentProgress] == [2]  # batch 2 replayed
+        assert sorted(map(tuple, SnapshotTable(spark, audit).read().collect())) == first
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_stream_stream_left_outer_join_finalizes_nulls(spark, sf_dir, tmp_path):

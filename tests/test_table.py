@@ -2401,3 +2401,20 @@ def test_append_only_partition_column_after_evolution(spark, tmp_path):
     # are addressable through the partition layout
     t.compact()
     assert [r["k"] for r in t.read(partition_values=[7]).collect()] == [7]
+
+
+@pytest.mark.parametrize("verb", ["append", "append_once"])
+def test_partition_only_batch_lands_through_both_append_verbs(spark, tmp_path, verb):
+    """A batch carrying only the partition column of a partitioned
+    table expands to the declared schema through either append verb
+    (parquet refuses a layout with zero data columns)."""
+    t = SnapshotTable(spark, str(tmp_path / "po"))
+    t.overwrite(spark.createDataFrame([(1, "a")], "k long, s string"), partition_col="k")
+    batch = spark.createDataFrame([(7,)], "k long")
+    if verb == "append":
+        t.append(batch)
+    else:
+        assert t.append_once(batch, "app", 1) is not None
+        assert t.append_once(batch, "app", 1) is None  # replay commits nothing
+    assert sorted((r["k"], r["s"]) for r in t.read().collect()) == [(1, "a"), (7, None)]
+    assert [r["k"] for r in t.read(partition_values=[7]).collect()] == [7]
