@@ -76,7 +76,9 @@ def run_daily_billing(
     # stage 7: durably record pending BEFORE charging (billing.ts:83-122)
     _record(table, records.withColumn("shopify_billing_status", F.lit("pending")), app_id, 1)
 
-    # stage 8: bounded, retrying, idempotent external charges
+    # stage 8: bounded, retrying, idempotent external charges.  Skipped
+    # shops become result rows in Catalyst; the billable ones are charged
+    # in one Python task by a pool of max_concurrency threads
     plan = bill.select(
         "shop", F.col("billing_amount").alias("amount")
     ).withColumn(

@@ -7,17 +7,23 @@ p-limit(5) and 3 retries at 1s*2^(n-1) backoff.  Spark executes tasks
 at-least-once, so a naive port would double-charge on task retry — the
 #1 semantic hazard (SURVEY.md §7).  Design:
 
-* concurrency bound: the plan is repartitioned to `max_concurrency`
-  partitions and each partition processes serially -> at most
-  `max_concurrency` calls in flight cluster-wide, matching p-limit(N)
-  without any cross-executor coordination.
+* zero-amount skip: a Column expression classifies each plan row, so
+  skipped rows become result rows by a projection and never reach a
+  Python worker (shopifyBilling.ts:68-74).
+* concurrency bound: the billable rows are shuffled into ONE partition
+  and one mapInPandas task maps them through a thread pool of
+  `max_concurrency` threads -> at most `max_concurrency` calls in
+  flight, the reference's p-limit(N) in one process, and one Python
+  task per charge stage whatever the plan's parallelism.
 * retries: per-call retry loop with exponential backoff inside the
   task (Spark task retries alone would replay whole partitions).
 * idempotency: an at-most-once ledger keyed by (shop, billing_date).
   A key is claimed with an atomic O_CREAT|O_EXCL file create before
-  the external call; a replayed task sees the claim and skips the
-  call, reporting 'duplicate'.  On a cluster the ledger dir lives on
-  shared storage (the semantics only need atomic create).
+  the external call, and a successful call's charge id is written into
+  the claim file; a replayed task sees the claim and skips the call,
+  reporting 'duplicate' with the recorded charge id.  On a cluster the
+  ledger dir lives on shared storage (the semantics only need atomic
+  create).
 * results come back as a DataFrame via mapInPandas so the enrich
   stage (J3) is a plain join.
 """
@@ -27,6 +33,7 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 
@@ -47,6 +54,10 @@ RESULT_SCHEMA = T.StructType(
 )
 
 
+def _key_path(ledger_dir: str, shop: object, billing_date: str) -> str:
+    return os.path.join(ledger_dir, f"{shop}__{billing_date}")
+
+
 def claim_key(ledger_dir: str, shop: object, billing_date: str) -> bool:
     """Atomically claim an idempotency key. True = first claim (caller
     performs the external call), False = already claimed (skip).
@@ -58,13 +69,36 @@ def claim_key(ledger_dir: str, shop: object, billing_date: str) -> bool:
     storage.ledger_precondition before any task runs, and object-store
     schemes (no atomic create-if-absent) are rejected outright."""
     os.makedirs(ledger_dir, exist_ok=True)
-    key_path = os.path.join(ledger_dir, f"{shop}__{billing_date}")
+    key_path = _key_path(ledger_dir, shop, billing_date)
     try:
         fd = os.open(key_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         os.close(fd)
         return True
     except FileExistsError:
         return False
+
+
+def record_charge_id(ledger_dir: str, shop: object, billing_date: str, charge_id: str) -> None:
+    """Write a successful call's charge id into its claimed key file and
+    fsync it, so a later claimant can report which charge billed the
+    shop (claimed_charge_id)."""
+    fd = os.open(_key_path(ledger_dir, shop, billing_date), os.O_WRONLY)
+    try:
+        os.write(fd, charge_id.encode())
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def claimed_charge_id(ledger_dir: str, shop: object, billing_date: str) -> str | None:
+    """The charge id recorded under a claimed key; None when the claim
+    holds none (the call failed, or is still in flight) or the file
+    cannot be read."""
+    try:
+        with open(_key_path(ledger_dir, shop, billing_date), encoding="utf-8") as f:
+            return f.read() or None
+    except (OSError, UnicodeDecodeError):
+        return None
 
 
 def charge_with_retry(
@@ -164,9 +198,20 @@ def charge_shops(
     lookup_fn: Callable[[int], str | None] | None = None,
     mutate_fn: Callable[[int, str, float], str] | None = None,
 ) -> DataFrame:
-    """Execute the charge plan. `plan` needs (shop, amount, status)
-    where status 'skipped' rows bypass the external call entirely
-    (zero-amount skip, shopifyBilling.ts:68-74).
+    """Execute the charge plan. `plan` needs (shop, amount, status).
+    A row is skipped — no ledger claim, no external call
+    (zero-amount skip, shopifyBilling.ts:68-74) — when its status is
+    'skipped', its amount is NULL or its amount is not > 0 (NaN is
+    billable).  That rule is a Column expression: skipped rows become
+    result rows by a projection and never reach Python.
+
+    The billable rows are shuffled into one partition (`repartition(1)`,
+    so the upstream plan keeps its parallelism) and one mapInPandas task
+    maps them through a pool of `max_concurrency` threads: at most
+    `max_concurrency` calls in flight (p-limit(N)), and the charge
+    callables are called from up to `max_concurrency` threads of one
+    Python process.  `plan` is read by both parts, so materialize it
+    first when it is expensive to derive.
 
     Pass (lookup_fn, mutate_fn) to run the reference's two-call
     sequence with its full failure taxonomy (no-line-item 'failed'
@@ -182,30 +227,47 @@ def charge_shops(
     if not two_call and charge_fn is None:
         raise ValueError("need charge_fn, or both lookup_fn and mutate_fn")
 
-    def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                shop, amount, status = row.shop, row.amount, row.status
-                if status == "skipped" or (amount is None) or amount <= 0:
-                    out.append((shop, billing_date, amount, "skipped", None, None, 0))
-                    continue
-                if not claim_key(ledger_dir, shop, billing_date):
-                    out.append((shop, billing_date, amount, "duplicate", None, None, 0))
-                    continue
-                if two_call:
-                    status2, charge_id, err, attempts = charge_with_retry_two_call(
-                        lookup_fn, mutate_fn, shop, amount, max_retries, base_delay
-                    )
-                else:
-                    status2, charge_id, err, attempts = charge_with_retry(
-                        charge_fn, shop, amount, max_retries, base_delay
-                    )
-                out.append((shop, billing_date, amount, status2, charge_id, err, attempts))
-            yield pd.DataFrame(out, columns=[f.name for f in RESULT_SCHEMA.fields])
+    def charge_one(shop: int, amount: float) -> tuple:
+        if not claim_key(ledger_dir, shop, billing_date):
+            charge_id = claimed_charge_id(ledger_dir, shop, billing_date)
+            return (shop, billing_date, amount, "duplicate", charge_id, None, 0)
+        if two_call:
+            status, charge_id, err, attempts = charge_with_retry_two_call(
+                lookup_fn, mutate_fn, shop, amount, max_retries, base_delay
+            )
+        else:
+            status, charge_id, err, attempts = charge_with_retry(
+                charge_fn, shop, amount, max_retries, base_delay
+            )
+        if status == "success" and charge_id is not None:
+            record_charge_id(ledger_dir, shop, billing_date, str(charge_id))
+        return (shop, billing_date, amount, status, charge_id, err, attempts)
 
-    bounded = plan.select("shop", "amount", "status").repartition(max_concurrency, "shop")
-    return bounded.mapInPandas(run_partition, RESULT_SCHEMA)
+    def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        with ThreadPoolExecutor(max_concurrency) as pool:
+            for pdf in batches:
+                out = list(pool.map(charge_one, pdf["shop"].tolist(), pdf["amount"].tolist()))
+                yield pd.DataFrame(out, columns=RESULT_SCHEMA.fieldNames())
+
+    rows = plan.select("shop", "amount", "status")
+    # never NULL (a NULL amount makes the middle term true), so ~skip
+    # selects exactly the rows skip leaves out
+    skip = (
+        F.col("status").eqNullSafe("skipped")
+        | F.col("amount").isNull()
+        | ~(F.col("amount") > 0)
+    )
+    skipped = rows.where(skip).select(
+        "shop",
+        F.lit(billing_date).alias("billing_date"),
+        "amount",
+        F.lit("skipped").alias("status"),
+        F.lit(None).cast("string").alias("charge_id"),
+        F.lit(None).cast("string").alias("error_message"),
+        F.lit(0).alias("attempts"),
+    )
+    charged = rows.where(~skip).repartition(1).mapInPandas(run_partition, RESULT_SCHEMA)
+    return skipped.union(charged)
 
 
 def enrich_with_results(records: DataFrame, results: DataFrame) -> DataFrame:

@@ -1,5 +1,5 @@
 """External charge sink (S8): retry/backoff, zero-amount skip,
-bounded concurrency partitioning, idempotency under task replay —
+bounded concurrency (thread pool), idempotency under task replay —
 mirrors src/test/shopifyBilling.test.ts and adds the at-least-once
 hazard the reference never faces."""
 
@@ -154,16 +154,100 @@ def test_idempotency_no_double_charge(spark, tmp_path):
     assert {r["status"] for r in first.collect()} == {"success"}
     # replay: same plan, same ledger -> all duplicates, no external calls
     second = X.charge_shops(plan, "2024-01-02", charge, ledger_dir=ledger, base_delay=0.0)
-    assert {r["status"] for r in second.collect()} == {"duplicate"}
+    second = {r["shop"]: (r["status"], r["charge_id"]) for r in second.collect()}
+    # the ledger kept each charge id, so the replay still reports it
+    assert second == {1: ("duplicate", "gid://charge/1"), 2: ("duplicate", "gid://charge/2")}
     # a DIFFERENT billing date is a fresh charge
     third = X.charge_shops(plan, "2024-01-03", charge, ledger_dir=ledger, base_delay=0.0)
     assert {r["status"] for r in third.collect()} == {"success"}
 
 
-def test_concurrency_bound_partitioning(spark, tmp_path):
-    plan = _plan(spark, [(i, 1.0, "pending") for i in range(50)])
-    bounded = plan.select("shop", "amount", "status").repartition(5, "shop")
-    assert bounded.rdd.getNumPartitions() == 5  # <=5 in flight, p-limit(5) parity
+def test_charge_pool_bounds_calls_in_flight(spark, tmp_path):
+    """p-limit(N) parity: the billable shops are charged by a pool of
+    max_concurrency threads in one task — never more calls in flight,
+    and more than one, so the pool is really used.  The charge fn runs
+    in a Python worker, so it logs entry and exit to a file under a
+    lock."""
+    import fcntl
+    import time
+
+    log = tmp_path / "inflight.log"
+
+    def charge(shop, amount):
+        def mark(sign):
+            with open(log, "a") as f:
+                fcntl.flock(f, fcntl.LOCK_EX)
+                f.write(f"{sign}\n")
+                fcntl.flock(f, fcntl.LOCK_UN)
+
+        mark("+1")
+        time.sleep(0.05)
+        mark("-1")
+        return f"gid://charge/{shop}"
+
+    plan = _plan(spark, [(i, 1.0, "pending") for i in range(20)])
+    res = X.charge_shops(
+        plan, "2024-01-02", charge, ledger_dir=str(tmp_path / "ledger"),
+        max_concurrency=3, base_delay=0.0,
+    )
+    assert {r["status"] for r in res.collect()} == {"success"}
+    inflight, peak = 0, 0
+    for delta in log.read_text().split():
+        inflight += int(delta)
+        peak = max(peak, inflight)
+    assert inflight == 0 and 2 <= peak <= 3
+
+
+def _python_skip_rule(status, amount):
+    """The zero-amount skip rule on one row's Python values — the
+    reference the Column expression in charge_shops must match."""
+    return status == "skipped" or amount is None or amount <= 0
+
+
+def test_skip_classification_matches_python_rule(spark, tmp_path):
+    """The Catalyst skip rule gives every row the status the per-row
+    Python rule gives it — NULL status and NaN amount are billable,
+    NULL amount is skipped — and only billable shops are claimed and
+    called."""
+    rows = [
+        (1, None, "pending"),
+        (2, 5.0, None),
+        (3, 0.0, "pending"),
+        (4, -1.0, "pending"),
+        (5, 5.0, "skipped"),
+        (6, float("nan"), "pending"),
+        (7, 5.0, "pending"),
+    ]
+    schema = T.StructType(
+        [
+            T.StructField("shop", T.LongType(), False),
+            T.StructField("amount", T.DoubleType(), True),
+            T.StructField("status", T.StringType(), True),
+        ]
+    )
+    calls = tmp_path / "calls.log"
+
+    def charge(shop, amount):
+        with open(calls, "a") as f:
+            f.write(f"{shop}\n")
+        return f"gid://charge/{shop}"
+
+    ledger = tmp_path / "ledger"
+    res = X.charge_shops(
+        spark.createDataFrame(rows, schema), "2024-01-02", charge,
+        ledger_dir=str(ledger), base_delay=0.0,
+    )
+    got = {r["shop"]: r["status"] for r in res.collect()}
+    want = {
+        shop: "skipped" if _python_skip_rule(status, amount) else "success"
+        for shop, amount, status in rows
+    }
+    assert want == {1: "skipped", 2: "success", 3: "skipped", 4: "skipped",
+                    5: "skipped", 6: "success", 7: "success"}
+    assert got == want
+    billable = {shop for shop, s in want.items() if s == "success"}
+    assert {int(p.name.split("__")[0]) for p in ledger.iterdir()} == billable
+    assert {int(s) for s in calls.read_text().split()} == billable
 
 
 def test_enrich_with_results(spark, tmp_path):

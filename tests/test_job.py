@@ -110,8 +110,9 @@ def test_crash_after_pending_commit_then_rerun_records_each_row_once(
 ):
     """The outcome stage fails after the pending rows committed and the
     charges ran; the rerun of the day must leave exactly one pending
-    and one outcome row per shop, and call the charge API for nobody
-    a second time."""
+    and one outcome row per shop, call the charge API for nobody a
+    second time, and still record which charge billed each shop (the
+    ledger kept the first run's charge ids)."""
     from collections import Counter
 
     import pytest
@@ -135,6 +136,12 @@ def test_crash_after_pending_commit_then_rerun_records_each_row_once(
     log = SnapshotTable(spark, kwargs["table_path"]).read().collect()
     rows = Counter((r["shop"], r["shopify_billing_status"] == "pending") for r in log)
     assert rows == {(shop, pending): 1 for shop in "123" for pending in (True, False)}
+    state = J.current_billing_state(spark, kwargs["table_path"]).collect()
+    assert {r["shop"]: (r["shopify_billing_status"], r["shopify_charge_id"]) for r in state} == {
+        "1": ("duplicate", "gid://charge/1"),
+        "2": ("duplicate", "gid://charge/2"),
+        "3": ("skipped", None),
+    }
 
 
 def test_safe_run_returns_error_shape(spark, tmp_path):
