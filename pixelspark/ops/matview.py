@@ -487,7 +487,7 @@ def _flip_deltas(
     left: SnapshotTable,
     l_wm: int,
     on: tuple[str, ...],
-    cleanup: list | None = None,
+    cleanup: list,
 ) -> DataFrame:
     """Outer-join zero-crossing correction: when a change window on
     one side (`changes`, from the table pinned at `r_wm` before the
@@ -536,11 +536,10 @@ def _flip_deltas(
     )
     # consumed twice (key-range probe inside _pinned_side, then the
     # join); its plan includes the m0 pinned scan — cache it so that
-    # scan runs once.  The caller unpersists via `cleanup` after the
-    # fold merge has consumed the correction
+    # scan runs once.  The caller unpersists everything in `cleanup`
+    # after the fold merge has consumed the correction
     flips = flips.persist()
-    if cleanup is not None:
-        cleanup.append(flips)
+    cleanup.append(flips)
     affected = _delta_join(flips, _pinned_side(left, l_wm, flips, on), on)
     r_schema = changes.schema
     null_right = [

@@ -1117,7 +1117,7 @@ def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mixed-layout manifest."""
     import tempfile
 
-    from pixelspark.table import SnapshotTable
+    from pixelspark.table import SnapshotTable, entry_layout
 
     root = tempfile.mkdtemp(prefix="pixelspark_pevo_") + "/pv_rollup"
     t = SnapshotTable(spark, root)
@@ -1134,7 +1134,7 @@ def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     _require(t.manifest(v1)["entries"] == t.manifest(v0)["entries"], "evolution must be metadata-only")
     t.replace_partitions(pv.where(F.col("day") == "2024-01-03"), "shop")
     layouts = {
-        t._entry_layout(e) for e in t.manifest(t.latest_version())["entries"]
+        entry_layout(e) for e in t.manifest(t.latest_version())["entries"]
     }
     _require(layouts == {"day", "shop"}, layouts)
     return (
@@ -2141,8 +2141,8 @@ def q_mixed_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     written unpartitioned, `evolve_partitioning('day')` switches the
     layout as one metadata commit, a new day lands in the new layout —
     and rewrite-mode DELETE/UPDATE then run on the MIXED-layout table
-    via the entry-scoped copy-on-write fallback (table.py
-    `_rewrite_mixed`), exactly as Delta/Iceberg allow, instead of
+    via the copy-on-write commit's entry scope (table.py
+    `_cow_commit`), exactly as Delta/Iceberg allow, instead of
     refusing until a full compact.  The delete rewrites the touched
     pre-evolution entry INTO the current layout (asserted: layouts are
     mixed before, unified after — each DML retires evolution debt) and

@@ -75,11 +75,11 @@ import time
 import uuid
 import warnings
 from functools import reduce
-from typing import Callable
+from typing import Callable, NamedTuple
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from pixelspark.metrics import observed_long
 from pixelspark.storage import (
@@ -96,6 +96,10 @@ DATA_DIR = "data"
 # (it asserts the table does not exist yet), so absence needs its own
 # marker.
 _ANY_VERSION = object()
+
+# the row-position columns a deletion vector addresses rows by: the
+# file path relative to the table's data dir, and the parquet row index
+_POS = ("__dv_file", "__dv_row")
 
 _PRED_OPS = {
     "=": lambda c, v: c == v,
@@ -454,6 +458,36 @@ class _SkipCommit(Exception):
 
 class _Conflicted(Exception):
     """Internal: a build callback found prev != expected_version."""
+
+
+class _Change(NamedTuple):
+    """One row-level change, as a verb's plan builds it over a target
+    scan for the kernel (`SnapshotTable._dv_commit` / `_cow_commit`).
+
+      * `rows` — the frame the clauses run over: the target itself, or
+        the target joined to a MERGE source;
+      * `out` — the post-image projection over `rows`, one aliased
+        Column per output column;
+      * `hit` — the rows the change touches (in dv mode their positions
+        become the vector); None when unknown (upsert);
+      * `deleted` — the rows that leave the table;
+      * `assigned` — the columns the post-image sets explicitly (the
+        generated-column recompute keeps them); None: no post-image;
+      * `inserts` — new rows in the output columns, or None;
+      * `new_fields` — columns a schema-evolving MERGE adds."""
+
+    rows: DataFrame
+    out: list
+    hit: Column | None
+    deleted: Column
+    assigned: dict | None = None
+    inserts: DataFrame | None = None
+    new_fields: tuple = ()
+
+
+def _ekey(e: dict) -> tuple:
+    """A manifest entry's identity: owning root, data dir, parts."""
+    return (e.get("root"), e["base"], tuple(e["parts"] or ()))
 
 
 class SnapshotTable:
@@ -911,7 +945,7 @@ class SnapshotTable:
             for logical, phys in cmap["cols"].items()
             if phys in have
         ]
-        sel += [F.col(c) for c in ("__dv_file", "__dv_row") if c in have]
+        sel += [F.col(c) for c in _POS if c in have]
         return df.select(*sel)
 
     def _write_snap(
@@ -993,8 +1027,6 @@ class SnapshotTable:
                     "schema-evolution-first contract)"
                 )
             df = df.select(*[F.col(c).alias(cols[c]) for c in df.columns])
-        from pyspark.sql import Observation
-
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("n"))
         rel = self._new_snap()
@@ -1144,10 +1176,14 @@ class SnapshotTable:
             raise
         return df, highs
 
-    def _unassigned_id_cols(self, highs: dict) -> list[str]:
+    def _unassigned_id_cols(self, highs: dict) -> list[str] | None:
         """Id columns this write did NOT assign — they arrive carried
         from the table (or from an explicit-id source) and get the
-        inline NULL audit in the write plan."""
+        inline NULL audit in the write plan.  None when it assigned
+        nothing: `_write_snap` then audits every id column itself,
+        without a second read of the specs."""
+        if not highs:
+            return None
         return [spec["col"] for key, spec in self._id_specs()
                 if key not in highs]
 
@@ -2151,6 +2187,14 @@ class SnapshotTable:
         if (prev["version"] if prev else None) != expected_version:
             raise _Conflicted
 
+    def _replayed(self, txn: tuple) -> bool:
+        """True when the latest snapshot already records `txn`'s batch
+        — the pre-check that lets a replayed write skip its work (the
+        commit build's `_txn_apply` still guards the race)."""
+        v = self.latest_version()
+        last = (self.manifest(v).get("txn") or {}).get(txn[0]) if v is not None else None
+        return last is not None and last >= txn[1]
+
     @staticmethod
     def _txn_apply(tmap: dict, txn: tuple) -> None:
         """Record a txn watermark into `tmap` (mutates).  `txn` is
@@ -2172,26 +2216,6 @@ class SnapshotTable:
                 "from the current watermark"
             )
         tmap[app] = batch
-
-    @staticmethod
-    def _txn_watermark_manifest(
-        prev: dict | None, txn: tuple[str, int], op: dict
-    ) -> dict:
-        """Build for a WATERMARK-ONLY commit: a no-effect batch that
-        still must record its (app_id, batch_id) so replay detection
-        never depends on the batch having had effects.  Everything
-        else carries over from the previous manifest."""
-        if prev is None:
-            raise FileNotFoundError("no snapshot to record a txn against")
-        tmap = dict(prev.get("txn") or {})
-        SnapshotTable._txn_apply(tmap, txn)
-        return {
-            "partition_col": prev.get("partition_col"),
-            "entries": prev["entries"],
-            "schema": prev.get("schema"),
-            "txn": tmap,
-            "op": op,
-        }
 
     # -- write operations --------------------------------------------------
 
@@ -2218,12 +2242,8 @@ class SnapshotTable:
         normally survives every commit so replay guards cannot be
         lost by accident; a rebuild-from-scratch is the one operation
         that must drop them deliberately — matview.rebuild_view)."""
-        if txn is not None:
-            v = self.latest_version()
-            if v is not None:
-                last = self.manifest(v).get("txn", {}).get(txn[0])
-                if last is not None and last >= txn[1]:
-                    return None  # replay detected before paying the write
+        if txn is not None and self._replayed(txn):
+            return None  # replay detected before paying the write
         out_df, highs = self._prepare_ids(df, pin=_pin_ids)
         rel, parts, has_data, wmap, nrows = self._write_snap(
             out_df, partition_col,
@@ -2303,12 +2323,8 @@ class SnapshotTable:
         differ only in their empty-batch contract: a blind append of
         nothing is a no-op, while a txn append must still commit its
         watermark."""
-        if txn is not None:
-            v = self.latest_version()
-            if v is not None:
-                last = self.manifest(v).get("txn", {}).get(txn[0])
-                if last is not None and last >= txn[1]:
-                    return None  # replay detected before paying the write
+        if txn is not None and self._replayed(txn):
+            return None  # replay detected before paying the write
         op = ({"name": "append"} if txn is None else
               {"name": "append_once", "app_id": txn[0], "batch_id": txn[1]})
         for _ in range(self.max_retries):
@@ -2432,12 +2448,8 @@ class SnapshotTable:
         replaced partitions are MERGED partials (an incremental
         rollup): replaying a delta would double-count, so a batch that
         already committed must turn into a no-op (returns None)."""
-        if txn is not None:
-            v = self.latest_version()
-            if v is not None:
-                last = self.manifest(v).get("txn", {}).get(txn[0])
-                if last is not None and last >= txn[1]:
-                    return None  # replay: skip before paying the write
+        if txn is not None and self._replayed(txn):
+            return None  # replay: skip before paying the write
         out_df, highs = self._prepare_ids(df)
         rel, parts, has_data, wmap, nrows = self._write_snap(
             out_df, partition_col,
@@ -2473,35 +2485,13 @@ class SnapshotTable:
                 self._txn_apply(tmap, txn)
             entries = []
             for e in (prev or {"entries": []})["entries"]:
-                if e["parts"] is None or self._entry_layout(e) != partition_col:
-                    # pre-evolution layout (or unpartitioned dir): not
-                    # addressable by this replace's col=value names —
-                    # carried whole, never silently dropped
+                # a pre-evolution layout (or unpartitioned dir) is not
+                # addressable by this replace's col=value names —
+                # carried whole, never silently dropped
+                if e["parts"] is not None and entry_layout(e) == partition_col:
+                    e = self._drop_parts(e, replaced)
+                if e is not None:
                     entries.append(e)
-                    continue
-                kept = [p for p in (e["parts"] or []) if p not in replaced]
-                if kept:
-                    sub: dict = {"base": e["base"], "parts": kept}
-                    if e.get("root"):
-                        sub["root"] = e["root"]
-                    # kept parts' files are untouched, so their row
-                    # counts / file stats / bloom sidecar stay valid —
-                    # dropping them would silently degrade fast-count
-                    # and data skipping after every partition refresh
-                    if e.get("rows"):
-                        sub["rows"] = {
-                            p: e["rows"][p] for p in kept if p in e["rows"]
-                        }
-                    if e.get("stats"):
-                        st_sub = {
-                            f: s for f, s in e["stats"].items()
-                            if f.split("/", 1)[0] in kept
-                        }
-                        if st_sub:
-                            sub["stats"] = st_sub
-                    if e.get("bloom"):
-                        sub["bloom"] = True
-                    entries.append(sub)
             if has_data:
                 entries.append(entry)
             out = {"partition_col": partition_col, "entries": entries,
@@ -2519,10 +2509,20 @@ class SnapshotTable:
 
         return self._commit(build)
 
+    # -- row-level changes: five verbs over one kernel --------------------
+    #
+    # DELETE, UPDATE, MERGE and upsert are specs (a `plan` building a
+    # `_Change` over a target scan) over one kernel: the pinned
+    # read-modify-write loop (`_pinned`), the DV-masked position scan
+    # (`_masked_scan`), and two commit shapes — merge-on-read
+    # (`_dv_commit`) and copy-on-write (`_cow_commit`) — that share one
+    # manifest build (`_publish`).
+
     def upsert(self, df: DataFrame, keys: tuple[str, ...]) -> int:
         """Keyed upsert (reference bigquery.ts:168-190 / Delta MERGE):
-        read current snapshot, left-anti the updated keys, union, write
-        as a fresh snapshot.  The read and the rewrite both happen on
+        target rows whose keys the source carries are dropped, every
+        source row is inserted, and the result is ONE whole-table
+        copy-on-write commit.  The read and the rewrite both happen on
         immutable dirs; the switch is the manifest commit.
 
         The merge is a read-modify-write, so the commit is pinned to
@@ -2536,19 +2536,17 @@ class SnapshotTable:
         # the write's union leg otherwise each execute the caller's
         # plan).  O(source), lazy — the first consumer triggers it.
         df = df.localCheckpoint(eager=False)
-        for _ in range(self.max_retries):
-            self._drain_id_pins()  # reclaim any prior attempt's pin
-            read_v = self.latest_version()
-            try:
-                if read_v is None:
-                    return self.overwrite(df, expected_version=None)
-                pcol = self.manifest(read_v).get("partition_col")
-                existing = self.read(version=read_v)
-                keep = existing.join(
+
+        def attempt(read_v: int | None, m: dict | None) -> int | None:
+            if read_v is None:
+                return self.overwrite(df, expected_version=None)
+
+            def plan(t: DataFrame) -> _Change:
+                keep = t.join(
                     F.broadcast(df.select(*keys).distinct()), list(keys), "left_anti"
                 )
                 src = df
-                spec = self._row_tracking_spec()
+                spec = self._slot_of(m, "row_tracking")
                 if spec and spec["col"] not in df.columns:
                     # row tracking: an upserted key is the SAME logical
                     # row — inherit its id from the current snapshot
@@ -2573,10 +2571,7 @@ class SnapshotTable:
                             f"{tuple(dup[0][k] for k in keys)!r}; "
                             "de-duplicate the source (latest-wins window)"
                         )
-                    ids = (
-                        existing.groupBy(*keys)
-                        .agg(F.min(spec["col"]).alias(spec["col"]))
-                    )
+                    ids = t.groupBy(*keys).agg(F.min(spec["col"]).alias(spec["col"]))
                     # pin the SOURCE side only (O(source) — the Delta
                     # merge-source materialization): the id pre-count
                     # and the write each execute the union, but the
@@ -2584,21 +2579,14 @@ class SnapshotTable:
                     # the source side (often a multi-join plan) would
                     # re-execute in full.  Never pin the unioned full-
                     # table frame — at scale that caches the table.
-                    src = self._pin_for_assignment(
-                        df.join(ids, list(keys), "left"))
-                merged = keep.unionByName(src, allowMissingColumns=True)
-                # preserve the table's partitioning — a keyed merge must
-                # not silently rewrite a partitioned table as unpartitioned
-                return self.overwrite(
-                    merged, partition_col=pcol, expected_version=read_v,
-                    op={"name": "upsert", "keys": list(keys)},
-                )
-            except ConcurrentWriteConflict:
-                continue  # table moved: recompute the merge from latest
-        raise ConcurrentCommitError(
-            f"upsert lost the read-merge-write race {self.max_retries} "
-            f"times at {self.root}"
-        )
+                    src = self._pin_for_assignment(df.join(ids, list(keys), "left"))
+                return _Change(keep, [F.col(c) for c in keep.columns], None,
+                               F.lit(False), inserts=src)
+
+            return self._cow_commit(
+                read_v, m, plan, {"name": "upsert", "keys": list(keys)})
+
+        return self._pinned("upsert", attempt)
 
     def merge(
         self,
@@ -2638,24 +2626,36 @@ class SnapshotTable:
         Delete is checked before update (Delta's clause order); NULL
         conditions count as false.  Key columns cannot be assigned.
 
-        Plan shape: target LEFT JOIN source for the matched clauses
-        (broadcast-able — `broadcast_source=True` forces it; a
-        full-outer join could never broadcast and would shuffle the
-        full-width target) plus source ANTI JOIN the target's
-        column-pruned KEY projection for inserts — the target's data
-        columns never enter a shuffle on either leg.
+        Plan shape: the clause projection is written once and runs
+        over target LEFT JOIN source in rewrite mode (every target row
+        survives or changes) and target INNER JOIN source in dv mode
+        (only matched rows matter), broadcast-able either way —
+        `broadcast_source=True` forces it; a full-outer join could
+        never broadcast and would shuffle the full-width target — plus
+        source ANTI JOIN the target's column-pruned KEY projection for
+        inserts: the target's data columns never enter a shuffle.
 
-        Scale: on a table partitioned by a column IN `keys`, only the
-        partitions carrying source keys are read and rewritten — the
-        commit is a `replace_partitions` manifest edit, so a merge of
-        one day's changes into a 10k-day table touches one partition,
-        not 100 TB.  (Matched rows live in the source's partition
-        values precisely because the partition column is part of the
-        join key.)  Unpartitioned tables rewrite fully, like `upsert`.
-        While partition layouts are MIXED (after `evolve_partitioning`)
-        the scoped path is unsound and the merge falls back to a
-        whole-table rewrite for that call — it succeeds, and heals the
-        layout as a side effect.
+        `mode="rewrite"` (copy-on-write): on a table partitioned by a
+        column IN `keys`, only the partitions carrying source keys are
+        read and rewritten — the commit is a manifest edit, so a merge
+        of one day's changes into a 10k-day table touches one
+        partition, not 100 TB.  (Matched rows live in the source's
+        partition values precisely because the partition column is
+        part of the join key.)  Unpartitioned tables rewrite fully,
+        like `upsert`.  While partition layouts are MIXED (after
+        `evolve_partitioning`), or when a null-safe source carries a
+        NULL partition value, the scoped path is unsound and the merge
+        falls back to a whole-table rewrite for that call — it
+        succeeds, and heals the layout as a side effect.  A merge that
+        matches and inserts nothing commits nothing (the count rides
+        on the write, no extra job).
+
+        `mode="dv"` (merge-on-read): the matched-and-changed rows'
+        positions become a deletion vector, their post-images plus the
+        inserts land in ONE new data dir, one manifest commit
+        publishes both.  Write cost is O(changed + inserted), never
+        O(table) — the CDC apply shape for tables the merge key does
+        not partition.
 
         `schema_evolution=True` (Delta `withSchemaEvolution()`): source
         columns absent from the target are ADDED to the table schema by
@@ -2677,12 +2677,11 @@ class SnapshotTable:
 
         Like `upsert`, the read-merge-write is pinned to the version it
         read and re-runs on ConcurrentWriteConflict."""
-        if txn is not None:
-            v = self.latest_version()
-            if v is not None:
-                last = self.manifest(v).get("txn", {}).get(txn[0])
-                if last is not None and last >= txn[1]:
-                    return None  # replay detected before paying any work
+        if txn is not None and self._replayed(txn):
+            return None  # replay detected before paying any work
+        if mode not in ("rewrite", "dv"):
+            raise ValueError(f"merge mode must be 'rewrite' or 'dv', got {mode!r}")
+        dv = mode == "dv"
 
         # Materialize the source ONCE (r13; guide §1.2 — the Delta
         # merge-source materialization, same rationale as
@@ -2698,11 +2697,9 @@ class SnapshotTable:
         source = source.localCheckpoint(eager=False)
 
         def as_cond(c, default: bool):
-            if c is None:
-                return F.lit(default)
-            if isinstance(c, bool):
-                return F.lit(c)
-            return F.expr(c) if isinstance(c, str) else c
+            if c is None or isinstance(c, bool):
+                c = F.lit(default if c is None else c)
+            return F.coalesce(F.expr(c) if isinstance(c, str) else c, F.lit(False))
 
         del_cond = as_cond(when_matched_delete, False)
         ins_cond = as_cond(when_not_matched_insert, True)
@@ -2729,107 +2726,32 @@ class SnapshotTable:
                     f"{tuple(dup[0][k] for k in keys)!r}; de-duplicate the "
                     "source (latest-wins window) or pass validate_keys=False"
                 )
+        op = ({"name": "merge", "mode": "dv", "keys": list(keys)} if dv
+              else {"name": "merge", "keys": list(keys)})
 
-        if mode == "dv":
-            # merge-on-read MERGE (Iceberg MOR / Delta DV merge): the
-            # matched-and-changed rows' positions become a deletion
-            # vector, their post-images plus the inserts land in ONE
-            # new data dir, one manifest commit publishes both.  Write
-            # cost is O(changed + inserted), never O(table) — the CDC
-            # apply shape for tables the merge key does not partition.
-            return self._merge_dv(
-                source, keys, when_matched_update,
-                del_cond, ins_cond, upd_cond, schema_evolution, txn,
-                null_safe_keys,
-            )
-        if mode != "rewrite":
-            raise ValueError(f"merge mode must be 'rewrite' or 'dv', got {mode!r}")
-
-        for _ in range(self.max_retries):
-            read_v = self.latest_version()
-            pcol = self.manifest(read_v).get("partition_col") if read_v is not None else None
-            partition_scoped = pcol is not None and pcol in keys
-            if partition_scoped and self._layouts_mixed(self.manifest(read_v)):
-                # partition evolution in progress: `col=value` names
-                # cannot address pre-evolution entries, and a scoped
-                # replace would duplicate their rows — fall back to
-                # the whole-table rewrite for THIS merge (which also
-                # materializes everything into the current layout,
-                # retiring the evolution debt) instead of refusing
-                partition_scoped = False
-            try:
-                if read_v is None:
+        def attempt(read_v: int | None, m: dict | None) -> int | None:
+            def plan(t: DataFrame | None) -> _Change:
+                if t is None:
                     # missing table: every source row is "not matched";
-                    # run the same plan against an empty target so
+                    # the same plan runs against an empty target so
                     # insert conditions evaluate uniformly
-                    target = self.spark.createDataFrame([], source.schema)
-                elif partition_scoped:
-                    touched = [
-                        r[0] for r in source.select(pcol).distinct().collect()
-                    ]
-                    if not touched:
-                        if txn is None:
-                            return read_v  # empty source: no-op
-                        # still record the txn watermark (see
-                        # _txn_watermark_manifest)
-                        return self._commit(
-                            lambda prev: self._txn_watermark_manifest(
-                                prev, txn,
-                                {"name": "merge", "keys": list(keys),
-                                 "noop": True},
-                            )
-                        )
-                    if any(v is None for v in touched):
-                        if null_safe_keys:
-                            # NULL is a real key under <=> (a NULL
-                            # group in a fold delta), but no `col=...`
-                            # subdirectory can address it — fall back
-                            # to the whole-table rewrite for THIS
-                            # merge rather than refusing
-                            target = self.read(version=read_v)
-                            partition_scoped = False
-                        else:
-                            raise ValueError(
-                                "partition-scoped merge cannot address a "
-                                "NULL partition value in source column "
-                                f"{pcol!r}"
-                            )
-                    else:
-                        target = self.read(
-                            version=read_v, partition_values=touched
-                        ).where(F.col(pcol).isin(touched))
-                else:
-                    target = self.read(version=read_v)
-
-                new_cols = self._evolution_cols(
-                    source, target.columns, schema_evolution, read_v
-                )
-                out_cols = target.columns + new_cols
+                    t = self.spark.createDataFrame([], source.schema)
+                cols = [c for c in t.columns if c not in _POS]
+                new = ([c for c in source.columns if c not in cols]
+                       if schema_evolution else [])
+                if new and (m or {}).get("column_mapping"):
+                    raise ValueError(
+                        f"schema-evolving merge would add {new} to a "
+                        "column-mapping-enabled table — declare them with "
+                        "add_columns() first so physical names are assigned"
+                    )
+                out_cols = cols + new
                 if when_matched_update == "all":
-                    upd_map = {
-                        c: F.col(f"s.{c}")
-                        for c in out_cols
-                        if c in source.columns and c not in keys
-                    }
+                    upd = {c: F.col(f"s.{c}") for c in out_cols
+                           if c in source.columns and c not in keys}
                 else:
-                    upd_map = {
-                        c: (F.expr(e) if isinstance(e, str) else e)
-                        for c, e in when_matched_update.items()
-                    } if when_matched_update else {}
-
-                # Two joins instead of one FULL OUTER — deliberately.
-                # A full-outer join can never broadcast either side, so
-                # at scale it shuffles the FULL-WIDTH target.  Split:
-                #   1. target LEFT JOIN source -> keep / update /
-                #      delete.  Catalyst may broadcast the (small)
-                #      source, and then the target never shuffles at
-                #      all.
-                #   2. source ANTI JOIN target-keys -> inserts.  Only
-                #      the column-pruned key projection of the target
-                #      shuffles, never its data columns.
-                # (Consequence: an insert condition sees source columns
-                # only — matched-clause conditions still see both.)
-                t_m = target.alias("t")
+                    upd = {c: (F.expr(e) if isinstance(e, str) else e)
+                           for c, e in (when_matched_update or {}).items()}
                 s_m = source.withColumn("__s", F.lit(True)).alias("s")
                 if broadcast_source:
                     # deterministic hint for the common small-source
@@ -2837,683 +2759,114 @@ class SnapshotTable:
                     # source has size stats; AQE converts at runtime
                     # otherwise — this forces it at plan time)
                     s_m = F.broadcast(s_m)
-                on = _key_on(keys, "t", "s", null_safe_keys)
-                j = t_m.join(s_m, on, "left")
-                is_match = F.col("s.__s").isNotNull()
-                deleted = is_match & F.coalesce(del_cond, F.lit(False))
-                updated = is_match & F.coalesce(upd_cond, F.lit(False))
+                j = t.alias("t").join(
+                    s_m, _key_on(keys, "t", "s", null_safe_keys),
+                    "inner" if dv else "left")
+                matched = F.col("s.__s").isNotNull()
+                deleted = matched & del_cond
+                updated = matched & ~deleted & upd_cond
 
                 def out(c: str):
-                    if c in new_cols:
-                        # evolved column: no target side exists yet —
-                        # NULL except where the matched-update writes it
-                        absent = F.lit(None).cast(source.schema[c].dataType)
-                        if c in upd_map:
-                            return F.when(updated, upd_map[c]).otherwise(absent).alias(c)
-                        return absent.alias(c)
-                    tgt = F.col(f"t.{c}")
-                    if c in upd_map:
-                        return F.when(updated, upd_map[c]).otherwise(tgt).alias(c)
-                    return tgt.alias(c)
+                    # an evolved column has no target side yet: NULL
+                    # except where the matched-update writes it
+                    old = (F.col(f"t.{c}") if c in cols
+                           else F.lit(None).cast(source.schema[c].dataType))
+                    return (F.when(updated, upd[c]).otherwise(old)
+                            if c in upd else old).alias(c)
 
-                survivors = j.where(~deleted).select(*[out(c) for c in out_cols])
-
-                def ins(c: str):
-                    if c in source.columns:
-                        return F.col(c).alias(c)
-                    return F.lit(None).cast(target.schema[c].dataType).alias(c)
-
-                unmatched = source.alias("s").join(
-                    target.select(*keys).alias("tk"),
-                    _key_on(keys, "s", "tk", null_safe_keys), "left_anti",
-                )
                 inserts = (
-                    unmatched
-                    .where(F.coalesce(ins_cond, F.lit(False)))
-                    .select(*[ins(c) for c in out_cols])
+                    source.alias("s").join(
+                        t.select(*keys).alias("tk"),
+                        _key_on(keys, "s", "tk", null_safe_keys), "left_anti")
+                    .where(ins_cond)
+                    .select(*[
+                        F.col(c).alias(c) if c in source.columns
+                        else F.lit(None).cast(t.schema[c].dataType).alias(c)
+                        for c in out_cols
+                    ])
                 )
-                merged = self._recompute_generated(
-                    survivors.unionByName(inserts),
-                    assigned=upd_map,
-                    keep=(pcol,) if partition_scoped else (),
+                return _Change(
+                    j, [out(c) for c in out_cols], deleted | updated, deleted,
+                    assigned=upd, inserts=inserts,
+                    new_fields=tuple(StructField(c, source.schema[c].dataType, True)
+                                     for c in new),
                 )
-                merge_op = {"name": "merge", "keys": list(keys)}
-                if read_v is None:
-                    return self.overwrite(merged, expected_version=None,
-                                          op=merge_op, txn=txn)
-                if partition_scoped:
-                    v = self.replace_partitions(
-                        merged, pcol, expected_version=read_v,
-                        replace_values=touched, op=merge_op, txn=txn,
-                    )
-                    assert v is not None or txn is not None
-                    return v
-                return self.overwrite(merged, partition_col=pcol,
-                                      expected_version=read_v, op=merge_op,
-                                      txn=txn)
-            except ConcurrentWriteConflict:
-                continue
-        raise ConcurrentCommitError(
-            f"merge lost the read-merge-write race {self.max_retries} "
-            f"times at {self.root}"
-        )
 
-    def _evolution_cols(
-        self, source: DataFrame, target_cols: list, enabled: bool,
-        read_v: int | None,
-    ) -> list[str]:
-        """Source columns the schema-evolving merge will add; [] when
-        evolution is off.  Mapping-enabled tables refuse (physical
-        names must be assigned by add_columns first)."""
-        if not enabled:
-            return []
-        new_cols = [c for c in source.columns if c not in target_cols]
-        if new_cols and read_v is not None and self.manifest(read_v).get(
-            "column_mapping"
-        ):
-            raise ValueError(
-                f"schema-evolving merge would add {new_cols} to a "
-                "column-mapping-enabled table — declare them with "
-                "add_columns() first so physical names are assigned"
-            )
-        return new_cols
+            if dv and m and m["entries"]:
+                return self._dv_commit(read_v, m, plan, op, txn)
+            pcol = (m or {}).get("partition_col")
+            touched = None
+            if not dv and pcol in keys and not self._layouts_mixed(m):
+                # partition-scoped: the source supplies the touched set
+                # (mixed layouts cannot be addressed by `col=value`
+                # names and take the whole-table rewrite instead)
+                touched = [r[0] for r in source.select(pcol).distinct().collect()]
+                if not touched:
+                    return self._noop(read_v, txn, op)  # empty source
+                if None in touched:
+                    if not null_safe_keys:
+                        raise ValueError(
+                            "partition-scoped merge cannot address a NULL "
+                            f"partition value in source column {pcol!r}")
+                    # NULL is a real key under <=> (a NULL group in a
+                    # fold delta), but no `col=...` subdirectory can
+                    # address it: whole-table rewrite for THIS merge
+                    touched = None
+            return self._cow_commit(read_v, m, plan, op, txn=txn, touched=touched)
 
-    def _merge_dv(
-        self, source: DataFrame, keys, when_matched_update,
-        del_cond, ins_cond, upd_cond, schema_evolution: bool = False,
-        txn: tuple[str, int] | None = None,
-        null_safe_keys: bool = False,
-    ) -> int | None:
-        """Merge-on-read MERGE: positions of deleted/updated target
-        rows -> deletion vector; updated post-images + inserts -> one
-        appended data dir; one atomic manifest commit.  The matched
-        set localCheckpoints so the full-width target scans once."""
-        for _ in range(self.max_retries):
-            read_v = self.latest_version()
-            if read_v is None:
-                # alias so an insert condition written over `s.*`
-                # resolves, exactly as in the joined legs
-                inserts_only = source.alias("s").where(
-                    F.coalesce(ins_cond, F.lit(False))
-                )
-                return self.overwrite(
-                    inserts_only, expected_version=None,
-                    op={"name": "merge", "mode": "dv", "keys": list(keys)},
-                    txn=txn,
-                )
-            m = self.manifest(read_v)
-            entries = m["entries"]
-            pcol = m.get("partition_col")
-            if not entries:
-                inserts_only = source.alias("s").where(
-                    F.coalesce(ins_cond, F.lit(False))
-                )
-                return self.overwrite(
-                    inserts_only, partition_col=pcol,
-                    expected_version=read_v,
-                    op={"name": "merge", "mode": "dv", "keys": list(keys)},
-                    txn=txn,
-                )
-            df = self._scan_entries(
-                entries, pcol, with_pos=True, cmap=m.get("column_mapping"),
-                read_schema=self._declared_scan_schema(m),
-            )
-            dv0 = self._dv_scan(m)
-            if dv0 is not None:
-                df = df.join(
-                    F.broadcast(dv0), ["__dv_file", "__dv_row"], "left_anti"
-                )
-            df = self._fill_schema_columns(df, m)
-            tgt_cols = [
-                c for c in df.columns if c not in ("__dv_file", "__dv_row")
-            ]
-            new_cols = self._evolution_cols(
-                source, tgt_cols, schema_evolution, read_v
-            )
-            out_cols = tgt_cols + new_cols
-            if when_matched_update == "all":
-                upd_map = {
-                    c: F.col(f"s.{c}")
-                    for c in out_cols
-                    if c in source.columns and c not in keys
-                }
-            else:
-                upd_map = {
-                    c: (F.expr(e) if isinstance(e, str) else e)
-                    for c, e in when_matched_update.items()
-                } if when_matched_update else {}
-
-            t_m = df.alias("t")
-            s_m = source.withColumn("__s", F.lit(True)).alias("s")
-            on = _key_on(keys, "t", "s", null_safe_keys)
-            j = t_m.join(s_m, on, "inner")  # only matched rows matter here
-            deleted = F.coalesce(del_cond, F.lit(False))
-            updated = ~deleted & F.coalesce(upd_cond, F.lit(False))
-
-            def out(c: str):
-                if c in new_cols:
-                    absent = F.lit(None).cast(source.schema[c].dataType)
-                    if c in upd_map:
-                        return F.when(updated, upd_map[c]).otherwise(absent).alias(c)
-                    return absent.alias(c)
-                tgt = F.col(f"t.{c}")
-                if c in upd_map:
-                    return F.when(updated, upd_map[c]).otherwise(tgt).alias(c)
-                return tgt.alias(c)
-
-            hits = (
-                j.where(deleted | updated)
-                .select(
-                    F.col("t.__dv_file").alias("__dv_file"),
-                    F.col("t.__dv_row").alias("__dv_row"),
-                    deleted.alias("__del"),
-                    *[out(c) for c in out_cols],
-                )
-                .localCheckpoint(eager=True)
-            )
-            rel_dv = f"{DATA_DIR}/__dv={uuid.uuid4().hex[:16]}"
-            full_dv = f"{self.root}/{rel_dv}"
-            # the emptiness decision rides ON the dv write via observe
-            # (r13; same discipline as _write_snap's row count): the
-            # limit(1) re-read of the just-written dir was one more
-            # Spark job per dv-merge, kept only as the
-            # missed-observation fallback
-            from pyspark.sql import Observation
-
-            obs_dv = Observation()
-            hits.select("__dv_file", "__dv_row").observe(
-                obs_dv, F.count(F.lit(1)).alias("n")
-            ).write.mode("errorifexists").parquet(full_dv)
-            n_dv = observed_long(obs_dv, "n")
-            has_dv = (
-                n_dv > 0
-                if n_dv is not None
-                else not self.spark.read.parquet(full_dv).limit(1).isEmpty()
-            )
-            if not has_dv:
-                self.st.delete(full_dv)
-
-            def ins(c: str):
-                if c in source.columns:
-                    return F.col(c).alias(c)
-                return F.lit(None).cast(
-                    dict(zip(df.columns, [f.dataType for f in df.schema.fields]))[c]
-                ).alias(c)
-
-            widened_schema = m.get("schema")
-            if new_cols and widened_schema is not None:
-                ws = StructType.fromJson(json.loads(widened_schema))
-                ws = StructType(
-                    list(ws.fields)
-                    + [
-                        StructField(c, source.schema[c].dataType, True)
-                        for c in new_cols
-                        if c not in {f.name for f in ws.fields}
-                    ]
-                )
-                widened_schema = ws.json()
-
-            unmatched = source.alias("s").join(
-                df.select(*keys).alias("tk"),
-                _key_on(keys, "s", "tk", null_safe_keys), "left_anti",
-            )
-            inserts = (
-                unmatched
-                .where(F.coalesce(ins_cond, F.lit(False)))
-                .select(*[ins(c) for c in out_cols])
-            )
-            new_data = self._recompute_generated(
-                hits.where(~F.col("__del")).select(*out_cols).unionByName(
-                    inserts
-                ),
-                assigned=upd_map,  # DV merge appends ordinary new rows;
-                # nothing is partition-scoped, so everything may regen
-            )
-            # row tracking: updated post-images carry t.__row_id
-            # through out(); insert-leg rows arrive NULL and get
-            # fresh ids here (a user identity keeps the refuse-NULLs
-            # stance — sources must carry ids explicitly)
-            new_data, highs_dv = self._prepare_ids(new_data, pin=True)
-            rel_new, parts, has_data, wmap_new, nrows = self._write_snap(
-                new_data, pcol,
-                audit_cols=self._unassigned_id_cols(highs_dv))
-            # an empty unpartitioned write can still leave a zero-row
-            # part file (has_data=True); the write-job observation
-            # already knows (isEmpty re-read only when it missed) so a
-            # fully-no-op merge commits nothing
-            if has_data and (
-                nrows == 0
-                or (nrows is None and self.spark.read.parquet(
-                    f"{self.root}/{rel_new}").limit(1).isEmpty())
-            ):
-                has_data = False
-            entry = self._entry_for(rel_new, parts, has_data,
-                                    new_data.schema, wmap_new,
-                                    row_count=nrows)
-            if not has_data:
-                # the data dir is empty either way — drop it now rather
-                # than leaving unreferenced garbage for vacuum (a
-                # DV-only merge still commits the vector below)
-                self.st.delete(f"{self.root}/{rel_new}")
-                if not has_dv:
-                    if txn is None:
-                        return read_v  # nothing matched, nothing inserted
-                    # a no-op batch still records its txn watermark (the
-                    # replace_partitions discipline): replay detection
-                    # must not depend on the batch having had effects
-                    return self._commit(
-                        lambda prev: self._txn_watermark_manifest(
-                            prev, txn,
-                            {"name": "merge", "mode": "dv",
-                             "keys": list(keys), "noop": True},
-                        )
-                    )
-
-            def build(prev: dict | None) -> dict:
-                self._check_expected(prev, read_v)
-                out_m = {
-                    "partition_col": pcol,
-                    "entries": entries + ([entry] if has_data else []),
-                    "schema": widened_schema,
-                    "op": {"name": "merge", "mode": "dv",
-                           "keys": list(keys)},
-                }
-                dvs = list(m.get("dv_files") or [])
-                if has_dv:
-                    dvs.append(rel_dv)
-                if dvs:
-                    out_m["dv_files"] = dvs
-                # same CAS as append: a rival that assigned from
-                # the range we staged would collide — re-stage
-                self._stamp_highs(out_m, prev, highs_dv, cas=True)
-                if txn is not None:
-                    tmap = dict((prev or {}).get("txn") or {})
-                    self._txn_apply(tmap, txn)
-                    out_m["txn"] = tmap
-                return out_m
-
-            try:
-                return self._commit(build)
-            except ConcurrentWriteConflict:
-                # the retry rewrites both sidecars from the advanced
-                # snapshot — reclaim this attempt's now-orphaned dirs
-                # AND the eager checkpoint blocks (otherwise every lost
-                # race strands a full-width matched-set copy on the
-                # executors for the life of the session)
-                hits.unpersist()
-                if has_dv:
-                    self.st.delete(full_dv)
-                if has_data:
-                    self.st.delete(f"{self.root}/{rel_new}")
-                continue  # recompute against the advanced snapshot
-        raise ConcurrentCommitError(
-            f"dv merge lost the read-merge-write race {self.max_retries} "
-            f"times at {self.root}"
-        )
+        return self._pinned("dv merge" if dv else "merge", attempt)
 
     def delete(self, condition, mode: str = "rewrite") -> int:
         """Row-level DELETE (Delta `DELETE FROM ... WHERE`): remove the
         rows matching `condition` (Column or SQL string over the
         table's columns; NULL counts as not-matching, SQL semantics).
+        The spec is the hit predicate with no post-image.
 
-        `mode="rewrite"` (copy-on-write): on a partitioned table the
-        doomed rows' partition values are found first (one
-        column-pruned pass), and ONLY those partitions are rewritten
-        via the replace_partitions manifest edit — a GDPR delete of
-        one user's one day touches one partition of a 100-TB table.
-        A partition whose every row matched is retired outright.
-        Unpartitioned tables rewrite fully.  While partition layouts
-        are MIXED (after `evolve_partitioning`, before a full
-        compact) the rewrite stays available via the entry-scoped
-        copy-on-write of `_rewrite_mixed` — touched current-layout
-        partitions plus only the foreign-layout entries that contain
-        matched rows are rewritten, into the current layout.
+        `mode="rewrite"` (copy-on-write): an unpartitioned table is
+        probed with one LocalLimit scan (no match: no commit) and then
+        rewritten fully.  On a partitioned table the doomed rows'
+        partition values are found first (one column-pruned pass), and
+        ONLY those partitions are rewritten by a manifest edit — a GDPR
+        delete of one user's one day touches one partition of a
+        100-TB table; a partition whose every row matched is retired
+        outright.  While partition layouts are MIXED (after
+        `evolve_partitioning`, before a full compact) the same commit
+        also rewrites just the foreign-layout entries that contain
+        matched rows, into the current layout (see `_cow_commit`).
 
         `mode="dv"` (merge-on-read, the Delta deletion-vector /
         Iceberg positional-delete shape): NO data is rewritten at all
         — the matched rows' positions (file, row_index) land in a tiny
         deletion-vector file and the commit is a manifest edit; reads
-        mask the positions with one anti-join.  This is the path for
-        frequent small deletes on an UNPARTITIONED (or
-        wrong-partitioned) 100-TB table, where even a
-        partition-scoped rewrite churns gigabytes to drop one row.
-        The write side defers cost to readers; `compact()` (or any
-        full rewrite) materializes the mask and retires the vectors.
-        Physical erasure (the actual GDPR guarantee) happens at that
-        compact+vacuum, not at the logical delete.
+        mask the positions with one anti-join.  One scan, one tiny
+        write, whatever the table size: the path for frequent small
+        deletes on an UNPARTITIONED (or wrong-partitioned) 100-TB
+        table, where even a partition-scoped rewrite churns gigabytes
+        to drop one row.  The write side defers cost to readers;
+        `compact()` (or any full rewrite) materializes the mask and
+        retires the vectors.  Physical erasure (the actual GDPR
+        guarantee) happens at that compact+vacuum, not at the logical
+        delete.
 
         Both modes are pinned read-modify-writes with the
-        upsert/merge conflict discipline."""
+        upsert/merge conflict discipline; a missing table raises
+        FileNotFoundError in both."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        doomed_cond = F.coalesce(cond, F.lit(False))
-        if mode == "dv":
-            return self._delete_dv(doomed_cond)
-        if mode != "rewrite":
-            raise ValueError(f"delete mode must be 'rewrite' or 'dv', got {mode!r}")
-        for _ in range(self.max_retries):
-            read_v = self.latest_version()
-            pcol = self.manifest(read_v).get("partition_col")
-            op = {"name": "delete"}
-            try:
-                if pcol is None:
-                    # no-match fast path (Delta semantics): one
-                    # LocalLimit probe instead of a full-table rewrite
-                    # — the case replay-safe flows hit on every heal
-                    if not self.read(version=read_v).where(
-                        doomed_cond
-                    ).limit(1).collect():
-                        return read_v
-                    return self.overwrite(
-                        self.read(version=read_v).where(~doomed_cond),
-                        expected_version=read_v, op=op,
-                    )
-                if self._layouts_mixed(self.manifest(read_v)):
-                    # partition evolution in progress: `col=value`
-                    # names cannot address pre-evolution entries —
-                    # entry-scoped copy-on-write instead of refusing
-                    return self._rewrite_mixed(
-                        read_v, doomed_cond,
-                        lambda df: df.where(~doomed_cond), op)
-                touched = [
-                    r[0]
-                    for r in self.read(version=read_v)
-                    .where(doomed_cond).select(pcol).distinct().collect()
-                ]
-                if not touched:
-                    return read_v  # nothing matched: no-op
-                if any(v is None for v in touched):
-                    raise ValueError(
-                        "delete matching rows in the NULL partition is "
-                        "not partition-addressable; compact first"
-                    )
-                subset = self.read(
-                    version=read_v, partition_values=touched
-                ).where(F.col(pcol).isin(touched)).where(~doomed_cond)
-                v = self.replace_partitions(
-                    subset, pcol, expected_version=read_v,
-                    replace_values=touched, op=op,
-                )
-                assert v is not None
-                return v
-            except ConcurrentWriteConflict:
-                continue
-        raise ConcurrentCommitError(
-            f"delete lost the read-merge-write race {self.max_retries} "
-            f"times at {self.root}"
-        )
-
-    def _delete_dv(self, doomed_cond: Column) -> int:
-        """Merge-on-read delete: find matching row positions in the
-        CURRENT (already-DV-masked) snapshot, write them as one new
-        deletion-vector parquet dir, commit a manifest that keeps every
-        entry and appends the vector.  One column-prunable scan + one
-        tiny write, regardless of table size."""
-        for _ in range(self.max_retries):
-            read_v = self.latest_version()
-            if read_v is None:
-                raise FileNotFoundError(f"no snapshot at {self.root}")
-            m = self.manifest(read_v)
-            entries = m["entries"]
-            if not entries:
-                return read_v  # empty table: nothing to delete
-            df = self._scan_entries(
-                entries, m.get("partition_col"), with_pos=True,
-                cmap=m.get("column_mapping"),
-                read_schema=self._declared_scan_schema(m),
-            )
-            dv = self._dv_scan(m)
-            if dv is not None:
-                df = df.join(
-                    F.broadcast(dv), ["__dv_file", "__dv_row"], "left_anti"
-                )
-            df = self._fill_schema_columns(df, m)
-            doomed = df.where(doomed_cond).select("__dv_file", "__dv_row")
-            # write first, inspect the (tiny) output after: a separate
-            # any-matches pre-check would cost a second full scan of
-            # the table per delete
-            rel = f"{DATA_DIR}/__dv={uuid.uuid4().hex[:16]}"
-            full = f"{self.root}/{rel}"
-            doomed.write.mode("errorifexists").parquet(full)
-            if self.spark.read.parquet(full).limit(1).isEmpty():
-                self.st.delete(full)  # nothing matched: no-op, no commit
-                return read_v
-
-            def build(prev: dict | None) -> dict:
-                self._check_expected(prev, read_v)
-                return {
-                    "partition_col": m.get("partition_col"),
-                    "entries": entries,
-                    "schema": m.get("schema"),
-                    "dv_files": (m.get("dv_files") or []) + [rel],
-                    "op": {"name": "delete", "mode": "dv"},
-                }
-
-            try:
-                return self._commit(build)
-            except ConcurrentWriteConflict:
-                continue  # positions were computed against a stale
-                # snapshot (a rival compact may have moved rows to new
-                # files): recompute from latest; the orphaned DV dir is
-                # vacuum-able garbage
-        raise ConcurrentCommitError(
-            f"dv delete lost the read-merge-write race {self.max_retries} "
-            f"times at {self.root}"
-        )
-
-    @staticmethod
-    def _layouts_mixed(m: dict) -> bool:
-        """True when some entry's physical layout differs from the
-        manifest's current partition column — partition evolution in
-        progress, not yet fully compacted."""
-        pcol = m.get("partition_col")
-        return pcol is not None and any(
-            entry_layout(e) != pcol for e in m["entries"]
-        )
-
-    def _rewrite_mixed(
-        self, read_v: int, hit: Column, transform, op: dict
-    ) -> int:
-        """Row-level copy-on-write on a MIXED-layout partitioned table
-        (partition evolution in progress) — lets DELETE / UPDATE
-        (mode="rewrite") run right after `evolve_partitioning` instead
-        of refusing until a full compact() (Delta/Iceberg serve
-        row-level DML there too; the refusal was a real ergonomic gap).
-
-        Still touched-storage-only, at two granularities:
-
-          * entries already laid out by the CURRENT partition column
-            are addressed at `col=value` granularity exactly like the
-            single-layout path — untouched partitions are carried by
-            the manifest edit, never read or even listed;
-          * FOREIGN-layout entries (pre-evolution dirs, including
-            unpartitioned `parts=None` dirs) are addressed at ENTRY
-            granularity: one position-scan finds which of them
-            physically CONTAIN matched rows, and only those are
-            rewritten — whole, INTO the current layout, so each
-            mixed-layout DML also retires a slice of the evolution
-            debt; foreign entries with no matched rows carry over
-            untouched.
-
-        `transform(df) -> df` maps the touched rows to their
-        post-image (delete: drop matched rows; update: assign matched
-        rows).  The commit is pinned to `read_v`;
-        ConcurrentWriteConflict propagates to the caller's retry loop
-        after the staged dir is reclaimed."""
-        m = self.manifest(read_v)
-        pcol = m["partition_col"]
-        entries = m["entries"]
-        cmap = m.get("column_mapping")
-        cur = [e for e in entries if self._entry_layout(e) == pcol]
-        foreign = [e for e in entries if self._entry_layout(e) != pcol]
-        if any("__snap=" not in e["base"] for e in foreign):
-            raise ValueError(
-                f"table has legacy pre-__snap entries not laid out by "
-                f"{pcol!r}: row positions cannot address them — run a "
-                "full compact() first"
-            )
-
-        def masked(es: list[dict]) -> DataFrame:
-            df = self._scan_entries(
-                es, pcol, with_pos=True, cmap=cmap,
-                read_schema=self._declared_scan_schema(m),
-            )
-            dv = self._dv_scan(m)
-            if dv is not None:
-                df = df.join(
-                    F.broadcast(dv), ["__dv_file", "__dv_row"], "left_anti"
-                )
-            return self._fill_schema_columns(df, m)
-
-        # which FOREIGN storage units contain matched rows: distinct
-        # (owning root, snap dir, part subdir) triples — a tiny driver
-        # list, bounded by the number of touched DIRECTORIES, never
-        # rows or files.  __dv_file is root-RELATIVE, so the probe
-        # runs per owning root (shallow-clone entries may span roots
-        # and two roots can hold same-named uuid dirs); the ordinary
-        # table is a single root, so this is still one scan there.
-        f_units: set[tuple] = set()
-        if foreign:
-            seg = F.split(F.col("__dv_file"), "/")
-            sub = F.element_at(seg, 2)
-            by_root: dict[str, list] = {}
-            for e in foreign:
-                by_root.setdefault(e.get("root") or self.root, []).append(e)
-            for froot, es in by_root.items():
-                f_units |= {
-                    (froot, r["d"], r["p"])
-                    for r in masked(es).where(hit)
-                    .select(
-                        F.element_at(seg, 1).alias("d"),
-                        F.when(sub.contains("="), sub).alias("p"),
-                    )
-                    .distinct().collect()
-                }
-
-        def touches(e: dict) -> bool:
-            d = e["base"].rsplit("/", 1)[-1]
-            eroot = e.get("root") or self.root
-            hit_parts = {p for (rr, dd, p) in f_units if rr == eroot and dd == d}
-            if not hit_parts:
-                return False
-            if e["parts"] is None:
-                return True  # whole-dir entry: the dir match decides
-            return bool(set(e["parts"]) & hit_parts)
-
-        touched_f = [e for e in foreign if touches(e)]
-
-        # which CURRENT-layout partitions contain matched rows
-        touched_vals: list = []
-        if cur:
-            touched_vals = [
-                r[0] for r in masked(cur).where(hit)
-                .select(pcol).distinct().collect()
-            ]
-            if any(v is None for v in touched_vals):
-                raise ValueError(
-                    "matching rows in the NULL partition are not "
-                    "partition-addressable; compact first"
-                )
-        if not touched_f and not touched_vals:
-            return read_v  # nothing matched anywhere: no-op
-
-        wanted = {f"{pcol}={v}" for v in map(str, touched_vals)}
-        cur_sub = [
-            {**e, "parts": kept}
-            for e in cur
-            if (kept := [p for p in e["parts"] if p in wanted])
-        ]
-        frames = []
-        if touched_f:
-            frames.append(masked(touched_f).drop("__dv_file", "__dv_row"))
-        if cur_sub:
-            frames.append(
-                masked(cur_sub).drop("__dv_file", "__dv_row")
-                .where(F.col(pcol).isin(touched_vals))
-            )
-        src = frames[0]
-        for extra in frames[1:]:
-            src = src.unionByName(extra)
-        out_df, highs = self._prepare_ids(transform(src))
-        rel, parts, has_data, wmap, nrows = self._write_snap(
-            out_df, pcol, audit_cols=self._unassigned_id_cols(highs))
-        entry = self._entry_for(rel, sorted(parts), has_data,
-                                out_df.schema, wmap, row_count=nrows)
-        schema = out_df.schema.json()
-        if not has_data:
-            # every touched row deleted: the staged dir is empty —
-            # reclaim it; the commit below just retires entries
-            self.st.delete(f"{self.root}/{rel}")
-
-        def ekey(e: dict) -> tuple:
-            return (e.get("root"), e["base"], tuple(e["parts"] or ()))
-
-        touched_keys = {ekey(e) for e in touched_f}
-
-        def build(prev: dict | None) -> dict:
-            self._check_expected(prev, read_v)
-            out_entries = []
-            for e in prev["entries"]:
-                if ekey(e) in touched_keys:
-                    continue  # rewritten into the new dir (or retired)
-                if self._entry_layout(e) == pcol:
-                    kept = [p for p in e["parts"] if p not in wanted]
-                    if not kept:
-                        continue  # every partition replaced: retired
-                    if len(kept) < len(e["parts"]):
-                        # same kept-parts metadata subsetting as
-                        # replace_partitions: untouched files keep
-                        # their counts / stats / bloom sidecars
-                        sub_e: dict = {"base": e["base"], "parts": kept}
-                        if e.get("root"):
-                            sub_e["root"] = e["root"]
-                        if e.get("rows"):
-                            sub_e["rows"] = {
-                                p: e["rows"][p] for p in kept
-                                if p in e["rows"]
-                            }
-                        if e.get("stats"):
-                            st_sub = {
-                                f: s for f, s in e["stats"].items()
-                                if f.split("/", 1)[0] in kept
-                            }
-                            if st_sub:
-                                sub_e["stats"] = st_sub
-                        if e.get("bloom"):
-                            sub_e["bloom"] = True
-                        out_entries.append(sub_e)
-                    else:
-                        out_entries.append(e)
-                    continue
-                out_entries.append(e)  # untouched foreign: carried whole
-            if has_data:
-                out_entries.append(entry)
-            out = {"partition_col": pcol, "entries": out_entries,
-                   "schema": schema, "op": op}
-            # a kept entry's rival rows can collide with staged ids —
-            # CAS like append/replace_partitions; conflict propagates
-            self._stamp_highs(out, prev, highs, cas=True)
-            return out
-
-        try:
-            v = self._commit(build)
-        except ConcurrentWriteConflict:
-            if has_data:
-                self.st.delete(f"{self.root}/{rel}")
-            raise
-        assert v is not None
-        return v
+        return self._where_change("delete", mode, F.coalesce(cond, F.lit(False)), None)
 
     def update(self, set: dict, condition=None, mode: str = "rewrite") -> int:
         """Row-level UPDATE (Delta `UPDATE ... SET ... WHERE`): `set`
         maps column -> expression (Column or SQL string over the
         table's columns); rows matching `condition` (default: all) get
-        the new values.
+        the new values, and generated columns the statement does not
+        set are recomputed.  The spec is the hit predicate with the
+        assignments as its post-image.
 
         `mode="rewrite"` (copy-on-write): the partition column cannot
         be assigned (a row may not migrate partitions in a
-        partition-scoped rewrite); same touched-partitions-only
-        rewrite, mixed-layout entry-scoped fallback, and conflict
-        discipline as delete().
+        partition-scoped rewrite); otherwise the same no-match probe,
+        touched-partitions-only rewrite, mixed-layout entry scoping
+        and conflict discipline as delete().
 
         `mode="dv"` (merge-on-read, the Iceberg MOR-update shape):
         the matched rows' positions land in a deletion vector and
@@ -3527,158 +2880,383 @@ class SnapshotTable:
         cond = (F.lit(True) if condition is None
                 else F.expr(condition) if isinstance(condition, str)
                 else condition)
-        hit = F.coalesce(cond, F.lit(False))
         assigns = {
             c: (F.expr(e) if isinstance(e, str) else e) for c, e in set.items()
         }
-        if mode == "dv":
-            return self._update_dv(assigns, hit)
-        if mode != "rewrite":
-            raise ValueError(f"update mode must be 'rewrite' or 'dv', got {mode!r}")
+        return self._where_change(
+            "update", mode, F.coalesce(cond, F.lit(False)), assigns)
 
-        def apply(df: DataFrame) -> DataFrame:
-            return df.select(*[
-                F.when(hit, assigns[c]).otherwise(F.col(c)).alias(c)
-                if c in assigns else F.col(c)
-                for c in df.columns
-            ])
+    def _where_change(
+        self, verb: str, mode: str, hit: Column, assigns: dict | None
+    ) -> int:
+        """DELETE (`assigns` None) and UPDATE as one spec over the
+        kernel: `hit` selects the rows; UPDATE's post-image applies
+        `assigns` to them (the kernel recomputes generated columns)."""
+        if mode not in ("rewrite", "dv"):
+            raise ValueError(f"{verb} mode must be 'rewrite' or 'dv', got {mode!r}")
+        op = {"name": verb}
+        if assigns is not None:
+            op["columns"] = sorted(assigns)
 
-        for _ in range(self.max_retries):
-            read_v = self.latest_version()
-            pcol = self.manifest(read_v).get("partition_col")
-            if pcol is not None and pcol in assigns:
+        def plan(t: DataFrame) -> _Change:
+            cols = [c for c in t.columns if c not in _POS]
+            if assigns is None:
+                return _Change(t, [F.col(c) for c in cols], hit, hit)
+            return _Change(
+                t,
+                [F.when(hit, assigns[c]).otherwise(F.col(c)).alias(c)
+                 if c in assigns else F.col(c) for c in cols],
+                hit, F.lit(False), assigned=assigns,
+            )
+
+        def attempt(read_v: int | None, m: dict | None) -> int:
+            if m is None:
+                raise FileNotFoundError(f"no snapshot at {self.root}")
+            if mode == "dv":
+                if not m["entries"]:
+                    return read_v  # empty table: nothing to change
+                return self._dv_commit(read_v, m, plan, {**op, "mode": "dv"})
+            pcol = m.get("partition_col")
+            if assigns and pcol in assigns:
                 raise ValueError(
-                    f"update cannot assign the partition column {pcol!r}"
-                )
-            op = {"name": "update", "columns": sorted(assigns)}
+                    f"update cannot assign the partition column {pcol!r}")
+            return self._cow_commit(read_v, m, plan, op, by_hits=True)
+
+        return self._pinned(verb if mode == "rewrite" else f"dv {verb}", attempt)
+
+    def _pinned(
+        self, what: str,
+        attempt: Callable[[int | None, dict | None], int | None],
+    ) -> int | None:
+        """The one read-modify-write loop behind every row-level change.
+        Each attempt resolves the snapshot it reads ONCE — version and
+        parsed manifest — and passes both down; its commit is pinned to
+        that version, so a rival commit landing in between raises
+        ConcurrentWriteConflict and the WHOLE attempt re-runs against
+        the advanced snapshot (rebasing blindly would lose the rival's
+        rows)."""
+        for _ in range(self.max_retries):
+            self._drain_id_pins()  # reclaim any prior attempt's pin
+            read_v = self.latest_version()
             try:
-                if pcol is None:
-                    return self.overwrite(
-                        self._recompute_generated(
-                            apply(self.read(version=read_v)), assigned=assigns
-                        ),
-                        expected_version=read_v, op=op,
-                    )
-                if self._layouts_mixed(self.manifest(read_v)):
-                    # partition evolution in progress: entry-scoped
-                    # copy-on-write instead of refusing (see delete)
-                    return self._rewrite_mixed(
-                        read_v, hit,
-                        lambda df: self._recompute_generated(
-                            apply(df), assigned=assigns, keep=(pcol,)
-                        ),
-                        op)
-                touched = [
-                    r[0]
-                    for r in self.read(version=read_v)
-                    .where(hit).select(pcol).distinct().collect()
-                ]
-                if not touched or any(v is None for v in touched):
-                    if not touched:
-                        return read_v
-                    raise ValueError(
-                        "update matching rows in the NULL partition is "
-                        "not partition-addressable; compact first"
-                    )
-                subset = self._recompute_generated(
-                    apply(
-                        self.read(version=read_v, partition_values=touched)
-                        .where(F.col(pcol).isin(touched))
-                    ),
-                    assigned=assigns,
-                    keep=(pcol,),  # partition-scoped: a recomputed pcol
-                    # could migrate rows out of `touched`; fail-closed
-                )
-                v = self.replace_partitions(
-                    subset, pcol, expected_version=read_v, op=op,
-                )
-                assert v is not None
-                return v
+                return attempt(
+                    read_v, self.manifest(read_v) if read_v is not None else None)
             except ConcurrentWriteConflict:
                 continue
         raise ConcurrentCommitError(
-            f"update lost the read-merge-write race {self.max_retries} "
+            f"{what} lost the read-merge-write race {self.max_retries} "
             f"times at {self.root}"
         )
 
-    def _update_dv(self, assigns: dict, hit: Column) -> int:
-        """Merge-on-read UPDATE: one scan finds the matched rows; their
-        positions become a deletion vector, their updated copies a new
-        data dir; ONE manifest commit publishes both."""
-        for _ in range(self.max_retries):
-            read_v = self.latest_version()
-            if read_v is None:
-                raise FileNotFoundError(f"no snapshot at {self.root}")
-            m = self.manifest(read_v)
-            entries = m["entries"]
-            pcol = m.get("partition_col")
-            if not entries:
-                return read_v
-            df = self._scan_entries(
-                entries, pcol, with_pos=True, cmap=m.get("column_mapping"),
-                read_schema=self._declared_scan_schema(m),
-            )
-            dv = self._dv_scan(m)
-            if dv is not None:
-                df = df.join(
-                    F.broadcast(dv), ["__dv_file", "__dv_row"], "left_anti"
-                )
-            df = self._fill_schema_columns(df, m)
-            # materialize the matched rows once: the dv write and the
-            # updated-copy write both consume them, and lazily each
-            # would re-scan the whole table
-            matched = df.where(hit).localCheckpoint(eager=True)
-            data_cols = [
-                c for c in df.columns if c not in ("__dv_file", "__dv_row")
-            ]
-            updated = self._recompute_generated(
-                matched.select(*[
-                    (assigns[c] if c in assigns else F.col(c)).alias(c)
-                    for c in data_cols
-                ]),
-                assigned=assigns,  # DV update appends ordinary new rows:
-                # even a generated partition column may legally move
-            )
-            rel_dv = f"{DATA_DIR}/__dv={uuid.uuid4().hex[:16]}"
-            full_dv = f"{self.root}/{rel_dv}"
-            matched.select("__dv_file", "__dv_row").write.mode(
-                "errorifexists"
-            ).parquet(full_dv)
-            if self.spark.read.parquet(full_dv).limit(1).isEmpty():
-                self.st.delete(full_dv)
-                return read_v  # nothing matched
-            rel_new, parts, has_data, wmap_upd, nrows = self._write_snap(
-                updated, pcol)
-            entry = self._entry_for(rel_new, parts, has_data,
-                                    updated.schema, wmap_upd,
-                                    row_count=nrows)
+    def _noop(self, read_v: int | None, txn, op: dict) -> int | None:
+        """A change that touched nothing commits nothing — except that
+        a txn batch still records its watermark, in a commit that
+        carries everything else over: replay detection must not
+        depend on the batch having had effects."""
+        if txn is None:
+            return read_v
 
-            def build(prev: dict | None) -> dict:
-                self._check_expected(prev, read_v)
-                return {
-                    "partition_col": pcol,
-                    "entries": entries + ([entry] if has_data else []),
-                    "schema": m.get("schema"),
-                    "dv_files": (m.get("dv_files") or []) + [rel_dv],
-                    "op": {"name": "update", "mode": "dv",
-                           "columns": sorted(assigns)},
-                }
+        def build(prev: dict | None) -> dict:
+            if prev is None:
+                raise FileNotFoundError("no snapshot to record a txn against")
+            tmap = dict(prev.get("txn") or {})
+            self._txn_apply(tmap, txn)
+            return {"partition_col": prev.get("partition_col"),
+                    "entries": prev["entries"], "schema": prev.get("schema"),
+                    "txn": tmap, "op": {**op, "noop": True}}
 
-            try:
-                return self._commit(build)
-            except ConcurrentWriteConflict:
-                # the retry rewrites both sidecars from the advanced
-                # snapshot — reclaim this attempt's now-orphaned dirs
-                # and the eager matched-set checkpoint blocks
-                matched.unpersist()
-                self.st.delete(full_dv)
-                if has_data:
-                    self.st.delete(f"{self.root}/{rel_new}")
-                continue  # recompute against the advanced snapshot
-        raise ConcurrentCommitError(
-            f"dv update lost the read-merge-write race {self.max_retries} "
-            f"times at {self.root}"
+        return self._commit(build)
+
+    def _dv_commit(self, read_v: int, m: dict, plan, op: dict, txn=None) -> int | None:
+        """The merge-on-read commit (Iceberg's row delta): the hit rows'
+        positions land in ONE `__dv=` vector dir, their post-images plus
+        any inserts in ONE new data dir, and one manifest build adds
+        both — with the widened schema, the id-watermark CAS and `txn`.
+        Write cost is O(changed + inserted), never O(table).
+
+        The vector's emptiness is OBSERVED on its own write (the
+        limit(1) re-read is only the missed-observation fallback).  The
+        hit set is checkpointed only when post-images consume it too,
+        so DELETE stays one scan."""
+        p = plan(self._masked_scan(m, with_pos=True))
+        hits = p.rows.where(p.hit)
+        if p.assigned is not None:
+            # the vector write and the post-image write both consume
+            # the hit set; lazily each would re-scan the whole table
+            hits = hits.select(
+                *_POS, p.deleted.alias("__del"), *p.out
+            ).localCheckpoint(eager=True)
+        rel_dv = f"{DATA_DIR}/__dv={uuid.uuid4().hex[:16]}"
+        full_dv = f"{self.root}/{rel_dv}"
+        obs = Observation()
+        hits.select(*_POS).observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "errorifexists").parquet(full_dv)
+        n = observed_long(obs, "n")
+        if n is None:
+            n = int(not self.spark.read.parquet(full_dv).limit(1).isEmpty())
+        staged, dvs = [], list(m.get("dv_files") or [])
+        if n:
+            staged.append(full_dv)
+            dvs.append(rel_dv)
+        else:
+            self.st.delete(full_dv)
+            if p.inserts is None:
+                return self._noop(read_v, txn, op)  # nothing matched
+        entries, highs, wmap = list(m["entries"]), {}, m.get("column_mapping")
+        if p.assigned is not None:
+            new = hits.where(~F.col("__del")).drop(*_POS, "__del")
+            if p.inserts is not None:
+                new = new.unionByName(p.inserts, allowMissingColumns=True)
+            # the new rows are ordinary appended data: nothing is
+            # partition-scoped, so every generated column may regenerate
+            new = self._recompute_generated(new, assigned=p.assigned)
+            if p.inserts is not None:
+                # post-images carry their ids; inserted rows get fresh
+                # ones (a user identity keeps the refuse-NULLs stance)
+                new, highs = self._prepare_ids(new, pin=True)
+            rel, parts, has_data, wmap, nrows = self._write_snap(
+                new, m.get("partition_col"),
+                audit_cols=self._unassigned_id_cols(highs))
+            if has_data:
+                staged.append(f"{self.root}/{rel}")
+                entries.append(self._entry_for(rel, sorted(parts), True,
+                                               new.schema, wmap, row_count=nrows))
+            else:
+                # reclaim the empty dir now rather than leaving garbage
+                # for vacuum (a vector-only change still commits)
+                self.st.delete(f"{self.root}/{rel}")
+        if not staged:
+            return self._noop(read_v, txn, op)  # nothing matched or inserted
+        schema = m.get("schema")
+        if p.new_fields and schema is not None:
+            ws = StructType.fromJson(json.loads(schema))
+            schema = StructType(ws.fields + [
+                f for f in p.new_fields if f.name not in ws.fieldNames()
+            ]).json()
+        return self._publish(read_v, m, entries, schema, dvs, highs, True,
+                             wmap, op, txn, staged, hits)
+
+    def _cow_commit(
+        self, read_v: int | None, m: dict | None, plan, op: dict, txn=None,
+        touched: list | None = None, by_hits: bool = False,
+    ) -> int | None:
+        """The copy-on-write commit, in two scopes:
+
+          * WHOLE table — unpartitioned tables, upsert, and MERGE when
+            it cannot scope: the output replaces every entry (and
+            retires the deletion vectors it materialized), like
+            overwrite;
+          * TOUCHED storage — partitioned tables: current-layout
+            partitions at `col=value` granularity (`touched` values
+            from a MERGE source, or — `by_hits` — the values holding
+            hit rows), plus, `by_hits` on a MIXED layout, the
+            foreign-layout entries holding hit rows, rewritten whole
+            INTO the current layout (see `_touched_units`).
+            Untouched partitions and entries are carried by the
+            manifest edit, never read; retired partitions keep their
+            siblings' counts, stats and blooms (`_drop_parts`).
+
+        No-op rule: `by_hits` changes (DELETE/UPDATE) commit nothing
+        when nothing matched — a whole-table one probes with one
+        LocalLimit scan before paying the rewrite; a MERGE counts its
+        hits and inserts with observations on the write itself and
+        drops the staged dir when both are zero (no extra job; a
+        missed observation just commits).  A MERGE into a missing
+        table always commits: it creates the table."""
+        pcol = (m or {}).get("partition_col")
+        whole = pcol is None or (touched is None and not by_hits)
+        gone: set = set()
+        wanted: set = set()
+        if whole:
+            src = self._masked_scan(m) if m is not None else None
+        else:
+            touched_f: list = []
+            if by_hits:
+                touched_f, touched = self._touched_units(m, plan)
+                if not touched_f and not touched:
+                    return read_v  # nothing matched anywhere
+            wanted = {f"{pcol}={v}" for v in map(str, touched)}
+            gone = {_ekey(e) for e in touched_f}
+            src = self._masked_scan(m, touched_f + [
+                {**e, "parts": kept} for e in m["entries"]
+                if entry_layout(e) == pcol
+                and (kept := [q for q in e["parts"] if q in wanted])
+            ])
+        p = plan(src)
+        if by_hits and whole and not p.rows.where(p.hit).limit(1).collect():
+            return read_v  # no match: one LocalLimit probe, no rewrite
+        rows, inserts, seen = p.rows, p.inserts, []
+        if not by_hits and p.hit is not None and m is not None:
+            seen.append(Observation())
+            rows = rows.observe(seen[-1], F.count_if(p.hit).alias("n"))
+            if inserts is not None:
+                seen.append(Observation())
+                inserts = inserts.observe(seen[-1], F.count(F.lit(1)).alias("n"))
+        out = rows.where(~p.deleted).select(*p.out)
+        if inserts is not None:
+            out = out.unionByName(inserts, allowMissingColumns=True)
+        if p.assigned is not None:
+            # partition-scoped: a recomputed partition column could
+            # migrate rows out of the replaced set; keep it fail-closed
+            out = self._recompute_generated(
+                out, assigned=p.assigned, keep=() if whole else (pcol,))
+        out, highs = self._prepare_ids(out)
+        rel, parts, has_data, wmap, nrows = self._write_snap(
+            out, pcol, audit_cols=self._unassigned_id_cols(highs))
+        full = f"{self.root}/{rel}"
+        if seen and all(observed_long(o, "n") == 0 for o in seen):
+            self.st.delete(full)
+            return self._noop(read_v, txn, op)  # nothing matched or inserted
+        entries = [] if whole else [
+            e for e in (
+                self._drop_parts(e, wanted) if entry_layout(e) == pcol else e
+                for e in m["entries"] if _ekey(e) not in gone
+            ) if e is not None
+        ]
+        if has_data:
+            entries.append(self._entry_for(rel, sorted(parts), True, out.schema,
+                                           wmap, row_count=nrows))
+        else:
+            self.st.delete(full)  # every touched row deleted: retire only
+        # a whole rewrite's replaced rows die with their ids, so its
+        # watermark merges monotone; a kept entry's rival rows can
+        # collide with staged ids, so a scoped rewrite CASes
+        return self._publish(
+            read_v, m, entries, out.schema.json(),
+            [] if whole else list(m.get("dv_files") or []), highs, not whole,
+            wmap, op, txn, [full] if has_data else [])
+
+    def _touched_units(self, m: dict, plan) -> tuple[list[dict], list]:
+        """Which storage units of a partitioned table hold rows the
+        change hits: (foreign-layout entries, current-layout partition
+        values).
+
+          * entries laid out by the CURRENT partition column are
+            addressed at `col=value` granularity — one column-pruned
+            distinct pass over the hit rows;
+          * FOREIGN-layout entries (pre-evolution dirs, including
+            unpartitioned `parts=None` dirs) are addressed at ENTRY
+            granularity: one position scan finds which of them
+            physically CONTAIN hit rows — distinct (owning root, snap
+            dir, part subdir) triples, bounded by the number of
+            touched directories, never rows or files.  `__dv_file` is
+            root-relative, so the probe runs per owning root
+            (shallow-clone entries may span roots, and two roots can
+            hold same-named dirs); an ordinary table is one root."""
+        pcol = m["partition_col"]
+        cur = [e for e in m["entries"] if entry_layout(e) == pcol]
+        foreign = [e for e in m["entries"] if entry_layout(e) != pcol]
+        if any("__snap=" not in e["base"] for e in foreign):
+            raise ValueError(
+                f"table has legacy pre-__snap entries not laid out by "
+                f"{pcol!r}: row positions cannot address them — run a "
+                "full compact() first"
+            )
+
+        def hits(es: list[dict], with_pos: bool = False) -> DataFrame:
+            p = plan(self._masked_scan(m, es, with_pos=with_pos))
+            return p.rows.where(p.hit)
+
+        seg = F.split(F.col("__dv_file"), "/")
+        sub = F.element_at(seg, 2)
+        by_root: dict[str, list] = {}
+        for e in foreign:
+            by_root.setdefault(e.get("root") or self.root, []).append(e)
+        units: set[tuple] = set()
+        for froot, es in by_root.items():
+            units |= {
+                (froot, r["d"], r["p"])
+                for r in hits(es, with_pos=True).select(
+                    F.element_at(seg, 1).alias("d"),
+                    F.when(sub.contains("="), sub).alias("p"),
+                ).distinct().collect()
+            }
+
+        def touches(e: dict) -> bool:
+            got = {p for (rr, d, p) in units
+                   if rr == (e.get("root") or self.root)
+                   and d == e["base"].rsplit("/", 1)[-1]}
+            # a whole-dir entry: the dir match decides
+            return bool(got) and (e["parts"] is None or bool(set(e["parts"]) & got))
+
+        vals = ([r[0] for r in hits(cur).select(pcol).distinct().collect()]
+                if cur else [])
+        if None in vals:
+            raise ValueError(
+                "matching rows in the NULL partition are not "
+                "partition-addressable; compact first"
+            )
+        return [e for e in foreign if touches(e)], vals
+
+    def _publish(
+        self, read_v: int | None, m: dict | None, entries: list[dict],
+        schema: str | None, dv_files: list, highs: dict, cas: bool,
+        wmap: dict | None, op: dict, txn, staged: list[str],
+        cached: DataFrame | None = None,
+    ) -> int | None:
+        """The one manifest build both commit shapes share, pinned to
+        `read_v`.  On a lost race the staged dirs and the checkpointed
+        hit set are reclaimed before the conflict propagates to
+        `_pinned`, which re-stages from the advanced snapshot."""
+
+        def build(prev: dict | None) -> dict:
+            self._check_expected(prev, read_v)
+            if (prev or {}).get("column_mapping") != wmap:
+                raise _Conflicted
+            out = {"partition_col": (m or {}).get("partition_col"),
+                   "entries": entries, "schema": schema,
+                   "dv_files": dv_files, "op": op}
+            self._stamp_highs(out, prev, highs, cas=cas)
+            if txn is not None:
+                tmap = dict((prev or {}).get("txn") or {})
+                self._txn_apply(tmap, txn)
+                out["txn"] = tmap
+            return out
+
+        try:
+            return self._commit(build)
+        except ConcurrentWriteConflict:
+            if cached is not None:
+                cached.unpersist()
+            for d in staged:
+                self.st.delete(d)
+            raise
+
+    @staticmethod
+    def _drop_parts(e: dict, gone: set) -> dict | None:
+        """Entry `e` minus its `col=value` parts in `gone` (None when
+        none is left).  The kept parts' files are untouched, so their
+        row counts, file stats and bloom sidecar stay valid and carry
+        over — dropping them would silently degrade fast-count and
+        data skipping after every partition-scoped rewrite."""
+        kept = [p for p in e["parts"] if p not in gone]
+        if not kept:
+            return None
+        if len(kept) == len(e["parts"]):
+            return e
+        sub: dict = {"base": e["base"], "parts": kept}
+        if e.get("root"):
+            sub["root"] = e["root"]
+        if e.get("rows"):
+            sub["rows"] = {p: e["rows"][p] for p in kept if p in e["rows"]}
+        stats = {f: s for f, s in (e.get("stats") or {}).items()
+                 if f.split("/", 1)[0] in kept}
+        if stats:
+            sub["stats"] = stats
+        if e.get("bloom"):
+            sub["bloom"] = True
+        return sub
+
+    @staticmethod
+    def _layouts_mixed(m: dict) -> bool:
+        """True when some entry's physical layout differs from the
+        manifest's current partition column — partition evolution in
+        progress, not yet fully compacted."""
+        pcol = m.get("partition_col")
+        return pcol is not None and any(
+            entry_layout(e) != pcol for e in m["entries"]
         )
+
 
     def add_columns(self, columns: dict[str, str]) -> int:
         """Metadata-only ALTER TABLE ADD COLUMNS (the Delta/Iceberg
@@ -3799,13 +3377,6 @@ class SnapshotTable:
 
         return self._commit(build)
 
-    @staticmethod
-    def _entry_layout(e: dict) -> str | None:
-        """See module-level `entry_layout`.  After evolve_partitioning
-        the manifest's partition_col is the CURRENT layout; entries
-        written before the evolution keep describing their own."""
-        return entry_layout(e)
-
     def evolve_partitioning(self, new_col: str | None) -> int:
         """Iceberg-style partition evolution as ONE metadata commit:
         future writes lay data out by `new_col` (or unpartitioned for
@@ -3818,8 +3389,9 @@ class SnapshotTable:
         partition-values read that silently returned old-layout rows
         whole would let a subsequent replace write duplicate them.
         Row-level DML stays AVAILABLE while mixed (r11, matching
-        Delta/Iceberg): rewrite-mode delete/update switch to the
-        entry-scoped copy-on-write of `_rewrite_mixed`, a merge keyed
+        Delta/Iceberg): rewrite-mode delete/update also rewrite the
+        foreign-layout entries holding matched rows, into the current
+        layout (`_cow_commit`'s entry scope), a merge keyed
         on the partition column falls back to the whole-table rewrite
         for that call, and dv-mode everything works unchanged.  A full
         `compact()` rewrites history into the current layout and
@@ -4169,10 +3741,6 @@ class SnapshotTable:
         if v is None:
             raise FileNotFoundError(f"no snapshot at {self.root}")
         m = self.manifest(v)
-        # forward-compat: a manifest committed by a NEWER engine
-        # version may depend on reader features this code predates —
-        # refuse loudly rather than return wrong rows
-        check_reader_features(m, READER_FEATURES, "SnapshotTable.read")
         entries = m["entries"]
         if partition_values is not None:
             pcol = m.get("partition_col")
@@ -4182,7 +3750,7 @@ class SnapshotTable:
                 )
             stale = [
                 e for e in entries
-                if e["parts"] is not None and self._entry_layout(e) != pcol
+                if e["parts"] is not None and entry_layout(e) != pcol
             ]
             if stale or any(e["parts"] is None for e in entries):
                 raise ValueError(
@@ -4226,43 +3794,58 @@ class SnapshotTable:
                 lambda a, b: a & b,
                 [_PRED_OPS[op](F.col(c), F.lit(val)) for c, op, val in predicates],
             )
+        df = self._masked_scan(m, entries)
+        return df.where(residual) if residual is not None else df
+
+    def _masked_scan(
+        self, m: dict, entries: list[dict] | None = None, with_pos: bool = False,
+    ) -> DataFrame:
+        """The one DV-masked scan behind read() and every row-level
+        change: `entries` (default: all of `m`'s) as one relation, minus
+        the row positions `m`'s deletion vectors address (merge-on-read:
+        one anti-join against the small deleted-position set, nothing
+        when the table has none), with schema-only columns surfaced as
+        typed NULLs.  `with_pos` keeps the (__dv_file, __dv_row)
+        position columns a new vector addresses rows by.
+
+        No entries (a truncated / created-empty snapshot, or a
+        fully-pruned read): zero scannable paths would make
+        spark.read.parquet() throw, so the frame is rebuilt empty from
+        the schema the manifest recorded at commit."""
+        # forward-compat: a manifest committed by a NEWER engine
+        # version may depend on reader features this code predates —
+        # refuse loudly rather than return (or rewrite) wrong rows
+        check_reader_features(m, READER_FEATURES, "SnapshotTable.read")
+        entries = m["entries"] if entries is None else entries
         if not entries:
-            # a truncated / created-empty snapshot (or a fully-pruned
-            # read): zero scannable paths would make
-            # spark.read.parquet() throw, so rebuild an empty DataFrame
-            # from the schema the manifest recorded at commit
             if m.get("schema") is None:
                 raise FileNotFoundError(
-                    f"snapshot v{v} at {self.root} has no entries and no "
-                    "recorded schema"
+                    f"snapshot v{m.get('version')} at {self.root} has no "
+                    "entries and no recorded schema"
                 )
             return self.spark.createDataFrame(
                 [], StructType.fromJson(json.loads(m["schema"]))
             )
         dv = self._dv_scan(m)
         df = self._scan_entries(
-            entries, m.get("partition_col"), with_pos=dv is not None,
+            entries, m.get("partition_col"), with_pos=with_pos or dv is not None,
             cmap=m.get("column_mapping"),
             read_schema=self._declared_scan_schema(m),
         )
         if dv is not None:
-            # merge-on-read: mask DV-addressed row positions.  Cost is
-            # one anti-join against the (small) deleted-position set —
-            # zero when the table has no deletion vectors.
-            df = df.join(
-                F.broadcast(dv), ["__dv_file", "__dv_row"], "left_anti"
-            ).drop("__dv_file", "__dv_row")
-        df = self._fill_schema_columns(df, m)
-        return df.where(residual) if residual is not None else df
+            df = df.join(F.broadcast(dv), list(_POS), "left_anti")
+        if not with_pos:
+            df = df.drop(*_POS)
+        return self._fill_schema_columns(df, m)
 
     def _fill_schema_columns(self, df: DataFrame, m: dict) -> DataFrame:
         """Surface columns the manifest schema has but no data file
         does yet (metadata-only add_columns) as typed NULLs; scan
         columns missing from the recorded schema are kept as-is
-        (mergeSchema cross-snapshot safety).  Every path that builds
-        its output column list from a scan — read() AND the DV DML
-        paths — must go through this, or a merge/update addressing a
-        schema-only column would silently drop the assignment."""
+        (mergeSchema cross-snapshot safety).  `_masked_scan` applies
+        it for read() and every row-level change alike — without it a
+        merge/update addressing a schema-only column would silently
+        drop the assignment."""
         if not m.get("schema"):
             return df
         missing = [
@@ -4290,7 +3873,7 @@ class SnapshotTable:
             else f"{self.root}/{d}"
             for d in dvs
         ]
-        return self.spark.read.parquet(*paths).select("__dv_file", "__dv_row")
+        return self.spark.read.parquet(*paths).select(*_POS)
 
     def _prune_parts_by_predicates(
         self, entries: list[dict], m: dict,
@@ -4404,7 +3987,7 @@ class SnapshotTable:
 
         out = []
         for e in entries:
-            if e["parts"] is None or self._entry_layout(e) != pcol:
+            if e["parts"] is None or entry_layout(e) != pcol:
                 out.append(e)  # foreign layout / unpartitioned: keep whole
                 continue
             kept = [p for p in e["parts"]
@@ -4510,7 +4093,7 @@ class SnapshotTable:
             # a single group, so it still plans ONE scan
             by_root: dict[tuple, list] = {}
             for e in entries:
-                key = (e.get("root") or self.root, self._entry_layout(e))
+                key = (e.get("root") or self.root, entry_layout(e))
                 by_root.setdefault(key, []).append(e)
             scans = []
             for (root, _layout), es in by_root.items():
@@ -4535,7 +4118,10 @@ class SnapshotTable:
                         if f.name != _layout
                         and (not cmap or cmap["cols"].get(f.name) != _layout)
                     ])
-                    reader = reader.schema(phys)
+                    # declared, so discovery never infers its type: a hex
+                    # id like 8762930e73214520 parses as a decimal, and
+                    # Spark then computes 10^73214520 for hours
+                    reader = reader.schema(phys.add("__snap", StringType()))
                 else:
                     reader = reader.option("mergeSchema", "true")
                 df = reader.parquet(*paths)
@@ -5083,7 +4669,7 @@ class SnapshotTable:
         if m.get("partition_col"):
             seen: dict[str, int] = {}
             for e in entries:
-                if self._entry_layout(e) != m["partition_col"]:
+                if entry_layout(e) != m["partition_col"]:
                     continue
                 for p in e.get("parts") or []:
                     seen[p] = seen.get(p, 0) + 1
@@ -5170,7 +4756,7 @@ class SnapshotTable:
             return None  # r7 API shape: never pay the file walk
         fm = self.fragmentation_metrics(m)
         pcol = m.get("partition_col")
-        if any(self._entry_layout(e) != pcol for e in m["entries"]):
+        if any(entry_layout(e) != pcol for e in m["entries"]):
             return None  # mid-evolution: see docstring
         if (max_small_file_share is not None
                 and pcol is None

@@ -1,9 +1,14 @@
 """Deletion-vector (merge-on-read delete) tests: read-time masking,
-equivalence with the copy-on-write rewrite, composition of multiple
-vectors, time travel, compact materialization, vacuum liveness, CDF
-over DV versions, and interplay with append/upsert."""
+equivalence with the copy-on-write rewrite (the DML parity matrix),
+the no-op and missing-table rules of both modes, composition of
+multiple vectors, time travel, compact materialization, vacuum
+liveness, lost-race cleanup, CDF over DV versions, and interplay with
+append/upsert."""
 
 from __future__ import annotations
+
+import itertools
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -33,17 +38,6 @@ def test_dv_delete_masks_rows_without_rewriting(spark, table):
     assert m["entries"] == entries_before  # zero data rewritten
     assert len(m.get("dv_files", [])) == 1
     assert _rows(table.read()) == [(i, f"v{i}") for i in range(7)]
-
-
-def test_dv_delete_equals_rewrite_delete(spark, tmp_path):
-    data = [(i, f"v{i}") for i in range(20)]
-    a = SnapshotTable(spark, str(tmp_path / "a"))
-    b = SnapshotTable(spark, str(tmp_path / "b"))
-    for t in (a, b):
-        t.overwrite(spark.createDataFrame(data, "k long, v string"))
-    a.delete("k % 3 = 0", mode="dv")
-    b.delete("k % 3 = 0", mode="rewrite")
-    assert _rows(a.read()) == _rows(b.read())
 
 
 def test_dv_deletes_compose(spark, table):
@@ -193,25 +187,6 @@ def test_vacuum_collects_orphaned_dv_dir(spark, table):
     assert len(_rows(table.read())) == 9
 
 
-def test_dv_update_equals_rewrite_update(spark, tmp_path):
-    data = [(i, f"d{i % 3}", i * 10) for i in range(12)]
-    a = SnapshotTable(spark, str(tmp_path / "ua"))
-    b = SnapshotTable(spark, str(tmp_path / "ub"))
-    for t in (a, b):
-        t.replace_partitions(
-            spark.createDataFrame(data, "k long, day string, x long"), "day"
-        )
-    a.update({"x": "x + 1"}, condition="k % 4 = 0", mode="dv")
-    b.update({"x": "x + 1"}, condition="k % 4 = 0", mode="rewrite")
-    ra = sorted((r["k"], r["day"], r["x"]) for r in a.read().collect())
-    rb = sorted((r["k"], r["day"], r["x"]) for r in b.read().collect())
-    assert ra == rb
-    # no pre-existing partition data was rewritten: every original
-    # entry survives; the commit ADDED one entry + one vector
-    m = a.manifest(a.latest_version())
-    assert len(m["entries"]) == 2 and len(m["dv_files"]) == 1
-
-
 def test_dv_update_can_move_partitions(spark, tmp_path):
     """mode='dv' may assign the partition column — the updated copy is
     ordinary appended data, so the row just moves lists (the rewrite
@@ -236,34 +211,6 @@ def test_dv_update_nothing_matched_is_noop(spark, table):
     v = table.latest_version()
     assert table.update({"v": F.lit("zz")}, condition="k > 99", mode="dv") == v
     assert table.latest_version() == v
-
-
-def test_dv_merge_equals_rewrite_merge(spark, tmp_path):
-    """mode='dv' MERGE must produce the same end state as the rewrite
-    merge across all three clauses (update / delete / insert), while
-    keeping every pre-existing data entry untouched."""
-    data = [(i, f"v{i}", i * 10) for i in range(10)]
-    src = [(5, "v5new", 0), (8, "v8new", 0), (100, "v100", 1000)]
-    a = SnapshotTable(spark, str(tmp_path / "ma"))
-    b = SnapshotTable(spark, str(tmp_path / "mb"))
-    for t in (a, b):
-        t.overwrite(spark.createDataFrame(data, "k long, v string, x long"))
-    source = spark.createDataFrame(src, "k long, v string, x long")
-    for t, mode in ((a, "dv"), (b, "rewrite")):
-        t.merge(
-            source, keys=("k",),
-            when_matched_delete="t.k = 8",
-            when_matched_update="all",
-            when_not_matched_insert=True,
-            mode=mode,
-        )
-    ra = sorted((r["k"], r["v"], r["x"]) for r in a.read().collect())
-    rb = sorted((r["k"], r["v"], r["x"]) for r in b.read().collect())
-    assert ra == rb
-    assert (5, "v5new", 0) in ra and (100, "v100", 1000) in ra
-    assert not any(k == 8 for k, _, _ in ra)
-    m = a.manifest(a.latest_version())
-    assert len(m["entries"]) == 2 and len(m["dv_files"]) == 1
 
 
 def test_dv_merge_insert_only_and_noop(spark, table):
@@ -343,3 +290,146 @@ def test_maybe_compact_materializes_only_past_threshold(spark, tmp_path):
     assert out == t.latest_version() and out > v
     assert t.dv_metrics()["dv_masked_rows"] == 0  # debt retired
     assert t.read().count() == 170
+
+
+# -- the DML parity matrix: both commit shapes against a Python model ----
+
+_SCHEMA = "k long, day string, x long"
+_BASE = [(i, f"d{i % 3}", i * 10) for i in range(12)]
+_TAIL = [(12, "d0", 120), (13, "d1", 130)]  # lands after evolution
+
+
+def _dml_table(spark, root, layout):
+    """12 rows (14 when mixed): unpartitioned, partitioned by `day`, or
+    written unpartitioned then evolved to `day` with two rows landing
+    in the new layout (a mixed-layout table)."""
+    t = SnapshotTable(spark, root)
+    base = spark.createDataFrame(_BASE, _SCHEMA)
+    if layout == "partitioned":
+        t.replace_partitions(base, "day")
+    else:
+        t.overwrite(base)
+    if layout == "mixed":
+        t.evolve_partitioning("day")
+        t.append(spark.createDataFrame(_TAIL, _SCHEMA))
+        assert t._layouts_mixed(t.manifest(t.latest_version()))
+    return t
+
+
+def _dml(spark, t, verb, mode, match=True):
+    if verb == "delete":
+        return t.delete("k % 3 = 0" if match else "k > 999", mode=mode)
+    if verb == "update":
+        return t.update({"x": "x + 100"},
+                        condition="k % 4 = 0" if match else "k > 999", mode=mode)
+    src = ([(1, "d1", 1000), (4, "d1", -1), (100, "d0", 7), (5, "d0", 55)]
+           if match else [(200, "d0", 1)])
+    return t.merge(spark.createDataFrame(src, _SCHEMA), keys=("day", "k"),
+                   when_matched_delete="s.x < 0",
+                   when_not_matched_insert=match, mode=mode)
+
+
+def _model(verb, rows):
+    m = {(k, d): x for k, d, x in rows}
+    if verb == "delete":
+        m = {key: x for key, x in m.items() if key[0] % 3}
+    elif verb == "update":
+        m = {key: x + 100 if key[0] % 4 == 0 else x for key, x in m.items()}
+    else:
+        m[(1, "d1")] = 1000  # matched: updated
+        del m[(4, "d1")]  # matched with s.x < 0: deleted
+        m[(100, "d0")] = 7  # not matched: inserted
+        m[(5, "d0")] = 55  # misses (5, "d2"): inserted beside it
+    return sorted((k, d, x) for (k, d), x in m.items())
+
+
+@pytest.mark.parametrize(
+    "verb,layout",
+    list(itertools.product(("delete", "update", "merge"),
+                           ("unpartitioned", "partitioned", "mixed"))),
+)
+def test_dml_parity_matrix(spark, tmp_path, verb, layout):
+    """DELETE, UPDATE and MERGE in dv and rewrite mode, over an
+    unpartitioned, a partitioned and a mixed-layout table: both end
+    states equal each other and a pure-Python model, a matching call
+    commits exactly one version, a no-match call commits none, and the
+    dv commit keeps every pre-existing entry and adds one vector."""
+    rows = _BASE + (_TAIL if layout == "mixed" else [])
+    got = {}
+    for mode in ("dv", "rewrite"):
+        t = _dml_table(spark, str(tmp_path / mode), layout)
+        v0 = t.latest_version()
+        m0 = t.manifest(v0)
+        assert _dml(spark, t, verb, mode) == v0 + 1 == t.latest_version()
+        got[mode] = sorted((r["k"], r["day"], r["x"]) for r in t.read().collect())
+        if mode == "dv":
+            m1 = t.manifest(v0 + 1)
+            assert all(e in m1["entries"] for e in m0["entries"])
+            # one new data dir for the post-images/inserts, none for DELETE
+            assert len(m1["entries"]) == len(m0["entries"]) + (verb != "delete")
+            assert len(m1["dv_files"]) == len(m0.get("dv_files") or []) + 1
+        assert _dml(spark, t, verb, mode, match=False) == v0 + 1
+        assert t.latest_version() == v0 + 1
+    assert got["dv"] == got["rewrite"] == _model(verb, rows)
+
+
+@pytest.mark.parametrize("verb", ["delete", "update", "merge"])
+@pytest.mark.parametrize("mode", ["rewrite", "dv"])
+def test_no_match_commits_nothing(spark, table, verb, mode):
+    """One no-op rule for every verb in both modes: a change that
+    matches (and inserts) nothing commits no version — an unpartitioned
+    rewrite-mode UPDATE or MERGE included, which used to rewrite the
+    whole table."""
+    v = table.latest_version()
+    if verb == "delete":
+        assert table.delete("k > 99", mode=mode) == v
+    elif verb == "update":
+        assert table.update({"v": F.lit("zz")}, condition="k > 99", mode=mode) == v
+    else:
+        src = spark.createDataFrame([(500, "v500")], "k long, v string")
+        assert table.merge(src, keys=("k",), when_not_matched_insert=False,
+                           mode=mode) == v
+    assert table.latest_version() == v
+    assert _rows(table.read()) == [(i, f"v{i}") for i in range(10)]
+
+
+@pytest.mark.parametrize("verb", ["delete", "update"])
+@pytest.mark.parametrize("mode", ["rewrite", "dv"])
+def test_missing_table_raises_file_not_found(spark, tmp_path, verb, mode):
+    """One missing-table rule: DELETE and UPDATE raise
+    FileNotFoundError in both modes."""
+    t = SnapshotTable(spark, str(tmp_path / "absent"))
+    with pytest.raises(FileNotFoundError, match="no snapshot at"):
+        if verb == "delete":
+            t.delete("k = 1", mode=mode)
+        else:
+            t.update({"v": F.lit("zz")}, condition="k = 1", mode=mode)
+
+
+def test_dv_delete_lost_race_reclaims_its_vector(spark, table):
+    """A rival append landing between the dv delete's vector write and
+    its commit: the delete re-runs against the advanced snapshot and
+    deletes the vector it staged for the lost attempt — the only
+    `__dv=` dir left is the one the manifest names."""
+    rival = SnapshotTable(spark, table.root)
+    real_commit = table._commit
+    fired = {"done": False}
+
+    def interloping(build):
+        if not fired["done"]:  # rival lands AFTER the vector was staged
+            fired["done"] = True
+            rival.append(spark.createDataFrame([(-1, "rival")], "k long, v string"))
+        return real_commit(build)
+
+    table._commit = interloping
+    try:
+        table.delete("k >= 7", mode="dv")
+    finally:
+        table._commit = real_commit
+    assert fired["done"]
+    m = table.manifest(table.latest_version())
+    on_disk = {d for d in os.listdir(os.path.join(table.root, "data"))
+               if d.startswith("__dv=")}
+    assert {f"data/{d}" for d in on_disk} == set(m["dv_files"])
+    assert len(on_disk) == 1
+    assert _rows(table.read()) == [(-1, "rival")] + [(i, f"v{i}") for i in range(7)]

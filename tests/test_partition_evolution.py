@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pixelspark.table import SnapshotTable
+from pixelspark.table import SnapshotTable, entry_layout
 
 
 @pytest.fixture()
@@ -37,7 +37,7 @@ def test_evolution_is_metadata_only_and_reads_union_layouts(spark, tbl):
     assert got == {("d1", "r1", 1), ("d2", "r2", 2), ("d3", "r1", 3)}
     # both layouts live side by side
     layouts = {
-        tbl._entry_layout(e) for e in tbl.manifest(tbl.latest_version())["entries"]
+        entry_layout(e) for e in tbl.manifest(tbl.latest_version())["entries"]
     }
     assert layouts == {"day", "region"}
 
@@ -64,7 +64,7 @@ def test_partition_values_pruning_refused_until_compact(spark, tbl):
         tbl.read(partition_values=["r3"])
     tbl.compact()  # full compact rewrites history into the region layout
     m = tbl.manifest(tbl.latest_version())
-    assert {tbl._entry_layout(e) for e in m["entries"]} == {"region"}
+    assert {entry_layout(e) for e in m["entries"]} == {"region"}
     pruned = tbl.read(partition_values=["r1"])
     assert {r["k"] for r in pruned.collect()} == {1}
     assert {r["k"] for r in tbl.read().collect()} == {1, 2, 3}
@@ -97,7 +97,7 @@ def test_evolution_guards(spark, tbl):
         tbl.evolve_partitioning("region")
 
 
-# -- r11: row-level DML on MIXED layouts (the _rewrite_mixed fallback;
+# -- r11: row-level DML on MIXED layouts (_cow_commit's entry scope;
 # Delta/Iceberg serve DML right after evolution, so must we) ----------
 
 
@@ -190,7 +190,7 @@ def test_mixed_layout_merge_keyed_on_pcol_falls_back(spark, tbl):
                           ("dN", "r9", 99)}
     # the whole-table fallback heals the layout as a side effect
     m = tbl.manifest(tbl.latest_version())
-    assert {tbl._entry_layout(e) for e in m["entries"]} == {"region"}
+    assert {entry_layout(e) for e in m["entries"]} == {"region"}
     tbl.read(partition_values=["r2"])  # pruning restored
 
 
@@ -254,13 +254,13 @@ def test_mixed_layout_delete_across_three_layouts(spark, tmp_path):
         spark.createDataFrame([("d3", "r3", 3)],
                               "day string, region string, k long"),
         "region")
-    layouts = {t._entry_layout(e)
+    layouts = {entry_layout(e)
                for e in t.manifest(t.latest_version())["entries"]}
     assert layouts == {None, "day", "region"}
     t.delete(F.col("k").isin([1, 2]), mode="rewrite")
     got = {(r["day"], r["region"], r["k"]) for r in t.read().collect()}
     assert got == {("d3", "r3", 3)}
-    layouts = {t._entry_layout(e)
+    layouts = {entry_layout(e)
                for e in t.manifest(t.latest_version())["entries"]}
     assert layouts == {"region"}
 
@@ -268,11 +268,11 @@ def test_mixed_layout_delete_across_three_layouts(spark, tmp_path):
 def test_mixed_layout_delete_crash_before_commit_is_invisible(
     spark, tmp_path
 ):
-    """Kill the writer between _rewrite_mixed's staged write and its
-    manifest commit: no version lands, reads are untouched, the
-    orphaned staged dir is vacuum-able garbage, and the delete simply
-    re-runs to completion afterwards (the add-then-commit crash
-    model every other write follows)."""
+    """Kill the writer between the copy-on-write commit's staged
+    write and its manifest commit: no version lands, reads are
+    untouched, the orphaned staged dir is vacuum-able garbage, and
+    the delete simply re-runs to completion afterwards (the
+    add-then-commit crash model every other write follows)."""
     t = SnapshotTable(spark, str(tmp_path / "crash"))
     t.append(spark.createDataFrame([("d1", 1), ("d1", 2)],
                                    "day string, k long"))

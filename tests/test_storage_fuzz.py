@@ -471,7 +471,7 @@ class StorageMachine(RuleBasedStateMachine):
             st.sampled_from(sorted(self.rows)), min_size=1, max_size=2,
             unique=True))
         # r11: rewrite-mode DELETE runs on mixed layouts too (the
-        # entry-scoped _rewrite_mixed fallback) — no exclusion needed
+        # entry scope of the copy-on-write commit) — no exclusion needed
         self.t.delete(F.col("k").isin(victims), mode=mode)
         for k in victims:
             del self.rows[k]
@@ -486,7 +486,7 @@ class StorageMachine(RuleBasedStateMachine):
         # after a rename, erasing UPDATE coverage mid-program
         vcol = self.cols[1][0]
         # r11: rewrite-mode UPDATE runs on mixed layouts too (the
-        # entry-scoped _rewrite_mixed fallback) — no exclusion needed
+        # entry scope of the copy-on-write commit) — no exclusion needed
         self.t.update({vcol: F.lit(f"upd:{k}")},
                       condition=F.col("k") == k, mode=mode)
         self.rows[k][vcol] = f"upd:{k}"

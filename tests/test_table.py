@@ -36,6 +36,20 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "k long, v string")
 
 
+def test_numeric_looking_snap_id_is_read_without_type_inference(
+    spark, tmp_path, monkeypatch
+):
+    """A `__snap=` id is 16 hex digits, so now and then it reads as a
+    number in scientific notation.  Partition discovery must not infer
+    its type: parsing `8762930e73214520` as a decimal makes Spark
+    compute 10^73214520, and the read stalls for hours."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    monkeypatch.setattr(
+        SnapshotTable, "_new_snap", lambda self: "data/__snap=8762930e73214520")
+    t.overwrite(_df(spark, [(1, "a"), (2, "b")]))
+    assert sorted((r["k"], r["v"]) for r in t.read().collect()) == [(1, "a"), (2, "b")]
+
+
 def test_overwrite_read_roundtrip_and_versions(spark, tbl):
     tbl.overwrite(_df(spark, [(1, "a"), (2, "b")]))
     assert sorted((r["k"], r["v"]) for r in tbl.read().collect()) == [(1, "a"), (2, "b")]

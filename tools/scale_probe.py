@@ -1371,9 +1371,10 @@ def fragmentation_maintain_experiment(spark) -> dict:
 
 
 def mixed_dml_scoping_experiment(spark) -> dict:
-    """r11 `_rewrite_mixed` cost shape (DELETE during partition
-    evolution): find = ONE column-pruned position-scan of the foreign
-    entries, rewrite = touched entries only.  Receipts:
+    """r11 mixed-layout DML cost shape (`_cow_commit`'s entry scope;
+    DELETE during partition evolution): find = ONE column-pruned
+    position-scan of the foreign entries, rewrite = touched entries
+    only.  Receipts:
       (a) doubling the UNTOUCHED foreign data grows the delete far
           sublinearly (the rewrite term is flat; only the find scan
           grows),
@@ -1385,7 +1386,7 @@ def mixed_dml_scoping_experiment(spark) -> dict:
 
     from pyspark.sql import functions as F
 
-    from pixelspark.table import SnapshotTable
+    from pixelspark.table import SnapshotTable, entry_layout
 
     rows_per = 250_000
 
@@ -1417,7 +1418,7 @@ def mixed_dml_scoping_experiment(spark) -> dict:
     def foreign_bases(t):
         m = t.manifest(t.latest_version())
         return {e["base"] for e in m["entries"]
-                if t._entry_layout(e) != m.get("partition_col")}
+                if entry_layout(e) != m.get("partition_col")}
 
     t1 = build(8)
     pre = foreign_bases(t1)
