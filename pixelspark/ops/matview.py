@@ -76,6 +76,7 @@ from pixelspark.table import (
     ConcurrentWriteConflict,
     SnapshotTable,
     StaleWatermark,
+    _key_on,
 )
 
 # exact decimal for floating-point sums: retraction must be exact
@@ -322,6 +323,68 @@ def _fold_merge(
     )
 
 
+def _fold_loop(src: SnapshotTable, view: SnapshotTable,
+               src_keys: tuple[str, ...] | None, body, what: str) -> int | None:
+    """The one retry loop behind every single-source refresher.  Each
+    attempt resolves the source head, refuses a vanished or rewound
+    source, returns None when the view is already current, and hands
+    the change window since the folded watermark (pre/post images) to
+    `body(changes, to_v, txn)` — which lands it with the
+    compare-and-set `txn` (app_id, to_v, expected from_v).  A rival
+    fold landing first makes that commit raise StaleWatermark, and the
+    attempt re-runs from the advanced watermark."""
+    for _ in range(view.max_retries):
+        to_v = src.latest_version()
+        if to_v is None:
+            _check_missing(src, view)
+            return None  # source doesn't exist yet: nothing to fold
+        from_v = last_folded_version(src, view)
+        _check_rewind(src, view, from_v, to_v)
+        if from_v == to_v:
+            return None  # already current
+        changes = src.read_changes(from_v, to_v, keys=src_keys, preimages=True)
+        try:
+            return body(changes, to_v, (_app_id(src, view), to_v, from_v))
+        except StaleWatermark:
+            continue  # a rival fold landed: recompute from its watermark
+    raise ConcurrentCommitError(
+        f"{what} refresh lost the fold race {view.max_retries} times "
+        f"at {view.root}"
+    )
+
+
+def _touched_groups(
+    src: SnapshotTable, to_v: int, changes: DataFrame,
+    group_by: tuple[str, ...],
+) -> tuple[DataFrame, DataFrame]:
+    """(touched groups, their source rows) for the recompute-shaped
+    refreshers.  Touched groups are the DISTINCT group keys of the
+    change window — pre-images included, so an update that MOVES a row
+    across groups touches both.  Their rows come from ONE source scan,
+    semi-joined (null-safe: a NULL group value is a real group) to the
+    touched keys and pruned at the MANIFEST level when the source is
+    partitioned by a group column; a NULL partition value cannot be
+    addressed by name, so it falls back to the unpruned scan."""
+    touched = changes.select(*group_by).distinct()
+    pcol = src.manifest(to_v).get("partition_col")
+    # [None] stands for "not prunable": unpartitioned by a group column
+    vals = ([r[0] for r in touched.select(pcol).distinct().collect()]
+            if pcol in group_by else [None])
+    if None in vals:
+        base = src.read()
+    elif vals:
+        base = src.read(partition_values=vals)
+    else:
+        # empty change window (e.g. a compact classified all rows
+        # 'unchanged'): nothing to recompute, but the watermark must
+        # still advance — an empty merge, not an early return
+        base = src.read().limit(0)
+    rows = base.alias("b").join(
+        F.broadcast(touched.alias("t")), _key_on(group_by, "b", "t", True),
+        "semi")
+    return touched, rows
+
+
 def refresh_agg_view(
     src: SnapshotTable,
     view: SnapshotTable,
@@ -362,37 +425,19 @@ def refresh_agg_view(
     same view can never both apply overlapping change windows — the
     loser sees StaleWatermark and recomputes from the advanced
     watermark."""
-    for _ in range(view.max_retries):
-        to_v = src.latest_version()
-        if to_v is None:
-            _check_missing(src, view)
-            return None  # source doesn't exist yet: nothing to fold
-        from_v = last_folded_version(src, view)
-        _check_rewind(src, view, from_v, to_v)
-        if from_v == to_v:
-            return None  # already current
-        changes = src.read_changes(
-            from_v, to_v, keys=src_keys, preimages=True
-        )
+    def body(changes: DataFrame, to_v: int, txn: tuple) -> int | None:
         if where is not None:
             changes = changes.where(
                 F.expr(where) if isinstance(where, str) else where
             )
         delta = fold_delta(changes, group_by, sum_cols, count_col)
-        try:
-            return _fold_or_create(
-                lambda: _fold_merge(
-                    view, delta, group_by, sum_cols, count_col, merge_mode,
-                    (_app_id(src, view), to_v, from_v),
-                ),
-                view, delta,
-            )
-        except StaleWatermark:
-            continue  # a rival fold landed: recompute from its watermark
-    raise ConcurrentCommitError(
-        f"matview refresh lost the fold race {view.max_retries} times "
-        f"at {view.root}"
-    )
+        return _fold_or_create(
+            lambda: _fold_merge(view, delta, group_by, sum_cols, count_col,
+                                merge_mode, txn),
+            view, delta,
+        )
+
+    return _fold_loop(src, view, src_keys, body, "matview")
 
 
 def refresh_distinct_view(
@@ -470,10 +515,7 @@ def _delta_join(
             f"join sides share non-key columns {sorted(overlap)}; rename "
             "them on the source tables (the view's namespace is flat)"
         )
-    cond = reduce(
-        lambda a, b: a & b,
-        [F.col(f"d.{k}") == F.col(f"o.{k}") for k in on],
-    )
+    cond = _key_on(on, "d", "o", null_safe=False)
     keep = [F.col(f"d.{c}") for c in delta.columns] + [
         F.col(f"o.{c}") for c in other.columns if c not in on
     ]
@@ -822,62 +864,16 @@ def refresh_recompute_view(
         name: (F.expr(e) if isinstance(e, str) else e)
         for name, e in aggs.items()
     }
-    for _ in range(view.max_retries):
-        to_v = src.latest_version()
-        if to_v is None:
-            _check_missing(src, view)
-            return None
-        from_v = last_folded_version(src, view)
-        _check_rewind(src, view, from_v, to_v)
-        if from_v == to_v:
-            return None
-        # preimages are load-bearing here too: an update that MOVES a
-        # row across groups must touch BOTH its old and new group, or
-        # the old group's aggregate goes stale
-        changes = src.read_changes(from_v, to_v, keys=src_keys, preimages=True)
-        touched = changes.select(*group_by).distinct()
-
-        pcol = src.manifest(to_v).get("partition_col")
-        if pcol in group_by and pcol is not None:
-            vals = [r[0] for r in touched.select(pcol).distinct().collect()]
-            if any(v is None for v in vals):
-                # a NULL partition value cannot be addressed by
-                # manifest pruning — full-scan fallback (same caveat
-                # as the not-partitioned-by-a-group-column case)
-                base = src.read()
-            elif vals:
-                base = src.read(partition_values=vals)
-            else:
-                # empty change window (e.g. a compact classified all
-                # rows 'unchanged'): nothing to recompute, but the
-                # watermark must still advance — fall through to an
-                # empty merge instead of returning un-current
-                base = src.read().limit(0)
-        else:
-            base = src.read()
-        # null-safe group joins: a NULL group value is a real group
-        # (GROUP BY collates NULLs together) — plain equality would
-        # drop its rows from `fresh` and route it to `gone`, deleting
-        # a live group from the view on every refresh
-        on_bt = reduce(
-            lambda a, b: a & b,
-            [F.col(f"b.{k}").eqNullSafe(F.col(f"t.{k}")) for k in group_by],
+    def body(changes: DataFrame, to_v: int, txn: tuple) -> int | None:
+        touched, rows = _touched_groups(src, to_v, changes, group_by)
+        fresh = rows.groupBy(*group_by).agg(
+            F.count(F.lit(1)).cast("long").alias(count_col),
+            *[c.alias(name) for name, c in agg_exprs.items()],
         )
-        fresh = (
-            base.alias("b")
-            .join(F.broadcast(touched.alias("t")), on_bt, "semi")
-            .groupBy(*group_by)
-            .agg(
-                F.count(F.lit(1)).cast("long").alias(count_col),
-                *[c.alias(name) for name, c in agg_exprs.items()],
-            )
-        )
-        on_tf = reduce(
-            lambda a, b: a & b,
-            [F.col(f"t.{k}").eqNullSafe(F.col(f"f.{k}")) for k in group_by],
-        )
+        # null-safe: plain equality would route a live NULL group to
+        # `gone` and delete it from the view on every refresh
         gone = touched.alias("t").join(
-            fresh.alias("f"), on_tf, "left_anti"
+            fresh.alias("f"), _key_on(group_by, "t", "f", True), "left_anti"
         ).select(
             *group_by,
             F.lit(0).cast("long").alias(count_col),
@@ -885,26 +881,21 @@ def refresh_recompute_view(
               for name in agg_exprs],
         )
         delta = fresh.unionByName(gone)
-        try:
-            return _fold_or_create(
-                lambda: view.merge(
-                    delta,
-                    keys=group_by,
-                    when_matched_delete=F.col(f"s.{count_col}") == 0,
-                    when_matched_update="all",
-                    when_not_matched_insert=F.col(f"s.{count_col}") > 0,
-                    validate_keys=False,
-                    null_safe_keys=True,
-                    txn=(_app_id(src, view), to_v, from_v),
-                ),
-                view, delta,
-            )
-        except StaleWatermark:
-            continue
-    raise ConcurrentCommitError(
-        f"recompute-view refresh lost the fold race {view.max_retries} "
-        f"times at {view.root}"
-    )
+        return _fold_or_create(
+            lambda: view.merge(
+                delta,
+                keys=group_by,
+                when_matched_delete=F.col(f"s.{count_col}") == 0,
+                when_matched_update="all",
+                when_not_matched_insert=F.col(f"s.{count_col}") > 0,
+                validate_keys=False,
+                null_safe_keys=True,
+                txn=txn,
+            ),
+            view, delta,
+        )
+
+    return _fold_loop(src, view, src_keys, body, "recompute-view")
 
 
 def refresh_minmax_view(
@@ -992,41 +983,14 @@ def refresh_topn_view(
                          "keys — constant within a board, order on a "
                          "non-key column")
     val_cols = list(order_by) + [c for c in payload if c not in order_by]
-    for _ in range(view.max_retries):
-        to_v = src.latest_version()
-        if to_v is None:
-            _check_missing(src, view)
-            return None
-        from_v = last_folded_version(src, view)
-        _check_rewind(src, view, from_v, to_v)
-        if from_v == to_v:
-            return None
-        changes = src.read_changes(from_v, to_v, keys=src_keys, preimages=True)
-        touched = changes.select(*group_by).distinct()
-
-        pcol = src.manifest(to_v).get("partition_col")
-        if pcol in group_by and pcol is not None:
-            vals = [r[0] for r in touched.select(pcol).distinct().collect()]
-            if any(v is None for v in vals):
-                base = src.read()  # NULL partition: unpruned fallback
-            elif vals:
-                base = src.read(partition_values=vals)
-            else:
-                base = src.read().limit(0)  # all-'unchanged' window
-        else:
-            base = src.read()
-        on_bt = reduce(
-            lambda a, b: a & b,
-            [F.col(f"b.{k}").eqNullSafe(F.col(f"t.{k}")) for k in group_by],
-        )
+    def body(changes: DataFrame, to_v: int, txn: tuple) -> int | None:
+        touched, rows = _touched_groups(src, to_v, changes, group_by)
         w = Window.partitionBy(*group_by).orderBy(*[
             F.col(c).desc() if d else F.col(c).asc()
             for c, d in zip(order_by, descending)
         ])
         fresh = (
-            base.alias("b")
-            .join(F.broadcast(touched.alias("t")), on_bt, "semi")
-            .withColumn(rank_col, F.row_number().over(w))
+            rows.withColumn(rank_col, F.row_number().over(w))
             .where(F.col(rank_col) <= n)
             .select(*group_by, rank_col, *val_cols)
             .withColumn("__live", F.lit(1))
@@ -1035,11 +999,8 @@ def refresh_topn_view(
             *group_by,
             F.explode(F.sequence(F.lit(1), F.lit(n))).alias(rank_col),
         )
-        on_sf = reduce(
-            lambda a, b: a & b,
-            [F.col(f"s.{k}").eqNullSafe(F.col(f"f.{k}")) for k in group_by]
-            + [F.col(f"s.{rank_col}") == F.col(f"f.{rank_col}")],
-        )
+        # ranks are never NULL, so null-safe equality on them is plain
+        on_sf = _key_on(tuple(group_by) + (rank_col,), "s", "f", True)
         delta = (
             slots.alias("s")
             .join(fresh.alias("f"), on_sf, "left")
@@ -1054,23 +1015,18 @@ def refresh_topn_view(
         # otherwise bake it into the schema on the first insert) —
         # eager creation here, unlike _fold_or_create's reactive path
         _ensure_view(view, delta.drop("__live"))
-        try:
-            return view.merge(
-                delta,
-                keys=tuple(group_by) + (rank_col,),
-                when_matched_delete=F.col("s.__live") == 0,
-                when_matched_update={c: F.col(f"s.{c}") for c in val_cols},
-                when_not_matched_insert=F.col("s.__live") == 1,
-                validate_keys=False,  # (group, rank) unique by window
-                null_safe_keys=True,
-                txn=(_app_id(src, view), to_v, from_v),
-            )
-        except StaleWatermark:
-            continue
-    raise ConcurrentCommitError(
-        f"topn-view refresh lost the fold race {view.max_retries} "
-        f"times at {view.root}"
-    )
+        return view.merge(
+            delta,
+            keys=tuple(group_by) + (rank_col,),
+            when_matched_delete=F.col("s.__live") == 0,
+            when_matched_update={c: F.col(f"s.{c}") for c in val_cols},
+            when_not_matched_insert=F.col("s.__live") == 1,
+            validate_keys=False,  # (group, rank) unique by window
+            null_safe_keys=True,
+            txn=txn,
+        )
+
+    return _fold_loop(src, view, src_keys, body, "topn-view")
 
 
 def with_avg(

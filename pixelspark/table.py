@@ -75,7 +75,7 @@ import time
 import uuid
 import warnings
 from functools import reduce
-from typing import Callable, NamedTuple
+from typing import Any, Callable, NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -108,6 +108,32 @@ _PRED_OPS = {
     ">": lambda c, v: c > v,
     ">=": lambda c, v: c >= v,
 }
+
+
+# the characters Spark percent-encodes in a partition directory name
+# (ExternalCatalogUtils.charToEscape, non-Windows)
+_PATH_ESCAPE = frozenset(
+    [chr(c) for c in range(1, 0x20)] + list("\"#%'*/:=?\\\x7f{[]^"))
+
+
+def _part_name(col: str, value) -> str:
+    """The `col=value` directory name Spark writes for a partition
+    value (ExternalCatalogUtils.getPartitionPathString): both sides
+    percent-escaped, NULL and '' as `__HIVE_DEFAULT_PARTITION__`.
+    The one place part names are built from values, so a value like
+    `a:b` (written as `p=a%3Ab`) can be addressed by name."""
+    def esc(s: str) -> str:
+        return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPE else c for c in s)
+
+    v = "" if value is None else str(value)
+    return f"{esc(col)}={esc(v) if v else '__HIVE_DEFAULT_PARTITION__'}"
+
+
+def _part_value(name: str) -> str:
+    """The value string of a `col=value` part name, unescaped (Spark's
+    unescapePathName)."""
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda g: chr(int(g[1], 16)),
+                  name.split("=", 1)[1])
 
 
 def entry_layout(e: dict) -> str | None:
@@ -685,33 +711,47 @@ class SnapshotTable:
     def exists(self) -> bool:
         return self.latest_version() is not None
 
-    def _commit(self, build: Callable[[dict | None], dict]) -> int | None:
+    def _commit(self, build: Callable[[dict | None], dict],
+                staged: Sequence[str] = ()) -> int | None:
         """Optimistic commit loop: read latest manifest, apply the
         entry-level edit `build`, publish as version+1; on losing the
         create race, reload and REBASE the edit onto the winner.  The
         streaming-transaction map (`txn`) carries over automatically
         unless the build sets it.  Returns None when the build aborts
-        (_SkipCommit — a replayed batch detected mid-rebase)."""
+        (_SkipCommit — a replayed batch detected mid-rebase).
+
+        `staged` names the data dirs (full paths) the commit publishes.
+        This loop alone decides their lifetime: they are deleted when
+        the manifest does not land — the build refuses (a conflict, a
+        replay, a stale watermark) or the retries run out — and kept
+        when the manifest write itself raises, whose outcome is
+        unknown."""
         for _ in range(self.max_retries):
             v = self.latest_version()
             prev = self.manifest(v) if v is not None else None
-            if prev is not None:
-                # refuse to mutate a table whose invariants this
-                # engine version cannot uphold (forward-compat guard;
-                # current manifests always pass — WRITER_FEATURES is
-                # derived from what this code itself writes)
-                check_writer_features(
-                    prev, WRITER_FEATURES, "SnapshotTable commit"
-                )
             try:
+                if prev is not None:
+                    # refuse to mutate a table whose invariants this
+                    # engine version cannot uphold (forward-compat
+                    # guard; current manifests always pass —
+                    # WRITER_FEATURES is derived from what this code
+                    # itself writes)
+                    check_writer_features(
+                        prev, WRITER_FEATURES, "SnapshotTable commit"
+                    )
                 new = build(prev)
-            except _SkipCommit:
-                return None
-            except _Conflicted:
-                raise ConcurrentWriteConflict(
-                    f"table at {self.root} advanced past the snapshot this "
-                    "commit's data was computed from; re-run the read-merge-write"
-                ) from None
+            except BaseException as e:
+                for d in staged:
+                    self.st.delete(d)
+                if isinstance(e, _SkipCommit):
+                    return None
+                if isinstance(e, _Conflicted):
+                    raise ConcurrentWriteConflict(
+                        f"table at {self.root} advanced past the snapshot "
+                        "this commit's data was computed from; re-run the "
+                        "read-merge-write"
+                    ) from None
+                raise
             if "txn" not in new and prev and prev.get("txn"):
                 new["txn"] = prev["txn"]
             if "schema" not in new and prev and prev.get("schema"):
@@ -916,6 +956,8 @@ class SnapshotTable:
                 self._manifest_path(new["version"]), json.dumps(new, indent=1)
             ):
                 return new["version"]
+        for d in staged:
+            self.st.delete(d)
         raise ConcurrentCommitError(
             f"lost the commit race {self.max_retries} times at {self.root}"
         )
@@ -967,7 +1009,8 @@ class SnapshotTable:
         locally).  An empty DataFrame can produce a dir with no data
         files at all (always, under partitionBy) — committing such an
         entry would give read() zero scannable paths, so callers
-        short-circuit on `has_data=False`."""
+        short-circuit on `has_data=False` — and, since no commit can
+        name such a dir, it is deleted here before returning."""
         df = self._apply_generated(df)
         specs = self._id_specs()
         for _, idn in specs:
@@ -1073,12 +1116,16 @@ class SnapshotTable:
                 has = False
             if metrics is not None and has:
                 self._write_expectation_metrics(full, metrics)
+            if not has:
+                self.st.delete(full)  # no commit can name a dataless dir
             return rel, [], has, cmap, n
         write(lambda: df.write.mode("errorifexists")
               .partitionBy(partition_col).parquet(full))
         parts = [p for p in self.st.list(full) if p.startswith(f"{partition_col}=")]
         if metrics is not None and parts:
             self._write_expectation_metrics(full, metrics)
+        if not parts:
+            self.st.delete(full)
         return rel, parts, bool(parts), cmap, observed()
 
     def _generation_exprs(self) -> dict[str, str]:
@@ -1417,109 +1464,15 @@ class SnapshotTable:
 
         Remaining limit, stated: two forks of a clone can assign the
         same ids to different tables (forks are forks)."""
-        if backfill:
-            if self._row_tracking_spec():
-                # r9 (advisor): the mapped path is two commits
-                # (metadata enable, then the compact fill) — a crash
-                # between them leaves pre-enable rows with NULL ids
-                # and the spec already present.  Re-running with
-                # backfill=True RESUMES the fill instead of stranding
-                # the operator behind "already enabled": one cheap
-                # column-pruned NULL probe decides.
-                pending = (
-                    self.read().where(F.col("__row_id").isNull())
-                    .limit(1).count() > 0
-                )
-                if pending:
-                    return self.compact()
-                raise ValueError("row tracking is already enabled")
-            mapped = False
-            v0 = self.latest_version()
-            if v0 is not None and self.manifest(v0).get("column_mapping"):
-                mapped = True
-            if mapped:
-                # two commits (see docstring): metadata enable first —
-                # the mapping must carry __row_id before the rewrite
-                # can write it — then one fill-rewrite
-                self.enable_row_tracking(start=start, backfill=False,
-                                         _allow_rows=True)
-                return self.compact()
-            for _ in range(self.max_retries):
-                read_v = self.latest_version()
-                if read_v is None:
-                    break  # empty table: the metadata path below
-                m = self.manifest(read_v)
-                counts = [
-                    sum((e.get("rows") or {}).values())
-                    if e.get("rows") else None
-                    for e in m["entries"]
-                ]
-                if not (m.get("dv_files") or any(c is None for c in counts)
-                        or sum(c for c in counts if c)):
-                    break  # verifiably empty: no rewrite needed
-                schema = StructType.fromJson(json.loads(m["schema"]))
-                if "__row_id" in {f.name for f in schema.fields}:
-                    raise ValueError("column __row_id already exists")
-                spec = {"col": "__row_id", "step": 1, "high": start,
-                        "system": True}
-                assigned, new_high = self._assign_identity(
-                    self.read(version=read_v), spec)
-                # keep __row_id LAST, matching the fresh-table path's
-                # widened schema shape
-                assigned = assigned.select(
-                    *[f.name for f in schema.fields], "__row_id")
-                pcol = m.get("partition_col")
-                rel, parts, has_data, wmap, nrows = self._write_snap(
-                    assigned, pcol)  # default: audit carried user ids
-                entry = self._entry_for(
-                    rel, sorted(parts), has_data, assigned.schema, wmap,
-                    row_count=nrows)
-
-                def build(prev: dict | None) -> dict:
-                    self._check_expected(prev, read_v)
-                    if (prev or {}).get("column_mapping") != wmap:
-                        raise _Conflicted
-                    return {
-                        "partition_col": pcol,
-                        "entries": [entry] if has_data else [],
-                        "schema": assigned.schema.json(),
-                        "dv_files": [],  # rewrite materialized the masks
-                        "row_tracking": {**spec, "high": new_high},
-                        "op": {"name": "enable_row_tracking",
-                               "start": start, "backfill": True},
-                    }
-
-                try:
-                    return self._commit(build)
-                except ConcurrentWriteConflict:
-                    if has_data:
-                        self.st.delete(f"{self.root}/{rel}")
-                    continue  # table moved: re-read, re-assign
-            else:
-                raise ConcurrentCommitError(
-                    f"enable_row_tracking(backfill=True) lost the "
-                    f"read-rewrite race {self.max_retries} times at "
-                    f"{self.root}"
-                )
-
-        def build(prev: dict | None) -> dict:
+        def enable(prev: dict | None) -> dict:
+            """The metadata-only enable commit's build."""
             if prev is None or not prev.get("schema"):
                 raise FileNotFoundError(
                     f"no schema-bearing snapshot at {self.root}"
                 )
             if self._wm_slot(prev, "row_tracking"):
                 raise ValueError("row tracking is already enabled")
-            counts = [
-                sum((e.get("rows") or {}).values()) if e.get("rows") else None
-                for e in prev["entries"]
-            ]
-            if not _allow_rows and (
-                prev.get("dv_files") or any(c is None for c in counts)
-                or sum(c for c in counts if c)
-            ):
-                # entries may exist with ZERO rows (an empty overwrite
-                # leaves an empty data dir) — only actual rows (or
-                # unknowable counts) need the backfill flag
+            if not _allow_rows and self._may_hold_rows(prev):
                 raise ValueError(
                     "row tracking on a table with existing rows needs a "
                     "backfill rewrite — pass backfill=True (one "
@@ -1554,7 +1507,87 @@ class SnapshotTable:
                 out["column_mapping"] = cmap
             return out
 
-        return self._commit(build)
+        if backfill:
+            if self._row_tracking_spec():
+                # r9 (advisor): the mapped path is two commits
+                # (metadata enable, then the compact fill) — a crash
+                # between them leaves pre-enable rows with NULL ids
+                # and the spec already present.  Re-running with
+                # backfill=True RESUMES the fill instead of stranding
+                # the operator behind "already enabled": one cheap
+                # column-pruned NULL probe decides.
+                pending = (
+                    self.read().where(F.col("__row_id").isNull())
+                    .limit(1).count() > 0
+                )
+                if pending:
+                    return self.compact()
+                raise ValueError("row tracking is already enabled")
+            mapped = False
+            v0 = self.latest_version()
+            if v0 is not None and self.manifest(v0).get("column_mapping"):
+                mapped = True
+            if mapped:
+                # two commits (see docstring): metadata enable first —
+                # the mapping must carry __row_id before the rewrite
+                # can write it — then one fill-rewrite
+                self.enable_row_tracking(start=start, backfill=False,
+                                         _allow_rows=True)
+                return self.compact()
+
+            def attempt(read_v: int | None, m: dict | None) -> int | None:
+                if m is None or not self._may_hold_rows(m):
+                    return self._commit(enable)  # no rewrite needed
+                schema = StructType.fromJson(json.loads(m["schema"]))
+                if "__row_id" in {f.name for f in schema.fields}:
+                    raise ValueError("column __row_id already exists")
+                spec = {"col": "__row_id", "step": 1, "high": start,
+                        "system": True}
+                assigned, new_high = self._assign_identity(
+                    self.read(version=read_v), spec)
+                # keep __row_id LAST, matching the fresh-table path's
+                # widened schema shape
+                assigned = assigned.select(
+                    *[f.name for f in schema.fields], "__row_id")
+                pcol = m.get("partition_col")
+                rel, parts, has_data, wmap, nrows = self._write_snap(
+                    assigned, pcol)  # default: audit carried user ids
+                entry = self._entry_for(
+                    rel, sorted(parts), has_data, assigned.schema, wmap,
+                    row_count=nrows)
+
+                def build(prev: dict | None) -> dict:
+                    self._check_expected(prev, read_v)
+                    if (prev or {}).get("column_mapping") != wmap:
+                        raise _Conflicted
+                    return {
+                        "partition_col": pcol,
+                        "entries": [entry] if has_data else [],
+                        "schema": assigned.schema.json(),
+                        "dv_files": [],  # rewrite materialized the masks
+                        "row_tracking": {**spec, "high": new_high},
+                        "op": {"name": "enable_row_tracking",
+                               "start": start, "backfill": True},
+                    }
+
+                # table moved: `_commit` drops the rewrite, `_pinned`
+                # re-reads and re-assigns
+                return self._commit(build, [f"{self.root}/{rel}"])
+
+            return self._pinned("enable_row_tracking(backfill=True)", attempt)
+
+        return self._commit(enable)
+
+    @staticmethod
+    def _may_hold_rows(m: dict) -> bool:
+        """False only for a snapshot verifiably holding no rows.
+        Entries may exist with ZERO rows (an empty overwrite leaves an
+        empty data dir); only actual rows, unknowable counts or
+        deletion vectors count."""
+        counts = [sum(e["rows"].values()) if e.get("rows") else None
+                  for e in m["entries"]]
+        return bool(m.get("dv_files") or None in counts or sum(
+            c for c in counts if c))
 
     @staticmethod
     def _identity_ahead(a: int, b: int, step: int) -> int:
@@ -2158,7 +2191,7 @@ class SnapshotTable:
                     if parts:
                         pcol = parts[0].split("=", 1)[0]
                         got = {
-                            f"{pcol}={r['__p']}": int(r["__n"])
+                            _part_name(pcol, r["__p"]): int(r["__n"])
                             for r in scan.groupBy(
                                 F.col(pcol).cast("string").alias("__p")
                             ).agg(F.count(F.lit(1)).alias("__n")).collect()
@@ -2279,7 +2312,7 @@ class SnapshotTable:
                 out["txn"] = tmap
             return out
 
-        return self._commit(build)
+        return self._commit(build, [f"{self.root}/{rel}"])
 
     def append(self, df: DataFrame) -> int:
         """Blind append (the cheap daily-ingest write): adds one data
@@ -2311,26 +2344,26 @@ class SnapshotTable:
         data publication are the same atomic manifest write.
 
         Returns the new version, or None when the batch was already
-        committed (its data dir, if written, is left as vacuum-able
-        garbage).  Assumes the standard deterministic-replay contract:
-        a given (app_id, batch_id) always carries the same rows.  An
-        empty batch still commits, recording only its watermark."""
+        committed (a data dir staged before a rival recorded the batch
+        is deleted by the commit loop).  Assumes the standard
+        deterministic-replay contract: a given (app_id, batch_id)
+        always carries the same rows.  An empty batch still commits,
+        recording only its watermark."""
         return self._append(df, (app_id, batch_id))
 
     def _append(self, df: DataFrame, txn: tuple[str, int] | None) -> int | None:
-        """The one stage-and-commit loop behind `append` (txn None)
-        and `append_once` (txn=(app_id, batch_id)).  The two verbs
-        differ only in their empty-batch contract: a blind append of
-        nothing is a no-op, while a txn append must still commit its
-        watermark."""
+        """The one stage-and-commit attempt, run under `_pinned`, behind
+        `append` (txn None) and `append_once` (txn=(app_id, batch_id)).
+        The two verbs differ only in their empty-batch contract: a
+        blind append of nothing is a no-op, while a txn append must
+        still commit its watermark."""
         if txn is not None and self._replayed(txn):
             return None  # replay detected before paying the write
         op = ({"name": "append"} if txn is None else
               {"name": "append_once", "app_id": txn[0], "batch_id": txn[1]})
-        for _ in range(self.max_retries):
-            v0 = self.latest_version()
-            pcol = (self.manifest(v0).get("partition_col")
-                    if v0 is not None else None)
+
+        def attempt(v0: int | None, m: dict | None) -> int | None:
+            pcol = (m or {}).get("partition_col")
             out_df, highs = self._prepare_ids(df)
             write_pcol = pcol
             if pcol is not None and pcol not in out_df.columns:
@@ -2343,7 +2376,7 @@ class SnapshotTable:
                         f"that column in the batch"
                     )
                 if txn is None:
-                    return self.latest_version()
+                    return v0
                 # the txn watermark must still commit: stage a
                 # dataless, unpartitioned snap — has_data=False
                 # discards the entry, only txn commits
@@ -2357,8 +2390,7 @@ class SnapshotTable:
                 # storage fuzz, r13).  Expand to the declared schema
                 # with typed NULLs, which is exactly what read() serves
                 # for subset appends anyway (missing columns -> NULL).
-                declared = StructType.fromJson(
-                    json.loads(self.manifest(v0)["schema"]))
+                declared = StructType.fromJson(json.loads(m["schema"]))
                 for fld in declared.fields:
                     if fld.name not in out_df.columns:
                         out_df = out_df.withColumn(
@@ -2370,16 +2402,8 @@ class SnapshotTable:
                                     has_data, out_df.schema, wmap,
                                     row_count=nrows)
             schema = out_df.schema.json()
-            if not has_data:
-                # the staged dir is schema-only either way — no commit
-                # will ever reference it, so reclaim it now instead of
-                # leaving vacuum garbage on every empty batch (the
-                # dv-merge path already does this; r10 advice)
-                self.st.delete(f"{self.root}/{rel}")
-                if txn is None:
-                    v = self.latest_version()
-                    if v is not None:
-                        return v
+            if not has_data and txn is None and v0 is not None:
+                return v0
 
             def build(prev: dict | None) -> dict:
                 if (prev or {}).get("column_mapping") != wmap:
@@ -2405,22 +2429,15 @@ class SnapshotTable:
                 self._stamp_highs(out, prev, highs, cas=True)
                 return out
 
-            try:
-                return self._commit(build)
-            except ConcurrentWriteConflict:
-                # a column-mapping DDL commit landed between this
-                # append's translation and its manifest write: the
-                # staged dir carries stale physical names.  Reclaim it
-                # and re-stage under the fresh mapping — an append has
-                # no read set, so the retry is always safe (the txn
-                # guard keeps an append_once retry exactly-once).
-                if has_data:
-                    self.st.delete(f"{self.root}/{rel}")
-                continue
-        raise ConcurrentCommitError(
-            f"{op['name']} lost the mapping race {self.max_retries} times "
-            f"at {self.root}"
-        )
+            # a column-mapping DDL or partition evolution landing
+            # between this append's staging and its manifest write
+            # raises ConcurrentWriteConflict: `_commit` reclaims the
+            # stale dir and `_pinned` re-stages — an append has no
+            # read set, so the retry is always safe (the txn guard
+            # keeps an append_once retry exactly-once)
+            return self._commit(build, [f"{self.root}/{rel}"])
+
+        return self._pinned(op["name"], attempt)
 
     def replace_partitions(
         self,
@@ -2459,7 +2476,7 @@ class SnapshotTable:
         new_parts = set(parts)  # subdirs that actually exist in the new snap
         replaced = set(new_parts)  # values retired from previous entries
         if replace_values is not None:
-            replaced |= {f"{partition_col}={v}" for v in map(str, replace_values)}
+            replaced |= {_part_name(partition_col, v) for v in replace_values}
         schema = out_df.schema.json()
         if not has_data and txn is None and not replace_values:
             # empty batch replaces nothing: skip the useless version
@@ -2507,7 +2524,7 @@ class SnapshotTable:
             self._stamp_highs(out, prev, highs, cas=True)
             return out
 
-        return self._commit(build)
+        return self._commit(build, [f"{self.root}/{rel}"])
 
     # -- row-level changes: five verbs over one kernel --------------------
     #
@@ -2926,15 +2943,18 @@ class SnapshotTable:
 
     def _pinned(
         self, what: str,
-        attempt: Callable[[int | None, dict | None], int | None],
-    ) -> int | None:
-        """The one read-modify-write loop behind every row-level change.
-        Each attempt resolves the snapshot it reads ONCE — version and
-        parsed manifest — and passes both down; its commit is pinned to
-        that version, so a rival commit landing in between raises
-        ConcurrentWriteConflict and the WHOLE attempt re-runs against
-        the advanced snapshot (rebasing blindly would lose the rival's
-        rows)."""
+        attempt: Callable[[int | None, dict | None], Any],
+    ) -> Any:
+        """The one retry loop behind every re-reading write: the
+        row-level changes, `_append`, `compact`, the row-tracking
+        backfill and `refresh_rollup_snapshot`.  Each attempt resolves
+        the snapshot it reads ONCE — version and parsed manifest — and
+        passes both down; its commit is pinned to that version (or, for
+        an append, to the layout it staged under), so a rival commit
+        landing in between raises ConcurrentWriteConflict and the WHOLE
+        attempt re-runs against the advanced snapshot (rebasing blindly
+        would lose the rival's rows).  The lost attempt's staged dirs
+        are already gone: `_commit` reclaims them."""
         for _ in range(self.max_retries):
             self._drain_id_pins()  # reclaim any prior attempt's pin
             read_v = self.latest_version()
@@ -3021,10 +3041,6 @@ class SnapshotTable:
                 staged.append(f"{self.root}/{rel}")
                 entries.append(self._entry_for(rel, sorted(parts), True,
                                                new.schema, wmap, row_count=nrows))
-            else:
-                # reclaim the empty dir now rather than leaving garbage
-                # for vacuum (a vector-only change still commits)
-                self.st.delete(f"{self.root}/{rel}")
         if not staged:
             return self._noop(read_v, txn, op)  # nothing matched or inserted
         schema = m.get("schema")
@@ -3075,7 +3091,7 @@ class SnapshotTable:
                 touched_f, touched = self._touched_units(m, plan)
                 if not touched_f and not touched:
                     return read_v  # nothing matched anywhere
-            wanted = {f"{pcol}={v}" for v in map(str, touched)}
+            wanted = {_part_name(pcol, v) for v in touched}
             gone = {_ekey(e) for e in touched_f}
             src = self._masked_scan(m, touched_f + [
                 {**e, "parts": kept} for e in m["entries"]
@@ -3116,15 +3132,13 @@ class SnapshotTable:
         if has_data:
             entries.append(self._entry_for(rel, sorted(parts), True, out.schema,
                                            wmap, row_count=nrows))
-        else:
-            self.st.delete(full)  # every touched row deleted: retire only
         # a whole rewrite's replaced rows die with their ids, so its
         # watermark merges monotone; a kept entry's rival rows can
         # collide with staged ids, so a scoped rewrite CASes
         return self._publish(
             read_v, m, entries, out.schema.json(),
             [] if whole else list(m.get("dv_files") or []), highs, not whole,
-            wmap, op, txn, [full] if has_data else [])
+            wmap, op, txn, [full])
 
     def _touched_units(self, m: dict, plan) -> tuple[list[dict], list]:
         """Which storage units of a partitioned table hold rows the
@@ -3195,9 +3209,10 @@ class SnapshotTable:
         cached: DataFrame | None = None,
     ) -> int | None:
         """The one manifest build both commit shapes share, pinned to
-        `read_v`.  On a lost race the staged dirs and the checkpointed
-        hit set are reclaimed before the conflict propagates to
-        `_pinned`, which re-stages from the advanced snapshot."""
+        `read_v`.  On a lost race `_commit` reclaims the staged dirs and
+        the checkpointed hit set is released before the conflict
+        propagates to `_pinned`, which re-stages from the advanced
+        snapshot."""
 
         def build(prev: dict | None) -> dict:
             self._check_expected(prev, read_v)
@@ -3214,12 +3229,10 @@ class SnapshotTable:
             return out
 
         try:
-            return self._commit(build)
+            return self._commit(build, staged)
         except ConcurrentWriteConflict:
             if cached is not None:
                 cached.unpersist()
-            for d in staged:
-                self.st.delete(d)
             raise
 
     @staticmethod
@@ -3610,9 +3623,12 @@ class SnapshotTable:
         clustering is what converts stats from bookkeeping into
         skipped I/O on a corpus whose ingest order scattered the keys.
 
-        Like upsert, the rewrite is pinned to the version it read and
-        re-runs on ConcurrentWriteConflict — otherwise a commit landing
-        mid-compact would be clobbered by the stale rewrite."""
+        Like upsert, the rewrite is an attempt under `_pinned`: pinned
+        to the version it read and re-run on ConcurrentWriteConflict —
+        otherwise a commit landing mid-compact would be clobbered by
+        the stale rewrite.  A lost attempt's rewrite is deleted by the
+        commit loop, not left for vacuum.  A missing table raises
+        FileNotFoundError."""
 
         def layout(df: DataFrame) -> DataFrame:
             if cluster_by is None:
@@ -3639,36 +3655,31 @@ class SnapshotTable:
                 )
             raise ValueError("cluster_by supports 1 (sort) or 2 (z-order) columns")
 
-        for _ in range(self.max_retries):
-            read_v = self.latest_version()
-            m = self.manifest(read_v)
+        def attempt(read_v: int | None, m: dict | None) -> int | None:
+            if m is None:
+                raise FileNotFoundError(f"no snapshot at {self.root}")
             pcol = m.get("partition_col")
-            try:
-                if partition_values is None:
-                    return self.overwrite(
-                        layout(self.read(version=read_v)), pcol,
-                        expected_version=read_v, op={"name": "compact"},
-                    )
-                if pcol is None:
-                    raise ValueError(
-                        "partition_values given but table is unpartitioned"
-                    )
-                # manifest-level prune (only the named partitions are
-                # even listed); the residual filter keeps the semantics
-                # exact if a value's string form is ambiguous
-                subset = self.read(
-                    version=read_v, partition_values=partition_values
-                ).where(F.col(pcol).isin(partition_values))
-                return self.replace_partitions(
-                    layout(subset), pcol, expected_version=read_v,
-                    op={"name": "compact", "n_values": len(partition_values)},
+            if partition_values is None:
+                return self.overwrite(
+                    layout(self.read(version=read_v)), pcol,
+                    expected_version=read_v, op={"name": "compact"},
                 )
-            except ConcurrentWriteConflict:
-                continue
-        raise ConcurrentCommitError(
-            f"compact lost the read-merge-write race {self.max_retries} "
-            f"times at {self.root}"
-        )
+            if pcol is None:
+                raise ValueError(
+                    "partition_values given but table is unpartitioned"
+                )
+            # manifest-level prune (only the named partitions are even
+            # listed); the residual filter keeps the semantics exact if
+            # a value's string form is ambiguous
+            subset = self.read(
+                version=read_v, partition_values=partition_values
+            ).where(F.col(pcol).isin(partition_values))
+            return self.replace_partitions(
+                layout(subset), pcol, expected_version=read_v,
+                op={"name": "compact", "n_values": len(partition_values)},
+            )
+
+        return self._pinned("compact", attempt)
 
     # -- read operations ---------------------------------------------------
 
@@ -3759,7 +3770,7 @@ class SnapshotTable:
                     "be unsound on them — run a full compact() to rewrite "
                     "history into the current layout first"
                 )
-            wanted = {f"{pcol}={val}" for val in map(str, partition_values)}
+            wanted = {_part_name(pcol, val) for val in partition_values}
             entries = [
                 {**e, "parts": kept}
                 for e in entries
@@ -3991,7 +4002,7 @@ class SnapshotTable:
                 out.append(e)  # foreign layout / unpartitioned: keep whole
                 continue
             kept = [p for p in e["parts"]
-                    if admits(p.split("=", 1)[1])]
+                    if admits(_part_value(p))]
             if kept:
                 out.append({**e, "parts": kept})
         return out
@@ -5074,50 +5085,48 @@ def refresh_rollup_snapshot(
     replay: merging the same delta twice would double-count the
     partials, so a batch the manifest already records is a no-op
     (returns []).  This is what lets a streaming source maintain the
-    rollup continuously (see streaming/daily.run_snapshot_rollup_sink)."""
+    rollup continuously (see streaming/daily.run_snapshot_rollup_sink).
+
+    The read-merge-write is an attempt under `SnapshotTable._pinned`:
+    a rival commit landing mid-merge re-runs it against the advanced
+    snapshot, and the lost attempt's staged partials are deleted by
+    the commit loop."""
     from pixelspark.ops.rollup import day_rollup, merge_rollups
 
     t = SnapshotTable(spark, root)
+    if txn is not None and t._replayed(txn):
+        return []  # replayed batch: already folded in
     delta = day_rollup(events_batch)
-    for _ in range(t.max_retries):
-        read_v = t.latest_version()
-        if txn is not None and read_v is not None:
-            last = t.manifest(read_v).get("txn", {}).get(txn[0])
-            if last is not None and last >= txn[1]:
-                return []  # replayed batch: already folded in
-        try:
-            if read_v is None:
-                if t.replace_partitions(
-                    delta, "day", txn=txn, expected_version=None
-                ) is None:
-                    return []
-                m = t.manifest(t.latest_version())
-                return sorted(p for e in m["entries"] for p in e["parts"])
-            days = [r["day"] for r in delta.select("day").distinct().collect()]
-            if not days:
-                # empty batch merges nothing; still record the txn
-                # watermark so a replay with data can't double-count
-                t.replace_partitions(delta, "day", txn=txn,
-                                     expected_version=read_v)
-                return []
-            existing = t.read(version=read_v).where(
-                F.col("day").isin(days)
-            ).drop("avg_value")
-            merged = merge_rollups(existing, delta)
-            # the merge is a read-modify-write on the partial
-            # aggregates: pin the commit to the version the partials
-            # were read from, else a rival refresh's counts are lost
+
+    def attempt(read_v: int | None, m: dict | None) -> list[str]:
+        if read_v is None:
             if t.replace_partitions(
-                merged, "day", txn=txn, expected_version=read_v
+                delta, "day", txn=txn, expected_version=None
             ) is None:
                 return []
-            return sorted(f"day={d}" for d in days)
-        except ConcurrentWriteConflict:
-            continue  # table advanced mid-merge: re-read and re-merge
-    raise ConcurrentCommitError(
-        f"rollup refresh lost the read-merge-write race {t.max_retries} "
-        f"times at {root}"
-    )
+            m = t.manifest(t.latest_version())
+            return sorted(p for e in m["entries"] for p in e["parts"])
+        days = [r["day"] for r in delta.select("day").distinct().collect()]
+        if not days:
+            # empty batch merges nothing; still record the txn
+            # watermark so a replay with data can't double-count
+            t.replace_partitions(delta, "day", txn=txn,
+                                 expected_version=read_v)
+            return []
+        existing = t.read(version=read_v).where(
+            F.col("day").isin(days)
+        ).drop("avg_value")
+        merged = merge_rollups(existing, delta)
+        # the merge is a read-modify-write on the partial aggregates:
+        # pin the commit to the version the partials were read from,
+        # else a rival refresh's counts are lost
+        if t.replace_partitions(
+            merged, "day", txn=txn, expected_version=read_v
+        ) is None:
+            return []
+        return sorted(_part_name("day", d) for d in days)
+
+    return t._pinned("rollup refresh", attempt)
 
 
 def read_rollup_snapshot(spark: SparkSession, root: str) -> DataFrame:

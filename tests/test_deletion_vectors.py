@@ -393,17 +393,20 @@ def test_no_match_commits_nothing(spark, table, verb, mode):
     assert _rows(table.read()) == [(i, f"v{i}") for i in range(10)]
 
 
-@pytest.mark.parametrize("verb", ["delete", "update"])
-@pytest.mark.parametrize("mode", ["rewrite", "dv"])
-def test_missing_table_raises_file_not_found(spark, tmp_path, verb, mode):
-    """One missing-table rule: DELETE and UPDATE raise
-    FileNotFoundError in both modes."""
+@pytest.mark.parametrize("mode,verb", [
+    (mode, verb) for verb in ("delete", "update") for mode in ("rewrite", "dv")
+] + [pytest.param(None, "compact", id="compact")])
+def test_missing_table_raises_file_not_found(spark, tmp_path, mode, verb):
+    """One missing-table rule: DELETE and UPDATE (both modes) and
+    compact raise FileNotFoundError."""
     t = SnapshotTable(spark, str(tmp_path / "absent"))
     with pytest.raises(FileNotFoundError, match="no snapshot at"):
         if verb == "delete":
             t.delete("k = 1", mode=mode)
-        else:
+        elif verb == "update":
             t.update({"v": F.lit("zz")}, condition="k = 1", mode=mode)
+        else:
+            t.compact()
 
 
 def test_dv_delete_lost_race_reclaims_its_vector(spark, table):
@@ -415,11 +418,11 @@ def test_dv_delete_lost_race_reclaims_its_vector(spark, table):
     real_commit = table._commit
     fired = {"done": False}
 
-    def interloping(build):
+    def interloping(build, *staged):
         if not fired["done"]:  # rival lands AFTER the vector was staged
             fired["done"] = True
             rival.append(spark.createDataFrame([(-1, "rival")], "k long, v string"))
-        return real_commit(build)
+        return real_commit(build, *staged)
 
     table._commit = interloping
     try:

@@ -1294,3 +1294,44 @@ def test_refresh_dag_settles_a_view_chain_in_one_pass(spark, tmp_path):
     with pytest.raises(TypeError, match="tuple of names"):
         MV.refresh_dag({"x": (lambda: None, ()),
                         "y": (lambda: None, "x")})  # bare string dep
+
+
+@pytest.mark.parametrize("flavor", ["agg", "recompute", "topn"])
+def test_refresh_refolds_after_rival_fold_lands_mid_refresh(
+    spark, pair, monkeypatch, flavor
+):
+    """The fold loop itself, not just the merge-level CAS: a rival
+    refresh lands between this refresh's read of its change window and
+    its view.merge.  The merge trips the compare-and-set watermark, and
+    the refresher must re-fold from the rival's advanced watermark —
+    the view then equals the from-scratch answer at the source head."""
+    refresh, exact = {
+        "agg": (_refresh, _assert_view_exact),
+        "recompute": (_refresh_mm, _assert_mm_exact),
+        "topn": (_topn_refresh,
+                 lambda s, v: _assert_topn_exact(spark, s, v)),
+    }[flavor]
+    src, view = pair
+    src.overwrite(_rows(spark, [(1, "a", 1, 1.0), (2, "b", 5, 2.0)]))
+    refresh(src, view)  # watermark -> v1
+    src.append(_rows(spark, [(3, "a", 7, 3.0)]))
+    v2 = src.latest_version()
+    src.append(_rows(spark, [(4, "b", 9, 4.0)]))
+    v3 = src.latest_version()
+    # the rival read the source head before v3 landed: it folds (v1, v2]
+    rival_src = SnapshotTable(spark, src.root)
+    monkeypatch.setattr(rival_src, "latest_version", lambda: v2)
+    rival_view = SnapshotTable(spark, view.root)
+    real_merge = view.merge
+    fired = []
+
+    def interloping(*a, **kw):
+        if not fired:
+            fired.append(refresh(rival_src, rival_view))
+        return real_merge(*a, **kw)
+
+    monkeypatch.setattr(view, "merge", interloping)
+    assert refresh(src, view) is not None  # re-folded (v2, v3]
+    assert fired and fired[0] is not None  # the rival's fold landed first
+    assert MV.last_folded_version(src, view) == v3
+    exact(src, view)

@@ -363,43 +363,53 @@ def test_partial_compact_shrinks_union_width(spark, tbl):
     assert after == before  # pure layout change
 
 
-def test_upsert_retries_instead_of_losing_rival_append(spark, tmp_path):
-    """The lost-update hole: upsert computes its merge FROM a snapshot
-    read, so a rival append landing between the read and the publish
-    must force the whole read-merge-write to re-run — a blind rebase
-    would silently discard the rival's rows."""
-    root = str(tmp_path / "t")
-    t = SnapshotTable(spark, root)
-    t.overwrite(_df(spark, [(1, "a")]))
-    rival = SnapshotTable(spark, root)
-    real_write_snap = t._write_snap
-    fired = {"done": False}
-
-    def interloping(df, pcol, **kw):
-        out = real_write_snap(df, pcol, **kw)
-        if not fired["done"]:  # rival lands AFTER our merge was computed
-            fired["done"] = True
-            rival.append(_df(spark, [(99, "rival")]))
-        return out
-
-    t._write_snap = interloping
-    try:
-        t.upsert(_df(spark, [(1, "new")]), keys=("k",))
-    finally:
-        t._write_snap = real_write_snap
-    got = {r["k"]: r["v"] for r in t.read().collect()}
-    assert got == {1: "new", 99: "rival"}  # neither commit lost
+def _snap_dirs(root: str) -> set[str]:
+    return {f"data/{d}" for d in os.listdir(os.path.join(root, "data"))
+            if d.startswith("__snap=")}
 
 
-def test_rollup_refresh_retries_instead_of_losing_rival_merge(spark, tmp_path):
-    """Two rollup refreshes racing on the same day: the loser must
-    re-read the winner's partials and re-merge, not clobber them with
-    a merge computed from the pre-race snapshot."""
+# verb -> (initial batches, partition column, the re-reading write, the
+# rows it leaves before the rival's row is added)
+_REREADING_WRITES = {
+    "upsert": ([[(1, "a")]], None,
+               lambda t, df: t.upsert(df([(1, "new")]), keys=("k",)),
+               {1: "new"}),
+    "merge": ([[(1, "a")]], None,
+              lambda t, df: t.merge(df([(1, "new")]), keys=("k",)),
+              {1: "new"}),
+    "delete": ([[(1, "a"), (2, "b")]], None,
+               lambda t, df: t.delete("k = 2"), {1: "a"}),
+    "update": ([[(1, "a")]], None,
+               lambda t, df: t.update({"v": F.lit("new")}, condition="k = 1"),
+               {1: "new"}),
+    "compact": ([[(1, "a")], [(2, "b")]], None,
+                lambda t, df: t.compact(), {1: "a", 2: "b"}),
+    "compact-partitions": ([[(1, "a")], [(2, "a")]], "v",
+                           lambda t, df: t.compact(partition_values=["a"]),
+                           {1: "a", 2: "a"}),
+    "backfill": ([[(1, "a")]], None,
+                 lambda t, df: t.enable_row_tracking(backfill=True),
+                 {1: "a"}),
+    "rollup": None,
+}
+
+
+@pytest.mark.parametrize("verb", list(_REREADING_WRITES))
+def test_rereading_write_keeps_rival_commit(spark, tmp_path, monkeypatch, verb):
+    """The lost-update hole, for every write that computes its commit
+    FROM a snapshot read: a rival commit landing between the write's
+    staging and its publish must force the whole read-modify-write to
+    re-run — a blind rebase would silently discard the rival's rows —
+    and the lost attempt's staged dir must be deleted, not left for
+    vacuum: every `__snap=` dir is one some manifest names, or was
+    there before the call."""
     import datetime
 
-    from pixelspark.table import ConcurrentWriteConflict  # noqa: F401
+    root = str(tmp_path / "t")
+    t = SnapshotTable(spark, root)
 
-    root = str(tmp_path / "r")
+    def df(rows):
+        return _df(spark, rows)
 
     def batch(n_events):
         ts = datetime.datetime(2024, 1, 5, 12, 0, 0)
@@ -409,26 +419,57 @@ def test_rollup_refresh_retries_instead_of_losing_rival_merge(spark, tmp_path):
             "value double, props string",
         )
 
-    refresh_rollup_snapshot(spark, root, batch(3))
-    t = SnapshotTable(spark, root)
+    if verb == "rollup":
+        refresh_rollup_snapshot(spark, root, batch(3))
+        write = lambda: refresh_rollup_snapshot(spark, root, batch(2))  # noqa: E731
+        rival = lambda: refresh_rollup_snapshot(spark, root, batch(5))  # noqa: E731
+    else:
+        batches, pcol, act, expected = _REREADING_WRITES[verb]
+        t.overwrite(df(batches[0]), partition_col=pcol)
+        for rows in batches[1:]:
+            t.append(df(rows))
+        write = lambda: act(t, df)  # noqa: E731
+        rival = lambda: SnapshotTable(spark, root).append(df([(99, "rival")]))  # noqa: E731
+    before = _snap_dirs(root)
     real_write_snap = SnapshotTable._write_snap
     fired = {"done": False}
 
-    def interloping(self, df, pcol, **kw):
-        out = real_write_snap(self, df, pcol, **kw)
-        if not fired["done"] and self.root == t.root:
-            fired["done"] = True  # rival refresh lands mid-merge
-            refresh_rollup_snapshot(spark, root, batch(5))
+    def interloping(self, *a, **kw):
+        out = real_write_snap(self, *a, **kw)
+        if not fired["done"]:  # rival lands AFTER our write was staged
+            fired["done"] = True
+            rival()
         return out
 
-    SnapshotTable._write_snap = interloping
-    try:
-        refresh_rollup_snapshot(spark, root, batch(2))
-    finally:
-        SnapshotTable._write_snap = real_write_snap
-    got = read_rollup_snapshot(spark, root).collect()
-    assert len(got) == 1
-    assert got[0]["n_events"] == 10  # 3 + 5 (rival) + 2 — nothing lost
+    monkeypatch.setattr(SnapshotTable, "_write_snap", interloping)
+    write()
+    monkeypatch.undo()
+    assert fired["done"]
+    if verb == "rollup":
+        got = read_rollup_snapshot(spark, root).collect()
+        assert [r["n_events"] for r in got] == [10]  # 3 + 5 (rival) + 2
+    else:
+        got = {r["k"]: r["v"] for r in t.read().collect()}
+        assert got == {**expected, 99: "rival"}  # neither commit lost
+    if verb == "backfill":
+        ids = [r["__row_id"] for r in t.read().collect()]
+        assert None not in ids and len(set(ids)) == len(ids)
+    named = {e["base"] for v in t.versions() for e in t.manifest(v)["entries"]}
+    assert _snap_dirs(root) - before <= named  # no orphaned rewrite
+
+
+def test_dataless_write_leaves_no_staged_dir(spark, tmp_path):
+    """A write whose batch is empty still commits (a txn watermark, a
+    truncate), but no manifest can name its dataless staged dir — so
+    the dir is deleted at once instead of waiting for vacuum."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.overwrite(_df(spark, [(1, "a")]), partition_col="v")
+    empty = _df(spark, [])
+    assert t.replace_partitions(empty, "v", txn=("app", 1)) == 2
+    assert t.overwrite(empty, partition_col="v") == 3
+    assert t.append_once(empty, "app2", 1) == 4
+    named = {e["base"] for v in t.versions() for e in t.manifest(v)["entries"]}
+    assert _snap_dirs(t.root) == named
 
 
 def test_vacuum_reclaims_replaced_partitions_inside_live_dirs(spark, tbl, tmp_path):
@@ -787,35 +828,6 @@ def test_merge_partition_scoped_rewrites_only_touched_days(spark, tbl):
     assert "day=d2" not in p2          # fully-deleted partition retired
     assert p2["day=d3"] == p1["day=d3"]  # untouched day: same data dir
     assert p2["day=d1"] != p1["day=d1"]  # rewritten day: new data dir
-
-
-def test_merge_retries_instead_of_losing_rival_append(spark, tmp_path):
-    """Same lost-update discipline as upsert: a rival commit landing
-    between merge's read and publish forces a full re-run."""
-    root = str(tmp_path / "t")
-    t = SnapshotTable(spark, root)
-    t.overwrite(_df(spark, [(1, "a")]))
-    rival = SnapshotTable(spark, root)
-    real_write_snap = t._write_snap
-    fired = {"done": False}
-
-    def interloping(df, pcol, **kw):
-        out = real_write_snap(df, pcol, **kw)
-        if not fired["done"]:
-            fired["done"] = True
-            rival.append(_df(spark, [(99, "rival")]))
-        return out
-
-    t._write_snap = interloping
-    try:
-        t.merge(_df(spark, [(1, "new")]), keys=("k",))
-    finally:
-        t._write_snap = real_write_snap
-    got = {r["k"]: r["v"] for r in t.read().collect()}
-    assert got == {1: "new", 99: "rival"}
-
-
-# -- change data feed -------------------------------------------------------
 
 
 def test_read_changes_append_only_needs_no_keys(spark, tbl):
@@ -2432,3 +2444,74 @@ def test_partition_only_batch_lands_through_both_append_verbs(spark, tmp_path, v
         assert t.append_once(batch, "app", 1) is None  # replay commits nothing
     assert sorted((r["k"], r["s"]) for r in t.read().collect()) == [(1, "a"), (7, None)]
     assert [r["k"] for r in t.read(partition_values=[7]).collect()] == [7]
+
+
+# -- partition values Spark escapes ------------------------------------------
+
+
+def test_part_name_matches_spark_escaping(spark):
+    """`_part_name` is a port of Spark's partition-path naming; it must
+    agree with the JVM function for every character class Spark
+    escapes (and the NULL / empty default partition)."""
+    from pixelspark.table import _part_name
+
+    jvm = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    values = ["".join(chr(c) for c in range(1, 128)), "a:b", "x=y/z",
+              "100%", "naïve ü", "plain", "2024-01-05"]
+    for col in ("p", "a:b"):
+        for v in values:
+            assert _part_name(col, v) == jvm.getPartitionPathString(col, v)
+        assert _part_name(col, None) == jvm.getPartitionPathString(col, None)
+        assert _part_name(col, "") == jvm.getPartitionPathString(col, "")
+
+
+def test_escaped_partition_value_is_addressable_by_name(spark, tmp_path):
+    """Spark writes the partition value `a:b` as the directory
+    `p=a%3Ab`.  Every by-name partition address — the pruned read,
+    partition-scoped DELETE/UPDATE, replace_partitions, compact and the
+    recompute view's pruned base scan — must use that escaped name, or
+    it addresses nothing: a pruned read returns no rows and a rewrite
+    commits without its change."""
+    from pixelspark.ops import matview as MV
+
+    def table(name, rows=((1, "a:b"), (2, "a:b"), (3, "c"))):
+        t = SnapshotTable(spark, str(tmp_path / name))
+        t.overwrite(_df(spark, list(rows)), partition_col="v")
+        return t
+
+    def rows(t):
+        return sorted((r["k"], r["v"]) for r in t.read().collect())
+
+    t = table("read")
+    assert any("v=a%3Ab" in (e["parts"] or [])
+               for e in t.manifest(t.latest_version())["entries"])
+    assert sorted(r["k"] for r in t.read(partition_values=["a:b"]).collect()) == [1, 2]
+    assert sorted(r["k"] for r in t.read(
+        predicates=[("v", "=", "a:b")]).collect()) == [1, 2]
+
+    for mode in ("rewrite", "dv"):
+        t = table(f"dml-{mode}")
+        t.delete("k = 1", mode=mode)
+        t.update({"k": F.lit(20)}, condition="k = 2", mode=mode)
+        assert rows(t) == [(3, "c"), (20, "a:b")], mode
+
+    t = table("replace")
+    t.replace_partitions(_df(spark, [(4, "c")]), "v", replace_values=["a:b"])
+    assert rows(t) == [(4, "c")]
+
+    t = table("compact")
+    t.append(_df(spark, [(5, "a:b")]))
+    t.compact(partition_values=["a:b"])
+    m = t.manifest(t.latest_version())
+    assert sum("v=a%3Ab" in (e["parts"] or []) for e in m["entries"]) == 1
+    assert rows(t) == [(1, "a:b"), (2, "a:b"), (3, "c"), (5, "a:b")]
+
+    src = table("src")
+    view = SnapshotTable(spark, str(tmp_path / "view"))
+    refresh = lambda: MV.refresh_recompute_view(  # noqa: E731
+        src, view, group_by=("v",), aggs={"mx": "max(k)"})
+    refresh()
+    src.append(_df(spark, [(7, "a:b")]))
+    refresh()
+    assert sorted((r["v"], r["n"], r["mx"]) for r in view.read().collect()) == [
+        ("a:b", 3, 7), ("c", 1, 3)]
