@@ -108,15 +108,16 @@ def _check_rewind(src: SnapshotTable, view: SnapshotTable,
         )
 
 
-def _folded_any(src_root: str, view: SnapshotTable) -> bool:
-    """Does the view hold ANY fold watermark for a source at this
-    root (legacy or any incarnation key)?  Used to tell "source not
-    created yet" (fold nothing, quietly) from "source GONE from under
-    a view that folded it" (refuse loudly)."""
-    v = view.latest_version()
-    if v is None:
-        return False
-    tmap = view.manifest(v).get("txn") or {}
+def _txn_map(view: SnapshotTable) -> dict:
+    """The view's fold-watermark map at its head ({} for no view)."""
+    return (view._head()[1] or {}).get("txn") or {}
+
+
+def _folded_any(src_root: str, tmap: dict) -> bool:
+    """Does the view's txn map hold ANY fold watermark for a source at
+    this root (legacy or any incarnation key)?  Used to tell "source
+    not created yet" (fold nothing, quietly) from "source GONE from
+    under a view that folded it" (refuse loudly)."""
     pre = f"matview::{src_root}"
     return any(
         (k == pre or k.startswith(pre + "::")) and tmap.get(k)
@@ -124,8 +125,8 @@ def _folded_any(src_root: str, view: SnapshotTable) -> bool:
     )
 
 
-def _check_missing(src: SnapshotTable, view: SnapshotTable) -> None:
-    if _folded_any(src.root, view):
+def _check_missing(src: SnapshotTable, view: SnapshotTable, tmap: dict) -> None:
+    if _folded_any(src.root, tmap):
         raise SourceRewound(
             f"source {src.root} no longer exists, but view {view.root} "
             "holds its fold watermark — the source was dropped from "
@@ -135,12 +136,14 @@ def _check_missing(src: SnapshotTable, view: SnapshotTable) -> None:
         )
 
 
-def _app_id(src: SnapshotTable, view: SnapshotTable) -> str:
+def _app_id(src_root: str, tid: str | None, tmap: dict) -> str:
     """One watermark per (source, view) pair, keyed by the source's
-    ROOT + INCARNATION id: `matview::<root>::<table_id>`.  The id is
-    what catches the case version ordering cannot — a source dropped
-    and recreated that has already advanced PAST the view's watermark
-    by the next refresh (same version numbers, different table):
+    ROOT + INCARNATION id `tid` (its head's `table_id`):
+    `matview::<root>::<table_id>`, resolved against the view's txn
+    map `tmap`.  The id is what catches the case version ordering
+    cannot — a source dropped and recreated that has already advanced
+    PAST the view's watermark by the next refresh (same version
+    numbers, different table):
     the view's watermark sits under the old incarnation's key, the new
     incarnation resolves to a different key, and finding a non-empty
     stale sibling raises `SourceRewound` instead of silently folding
@@ -149,12 +152,9 @@ def _app_id(src: SnapshotTable, view: SnapshotTable) -> str:
     Views that recorded watermarks before the identity stamp keep
     their legacy `matview::<root>` key (sticky — no migration
     rewrite), retaining the version-ordering guard only."""
-    legacy = f"matview::{src.root}"
-    v = view.latest_version()
-    tmap = (view.manifest(v).get("txn") or {}) if v is not None else {}
+    legacy = f"matview::{src_root}"
     if legacy in tmap:
         return legacy  # pre-identity view: keep its key
-    tid = src.table_id()
     if not tid:
         return legacy
     ident = f"{legacy}::{tid}"
@@ -163,8 +163,8 @@ def _app_id(src: SnapshotTable, view: SnapshotTable) -> str:
         stale = [k for k in tmap if k.startswith(prefix) and tmap.get(k)]
         if stale:
             raise SourceRewound(
-                f"view {view.root} holds a fold watermark for a "
-                f"different incarnation of {src.root} ({stale[0]}) — "
+                f"the view holds a fold watermark for a different "
+                f"incarnation of {src_root} ({stale[0]}) — "
                 "the source was dropped and recreated; "
                 "rebuild_view(view, src) to start over"
             )
@@ -182,20 +182,20 @@ def rebuild_view(view: SnapshotTable, *sources: SnapshotTable) -> int | None:
     window, and a crash before it changes nothing.  Returns the
     view's new version (None when the view doesn't exist — nothing
     to rebuild)."""
-    v = view.latest_version()
-    if v is None:
+    v, m = view._head()
+    if m is None:
         return None
     # clear by PREFIX, not by _app_id resolution: the stale-
     # incarnation watermark this remedy exists to remove is exactly
     # what _app_id refuses to resolve past
-    tmap = view.manifest(v).get("txn") or {}
+    tmap = m.get("txn") or {}
     clear = tuple(
         k for s in sources for k in tmap
         if k == f"matview::{s.root}" or k.startswith(f"matview::{s.root}::")
     )
-    return view.overwrite(
-        view.read().limit(0),
-        partition_col=view.manifest(v).get("partition_col"),
+    return view._overwrite(
+        (v, m), view._read(m).limit(0),
+        partition_col=m.get("partition_col"),
         clear_txn=clear,
         op={"name": "rebuild_view"},
     )
@@ -209,10 +209,9 @@ def last_folded_version(
     latest — what a publisher needs to pair a SPECIFIC view state
     with exactly the source state it covers (reading latest would
     pick up a rival's later fold)."""
-    v = view.latest_version() if version is None else version
-    if v is None:
-        return 0
-    return int(view.manifest(v).get("txn", {}).get(_app_id(src, view), 0))
+    m = view._head()[1] if version is None else view.manifest(version)
+    tmap = (m or {}).get("txn") or {}
+    return int(tmap.get(_app_id(src.root, src.table_id(), tmap), 0))
 
 
 def fold_delta(
@@ -326,25 +325,28 @@ def _fold_merge(
 def _fold_loop(src: SnapshotTable, view: SnapshotTable,
                src_keys: tuple[str, ...] | None, body, what: str) -> int | None:
     """The one retry loop behind every single-source refresher.  Each
-    attempt resolves the source head, refuses a vanished or rewound
-    source, returns None when the view is already current, and hands
-    the change window since the folded watermark (pre/post images) to
-    `body(changes, to_v, txn)` — which lands it with the
+    attempt resolves the source head and the view's txn map ONCE,
+    refuses a vanished or rewound source, returns None when the view
+    is already current, and hands the change window since the folded
+    watermark (pre/post images) to `body(changes, sm, txn)` — `sm` the
+    source manifest at `to_v` — which lands it with the
     compare-and-set `txn` (app_id, to_v, expected from_v).  A rival
     fold landing first makes that commit raise StaleWatermark, and the
     attempt re-runs from the advanced watermark."""
     for _ in range(view.max_retries):
-        to_v = src.latest_version()
-        if to_v is None:
-            _check_missing(src, view)
+        to_v, sm = src._head()
+        tmap = _txn_map(view)
+        if sm is None:
+            _check_missing(src, view, tmap)
             return None  # source doesn't exist yet: nothing to fold
-        from_v = last_folded_version(src, view)
+        app = _app_id(src.root, sm.get("table_id"), tmap)
+        from_v = int(tmap.get(app, 0))
         _check_rewind(src, view, from_v, to_v)
         if from_v == to_v:
             return None  # already current
         changes = src.read_changes(from_v, to_v, keys=src_keys, preimages=True)
         try:
-            return body(changes, to_v, (_app_id(src, view), to_v, from_v))
+            return body(changes, sm, (app, to_v, from_v))
         except StaleWatermark:
             continue  # a rival fold landed: recompute from its watermark
     raise ConcurrentCommitError(
@@ -354,31 +356,32 @@ def _fold_loop(src: SnapshotTable, view: SnapshotTable,
 
 
 def _touched_groups(
-    src: SnapshotTable, to_v: int, changes: DataFrame,
+    src: SnapshotTable, sm: dict, changes: DataFrame,
     group_by: tuple[str, ...],
 ) -> tuple[DataFrame, DataFrame]:
     """(touched groups, their source rows) for the recompute-shaped
     refreshers.  Touched groups are the DISTINCT group keys of the
     change window — pre-images included, so an update that MOVES a row
-    across groups touches both.  Their rows come from ONE source scan,
-    semi-joined (null-safe: a NULL group value is a real group) to the
-    touched keys and pruned at the MANIFEST level when the source is
-    partitioned by a group column; a NULL partition value cannot be
-    addressed by name, so it falls back to the unpruned scan."""
+    across groups touches both.  Their rows come from ONE scan of the
+    source snapshot `sm` the window ends at, semi-joined (null-safe: a
+    NULL group value is a real group) to the touched keys and pruned
+    at the MANIFEST level when the source is partitioned by a group
+    column; a NULL partition value cannot be addressed by name, so it
+    falls back to the unpruned scan."""
     touched = changes.select(*group_by).distinct()
-    pcol = src.manifest(to_v).get("partition_col")
+    pcol = sm.get("partition_col")
     # [None] stands for "not prunable": unpartitioned by a group column
     vals = ([r[0] for r in touched.select(pcol).distinct().collect()]
             if pcol in group_by else [None])
     if None in vals:
-        base = src.read()
+        base = src._read(sm)
     elif vals:
-        base = src.read(partition_values=vals)
+        base = src._read(sm, partition_values=vals)
     else:
         # empty change window (e.g. a compact classified all rows
         # 'unchanged'): nothing to recompute, but the watermark must
         # still advance — an empty merge, not an early return
-        base = src.read().limit(0)
+        base = src._read(sm).limit(0)
     rows = base.alias("b").join(
         F.broadcast(touched.alias("t")), _key_on(group_by, "b", "t", True),
         "semi")
@@ -425,7 +428,7 @@ def refresh_agg_view(
     same view can never both apply overlapping change windows — the
     loser sees StaleWatermark and recomputes from the advanced
     watermark."""
-    def body(changes: DataFrame, to_v: int, txn: tuple) -> int | None:
+    def body(changes: DataFrame, sm: dict, txn: tuple) -> int | None:
         if where is not None:
             changes = changes.where(
                 F.expr(where) if isinstance(where, str) else where
@@ -705,7 +708,9 @@ def refresh_join_view(
         raise ValueError(
             f"how must be 'inner', 'left', 'right' or 'full', got {how!r}"
         )
-    app_l, app_r = _app_id(left, view), _app_id(right, view)
+    tmap = _txn_map(view)
+    app_l = _app_id(left.root, left.table_id(), tmap)
+    app_r = _app_id(right.root, right.table_id(), tmap)
     if app_l == app_r:
         raise ValueError(
             "refresh_join_view needs two distinct source tables (a "
@@ -723,15 +728,15 @@ def refresh_join_view(
         # a side that never existed folds nothing; a side that
         # VANISHED from under the view refuses
         if to_l0 is None:
-            _check_missing(left, view)
+            _check_missing(left, view, tmap)
         if to_r0 is None:
-            _check_missing(right, view)
+            _check_missing(right, view, tmap)
         return None
     out: int | None = None
     races = 0
     while True:
-        from_l = last_folded_version(left, view)
-        from_r = last_folded_version(right, view)
+        tmap = _txn_map(view)
+        from_l, from_r = int(tmap.get(app_l, 0)), int(tmap.get(app_r, 0))
         # rewind checks compare against the CURRENT heads (a rival
         # refresher may legitimately have folded past this call's
         # pinned targets; a head BELOW the watermark is the anomaly)
@@ -864,8 +869,8 @@ def refresh_recompute_view(
         name: (F.expr(e) if isinstance(e, str) else e)
         for name, e in aggs.items()
     }
-    def body(changes: DataFrame, to_v: int, txn: tuple) -> int | None:
-        touched, rows = _touched_groups(src, to_v, changes, group_by)
+    def body(changes: DataFrame, sm: dict, txn: tuple) -> int | None:
+        touched, rows = _touched_groups(src, sm, changes, group_by)
         fresh = rows.groupBy(*group_by).agg(
             F.count(F.lit(1)).cast("long").alias(count_col),
             *[c.alias(name) for name, c in agg_exprs.items()],
@@ -983,8 +988,8 @@ def refresh_topn_view(
                          "keys — constant within a board, order on a "
                          "non-key column")
     val_cols = list(order_by) + [c for c in payload if c not in order_by]
-    def body(changes: DataFrame, to_v: int, txn: tuple) -> int | None:
-        touched, rows = _touched_groups(src, to_v, changes, group_by)
+    def body(changes: DataFrame, sm: dict, txn: tuple) -> int | None:
+        touched, rows = _touched_groups(src, sm, changes, group_by)
         w = Window.partitionBy(*group_by).orderBy(*[
             F.col(c).desc() if d else F.col(c).asc()
             for c, d in zip(order_by, descending)

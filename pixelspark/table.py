@@ -511,6 +511,10 @@ class _Change(NamedTuple):
     new_fields: tuple = ()
 
 
+# a table's head snapshot as `_head()` resolves it: (version, manifest)
+_Head = tuple[int | None, dict | None]
+
+
 def _ekey(e: dict) -> tuple:
     """A manifest entry's identity: owning root, data dir, parts."""
     return (e.get("root"), e["base"], tuple(e["parts"] or ()))
@@ -698,8 +702,7 @@ class SnapshotTable:
         check matview watermarks use to refuse folding a stranger's
         history.  None for tables whose whole history predates the
         identity stamp (they gain one at their next commit)."""
-        v = self.latest_version()
-        return self.manifest(v).get("table_id") if v is not None else None
+        return (self._head()[1] or {}).get("table_id")
 
     def latest_version(self) -> int | None:
         vs = self.versions()
@@ -708,17 +711,30 @@ class SnapshotTable:
     def manifest(self, version: int) -> dict:
         return json.loads(self.st.read_text(self._manifest_path(version)))
 
+    def _head(self) -> _Head:
+        """The head snapshot, (latest version, its parsed manifest) —
+        (None, None) for a missing table: one `_manifests/` listing and
+        one manifest read.  Each public call resolves it once and hands
+        it down; only a lost commit race resolves it again."""
+        v = self.latest_version()
+        return v, (self.manifest(v) if v is not None else None)
+
     def exists(self) -> bool:
         return self.latest_version() is not None
 
     def _commit(self, build: Callable[[dict | None], dict],
-                staged: Sequence[str] = ()) -> int | None:
-        """Optimistic commit loop: read latest manifest, apply the
-        entry-level edit `build`, publish as version+1; on losing the
-        create race, reload and REBASE the edit onto the winner.  The
-        streaming-transaction map (`txn`) carries over automatically
-        unless the build sets it.  Returns None when the build aborts
-        (_SkipCommit — a replayed batch detected mid-rebase).
+                head: _Head, staged: Sequence[str] = ()) -> int | None:
+        """Optimistic commit loop: apply the entry-level edit `build` to
+        the caller's snapshot `head` (`_head()`'s (version, manifest))
+        and publish it as version+1 with no listing; on losing that
+        create race, re-resolve the head and REBASE the edit onto the
+        winner.  The first attempt stats the head's own manifest: a
+        vacuum beside the write may have pruned it (and the versions
+        after it), and a create of v+1 would then succeed below the
+        real head, invisible.  The streaming-transaction map (`txn`)
+        carries over automatically unless the build sets it.  Returns
+        None when the build aborts (_SkipCommit — a replayed batch
+        detected mid-rebase).
 
         `staged` names the data dirs (full paths) the commit publishes.
         This loop alone decides their lifetime: they are deleted when
@@ -726,9 +742,13 @@ class SnapshotTable:
         replay, a stale watermark) or the retries run out — and kept
         when the manifest write itself raises, whose outcome is
         unknown."""
-        for _ in range(self.max_retries):
-            v = self.latest_version()
-            prev = self.manifest(v) if v is not None else None
+        v, prev = head
+        for i in range(self.max_retries):
+            # vacuum keeps a suffix of versions, so a head whose manifest
+            # survives is still the head unless v+1 exists — which the
+            # create itself decides; an absent table re-lists (cheap)
+            if i or v is None or not self.st.exists(self._manifest_path(v)):
+                v, prev = self._head()  # lost the create: rebase on the winner
             try:
                 if prev is not None:
                     # refuse to mutate a table whose invariants this
@@ -992,16 +1012,19 @@ class SnapshotTable:
 
     def _write_snap(
         self, df: DataFrame, partition_col: str | None,
-        audit_cols: list[str] | None = None,
+        audit_cols: list[str] | None = None, *, m: dict | None,
     ) -> tuple[str, list[str], bool, dict | None, int | None]:
-        """Write one immutable data dir; returns (relative dir, list of
-        `col=value` subdirectory names — empty for unpartitioned,
-        whether any parquet data file landed, the column-mapping
-        manifest value the write was translated under — commit builds
-        that add this dir's entry must raise _Conflicted if the
-        table's mapping has moved since, or a rename racing a write
-        would publish data whose physical names no longer match the
-        mapping — and the row count OBSERVED on the write job itself
+        """Write one immutable data dir under the snapshot `m` the
+        calling attempt holds (its generation expressions, id specs and
+        column mapping — keyword-only, so hooks written as
+        `(df, pcol, **kw)` pass it through).  Returns (relative dir,
+        list of `col=value` subdirectory names — empty for
+        unpartitioned, whether any parquet data file landed, the
+        column-mapping manifest value the write was translated under —
+        commit builds that add this dir's entry must raise _Conflicted
+        if the table's mapping has moved since, or a rename racing a
+        write would publish data whose physical names no longer match
+        the mapping — and the row count OBSERVED on the write job itself
         (None when the observation didn't resolve): riding the count
         on the write via df.observe saves _entry_for a whole second
         Spark job per commit, the dominant fixed cost of the
@@ -1011,8 +1034,8 @@ class SnapshotTable:
         entry would give read() zero scannable paths, so callers
         short-circuit on `has_data=False` — and, since no commit can
         name such a dir, it is deleted here before returning."""
-        df = self._apply_generated(df)
-        specs = self._id_specs()
+        df = self._apply_generated(df, m)
+        specs = self._id_specs(m)
         for _, idn in specs:
             if idn["col"] not in df.columns:
                 raise ValueError(
@@ -1058,7 +1081,7 @@ class SnapshotTable:
                 F.when(bad, F.raise_error(F.lit(
                     _IDENTITY_NULL_MARK))).otherwise(c),
             )
-        cmap = self._current_mapping()
+        cmap = (m or {}).get("column_mapping")
         if cmap:
             cols = cmap["cols"]
             unmapped = [c for c in df.columns if c not in cols]
@@ -1128,82 +1151,37 @@ class SnapshotTable:
             self.st.delete(full)
         return rel, parts, bool(parts), cmap, observed()
 
-    def _generation_exprs(self) -> dict[str, str]:
-        """The table's persisted generation expressions (manifest wins
-        over the constructor seed — expressions are fixed at table
-        creation, Delta semantics)."""
-        v = self.latest_version()
-        if v is not None:
-            stored = self.manifest(v).get("generated")
-            if stored:
-                return stored
-        return self.generated_cols
-
-    def _identity_spec(self) -> dict | None:
-        """The table's persisted USER identity spec (manifest wins over
-        the constructor seed — the spec and its high-watermark are
-        table state, fixed at creation like generation expressions).
-        The system row-tracking spec lives under its own manifest key
-        since v2; a v1 manifest that stored it in this slot (marked
-        `system`) is filtered out here and served by
-        `_row_tracking_spec` instead."""
-        v = self.latest_version()
-        if v is not None:
-            stored = self.manifest(v).get("identity")
-            if stored:
-                return None if stored.get("system") else stored
-        return self.identity_seed
-
-    def _row_tracking_spec(self) -> dict | None:
-        """The system `__row_id` spec: the `row_tracking` manifest key,
-        or — for tables written by v1 code — a system-marked spec
-        still sitting in the identity slot (migrated to its own key by
-        the next commit's carry-forward)."""
-        v = self.latest_version()
-        if v is None:
-            return None
-        m = self.manifest(v)
-        rt = m.get("row_tracking")
-        if rt:
-            return rt
-        legacy = m.get("identity")
-        return legacy if (legacy and legacy.get("system")) else None
-
     @staticmethod
-    def _slot_of(m: dict, key: str) -> dict | None:
-        """The id-slot spec recorded in an ARBITRARY manifest `m`
-        (`_identity_spec`/`_row_tracking_spec` read the latest one).
-        Handles legacy v1 manifests that stored the system
-        row-tracking spec in the identity slot."""
+    def _slot_of(m: dict | None, key: str) -> dict | None:
+        """The one id-slot reader: the `identity` or `row_tracking`
+        spec recorded in manifest `m` (None-safe).  Handles legacy v1
+        manifests that stored the system row-tracking spec in the
+        identity slot (the next commit's carry-forward migrates it)."""
+        s = (m or {}).get("identity")
         if key == "row_tracking":
-            rt = m.get("row_tracking")
-            if rt:
-                return rt
-            legacy = m.get("identity")
-            return legacy if (legacy and legacy.get("system")) else None
-        stored = m.get("identity")
-        return None if (stored is None or stored.get("system")) else stored
+            return (m or {}).get("row_tracking") or (
+                s if (s and s.get("system")) else None)
+        return None if (s is None or s.get("system")) else s
 
-    def _id_specs(self) -> list[tuple[str, dict]]:
-        """Every watermarked id column as (manifest_key, spec) — the
-        user identity slot and the system row-tracking slot, which
-        coexist since v2 (Delta ships both)."""
-        out = []
-        idn = self._identity_spec()
-        if idn:
-            out.append(("identity", idn))
-        rt = self._row_tracking_spec()
-        if rt:
-            out.append(("row_tracking", rt))
-        return out
+    def _id_specs(self, m: dict | None) -> list[tuple[str, dict]]:
+        """Every watermarked id column of snapshot `m` as (manifest_key,
+        spec) — the user identity slot and the system row-tracking
+        slot, which coexist since v2 (Delta ships both).  A manifest
+        with no identity slot falls back to the constructor seed (the
+        spec and its high-watermark are table state, fixed at creation
+        like generation expressions)."""
+        idn = (self._slot_of(m, "identity") if (m or {}).get("identity")
+               else self.identity_seed)
+        rt = self._slot_of(m, "row_tracking")
+        return [(k, s) for k, s in (("identity", idn), ("row_tracking", rt)) if s]
 
     def _prepare_ids(
-        self, df: DataFrame, pin: bool = False
+        self, df: DataFrame, m: dict | None, pin: bool = False
     ) -> tuple[DataFrame, dict[str, tuple[dict, int]]]:
-        """Apply every id spec to a batch (absent column → assign the
-        whole batch; system column with NULLs → fill only those).
-        Returns (df, {manifest_key: (spec as staged, new high)}) for
-        exactly the specs that assigned something.  `pin` persists the
+        """Apply every id spec of snapshot `m` to a batch (absent column
+        → assign the whole batch; system column with NULLs → fill only
+        those).  Returns (df, {manifest_key: (spec as staged, new
+        high)}) for exactly the specs that assigned something.  `pin` persists the
         batch around the assignment pre-count (see
         _pin_for_assignment) — set ONLY by callers whose source is an
         engine-composed multi-join plan (upsert, dv-merge); a full
@@ -1211,7 +1189,7 @@ class SnapshotTable:
         lands in executor memory/disk before the write starts."""
         highs: dict[str, tuple[dict, int]] = {}
         try:
-            for key, spec in self._id_specs():
+            for key, spec in self._id_specs(m):
                 df, nh = self._identity_prepare(df, spec, pin=pin)
                 if nh is not None:
                     highs[key] = (spec, nh)
@@ -1223,31 +1201,16 @@ class SnapshotTable:
             raise
         return df, highs
 
-    def _unassigned_id_cols(self, highs: dict) -> list[str] | None:
-        """Id columns this write did NOT assign — they arrive carried
-        from the table (or from an explicit-id source) and get the
-        inline NULL audit in the write plan.  None when it assigned
-        nothing: `_write_snap` then audits every id column itself,
-        without a second read of the specs."""
+    def _unassigned_id_cols(self, highs: dict, m: dict | None) -> list[str] | None:
+        """Id columns of snapshot `m` this write did NOT assign — they
+        arrive carried from the table (or from an explicit-id source)
+        and get the inline NULL audit in the write plan.  None when it
+        assigned nothing: `_write_snap` then audits every id column
+        itself."""
         if not highs:
             return None
-        return [spec["col"] for key, spec in self._id_specs()
+        return [spec["col"] for key, spec in self._id_specs(m)
                 if key not in highs]
-
-    @staticmethod
-    def _wm_slot(prev: dict | None, key: str) -> dict | None:
-        """Read a watermark slot from a (possibly v1-layout) manifest:
-        the identity slot never serves system specs, the row-tracking
-        slot falls back to a legacy system-marked identity entry."""
-        m = prev or {}
-        if key == "identity":
-            s = m.get("identity")
-            return None if (s and s.get("system")) else s
-        rt = m.get("row_tracking")
-        if rt:
-            return rt
-        s = m.get("identity")
-        return s if (s and s.get("system")) else None
 
     def _stamp_highs(
         self, out: dict, prev: dict | None, highs: dict, cas: bool = True
@@ -1259,7 +1222,7 @@ class SnapshotTable:
         monotone — replaced rows die with their ids, so a racing
         assignment cannot produce a LIVE collision."""
         for key, (spec, nh) in highs.items():
-            cur = self._wm_slot(prev, key) or spec
+            cur = self._slot_of(prev, key) or spec
             if cas:
                 if cur["high"] != spec["high"]:
                     raise _Conflicted
@@ -1470,7 +1433,7 @@ class SnapshotTable:
                 raise FileNotFoundError(
                     f"no schema-bearing snapshot at {self.root}"
                 )
-            if self._wm_slot(prev, "row_tracking"):
+            if self._slot_of(prev, "row_tracking"):
                 raise ValueError("row tracking is already enabled")
             if not _allow_rows and self._may_hold_rows(prev):
                 raise ValueError(
@@ -1507,8 +1470,9 @@ class SnapshotTable:
                 out["column_mapping"] = cmap
             return out
 
+        head = self._head()
         if backfill:
-            if self._row_tracking_spec():
+            if self._slot_of(head[1], "row_tracking"):
                 # r9 (advisor): the mapped path is two commits
                 # (metadata enable, then the compact fill) — a crash
                 # between them leaves pre-enable rows with NULL ids
@@ -1517,17 +1481,13 @@ class SnapshotTable:
                 # the operator behind "already enabled": one cheap
                 # column-pruned NULL probe decides.
                 pending = (
-                    self.read().where(F.col("__row_id").isNull())
+                    self._read(head[1]).where(F.col("__row_id").isNull())
                     .limit(1).count() > 0
                 )
                 if pending:
                     return self.compact()
                 raise ValueError("row tracking is already enabled")
-            mapped = False
-            v0 = self.latest_version()
-            if v0 is not None and self.manifest(v0).get("column_mapping"):
-                mapped = True
-            if mapped:
+            if (head[1] or {}).get("column_mapping"):
                 # two commits (see docstring): metadata enable first —
                 # the mapping must carry __row_id before the rewrite
                 # can write it — then one fill-rewrite
@@ -1537,21 +1497,20 @@ class SnapshotTable:
 
             def attempt(read_v: int | None, m: dict | None) -> int | None:
                 if m is None or not self._may_hold_rows(m):
-                    return self._commit(enable)  # no rewrite needed
+                    return self._commit(enable, (read_v, m))  # no rewrite needed
                 schema = StructType.fromJson(json.loads(m["schema"]))
                 if "__row_id" in {f.name for f in schema.fields}:
                     raise ValueError("column __row_id already exists")
                 spec = {"col": "__row_id", "step": 1, "high": start,
                         "system": True}
-                assigned, new_high = self._assign_identity(
-                    self.read(version=read_v), spec)
+                assigned, new_high = self._assign_identity(self._read(m), spec)
                 # keep __row_id LAST, matching the fresh-table path's
                 # widened schema shape
                 assigned = assigned.select(
                     *[f.name for f in schema.fields], "__row_id")
                 pcol = m.get("partition_col")
                 rel, parts, has_data, wmap, nrows = self._write_snap(
-                    assigned, pcol)  # default: audit carried user ids
+                    assigned, pcol, m=m)  # default: audit carried user ids
                 entry = self._entry_for(
                     rel, sorted(parts), has_data, assigned.schema, wmap,
                     row_count=nrows)
@@ -1572,11 +1531,11 @@ class SnapshotTable:
 
                 # table moved: `_commit` drops the rewrite, `_pinned`
                 # re-reads and re-assigns
-                return self._commit(build, [f"{self.root}/{rel}"])
+                return self._commit(build, (read_v, m), [f"{self.root}/{rel}"])
 
-            return self._pinned("enable_row_tracking(backfill=True)", attempt)
+            return self._pinned("enable_row_tracking(backfill=True)", attempt, head)
 
-        return self._commit(enable)
+        return self._commit(enable, head)
 
     @staticmethod
     def _may_hold_rows(m: dict) -> bool:
@@ -1599,11 +1558,12 @@ class SnapshotTable:
         written id (Delta ALTER TABLE ... SYNC IDENTITY): one extremum
         aggregate over the live rows, one metadata commit.  Returns
         the new version, or None when already ahead."""
-        spec = self._identity_spec()
+        head = self._head()
+        spec = dict(self._id_specs(head[1])).get("identity")
         if not spec:
             raise ValueError(f"table at {self.root} has no identity column")
         col, step = spec["col"], spec["step"]
-        ext = self.read().agg(
+        ext = self._read(head[1]).agg(
             (F.max(col) if step > 0 else F.min(col)).alias("e")
         ).collect()[0]["e"]
         if ext is None:
@@ -1627,16 +1587,18 @@ class SnapshotTable:
                 "op": {"name": "sync_identity"},
             }
 
-        return self._commit(build)
+        return self._commit(build, head)
 
-    def _apply_generated(self, df: DataFrame) -> DataFrame:
-        """Generated-column write discipline: columns missing from the
-        batch are computed from their expression; columns the writer
-        provided are audited against it in ONE aggregate pass
-        (O(batch)) and the write is refused on any mismatch — silently
-        accepting divergent values would corrupt derived partition
-        columns."""
-        exprs = self._generation_exprs()
+    def _apply_generated(self, df: DataFrame, m: dict | None) -> DataFrame:
+        """Generated-column write discipline under snapshot `m`'s
+        expressions (the constructor seed until a manifest records
+        them — expressions are fixed at table creation, Delta
+        semantics): columns missing from the batch are computed from
+        their expression; columns the writer provided are audited
+        against it in ONE aggregate pass (O(batch)) and the write is
+        refused on any mismatch — silently accepting divergent values
+        would corrupt derived partition columns."""
+        exprs = (m or {}).get("generated") or self.generated_cols
         if not exprs:
             return df
         provided = [n for n in exprs if n in df.columns]
@@ -1664,7 +1626,7 @@ class SnapshotTable:
         return df
 
     def _recompute_generated(
-        self, df: DataFrame, assigned=(), keep=()
+        self, df: DataFrame, m: dict | None, assigned=(), keep=()
     ) -> DataFrame:
         """Delta DML semantics for generated columns: rewrite paths
         (UPDATE / MERGE post-images) RECOMPUTE generated columns the
@@ -1685,7 +1647,7 @@ class SnapshotTable:
         being replaced (rewriting partition A must not emit rows for
         partition B, which would clobber B's other rows).  Those
         writes stay fail-closed under the audit instead."""
-        exprs = self._generation_exprs()
+        exprs = (m or {}).get("generated") or self.generated_cols
         drop = [
             c
             for c in exprs
@@ -2220,12 +2182,13 @@ class SnapshotTable:
         if (prev["version"] if prev else None) != expected_version:
             raise _Conflicted
 
-    def _replayed(self, txn: tuple) -> bool:
-        """True when the latest snapshot already records `txn`'s batch
-        — the pre-check that lets a replayed write skip its work (the
-        commit build's `_txn_apply` still guards the race)."""
-        v = self.latest_version()
-        last = (self.manifest(v).get("txn") or {}).get(txn[0]) if v is not None else None
+    @staticmethod
+    def _replayed(m: dict | None, txn: tuple) -> bool:
+        """True when snapshot `m` (the caller's head) already records
+        `txn`'s batch — the pre-check that lets a replayed write skip
+        its work (the commit build's `_txn_apply` still guards the
+        race)."""
+        last = ((m or {}).get("txn") or {}).get(txn[0])
         return last is not None and last >= txn[1]
 
     @staticmethod
@@ -2260,7 +2223,6 @@ class SnapshotTable:
         op: dict | None = None,
         txn: tuple[str, int] | None = None,
         clear_txn: tuple[str, ...] | None = None,
-        _pin_ids: bool = False,
     ) -> int | None:
         """Full snapshot replacement.  An empty `df` is a truncate: the
         manifest commits with zero entries but keeps the schema, so
@@ -2275,12 +2237,24 @@ class SnapshotTable:
         normally survives every commit so replay guards cannot be
         lost by accident; a rebuild-from-scratch is the one operation
         that must drop them deliberately — matview.rebuild_view)."""
-        if txn is not None and self._replayed(txn):
+        return self._overwrite(self._head(), df, partition_col,
+                               expected_version, op, txn, clear_txn)
+
+    def _overwrite(
+        self, head: _Head, df: DataFrame, partition_col: str | None = None,
+        expected_version=_ANY_VERSION, op: dict | None = None,
+        txn: tuple[str, int] | None = None,
+        clear_txn: tuple[str, ...] | None = None,
+    ) -> int | None:
+        """`overwrite` staged from, and first committed on, the
+        snapshot `head` the caller already resolved."""
+        m = head[1]
+        if txn is not None and self._replayed(m, txn):
             return None  # replay detected before paying the write
-        out_df, highs = self._prepare_ids(df, pin=_pin_ids)
+        out_df, highs = self._prepare_ids(df, m)
         rel, parts, has_data, wmap, nrows = self._write_snap(
             out_df, partition_col,
-            audit_cols=self._unassigned_id_cols(highs))
+            audit_cols=self._unassigned_id_cols(highs, m), m=m)
         entry = self._entry_for(rel, parts, has_data, out_df.schema, wmap,
                                 row_count=nrows)
         schema = out_df.schema.json()
@@ -2312,7 +2286,7 @@ class SnapshotTable:
                 out["txn"] = tmap
             return out
 
-        return self._commit(build, [f"{self.root}/{rel}"])
+        return self._commit(build, head, [f"{self.root}/{rel}"])
 
     def append(self, df: DataFrame) -> int:
         """Blind append (the cheap daily-ingest write): adds one data
@@ -2348,7 +2322,13 @@ class SnapshotTable:
         is deleted by the commit loop).  Assumes the standard
         deterministic-replay contract: a given (app_id, batch_id)
         always carries the same rows.  An empty batch still commits,
-        recording only its watermark."""
+        recording only its watermark.
+
+        Metadata cost: the call resolves the head once (one listing,
+        one manifest read); the replay check, the staging write and the
+        first create of `v+1` all use it, so a replay returns before
+        any write and a fresh batch pays nothing more unless it loses
+        the commit race."""
         return self._append(df, (app_id, batch_id))
 
     def _append(self, df: DataFrame, txn: tuple[str, int] | None) -> int | None:
@@ -2357,14 +2337,15 @@ class SnapshotTable:
         The two verbs differ only in their empty-batch contract: a
         blind append of nothing is a no-op, while a txn append must
         still commit its watermark."""
-        if txn is not None and self._replayed(txn):
+        head = self._head()
+        if txn is not None and self._replayed(head[1], txn):
             return None  # replay detected before paying the write
         op = ({"name": "append"} if txn is None else
               {"name": "append_once", "app_id": txn[0], "batch_id": txn[1]})
 
         def attempt(v0: int | None, m: dict | None) -> int | None:
             pcol = (m or {}).get("partition_col")
-            out_df, highs = self._prepare_ids(df)
+            out_df, highs = self._prepare_ids(df, m)
             write_pcol = pcol
             if pcol is not None and pcol not in out_df.columns:
                 # the empty-batch contract outranks the layout refusal;
@@ -2397,7 +2378,7 @@ class SnapshotTable:
                             fld.name, F.lit(None).cast(fld.dataType))
             rel, parts, has_data, wmap, nrows = self._write_snap(
                 out_df, write_pcol,
-                audit_cols=self._unassigned_id_cols(highs))
+                audit_cols=self._unassigned_id_cols(highs, m), m=m)
             entry = self._entry_for(rel, sorted(parts) if pcol else [],
                                     has_data, out_df.schema, wmap,
                                     row_count=nrows)
@@ -2435,9 +2416,9 @@ class SnapshotTable:
             # stale dir and `_pinned` re-stages — an append has no
             # read set, so the retry is always safe (the txn guard
             # keeps an append_once retry exactly-once)
-            return self._commit(build, [f"{self.root}/{rel}"])
+            return self._commit(build, (v0, m), [f"{self.root}/{rel}"])
 
-        return self._pinned(op["name"], attempt)
+        return self._pinned(op["name"], attempt, head)
 
     def replace_partitions(
         self,
@@ -2465,12 +2446,23 @@ class SnapshotTable:
         replaced partitions are MERGED partials (an incremental
         rollup): replaying a delta would double-count, so a batch that
         already committed must turn into a no-op (returns None)."""
-        if txn is not None and self._replayed(txn):
+        return self._replace_partitions(self._head(), df, partition_col, txn,
+                                        expected_version, replace_values, op)
+
+    def _replace_partitions(
+        self, head: _Head, df: DataFrame, partition_col: str,
+        txn: tuple[str, int] | None = None, expected_version=_ANY_VERSION,
+        replace_values: list | None = None, op: dict | None = None,
+    ) -> int | None:
+        """`replace_partitions` staged from, and first committed on, the
+        snapshot `head` the caller already resolved."""
+        v, m = head
+        if txn is not None and self._replayed(m, txn):
             return None  # replay: skip before paying the write
-        out_df, highs = self._prepare_ids(df)
+        out_df, highs = self._prepare_ids(df, m)
         rel, parts, has_data, wmap, nrows = self._write_snap(
             out_df, partition_col,
-            audit_cols=self._unassigned_id_cols(highs))
+            audit_cols=self._unassigned_id_cols(highs, m), m=m)
         entry = self._entry_for(rel, sorted(parts), has_data, out_df.schema,
                                 wmap, row_count=nrows)
         new_parts = set(parts)  # subdirs that actually exist in the new snap
@@ -2481,7 +2473,6 @@ class SnapshotTable:
         if not has_data and txn is None and not replace_values:
             # empty batch replaces nothing: skip the useless version
             # (with a txn the watermark still has to be recorded below)
-            v = self.latest_version()
             if v is not None:
                 return v
 
@@ -2524,7 +2515,7 @@ class SnapshotTable:
             self._stamp_highs(out, prev, highs, cas=True)
             return out
 
-        return self._commit(build, [f"{self.root}/{rel}"])
+        return self._commit(build, head, [f"{self.root}/{rel}"])
 
     # -- row-level changes: five verbs over one kernel --------------------
     #
@@ -2556,7 +2547,7 @@ class SnapshotTable:
 
         def attempt(read_v: int | None, m: dict | None) -> int | None:
             if read_v is None:
-                return self.overwrite(df, expected_version=None)
+                return self._overwrite((read_v, m), df, expected_version=None)
 
             def plan(t: DataFrame) -> _Change:
                 keep = t.join(
@@ -2603,7 +2594,7 @@ class SnapshotTable:
             return self._cow_commit(
                 read_v, m, plan, {"name": "upsert", "keys": list(keys)})
 
-        return self._pinned("upsert", attempt)
+        return self._pinned("upsert", attempt, self._head())
 
     def merge(
         self,
@@ -2694,7 +2685,8 @@ class SnapshotTable:
 
         Like `upsert`, the read-merge-write is pinned to the version it
         read and re-runs on ConcurrentWriteConflict."""
-        if txn is not None and self._replayed(txn):
+        head = self._head()
+        if txn is not None and self._replayed(head[1], txn):
             return None  # replay detected before paying any work
         if mode not in ("rewrite", "dv"):
             raise ValueError(f"merge mode must be 'rewrite' or 'dv', got {mode!r}")
@@ -2819,7 +2811,7 @@ class SnapshotTable:
                 # names and take the whole-table rewrite instead)
                 touched = [r[0] for r in source.select(pcol).distinct().collect()]
                 if not touched:
-                    return self._noop(read_v, txn, op)  # empty source
+                    return self._noop(read_v, m, txn, op)  # empty source
                 if None in touched:
                     if not null_safe_keys:
                         raise ValueError(
@@ -2831,7 +2823,7 @@ class SnapshotTable:
                     touched = None
             return self._cow_commit(read_v, m, plan, op, txn=txn, touched=touched)
 
-        return self._pinned("dv merge" if dv else "merge", attempt)
+        return self._pinned("dv merge" if dv else "merge", attempt, head)
 
     def delete(self, condition, mode: str = "rewrite") -> int:
         """Row-level DELETE (Delta `DELETE FROM ... WHERE`): remove the
@@ -2939,28 +2931,33 @@ class SnapshotTable:
                     f"update cannot assign the partition column {pcol!r}")
             return self._cow_commit(read_v, m, plan, op, by_hits=True)
 
-        return self._pinned(verb if mode == "rewrite" else f"dv {verb}", attempt)
+        return self._pinned(verb if mode == "rewrite" else f"dv {verb}",
+                            attempt, self._head())
 
     def _pinned(
         self, what: str,
         attempt: Callable[[int | None, dict | None], Any],
+        head: _Head,
     ) -> Any:
         """The one retry loop behind every re-reading write: the
         row-level changes, `_append`, `compact`, the row-tracking
-        backfill and `refresh_rollup_snapshot`.  Each attempt resolves
-        the snapshot it reads ONCE — version and parsed manifest — and
-        passes both down; its commit is pinned to that version (or, for
-        an append, to the layout it staged under), so a rival commit
-        landing in between raises ConcurrentWriteConflict and the WHOLE
-        attempt re-runs against the advanced snapshot (rebasing blindly
-        would lose the rival's rows).  The lost attempt's staged dirs
-        are already gone: `_commit` reclaims them."""
-        for _ in range(self.max_retries):
+        backfill and `refresh_rollup_snapshot`.  The first attempt runs
+        on `head`, the snapshot the public call already resolved for
+        its replay pre-check; every attempt reads only the (version,
+        manifest) it is handed and passes both down — to its staging
+        write and to `_commit`, which tries the create on it.  Its
+        commit is pinned to that version (or, for an append, to the
+        layout it staged under), so a rival commit landing in between
+        raises ConcurrentWriteConflict and the WHOLE attempt re-runs
+        against a freshly resolved head (rebasing blindly would lose
+        the rival's rows).  The lost attempt's staged dirs are already
+        gone: `_commit` reclaims them."""
+        for i in range(self.max_retries):
             self._drain_id_pins()  # reclaim any prior attempt's pin
-            read_v = self.latest_version()
+            if i:
+                head = self._head()
             try:
-                return attempt(
-                    read_v, self.manifest(read_v) if read_v is not None else None)
+                return attempt(*head)
             except ConcurrentWriteConflict:
                 continue
         raise ConcurrentCommitError(
@@ -2968,7 +2965,7 @@ class SnapshotTable:
             f"times at {self.root}"
         )
 
-    def _noop(self, read_v: int | None, txn, op: dict) -> int | None:
+    def _noop(self, read_v: int | None, m: dict | None, txn, op: dict) -> int | None:
         """A change that touched nothing commits nothing — except that
         a txn batch still records its watermark, in a commit that
         carries everything else over: replay detection must not
@@ -2985,7 +2982,7 @@ class SnapshotTable:
                     "entries": prev["entries"], "schema": prev.get("schema"),
                     "txn": tmap, "op": {**op, "noop": True}}
 
-        return self._commit(build)
+        return self._commit(build, (read_v, m))
 
     def _dv_commit(self, read_v: int, m: dict, plan, op: dict, txn=None) -> int | None:
         """The merge-on-read commit (Iceberg's row delta): the hit rows'
@@ -3021,7 +3018,7 @@ class SnapshotTable:
         else:
             self.st.delete(full_dv)
             if p.inserts is None:
-                return self._noop(read_v, txn, op)  # nothing matched
+                return self._noop(read_v, m, txn, op)  # nothing matched
         entries, highs, wmap = list(m["entries"]), {}, m.get("column_mapping")
         if p.assigned is not None:
             new = hits.where(~F.col("__del")).drop(*_POS, "__del")
@@ -3029,20 +3026,20 @@ class SnapshotTable:
                 new = new.unionByName(p.inserts, allowMissingColumns=True)
             # the new rows are ordinary appended data: nothing is
             # partition-scoped, so every generated column may regenerate
-            new = self._recompute_generated(new, assigned=p.assigned)
+            new = self._recompute_generated(new, m, assigned=p.assigned)
             if p.inserts is not None:
                 # post-images carry their ids; inserted rows get fresh
                 # ones (a user identity keeps the refuse-NULLs stance)
-                new, highs = self._prepare_ids(new, pin=True)
+                new, highs = self._prepare_ids(new, m, pin=True)
             rel, parts, has_data, wmap, nrows = self._write_snap(
                 new, m.get("partition_col"),
-                audit_cols=self._unassigned_id_cols(highs))
+                audit_cols=self._unassigned_id_cols(highs, m), m=m)
             if has_data:
                 staged.append(f"{self.root}/{rel}")
                 entries.append(self._entry_for(rel, sorted(parts), True,
                                                new.schema, wmap, row_count=nrows))
         if not staged:
-            return self._noop(read_v, txn, op)  # nothing matched or inserted
+            return self._noop(read_v, m, txn, op)  # nothing matched or inserted
         schema = m.get("schema")
         if p.new_fields and schema is not None:
             ws = StructType.fromJson(json.loads(schema))
@@ -3115,14 +3112,14 @@ class SnapshotTable:
             # partition-scoped: a recomputed partition column could
             # migrate rows out of the replaced set; keep it fail-closed
             out = self._recompute_generated(
-                out, assigned=p.assigned, keep=() if whole else (pcol,))
-        out, highs = self._prepare_ids(out)
+                out, m, assigned=p.assigned, keep=() if whole else (pcol,))
+        out, highs = self._prepare_ids(out, m)
         rel, parts, has_data, wmap, nrows = self._write_snap(
-            out, pcol, audit_cols=self._unassigned_id_cols(highs))
+            out, pcol, audit_cols=self._unassigned_id_cols(highs, m), m=m)
         full = f"{self.root}/{rel}"
         if seen and all(observed_long(o, "n") == 0 for o in seen):
             self.st.delete(full)
-            return self._noop(read_v, txn, op)  # nothing matched or inserted
+            return self._noop(read_v, m, txn, op)  # nothing matched or inserted
         entries = [] if whole else [
             e for e in (
                 self._drop_parts(e, wanted) if entry_layout(e) == pcol else e
@@ -3229,7 +3226,7 @@ class SnapshotTable:
             return out
 
         try:
-            return self._commit(build, staged)
+            return self._commit(build, (read_v, m), staged)
         except ConcurrentWriteConflict:
             if cached is not None:
                 cached.unpersist()
@@ -3318,7 +3315,7 @@ class SnapshotTable:
                 out["column_mapping"] = cmap
             return out
 
-        return self._commit(build)
+        return self._commit(build, self._head())
 
     def widen_column(self, column: str, to_type: str) -> int:
         """Metadata-only ALTER TABLE ... TYPE widening (the Delta
@@ -3388,7 +3385,7 @@ class SnapshotTable:
                        "to": target.simpleString()},
             }
 
-        return self._commit(build)
+        return self._commit(build, self._head())
 
     def evolve_partitioning(self, new_col: str | None) -> int:
         """Iceberg-style partition evolution as ONE metadata commit:
@@ -3431,15 +3428,9 @@ class SnapshotTable:
                 "op": {"name": "evolve_partitioning", "to": new_col},
             }
 
-        return self._commit(build)
+        return self._commit(build, self._head())
 
     # -- column mapping (rename / drop without rewrite) --------------------
-
-    def _current_mapping(self) -> dict | None:
-        v = self.latest_version()
-        if v is None:
-            return None
-        return self.manifest(v).get("column_mapping")
 
     @staticmethod
     def _fresh_physical(cmap: dict, logical: str) -> str:
@@ -3511,7 +3502,7 @@ class SnapshotTable:
                 "op": {"name": "enable_column_mapping"},
             }
 
-        return self._commit(build)
+        return self._commit(build, self._head())
 
     def rename_column(self, old: str, new: str) -> int:
         """ALTER TABLE RENAME COLUMN as ONE manifest write: the logical
@@ -3557,7 +3548,7 @@ class SnapshotTable:
                 "op": {"name": "rename_column", "from": old, "to": new},
             }
 
-        return self._commit(build)
+        return self._commit(build, self._head())
 
     def drop_column(self, name: str) -> int:
         """ALTER TABLE DROP COLUMN as ONE manifest write: the column
@@ -3593,7 +3584,7 @@ class SnapshotTable:
                 "op": {"name": "drop_column", "column": name},
             }
 
-        return self._commit(build)
+        return self._commit(build, self._head())
 
     def compact(
         self,
@@ -3660,8 +3651,8 @@ class SnapshotTable:
                 raise FileNotFoundError(f"no snapshot at {self.root}")
             pcol = m.get("partition_col")
             if partition_values is None:
-                return self.overwrite(
-                    layout(self.read(version=read_v)), pcol,
+                return self._overwrite(
+                    (read_v, m), layout(self._read(m)), pcol,
                     expected_version=read_v, op={"name": "compact"},
                 )
             if pcol is None:
@@ -3671,15 +3662,14 @@ class SnapshotTable:
             # manifest-level prune (only the named partitions are even
             # listed); the residual filter keeps the semantics exact if
             # a value's string form is ambiguous
-            subset = self.read(
-                version=read_v, partition_values=partition_values
-            ).where(F.col(pcol).isin(partition_values))
-            return self.replace_partitions(
-                layout(subset), pcol, expected_version=read_v,
+            subset = self._read(m, partition_values).where(
+                F.col(pcol).isin(partition_values))
+            return self._replace_partitions(
+                (read_v, m), layout(subset), pcol, expected_version=read_v,
                 op={"name": "compact", "n_values": len(partition_values)},
             )
 
-        return self._pinned("compact", attempt)
+        return self._pinned("compact", attempt, self._head())
 
     # -- read operations ---------------------------------------------------
 
@@ -3748,10 +3738,16 @@ class SnapshotTable:
                     "pass version OR as_of_timestamp, not both"
                 )
             version = self.version_at(as_of_timestamp)
-        v = version if version is not None else self.latest_version()
-        if v is None:
+        m = self._head()[1] if version is None else self.manifest(version)
+        return self._read(m, partition_values, predicates)
+
+    def _read(
+        self, m: dict | None, partition_values: list | None = None,
+        predicates: list[tuple[str, str, object]] | None = None,
+    ) -> DataFrame:
+        """`read` of the snapshot `m` the caller already resolved."""
+        if m is None:
             raise FileNotFoundError(f"no snapshot at {self.root}")
-        m = self.manifest(v)
         entries = m["entries"]
         if partition_values is not None:
             pcol = m.get("partition_col")
@@ -4217,10 +4213,10 @@ class SnapshotTable:
         downstream algebraic state (incremental materialized views
         retract the pre-image and apply the post-image) without a
         second time-travel read."""
-        to_v = to_version if to_version is not None else self.latest_version()
-        if to_v is None:
+        to_v, m1 = (self._head() if to_version is None
+                    else (to_version, self.manifest(to_version)))
+        if m1 is None:
             raise FileNotFoundError(f"no snapshot at {self.root}")
-        m1 = self.manifest(to_v)
         check_reader_features(
             m1, READER_FEATURES, "SnapshotTable.read_changes"
         )
@@ -4318,7 +4314,7 @@ class SnapshotTable:
             # removed): vectors address only pre-existing files, so
             # appended dirs cannot be masked and stay keyless
             # 'inserted' reads of just the new dirs.
-            new_full = self.read(version=to_v).select(*table_cols)
+            new_full = self._read(m1).select(*table_cols)
             if not from_version:
                 return new_full.withColumn("change_type", F.lit("inserted"))
             if keys is None:
@@ -4326,7 +4322,7 @@ class SnapshotTable:
                     f"versions {from_version}->{to_v} involve deletion "
                     "vectors; pass `keys` to classify changes"
                 )
-            old_full = self.read(version=from_version)
+            old_full = self._read(m0)
             if rename_map:
                 # the old snapshot serves its OWN logical names —
                 # translate to the latest ones before aligning, or a
@@ -4441,10 +4437,9 @@ class SnapshotTable:
         entry (or per `col=value` part), with recorded per-file stats
         where the table tracks them.  Pure manifest read — no file
         listing, no Spark job."""
-        v = version if version is not None else self.latest_version()
-        if v is None:
+        m = self._head()[1] if version is None else self.manifest(version)
+        if m is None:
             raise FileNotFoundError(f"no snapshot at {self.root}")
-        m = self.manifest(v)
         out = []
         for e in m["entries"]:
             stats = e.get("stats") or {}
@@ -4470,18 +4465,17 @@ class SnapshotTable:
         real count when a deletion vector masks rows (stale manifest
         arithmetic would overcount) or when an entry predates count
         recording."""
-        v = version if version is not None else self.latest_version()
-        if v is None:
+        m = self._head()[1] if version is None else self.manifest(version)
+        if m is None:
             raise FileNotFoundError(f"no snapshot at {self.root}")
-        m = self.manifest(v)
         if m.get("dv_files"):
-            return self.read(version=v).count()
+            return self._read(m).count()
         total = 0
         for e in m["entries"]:
             rows = e.get("rows")
             units = e["parts"] or [""]
             if rows is None or any(p not in rows for p in units):
-                return self.read(version=v).count()
+                return self._read(m).count()
             total += sum(rows[p] for p in units)
         return total
 
@@ -4548,10 +4542,9 @@ class SnapshotTable:
         statistics — everything from the manifest, zero data read
         (num_rows uses the manifest's per-partition row counts where
         recorded; None means at least one entry predates them)."""
-        v = self.latest_version()
-        if v is None:
+        v, m = self._head()
+        if m is None:
             raise FileNotFoundError(f"no snapshot at {self.root}")
-        m = self.manifest(v)
         counts = [
             sum((e.get("rows") or {}).values()) if e.get("rows") else None
             for e in m["entries"]
@@ -4604,10 +4597,9 @@ class SnapshotTable:
         deletes should compact on a schedule instead (the fraction
         only ratchets up between compactions)."""
         if m is None:
-            v = self.latest_version()
-            if v is None:
+            m = self._head()[1]
+            if m is None:
                 raise FileNotFoundError(f"no snapshot at {self.root}")
-            m = self.manifest(v)
         dvs = m.get("dv_files") or []
         out = {"dv_masked_rows": 0, "dv_bytes": 0, "dv_masked_fraction": 0.0}
         if not dvs:
@@ -4666,10 +4658,9 @@ class SnapshotTable:
             them shrinks the union without rewriting the
             single-entry partitions at all."""
         if m is None:
-            v = self.latest_version()
-            if v is None:
+            m = self._head()[1]
+            if m is None:
                 raise FileNotFoundError(f"no snapshot at {self.root}")
-            m = self.manifest(v)
         entries = m["entries"]
         out: dict = {
             "n_live_entries": len(entries),
@@ -4756,10 +4747,9 @@ class SnapshotTable:
         the rewrite — the round-5 probe measured 160->1 file pruning
         only after clustering, so stats-skipping tables should
         re-cluster on every compact)."""
-        v = self.latest_version()
-        if v is None:
+        m = self._head()[1]  # ONE snapshot decides every trigger
+        if m is None:
             return None
-        m = self.manifest(v)  # ONE snapshot decides every trigger
         frac = self.dv_metrics(m)["dv_masked_fraction"]
         if frac is not None and frac > max_masked_fraction:
             return self.compact(num_files=num_files, **compact_kwargs)
@@ -4852,7 +4842,7 @@ class SnapshotTable:
                 "op": {"name": "restore", "to_version": version},
             }
 
-        return self._commit(build)
+        return self._commit(build, self._head())
 
     def clone_to(self, dest_root: str) -> "SnapshotTable":
         """Zero-copy SHALLOW CLONE (Delta `CREATE TABLE ... SHALLOW
@@ -4869,10 +4859,9 @@ class SnapshotTable:
         are for dev/test forks and experiments, not archival.  The
         schema, partition column, column mapping, and generation
         expressions all carry over."""
-        v = self.latest_version()
-        if v is None:
+        v, m = self._head()
+        if m is None:
             raise FileNotFoundError(f"no snapshot at {self.root}")
-        m = self.manifest(v)
         # a clone re-publishes the source's invariants as its own
         # first manifest — refuse sources with features this engine
         # version cannot carry over faithfully
@@ -4930,7 +4919,7 @@ class SnapshotTable:
                 out["row_tracking"] = m["row_tracking"]
             return out
 
-        dest._commit(build)
+        dest._commit(build, dest._head())
         return dest
 
     # -- maintenance -------------------------------------------------------
@@ -5094,39 +5083,32 @@ def refresh_rollup_snapshot(
     from pixelspark.ops.rollup import day_rollup, merge_rollups
 
     t = SnapshotTable(spark, root)
-    if txn is not None and t._replayed(txn):
+    head = t._head()
+    if txn is not None and t._replayed(head[1], txn):
         return []  # replayed batch: already folded in
     delta = day_rollup(events_batch)
+    days = [r["day"] for r in delta.select("day").distinct().collect()]
 
     def attempt(read_v: int | None, m: dict | None) -> list[str]:
-        if read_v is None:
-            if t.replace_partitions(
-                delta, "day", txn=txn, expected_version=None
-            ) is None:
-                return []
-            m = t.manifest(t.latest_version())
-            return sorted(p for e in m["entries"] for p in e["parts"])
-        days = [r["day"] for r in delta.select("day").distinct().collect()]
-        if not days:
-            # empty batch merges nothing; still record the txn
-            # watermark so a replay with data can't double-count
-            t.replace_partitions(delta, "day", txn=txn,
-                                 expected_version=read_v)
-            return []
-        existing = t.read(version=read_v).where(
-            F.col("day").isin(days)
-        ).drop("avg_value")
-        merged = merge_rollups(existing, delta)
+        # a new table takes the batch as is; so does an empty batch,
+        # which still records its txn watermark so a replay with data
+        # can't double-count
+        merged = delta
+        if m is not None and days:
+            existing = t._read(m).where(
+                F.col("day").isin(days)
+            ).drop("avg_value")
+            merged = merge_rollups(existing, delta)
         # the merge is a read-modify-write on the partial aggregates:
         # pin the commit to the version the partials were read from,
         # else a rival refresh's counts are lost
-        if t.replace_partitions(
-            merged, "day", txn=txn, expected_version=read_v
+        if t._replace_partitions(
+            (read_v, m), merged, "day", txn=txn, expected_version=read_v
         ) is None:
             return []
         return sorted(_part_name("day", d) for d in days)
 
-    return t._pinned("rollup refresh", attempt)
+    return t._pinned("rollup refresh", attempt, head)
 
 
 def read_rollup_snapshot(spark: SparkSession, root: str) -> DataFrame:

@@ -184,36 +184,40 @@ def test_stale_mapping_write_restages_and_retries(spark, tbl, tmp_path):
     terminal conflict, which crashed streaming micro-batches on
     benign metadata commits)."""
     tbl.enable_column_mapping()
-    stale = tbl._current_mapping()
-    tbl.add_columns({"note": "string"})  # the racing DDL
-    real = tbl._current_mapping
-    calls = {"n": 0}
+    rival = SnapshotTable(spark, tbl.root)
+    real_write_snap = tbl._write_snap
+    staged = []
 
-    def once_stale():
-        calls["n"] += 1
-        return stale if calls["n"] == 1 else real()
+    def interloping(df, pcol, **kw):
+        out = real_write_snap(df, pcol, **kw)
+        staged.append(out[0])
+        if len(staged) == 1:
+            # the racing DDL lands after the first attempt staged its
+            # dir under the mapping it read
+            rival.add_columns({"note": "string"})
+        return out
 
-    tbl._current_mapping = once_stale  # one stale read, then fresh
+    tbl._write_snap = interloping
     v = tbl.append(
         spark.createDataFrame([(7, "x", 1.0)], "k long, v string, amt double")
     )
+    del tbl._write_snap
+    assert len(staged) == 2  # the stale attempt re-staged
     assert v == tbl.latest_version()
-    assert {(r["k"], r["v"]) for r in tbl.read().collect()} == {
-        (1, "a"), (2, "b"), (7, "x")
+    assert {(r["k"], r["v"], r["note"]) for r in tbl.read().collect()} == {
+        (1, "a", None), (2, "b", None), (7, "x", None)
     }
     # no stale garbage dir was left behind: every local data dir is
     # referenced by the latest manifest
     m = tbl.manifest(tbl.latest_version())
     live = {e["base"].split("/", 1)[1] for e in m["entries"]}
-    import os
-
+    assert staged[1] in {e["base"] for e in m["entries"]}
     on_disk = set(os.listdir(os.path.join(str(tmp_path / "tbl"), "data")))
     assert on_disk == live
 
     # a writer whose frame no longer matches the CURRENT mapping (a
     # rename raced it) fails with the explicit declare-first error,
     # not a silent mistranslation
-    tbl._current_mapping = real
     tbl.rename_column("v", "label")
     with pytest.raises(Exception) as ei:
         tbl.append(

@@ -118,7 +118,8 @@ def test_replayed_refresh_commits_nothing(spark, pair):
         spark.createDataFrame([("a", 5, 5, 5.0)],
                               "status string, n long, views long, amt double"),
         keys=("status",),
-        txn=(MV._app_id(src, view), src.latest_version()),
+        txn=(MV._app_id(src.root, src.table_id(), MV._txn_map(view)),
+             src.latest_version()),
     )
     assert replay is None
     assert view.latest_version() == v_after
@@ -262,7 +263,7 @@ def test_concurrent_fold_race_is_rejected_by_cas_watermark(spark, pair):
     delta = spark.createDataFrame(
         [("a", 1, 2, 2.0)], "status string, n long, views long, amt double"
     )
-    app = MV._app_id(src, view)
+    app = MV._app_id(src.root, src.table_id(), MV._txn_map(view))
     upd = {c: F.col(f"t.{c}") + F.col(f"s.{c}") for c in ("n", "views", "amt")}
     # B folded (0, v2] believing the watermark was still 0: stale
     with pytest.raises(StaleWatermark):

@@ -283,8 +283,8 @@ def test_legacy_v1_manifest_migrates_to_row_tracking_slot(
     open(mp, "w").write(json.dumps(m))
 
     t = SnapshotTable(spark, str(tmp_path / "t"))
-    assert t._row_tracking_spec()["col"] == "__row_id"
-    assert t._identity_spec() is None  # filtered: system spec
+    assert t._slot_of(t.manifest(v), "row_tracking")["col"] == "__row_id"
+    assert t._slot_of(t.manifest(v), "identity") is None  # filtered: system spec
     t.append(spark.createDataFrame([(2, "b")], "k long, v string"))
     ids = _ids(t)
     assert ids == {1: 1, 2: 2}  # watermark continued, no reuse

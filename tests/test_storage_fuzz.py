@@ -787,11 +787,26 @@ def test_fuzz_catches_seeded_restore_boundary_bug(spark, monkeypatch):
 
     from pixelspark import table as table_mod
 
-    # BUG (deliberate): pretend every manifest carries every slot, so
-    # the boundary refusal in restore() never fires
+    # BUG (deliberate): while restore() runs, pretend every manifest
+    # carries every slot, so its boundary refusal never fires; every
+    # other reader of the slots (the id specs, the watermark CAS)
+    # keeps the real answer
+    real_slot = table_mod.SnapshotTable._slot_of
+    real_restore = table_mod.SnapshotTable.restore
+    restoring = {"on": False}
+
+    def lying_restore(self, version):
+        restoring["on"] = True
+        try:
+            return real_restore(self, version)
+        finally:
+            restoring["on"] = False
+
     monkeypatch.setattr(
         table_mod.SnapshotTable, "_slot_of",
-        staticmethod(lambda m, key: {"col": "__row_id"}))
+        staticmethod(lambda m, key: {"col": "__row_id"} if restoring["on"]
+                     else real_slot(m, key)))
+    monkeypatch.setattr(table_mod.SnapshotTable, "restore", lying_restore)
 
     machine = StorageMachine()
     try:

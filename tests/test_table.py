@@ -124,30 +124,163 @@ def test_crash_before_commit_leaves_table_unchanged(spark, tbl, tmp_path):
     assert [r["k"] for r in tbl.read().collect()] == [1]  # still intact
 
 
-def test_concurrent_commit_rebases(spark, tbl):
-    """Loser of the version race must reload and rebase: two appends
-    'racing' both land, neither overwrites the other's manifest."""
-    tbl.overwrite(_df(spark, [(1, "a")]))
-    # interloper steals version 2 between our read and our publish
-    real_write = tbl.st.write_text_atomic
-    stolen = {"done": False}
+def test_concurrent_commit_rebases(spark, tmp_path):
+    """Loser of the version race must reload and rebase: a commit that
+    tries its create on the head its call resolved, while a rival's v2
+    lands just before that create, lands at v3 on top of the rival —
+    whether it adds data (append), changes metadata (add_columns) or
+    replaces the snapshot (overwrite with a txn) — and v2 stays as the
+    rival wrote it."""
+    cases = {
+        "append": lambda t: t.append(_df(spark, [(2, "b")])),
+        "add_columns": lambda t: t.add_columns({"note": "string"}),
+        "overwrite_txn": lambda t: t.overwrite(_df(spark, [(3, "c")]),
+                                               txn=("app", 1)),
+    }
+    for name, act in cases.items():
+        tbl = SnapshotTable(spark, str(tmp_path / name))
+        tbl.overwrite(_df(spark, [(1, "a")]))
+        rival = {**tbl.manifest(1), "version": 2, "op": {"name": "rival"}}
+        real_write = tbl.st.write_text_atomic
+        stolen = {"done": False}
 
-    def thieving_write(path, content):
-        if not stolen["done"]:
-            stolen["done"] = True
-            m = json.loads(content)
-            # the rival commits its own version-2 manifest first
-            rival = {"partition_col": None, "entries": m["entries"][:1], "version": 2}
-            real_write(tbl._manifest_path(2), json.dumps(rival))
-        return real_write(path, content)
+        def thieving_write(path, content):
+            if not stolen["done"]:
+                stolen["done"] = True
+                # the rival commits its own version-2 manifest first
+                real_write(tbl._manifest_path(2), json.dumps(rival))
+            return real_write(path, content)
 
-    tbl.st.write_text_atomic = thieving_write
-    try:
-        v = tbl.append(_df(spark, [(2, "b")]))
-    finally:
-        tbl.st.write_text_atomic = real_write
-    assert v == 3  # lost v2, rebased onto the rival's manifest
-    assert tbl.read().count() == 2
+        tbl.st.write_text_atomic = thieving_write
+        try:
+            v = act(tbl)
+        finally:
+            tbl.st.write_text_atomic = real_write
+        assert v == 3, name  # lost v2, rebased onto the rival's manifest
+        assert tbl.manifest(2) == rival, name
+        rows = sorted((r["k"], r["v"]) for r in tbl.read().collect())
+        if name == "append":
+            assert rows == [(1, "a"), (2, "b")]
+        elif name == "add_columns":
+            assert rows == [(1, "a")]
+            assert tbl.read().columns == ["k", "v", "note"]
+            assert tbl.manifest(3)["entries"] == rival["entries"]
+        else:
+            assert rows == [(3, "c")]
+            assert tbl.manifest(3)["txn"] == {"app": 1}
+
+
+@pytest.mark.parametrize("verb", ["append", "append_once", "dv merge"])
+def test_write_lands_above_head_vacuumed_during_it(spark, tmp_path,
+                                                   monkeypatch, verb):
+    """A vacuum may run beside in-flight writers (`min_age_hours`
+    protects their staged dirs).  If rivals commit two versions while
+    a write is staging and a vacuum then prunes every manifest but the
+    newest — the write's own head included — the write's create of
+    head+1 finds that file absent.  It must not publish there, below
+    the real head where no reader would ever see it: it lands above
+    the rivals' head, its rows are read back, and an `append_once`
+    batch is recorded (its replay is refused)."""
+    root = str(tmp_path / "t")
+    t = SnapshotTable(spark, root)
+    t.overwrite(_df(spark, [(1, "a")]))
+    acts = {
+        "append": lambda: t.append(_df(spark, [(2, "b")])),
+        "append_once": lambda: t.append_once(_df(spark, [(2, "b")]), "app", 1),
+        "dv merge": lambda: t.merge(_df(spark, [(1, "z"), (2, "b")]),
+                                    keys=("k",), mode="dv"),
+    }
+    real_write_snap = SnapshotTable._write_snap
+    fired = {"done": False}
+
+    def interloping(self, *a, **kw):
+        out = real_write_snap(self, *a, **kw)
+        if not fired["done"]:  # our data is staged; the head we hold is v1
+            fired["done"] = True
+            rival = SnapshotTable(spark, root)
+            rival.append(_df(spark, [(98, "r")]))
+            rival.append(_df(spark, [(99, "r")]))
+            rival.vacuum(keep_versions=1, min_age_hours=1)
+        return out
+
+    monkeypatch.setattr(SnapshotTable, "_write_snap", interloping)
+    v = acts[verb]()
+    monkeypatch.undo()
+    assert fired["done"]
+    assert t.versions() == [3, 4] and v == 4 == t.latest_version()
+    got = {r["k"]: r["v"] for r in t.read().collect()}
+    assert got == {1: "z" if verb == "dv merge" else "a", 2: "b",
+                   98: "r", 99: "r"}
+    if verb == "append_once":
+        assert t.append_once(_df(spark, [(2, "b")]), "app", 1) is None
+        assert t.latest_version() == 4
+
+
+def _count_metadata_calls(tables):
+    """Wrap each table's storage so manifest reads and `_manifests/`
+    listings are counted; returns the live counter."""
+    n = {"reads": 0, "lists": 0}
+    for t in tables:
+        st = t.st
+        read_text, listing = st.read_text, st.list
+
+        def counted_read(path, _f=read_text):
+            n["reads"] += "/_manifests/" in path
+            return _f(path)
+
+        def counted_list(path, _f=listing):
+            n["lists"] += path.rstrip("/").endswith("/_manifests")
+            return _f(path)
+
+        st.read_text, st.list = counted_read, counted_list
+    return n
+
+
+def test_commit_metadata_cost_is_flat_in_table_age(spark, tmp_path):
+    """Each public write resolves the table head once and hands it down:
+    `append`, a fresh and a replayed `append_once`, a dv `merge` and a
+    rewrite `delete` each cost one manifest read and one `_manifests/`
+    listing, a matview refresh at most five reads — and every count is
+    the same on a 1-version table as on a 200-version one."""
+    from pixelspark.ops import matview as MV
+
+    def costs(name, versions):
+        t = SnapshotTable(spark, str(tmp_path / name))
+        t.overwrite(_df(spark, [(1, "a"), (2, "b")]))
+        m1 = t.manifest(1)
+        for v in range(2, versions + 1):  # age the log: metadata-only versions
+            t.st.write_text_atomic(t._manifest_path(v),
+                                   json.dumps({**m1, "version": v}))
+        assert t.latest_version() == versions
+        view = SnapshotTable(spark, str(tmp_path / f"{name}_view"))
+        MV.refresh_agg_view(t, view, group_by=("v",), src_keys=("k",))
+        n = _count_metadata_calls([t, view])
+        ops = {
+            "append": lambda: t.append(_df(spark, [(3, "c")])),
+            "append_once": lambda: t.append_once(_df(spark, [(4, "d")]), "app", 1),
+            "append_once replay": lambda: t.append_once(
+                _df(spark, [(4, "d")]), "app", 1),
+            "dv merge": lambda: t.merge(_df(spark, [(1, "z")]), keys=("k",),
+                                        mode="dv"),
+            "delete": lambda: t.delete("k = 2"),
+            "refresh": lambda: MV.refresh_agg_view(
+                t, view, group_by=("v",), src_keys=("k",)),
+        }
+        out = {}
+        for op, act in ops.items():
+            n["reads"] = n["lists"] = 0
+            act()
+            out[op] = (n["reads"], n["lists"])
+        assert sorted((r["k"], r["v"]) for r in t.read().collect()) == [
+            (1, "z"), (3, "c"), (4, "d")]
+        return out
+
+    fresh, aged = costs("fresh", 1), costs("aged", 200)
+    for op in ("append", "append_once", "append_once replay", "dv merge",
+               "delete"):
+        assert fresh[op] == (1, 1), (op, fresh[op])
+    assert fresh["refresh"][0] <= 5, fresh["refresh"]
+    assert aged == fresh
 
 
 def test_commit_race_exhaustion_raises(spark, tbl):
