@@ -5,8 +5,8 @@ catalog plays for those formats; the reference addresses BigQuery
 tables by dataset.name the same way).
 
 Design: the catalog is itself a tiny versioned log of immutable JSON
-documents (`_catalog/<version>.json`) published with the same atomic
-no-overwrite `write_text_atomic` discipline as table manifests, so
+documents (`_catalog/<version>.json`), a `VersionLog` like the table
+manifests, published by the same create-if-absent, so
 every catalog edit is an optimistic-concurrency CAS commit: rival
 edits serialize on the version file, the loser re-reads the winner's
 state and retries its edit against it (and a `create_table` whose
@@ -42,8 +42,13 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pixelspark.storage import Storage, storage_for
+from pixelspark.storage import Storage, VersionLog, storage_for
 from pixelspark.table import SnapshotTable
+
+
+def catalog_log(st: Storage, root: str) -> VersionLog:
+    """A catalog's version log: `<root>/_catalog/%010d.json`."""
+    return VersionLog(st, f"{root}/_catalog", "", 10, ".json")
 
 
 class TableNotFound(KeyError):
@@ -106,34 +111,29 @@ def _overlaps(a: str, b: str) -> bool:
 
 
 class Catalog:
-    def __init__(self, spark: SparkSession, root: str, max_retries: int = 5):
+    def __init__(self, spark: SparkSession | None, root: str,
+                 max_retries: int = 5):
+        """`spark` may be None for a local root: such a handle serves
+        the reads that touch only the catalog log (`describe`,
+        `list_tables`), as the data source's driver side does."""
         self.spark = spark
         self.root = root.rstrip("/")
         self.st: Storage = storage_for(self.root, spark)
         self.max_retries = max_retries
 
-    # -- the versioned-log plumbing (same shape as SnapshotTable) --------
+    # -- the versioned log (same shape as SnapshotTable's manifests) -----
+    # `_catalog/%010d.json` through the shared `VersionLog`: the same
+    # listing, create-if-absent and retention rule as the table log.
 
     @property
-    def _dir(self) -> str:
-        return f"{self.root}/_catalog"
+    def _log(self) -> VersionLog:
+        return catalog_log(self.st, self.root)
 
     def versions(self) -> list[int]:
-        out = []
-        for name in self.st.list(self._dir):
-            if name.endswith(".json"):
-                try:
-                    out.append(int(name[: -len(".json")]))
-                except ValueError:
-                    continue
-        return sorted(out)
+        return self._log.versions()
 
     def latest_version(self) -> int | None:
-        vs = self.versions()
-        return vs[-1] if vs else None
-
-    def _path(self, version: int) -> str:
-        return f"{self._dir}/{version:010d}.json"
+        return self._log.latest()
 
     def _state(self, version: int | None = None) -> dict:
         """{"version": n, "tables": {name: entry}} — the empty catalog
@@ -145,7 +145,7 @@ class Catalog:
         if v is None:
             return {"version": None, "tables": {}}
         try:
-            return json.loads(self.st.read_text(self._path(v)))
+            return self._log.read(v)
         except (OSError, FileNotFoundError):
             vs = self.versions()
             if version is not None and vs and version < vs[0]:
@@ -172,13 +172,10 @@ class Catalog:
                 # pins): don't grow the log with an identical version
                 return state["version"]
             next_v = 0 if state["version"] is None else state["version"] + 1
-            self.st.mkdirs(self._dir)
-            if self.st.write_text_atomic(
-                self._path(next_v),
-                json.dumps({"version": next_v, "tables": tables,
-                            "committed_at": time.time()},
-                           sort_keys=True),
-            ):
+            if self._log.create(next_v, json.dumps(
+                {"version": next_v, "tables": tables,
+                 "committed_at": time.time()}, sort_keys=True,
+            )):
                 return next_v
         raise CatalogCommitError(
             f"catalog edit lost the commit race {self.max_retries} times "
@@ -611,73 +608,17 @@ class Catalog:
         (nothing is published yet) or the pin hasn't advanced past
         the cursor.
 
-        Cursor durability: ack writes a NEW versioned file
-        `<cursor_path>.v<pin>` (put-if-absent, so it lands whole or
-        not at all) and only then garbage-collects superseded ones —
-        readers take the max, so a crash at ANY point leaves either
-        the old cursor (one window re-delivered) or the new one,
-        never a missing cursor that would reset to version 0 and
-        re-deliver the whole published history.  A plain legacy
-        `<cursor_path>` file from older acks is still honored."""
+        The cursor is `poll_changes`' own (one protocol,
+        `SnapshotTable._poll`): ack creates `<cursor_path>.v<pin>`
+        put-if-absent and only then deletes the older entries, so a
+        crash at any point leaves the old cursor or the new one and
+        never resets to version 0; a single-file `<cursor_path>` from
+        older acks is still honoured; a cursor below the table's
+        vacuum retention raises FileNotFoundError."""
         entry = self.describe(name)
-        pin = entry.get("pin")
-        st = storage_for(cursor_path, self.spark)
-        last = max(
-            (v for _, v in self._cursor_files(st, cursor_path)), default=0
-        )
-        if st.exists(cursor_path):  # legacy single-file cursor
-            last = max(last, json.loads(st.read_text(cursor_path))["version"])
-        if pin is None or pin <= last:
+        if entry.get("pin") is None:
             return None, (lambda: None)
-        t = self._open(entry)
-        if last and last not in t.versions():
-            # the cursor names a TABLE version the table's own
-            # vacuum() has retired — the in-between changes are gone,
-            # so an incremental window would silently lie.  Refuse
-            # with the catch-up path (Delta CDF retention stance).
-            raise FileNotFoundError(
-                f"publication cursor at {cursor_path} points at table "
-                f"version {last} of {name!r}, which predates the table's "
-                "vacuum retention — incremental changes are no longer "
-                "reconstructable.  Catch up by reprocessing a full read "
-                "at the current pin, then delete the cursor files so the "
-                "next poll restarts from it"
-            )
-
-        def ack() -> None:
-            # put-if-absent at a version-unique name: the commit
-            # point is this single creation, nothing to rename or
-            # delete first (re-acking the same pin is a no-op)
-            st.write_text_atomic(
-                f"{cursor_path}.v{pin}", json.dumps({"version": pin})
-            )
-            for path, v in self._cursor_files(st, cursor_path):
-                if v < pin:
-                    try:
-                        st.delete(path)
-                    except OSError:
-                        pass  # GC is best-effort; max() ignores strays
-            if st.exists(cursor_path):
-                try:
-                    st.delete(cursor_path)  # retire the legacy file
-                except OSError:
-                    pass
-
-        return t.read_changes(last, pin, keys=keys), ack
-
-    @staticmethod
-    def _cursor_files(st, cursor_path: str) -> list[tuple[str, int]]:
-        """(path, version) of every `<cursor_path>.v<N>` ack file."""
-        parent, base = posixpath.split(cursor_path.rstrip("/"))
-        out = []
-        for fname in st.list(parent or "."):
-            if fname.startswith(f"{base}.v"):
-                try:
-                    out.append((f"{parent}/{fname}" if parent else fname,
-                                int(fname[len(base) + 2:])))
-                except ValueError:
-                    continue
-        return out
+        return self._open(entry)._poll(cursor_path, entry["pin"], keys)
 
     def detail(self) -> dict:
         """DESCRIBE CATALOG: one catalog-state read plus one manifest
@@ -736,39 +677,13 @@ class Catalog:
         state only — the cursor's lifetime is bounded by the TABLE's
         CDF retention (`SnapshotTable.vacuum` on the bound table),
         not by this log.  `now` injects the clock for tests."""
-        vs = self.versions()
-        if not vs:
-            return []
-        keep = set(vs[-max(1, keep_versions):])
-        if keep_hours is not None:
-            cutoff = (time.time() if now is None else now) - keep_hours * 3600.0
-            for v in vs:
-                if v in keep:
-                    continue  # already protected: skip the read
-                try:
-                    committed = self._state(v).get("committed_at") or 0
-                except (OSError, FileNotFoundError):
-                    continue  # a racing vacuum already pruned it
-                if committed >= cutoff:
-                    keep.add(v)
+        log = self._log
+        vs = log.versions()
+        keep = log.retained(vs, keep_versions, keep_hours, now)
         removed = [v for v in vs if v not in keep]
         if not dry_run:
-            for v in removed:
-                try:
-                    self.st.delete(self._path(v))
-                except OSError:
-                    pass  # a racing vacuum already pruned it
-            # publication tmp files orphaned by a committer crash —
-            # AGE-GATED (the Delta tmp-GC rule): a fresh tmp may be a
-            # LIVE committer's staged write mid-link; reaping it would
-            # crash that commit.  Tmp files live milliseconds, so an
-            # hour-old one is an orphan; unknown age keeps.
-            cutoff = (time.time() if now is None else now) - 3600.0
-            for name in self.st.list(self._dir):
-                if ".tmp-" in name:
-                    mt = self.st.mtime(f"{self._dir}/{name}")
-                    if mt is not None and mt <= cutoff:
-                        self.st.delete(f"{self._dir}/{name}")
+            log.drop(removed)
+            log.sweep(now)
         return removed
 
     def maintain(

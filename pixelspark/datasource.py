@@ -88,12 +88,15 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from pixelspark.catalog import Catalog
 from pixelspark.storage import storage_for
 from pixelspark.table import (
     DATA_DIR,
-    MANIFEST_DIR,
     READER_FEATURES,
+    _part_split,
     check_reader_features,
+    entry_refs,
+    manifest_log,
 )
 
 FORMAT_NAME = "snapshot_table"
@@ -101,58 +104,17 @@ _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 # -- driver-side manifest access (no SparkSession needed) -------------------
+# The readers list and read the table's manifest log and the catalog's
+# log through the writers' own `VersionLog`s (`manifest_log`, and
+# `Catalog.describe` over `catalog_log`) on the backend `storage_for`
+# picks for a session-less caller, so the version-file format lives in
+# one place.
+
+_WHO = "snapshot_table data source"
 
 
-def _versions(root: str) -> list[int]:
-    st = storage_for(root)
-    out = []
-    for name in st.list(f"{root}/{MANIFEST_DIR}"):
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                out.append(int(name[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _catalog_entry(cat_root: str, name: str) -> dict:
-    """Resolve a catalog binding driver-side (no SparkSession): the
-    latest `_catalog/<v>.json` holds the whole name→entry map, so one
-    listing + one read answers both the location and the pin."""
-    cat_root = cat_root.rstrip("/")
-    st = storage_for(cat_root)
-    vs = []
-    for f in st.list(f"{cat_root}/_catalog"):
-        if f.endswith(".json"):
-            try:
-                vs.append(int(f[: -len(".json")]))
-            except ValueError:
-                continue
-    if not vs:
-        raise FileNotFoundError(f"no catalog at {cat_root}")
-    state = json.loads(
-        st.read_text(f"{cat_root}/_catalog/{max(vs):010d}.json")
-    )
-    entry = state["tables"].get(name)
-    if entry is None:
-        raise KeyError(f"table {name!r} not in catalog at {cat_root}")
-    return entry
-
-
-def _manifest(root: str, version: int) -> dict:
-    st = storage_for(root)
-    m = json.loads(st.read_text(f"{root}/{MANIFEST_DIR}/v{version:08d}.json"))
-    check_reader_features(m, READER_FEATURES, "snapshot_table data source")
-    return m
-
-
-def _refs(root: str, m: dict) -> set[tuple[str, str, str | None]]:
-    """(owning root, data dir rel, `col=value` part or None) units."""
-    return {
-        (e.get("root") or root, e["base"], p)
-        for e in m["entries"]
-        for p in (e["parts"] or [None])
-    }
+def _pin(cat_root: str, name: str) -> int | None:
+    return Catalog(None, cat_root).describe(name).get("pin")
 
 
 def _after_data(rel_or_path: str) -> str:
@@ -231,8 +193,9 @@ def _make_refs(
             for f, rows in dv_rows.items()
             if f.startswith(prefix + "/")
         } or None
-        pcol, pval = (None, None) if p is None else tuple(p.split("=", 1))
-        out.append(_Ref(path, pcol, pval, phys, dv))
+        pcol, pval = (None, None) if p is None else _part_split(p)
+        out.append(_Ref(path, pcol, None if pval == _HIVE_NULL else pval,
+                        phys, dv))
     return out
 
 
@@ -252,7 +215,7 @@ def _partition_scalar(pval: str | None, field):
         StringType,
     )
 
-    if pval is None or pval == _HIVE_NULL:
+    if pval is None:
         return None
     dt = field.dataType
     if isinstance(dt, StringType):
@@ -328,12 +291,14 @@ class _SnapshotBatchReader(DataSourceReader):
         self.version = version
 
     def partitions(self) -> Sequence[InputPartition]:
-        vs = _versions(self.root)
-        if not vs:
+        log = manifest_log(storage_for(self.root), self.root)
+        v = self.version if self.version is not None else log.latest()
+        if v is None:
             return []
-        m = _manifest(self.root, self.version if self.version is not None else vs[-1])
+        m = log.read(v)
+        check_reader_features(m, READER_FEATURES, _WHO)
         return _make_refs(
-            self.root, _refs(self.root, m), m, _dv_rows(self.root, m)
+            self.root, entry_refs(self.root, m), m, _dv_rows(self.root, m)
         )
 
     def read(self, partition: _Ref) -> Iterator:
@@ -350,6 +315,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
     ):
         self.root = root
         self._schema = schema
+        self.log = manifest_log(storage_for(root), root)
         # (catalog root, binding name) when the stream is
         # publication-gated: latestOffset re-resolves the pin each
         # poll and never plans past it
@@ -361,8 +327,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         if sv is None:
             self.starting = 0  # from before the table existed
         elif str(sv).lower() == "latest":
-            vs = _versions(root)
-            self.starting = vs[-1] if vs else 0
+            self.starting = self.log.latest() or 0
         else:
             self.starting = int(sv)
         # admission control (Delta maxFilesPerTrigger analog): bound
@@ -517,11 +482,9 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         os.replace(tmp, self._pace_file)  # atomic: never half-written
 
     def latestOffset(self) -> dict:
-        vs = _versions(self.root)
-        head = vs[-1] if vs else 0
+        head = self.log.latest() or 0
         if self.pin_source is not None:
-            pin = _catalog_entry(*self.pin_source).get("pin")
-            head = min(head, pin if pin is not None else 0)
+            head = min(head, _pin(*self.pin_source) or 0)
         if self.max_versions is None:
             return {"version": head}
         cur = self._cursor if self._cursor is not None else self.starting
@@ -542,9 +505,11 @@ class _SnapshotStreamReader(DataSourceStreamReader):
             self._cursor = max(self._cursor or 0, v0, v1)
         if v1 <= v0:
             return []
-        m1 = _manifest(self.root, v1)
-        m0 = _manifest(self.root, v0) if v0 else {"entries": []}
-        r0, r1 = _refs(self.root, m0), _refs(self.root, m1)
+        m1 = self.log.read(v1)
+        m0 = self.log.read(v0) if v0 else {"entries": []}
+        for m in (m0, m1):
+            check_reader_features(m, READER_FEATURES, _WHO)
+        r0, r1 = entry_refs(self.root, m0), entry_refs(self.root, m1)
         removed = r0 - r1
         if removed and self.on_change == "fail":
             raise RuntimeError(
@@ -649,7 +614,7 @@ class SnapshotTableDataSource(DataSource):
                 raise ValueError(
                     "pass either a path or catalog+name, not both"
                 )
-            return _catalog_entry(*binding)["root"].rstrip("/")
+            return Catalog(None, binding[0]).describe(binding[1])["root"].rstrip("/")
         root = self.options.get("path")
         if not root:
             raise ValueError("snapshot_table needs a path: .load(<table root>)")
@@ -657,10 +622,12 @@ class SnapshotTableDataSource(DataSource):
 
     def schema(self) -> StructType:
         root = self._root()
-        vs = _versions(root)
-        if not vs:
+        log = manifest_log(storage_for(root), root)
+        v = log.latest()
+        if v is None:
             raise FileNotFoundError(f"no snapshot at {root}")
-        m = _manifest(root, vs[-1])
+        m = log.read(v)
+        check_reader_features(m, READER_FEATURES, _WHO)
         if m.get("schema") is None:
             raise ValueError(f"snapshot at {root} predates schema recording")
         return StructType.fromJson(json.loads(m["schema"]))
@@ -668,7 +635,7 @@ class SnapshotTableDataSource(DataSource):
     def reader(self, schema: StructType) -> DataSourceReader:
         v = self.options.get("version")
         if v is None and self._published():
-            pin = _catalog_entry(*self._binding()).get("pin")
+            pin = _pin(*self._binding())
             if pin is None:
                 raise ValueError(
                     "published=true batch read of an UNPINNED binding — "

@@ -344,7 +344,8 @@ def _fold_loop(src: SnapshotTable, view: SnapshotTable,
         _check_rewind(src, view, from_v, to_v)
         if from_v == to_v:
             return None  # already current
-        changes = src.read_changes(from_v, to_v, keys=src_keys, preimages=True)
+        changes = src._read_changes((to_v, sm), from_v, keys=src_keys,
+                                    preimages=True)
         try:
             return body(changes, sm, (app, to_v, from_v))
         except StaleWatermark:

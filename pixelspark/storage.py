@@ -32,8 +32,10 @@ scheme.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import time
 import uuid
 
 from pyspark.sql import SparkSession
@@ -58,13 +60,6 @@ class Storage:
 
     def delete(self, path: str) -> None:
         """Recursive delete; no-op if missing."""
-        raise NotImplementedError
-
-    def rename(self, src: str, dst: str) -> None:
-        """Move a directory. Atomic on POSIX/HDFS; copy+delete on s3a."""
-        raise NotImplementedError
-
-    def mkdirs(self, path: str) -> None:
         raise NotImplementedError
 
     def has_parquet(self, path: str) -> bool:
@@ -123,16 +118,6 @@ class LocalStorage(Storage):
             shutil.rmtree(path, ignore_errors=True)
         elif os.path.exists(path):
             os.remove(path)
-
-    def rename(self, src: str, dst: str) -> None:
-        src, dst = _strip_file_scheme(src), _strip_file_scheme(dst)
-        parent = os.path.dirname(dst.rstrip("/"))
-        if parent:  # bare relative dst has no parent to create
-            os.makedirs(parent, exist_ok=True)
-        os.rename(src, dst)
-
-    def mkdirs(self, path: str) -> None:
-        os.makedirs(_strip_file_scheme(path), exist_ok=True)
 
     def has_parquet(self, path: str) -> bool:
         path = _strip_file_scheme(path)
@@ -203,17 +188,6 @@ class HadoopStorage(Storage):
         fs, p = self._fs(path), self._path(path)
         if fs.exists(p):
             fs.delete(p, True)
-
-    def rename(self, src: str, dst: str) -> None:
-        fs, s, d = self._fs(src), self._path(src), self._path(dst)
-        parent = d.getParent()
-        if parent is not None and not fs.exists(parent):
-            fs.mkdirs(parent)
-        if not fs.rename(s, d):
-            raise OSError(f"rename failed: {src} -> {dst}")
-
-    def mkdirs(self, path: str) -> None:
-        self._fs(path).mkdirs(self._path(path))
 
     def has_parquet(self, path: str) -> bool:
         fs, p = self._fs(path), self._path(path)
@@ -310,12 +284,6 @@ class ConditionalPutStorage(Storage):
     def delete(self, path: str) -> None:
         self.inner.delete(path)
 
-    def rename(self, src: str, dst: str) -> None:
-        self.inner.rename(src, dst)
-
-    def mkdirs(self, path: str) -> None:
-        self.inner.mkdirs(path)
-
     def has_parquet(self, path: str) -> bool:
         return self.inner.has_parquet(path)
 
@@ -341,6 +309,100 @@ def storage_for(path: str, spark: SparkSession | None = None) -> Storage:
             f"path scheme '{scheme}' needs the Hadoop FileSystem backend; pass a SparkSession"
         )
     return HadoopStorage(spark)
+
+
+# ---------------------------------------------------------------------------
+# Version logs
+# ---------------------------------------------------------------------------
+
+
+class VersionLog:
+    """A directory of immutable version files `<prefix><N><suffix>`, N
+    zero-padded to `width` digits — the one file format behind the
+    table manifest log, the catalog log and the change-feed cursors.
+    A version is published by create-if-absent (`write_text_atomic`),
+    so two writers racing for N resolve to one winner.  Every call goes
+    through `Storage`, never `os`, so any backend (and any wrapper
+    around one) sees the log's whole traffic.  `dir=""` addresses bare
+    relative names in the working directory."""
+
+    def __init__(self, st: Storage, dir: str, prefix: str = "",
+                 width: int = 0, suffix: str = "") -> None:
+        self.st, self.dir = st, dir
+        self.prefix, self.width, self.suffix = prefix, width, suffix
+
+    def _at(self, name: str) -> str:
+        return f"{self.dir}/{name}" if self.dir else name
+
+    def path(self, v: int) -> str:
+        return self._at(f"{self.prefix}{str(v).zfill(self.width)}{self.suffix}")
+
+    def _parse(self, name: str) -> int | None:
+        if not (name.startswith(self.prefix) and name.endswith(self.suffix)):
+            return None
+        try:
+            return int(name[len(self.prefix):len(name) - len(self.suffix)])
+        except ValueError:
+            return None  # a temp file or a foreign name sharing the prefix
+
+    def versions(self) -> list[int]:
+        """Every published version, ascending: one listing."""
+        vs = (self._parse(n) for n in self.st.list(self.dir or "."))
+        return sorted(v for v in vs if v is not None)
+
+    def latest(self) -> int | None:
+        vs = self.versions()
+        return vs[-1] if vs else None
+
+    def read(self, v: int) -> dict:
+        return json.loads(self.st.read_text(self.path(v)))
+
+    def exists(self, v: int) -> bool:
+        return self.st.exists(self.path(v))
+
+    def create(self, v: int, text: str) -> bool:
+        """Publish version `v` as `text`; False when it already exists."""
+        return self.st.write_text_atomic(self.path(v), text)
+
+    def retained(self, vs: list[int], keep_versions: int,
+                 keep_hours: float | None = None,
+                 now: float | None = None) -> set[int]:
+        """The retention rule, over the listing `vs`: the
+        `max(1, keep_versions)` newest versions plus every version
+        whose `committed_at` lies within the trailing `keep_hours`
+        (a version without the field counts as out of the window)."""
+        keep = set(vs[-max(1, keep_versions):])
+        if keep_hours is not None:
+            cutoff = (time.time() if now is None else now) - keep_hours * 3600.0
+            for v in vs:
+                if v in keep:
+                    continue  # already kept: skip the read
+                try:
+                    if (self.read(v).get("committed_at") or 0) >= cutoff:
+                        keep.add(v)
+                except OSError:
+                    continue  # a racing prune already removed it
+        return keep
+
+    def drop(self, versions) -> None:
+        """Delete the given versions, best effort (a racing prune may
+        have removed one already)."""
+        for v in versions:
+            try:
+                self.st.delete(self.path(v))
+            except OSError:
+                pass
+
+    def sweep(self, now: float | None = None) -> None:
+        """Delete the hour-old `.tmp-` files a crashed publisher left in
+        the log's own directory.  Age-gated: a fresh one may be a live
+        publisher's staged write, and one whose age the backend cannot
+        report is kept."""
+        cutoff = (time.time() if now is None else now) - 3600.0
+        for name in self.st.list(self.dir or "."):
+            mt = self.st.mtime(self._at(name)) if ".tmp-" in name else None
+            if mt is not None and mt <= cutoff:
+                self.st.delete(self._at(name))
 
 
 # ---------------------------------------------------------------------------

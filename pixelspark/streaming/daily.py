@@ -94,6 +94,20 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str = "complete"):
     return q
 
 
+def _run_once(df: DataFrame, fn, checkpoint: str, mode: str):
+    """One availableNow run of `df` through the foreachBatch sink `fn`
+    under `checkpoint`; returns the finished StreamingQuery."""
+    q = (
+        df.writeStream.foreachBatch(fn)
+        .outputMode(mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
 def run_snapshot_append_sink(
     df: DataFrame, root: str, checkpoint: str, app_id: str = "pixelspark-stream",
     table_kwargs: dict | None = None,
@@ -120,15 +134,7 @@ def run_snapshot_append_sink(
             batch_df.sparkSession, root, **(table_kwargs or {})
         ).append_once(batch_df, app_id, batch_id)
 
-    q = (
-        df.writeStream.foreachBatch(commit)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_once(df, commit, checkpoint, "append")
 
 
 def run_snapshot_rollup_sink(
@@ -151,15 +157,7 @@ def run_snapshot_rollup_sink(
             batch_df.sparkSession, root, batch_df, txn=(app_id, batch_id)
         )
 
-    q = (
-        events.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_once(events, fold, checkpoint, "append")
 
 
 def run_upsert_sink(df: DataFrame, table_path: str, checkpoint: str):
@@ -176,15 +174,7 @@ def run_upsert_sink(df: DataFrame, table_path: str, checkpoint: str):
             batch_df, keys=("shop", "billing_date")
         )
 
-    q = (
-        df.writeStream.foreachBatch(merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_once(df, merge, checkpoint, "update")
 
 
 def enrich_stream_with_shops(events: DataFrame, shops: DataFrame) -> DataFrame:
@@ -363,15 +353,7 @@ def run_fanout_sink(
         finally:
             batch_df.unpersist()
 
-    q = (
-        df.writeStream.foreachBatch(fanout)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_once(df, fanout, checkpoint, "update")
 
 
 def run_snapshot_cdc_sink(
@@ -433,15 +415,7 @@ def run_snapshot_cdc_sink(
             validate_keys=False,
         )
 
-    q = (
-        changes.writeStream.foreachBatch(commit)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_once(changes, commit, checkpoint, "append")
 
 
 def run_vector_index_sink(
@@ -464,15 +438,7 @@ def run_vector_index_sink(
             batch_df, batch_id=batch_id, app_id=app_id
         )
 
-    q = (
-        emb_stream.writeStream.foreachBatch(commit)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_once(emb_stream, commit, checkpoint, "append")
 
 
 def run_curation_sink(
@@ -559,15 +525,7 @@ def run_curation_sink(
         final = kept.join(dup_ids, id_col, "left_anti")
         SnapshotTable(sp, table_root).append_once(final, app_id, batch_id)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(commit)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_once(docs_stream, commit, checkpoint, "append")
 
 
 def run_matview_sink(
@@ -606,15 +564,7 @@ def run_matview_sink(
         src.append_once(batch_df, app_id, batch_id)
         refresh_agg_view(src, view, group_by=group_by, sum_cols=sum_cols)
 
-    q = (
-        rows.writeStream.foreachBatch(commit)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_once(rows, commit, checkpoint, "append")
 
 
 def run_published_matview_sink(
@@ -682,15 +632,7 @@ def run_published_matview_sink(
                 view_name: view_v},
         )
 
-    q = (
-        rows.writeStream.foreachBatch(commit)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_once(rows, commit, checkpoint, "append")
 
 
 def run_join_matview_sink(
@@ -738,15 +680,7 @@ def run_join_matview_sink(
             how=how,
         )
 
-    q = (
-        rows.writeStream.foreachBatch(commit)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_once(rows, commit, checkpoint, "append")
 
 
 def run_topn_matview_sink(
@@ -787,12 +721,4 @@ def run_topn_matview_sink(
             descending=descending, payload=payload, src_keys=src_keys,
         )
 
-    q = (
-        rows.writeStream.foreachBatch(commit)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_once(rows, commit, checkpoint, "append")

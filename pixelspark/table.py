@@ -17,8 +17,9 @@ minimal manifest log — the one table format every production write
     live data ever happens on the write path.
   * A commit is the publication of ONE new small manifest file that
     lists which data directories (and, for partitioned tables, which
-    `col=value` subdirectories) make up the snapshot.  Publication
-    goes through `Storage.write_text_atomic`: temp + hard-link on
+    `col=value` subdirectories) make up the snapshot.  The manifests
+    are a `storage.VersionLog` (`manifest_log`), and publication is its
+    create-if-absent, `Storage.write_text_atomic`: temp + hard-link on
     POSIX, temp + rename on HDFS, single-object copy on stores — a
     reader sees the complete manifest or none.
   * A crash at ANY point before the manifest lands leaves the table
@@ -70,6 +71,7 @@ from __future__ import annotations
 import base64
 import json
 import os
+import posixpath
 import re
 import time
 import uuid
@@ -85,12 +87,30 @@ from pixelspark.metrics import observed_long
 from pixelspark.storage import (
     NON_ATOMIC_CREATE_SCHEMES,
     Storage,
+    VersionLog,
     _strip_file_scheme,
     storage_for,
 )
 
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
+
+
+def manifest_log(st: Storage, root: str) -> VersionLog:
+    """A table's manifest log: `<root>/_manifests/v%08d.json`."""
+    return VersionLog(st, f"{root}/{MANIFEST_DIR}", "v", 8, ".json")
+
+
+def entry_refs(root: str, m: dict) -> set[tuple[str, str, str | None]]:
+    """A manifest's storage units as (owning root, data dir rel,
+    `col=value` part or None): a clone entry is owned by its source
+    table's root, every other entry by `root`."""
+    return {
+        (e.get("root") or root, e["base"], p)
+        for e in m["entries"]
+        for p in (e["parts"] or [None])
+    }
+
 
 # Sentinel for "no conflict check": expected_version=None is meaningful
 # (it asserts the table does not exist yet), so absence needs its own
@@ -129,11 +149,14 @@ def _part_name(col: str, value) -> str:
     return f"{esc(col)}={esc(v) if v else '__HIVE_DEFAULT_PARTITION__'}"
 
 
-def _part_value(name: str) -> str:
-    """The value string of a `col=value` part name, unescaped (Spark's
-    unescapePathName)."""
-    return re.sub(r"%([0-9A-Fa-f]{2})", lambda g: chr(int(g[1], 16)),
-                  name.split("=", 1)[1])
+def _part_split(name: str) -> tuple[str, str]:
+    """The (column, value) strings of a `col=value` part name, both
+    unescaped (Spark's unescapePathName); NULL stays
+    `__HIVE_DEFAULT_PARTITION__`."""
+    col, val = name.split("=", 1)
+    def unesc(s: str) -> str:
+        return re.sub(r"%([0-9A-Fa-f]{2})", lambda g: chr(int(g[1], 16)), s)
+    return unesc(col), unesc(val)
 
 
 def entry_layout(e: dict) -> str | None:
@@ -682,18 +705,16 @@ class SnapshotTable:
 
     # -- manifest log ------------------------------------------------------
 
+    @property
+    def _log(self) -> VersionLog:
+        # built per use: tests and wrappers swap `self.st` on a live handle
+        return manifest_log(self.st, self.root)
+
     def _manifest_path(self, version: int) -> str:
-        return f"{self.root}/{MANIFEST_DIR}/v{version:08d}.json"
+        return self._log.path(version)
 
     def versions(self) -> list[int]:
-        out = []
-        for name in self.st.list(f"{self.root}/{MANIFEST_DIR}"):
-            if name.startswith("v") and name.endswith(".json"):
-                try:
-                    out.append(int(name[1:-5]))
-                except ValueError:
-                    continue
-        return sorted(out)
+        return self._log.versions()
 
     def table_id(self) -> str | None:
         """The table's incarnation id: minted at its first commit and
@@ -705,11 +726,10 @@ class SnapshotTable:
         return (self._head()[1] or {}).get("table_id")
 
     def latest_version(self) -> int | None:
-        vs = self.versions()
-        return vs[-1] if vs else None
+        return self._log.latest()
 
     def manifest(self, version: int) -> dict:
-        return json.loads(self.st.read_text(self._manifest_path(version)))
+        return self._log.read(version)
 
     def _head(self) -> _Head:
         """The head snapshot, (latest version, its parsed manifest) —
@@ -747,7 +767,7 @@ class SnapshotTable:
             # vacuum keeps a suffix of versions, so a head whose manifest
             # survives is still the head unless v+1 exists — which the
             # create itself decides; an absent table re-lists (cheap)
-            if i or v is None or not self.st.exists(self._manifest_path(v)):
+            if i or v is None or not self._log.exists(v):
                 v, prev = self._head()  # lost the create: rebase on the winner
             try:
                 if prev is not None:
@@ -972,9 +992,7 @@ class SnapshotTable:
             # Delta's commit timestamps it is informational ordering —
             # version numbers, not clocks, define the table's order
             new["committed_at"] = time.time()
-            if self.st.write_text_atomic(
-                self._manifest_path(new["version"]), json.dumps(new, indent=1)
-            ):
+            if self._log.create(new["version"], json.dumps(new, indent=1)):
                 return new["version"]
         for d in staged:
             self.st.delete(d)
@@ -3998,7 +4016,7 @@ class SnapshotTable:
                 out.append(e)  # foreign layout / unpartitioned: keep whole
                 continue
             kept = [p for p in e["parts"]
-                    if admits(_part_value(p))]
+                    if admits(_part_split(p)[1])]
             if kept:
                 out.append({**e, "parts": kept})
         return out
@@ -4213,8 +4231,20 @@ class SnapshotTable:
         downstream algebraic state (incremental materialized views
         retract the pre-image and apply the post-image) without a
         second time-travel read."""
-        to_v, m1 = (self._head() if to_version is None
-                    else (to_version, self.manifest(to_version)))
+        head = (self._head() if to_version is None
+                else (to_version, self.manifest(to_version)))
+        return self._read_changes(head, from_version, keys, preimages)
+
+    def _read_changes(
+        self,
+        head: _Head,
+        from_version: int,
+        keys: tuple[str, ...] | None = None,
+        preimages: bool = False,
+    ) -> DataFrame:
+        """`read_changes` ending at the resolved snapshot `head`, for a
+        caller that holds it already."""
+        to_v, m1 = head
         if m1 is None:
             raise FileNotFoundError(f"no snapshot at {self.root}")
         check_reader_features(
@@ -4264,14 +4294,7 @@ class SnapshotTable:
         schema = StructType.fromJson(json.loads(m1["schema"]))
         table_cols = [f.name for f in schema.fields]
 
-        def refs(m: dict) -> set[tuple[str, str, str | None]]:
-            out = set()
-            for e in m["entries"]:
-                for p in (e["parts"] or [None]):
-                    out.add((e.get("root") or self.root, e["base"], p))
-            return out
-
-        r0, r1 = refs(m0), refs(m1)
+        r0, r1 = entry_refs(self.root, m0), entry_refs(self.root, m1)
 
         def scan(ref_set: set) -> DataFrame:
             if not ref_set:
@@ -4488,35 +4511,63 @@ class SnapshotTable:
         (the micro-batch CDC consumer shape, without Structured
         Streaming): returns `(changes_df, ack)` where `changes_df` is
         `read_changes(cursor, latest)` and `ack()` advances the cursor
-        file to the polled version — call it only AFTER the changes
-        are durably processed, so a crash mid-processing re-delivers
+        to the polled version — call it only AFTER the changes are
+        durably processed, so a crash mid-processing re-delivers
         (at-least-once; pair with an idempotent apply such as
         run_snapshot_cdc_sink's merge for exactly-once state).
+        Returns `(None, ack)` when there is nothing new.
 
-        The cursor is a tiny JSON file published with the same
-        temp+rename discipline as manifests; `cursor_path` lives
-        outside the table root (each consumer owns one).  Returns
-        `(None, ack)` when there is nothing new."""
+        The cursor lives outside the table root (each consumer owns
+        one) as a version log with one live entry: ack creates
+        `<cursor_path>.v<N>` (put-if-absent, so it lands whole or not
+        at all) and only then deletes the older entries, and a poll
+        takes the highest.  A crash at any point of an ack leaves the
+        old cursor or the new one, never none, so it re-delivers at
+        most the acked window, never the whole history.  A single-file
+        cursor at `cursor_path` (the older format) is still honoured
+        and retired by the next ack.  A cursor at a version `vacuum()`
+        has pruned raises FileNotFoundError: the changes since it can
+        no longer be reconstructed."""
+        return self._poll(cursor_path, None, keys)
+
+    def _poll(self, cursor_path: str, upto: int | None,
+              keys: tuple[str, ...] | None):
+        """The one cursor protocol: `poll_changes` (`upto` None, the
+        head) and `Catalog.poll_published_changes` (`upto` the
+        binding's pin) both deliver `(cursor, upto]`."""
         st = storage_for(cursor_path, self.spark)
-        last = 0
-        if st.exists(cursor_path):
-            last = json.loads(st.read_text(cursor_path))["version"]
-        latest = self.latest_version()
-        if latest is None or latest <= last:
+        parent, base = posixpath.split(cursor_path.rstrip("/"))
+        cur = VersionLog(st, parent, f"{base}.v")
+        last = max(cur.versions(), default=0)
+        if st.exists(cursor_path):  # single-file cursor of older acks
+            last = max(last, json.loads(st.read_text(cursor_path))["version"])
+        vs = self.versions()  # one listing: the head and the retention
+        if upto is None:
+            upto = vs[-1] if vs else None
+        if upto is None or upto <= last:
             return None, (lambda: None)
+        if last and last not in vs:
+            # the changes after `last` went with its manifest (Delta
+            # CDF retention stance): refuse with the catch-up path
+            raise FileNotFoundError(
+                f"cursor at {cursor_path} points at version {last} of the "
+                f"table at {self.root}, which predates the table's vacuum "
+                "retention — incremental changes are no longer "
+                "reconstructable.  Delete the cursor files to restart from "
+                "version 0: the next poll delivers the whole table as inserts"
+            )
 
         def ack() -> None:
-            tmp = f"{cursor_path}.tmp-{uuid.uuid4().hex[:8]}"
-            st.write_text_atomic(tmp, json.dumps({"version": latest}))
-            # HDFS rename refuses an existing destination, so retire the
-            # old cursor first; a crash inside this window only loses the
-            # cursor, which re-delivers from scratch — at-least-once is
-            # preserved, rows are never lost
-            if st.exists(cursor_path):
-                st.delete(cursor_path)
-            st.rename(tmp, cursor_path)
+            # the commit point is this one create (re-acking is a
+            # no-op); what follows is garbage collection
+            cur.create(upto, json.dumps({"version": upto}))
+            cur.drop(v for v in cur.versions() if v < upto)
+            try:
+                st.delete(cursor_path)  # retire a single-file cursor
+            except OSError:
+                pass
 
-        return self.read_changes(last, latest, keys=keys), ack
+        return self._read_changes((upto, self.manifest(upto)), last, keys), ack
 
     def history(self) -> list[dict]:
         """Commit log, newest first (Delta DESCRIBE HISTORY): version,
@@ -4964,24 +5015,17 @@ class SnapshotTable:
         reports what WOULD be removed (Delta VACUUM DRY RUN) without
         touching anything, including the manifests.  `now` injects the
         clock for tests."""
-        vs = self.versions()
+        log = self._log
+        vs = log.versions()
         if not vs:
             return []
         # a vacuum decides which files are DEAD — on a table using a
         # future feature this version cannot interpret, that judgment
         # could delete live data.  Refuse, like everything write-side.
         check_writer_features(
-            self.manifest(vs[-1]), WRITER_FEATURES, "SnapshotTable.vacuum"
+            log.read(vs[-1]), WRITER_FEATURES, "SnapshotTable.vacuum"
         )
-        keep = vs[-keep_versions:]
-        if keep_hours is not None:
-            cutoff = (time.time() if now is None else now) - keep_hours * 3600.0
-            aged_in = [
-                v
-                for v in vs[:-keep_versions]
-                if (self.manifest(v).get("committed_at") or 0) >= cutoff
-            ]
-            keep = sorted(set(aged_in) | set(keep))
+        keep = log.retained(vs, keep_versions, keep_hours, now)
         # Liveness at (snap dir, partition subdir) granularity: a snap
         # dir referenced only through SOME of its col=value parts (the
         # replace_partitions shape) keeps those parts and sheds the
@@ -4991,8 +5035,8 @@ class SnapshotTable:
         live_whole: set[str] = set()       # entries with parts=None
         live_parts: dict[str, set] = {}    # snap name -> live part names
         pcols: set[str] = set()
-        for v in keep:
-            m = self.manifest(v)
+        for v in sorted(keep):
+            m = log.read(v)
             if m.get("partition_col"):
                 pcols.add(m["partition_col"])
             for e in m["entries"]:
@@ -5038,23 +5082,9 @@ class SnapshotTable:
             if not dry_run:
                 self.st.delete(f"{self.root}/{DATA_DIR}/{name}")
             removed.append(f"{DATA_DIR}/{name}")
-        if dry_run:
-            return sorted(removed)
-        kept = set(keep)
-        for v in vs:
-            if v not in kept:
-                self.st.delete(self._manifest_path(v))
-        # manifest-publication temp files orphaned by a committer crash
-        # (versions() never reads them; this is pure tidying) —
-        # AGE-GATED like data dirs: a fresh tmp may belong to a LIVE
-        # committer mid-rename; tmp files live milliseconds, so an
-        # hour-old one is an orphan (unknown age keeps)
-        tmp_cutoff = (time.time() if now is None else now) - 3600.0
-        for name in self.st.list(f"{self.root}/{MANIFEST_DIR}"):
-            if ".tmp-" in name:
-                mt = self.st.mtime(f"{self.root}/{MANIFEST_DIR}/{name}")
-                if mt is not None and mt <= tmp_cutoff:
-                    self.st.delete(f"{self.root}/{MANIFEST_DIR}/{name}")
+        if not dry_run:
+            log.drop(v for v in vs if v not in keep)
+            log.sweep(now)
         return sorted(removed)
 
 

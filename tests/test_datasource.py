@@ -268,6 +268,30 @@ def test_batch_format_honors_deletion_vectors(reg, spark, tmp_path):
     assert got == native
 
 
+def test_format_unescapes_partition_values(reg, spark, tmp_path):
+    """Spark escapes partition dir names (`a:b` is written `p=a%3Ab`,
+    NULL as `__HIVE_DEFAULT_PARTITION__`): batch and stream reads
+    through the format serve the values `SnapshotTable.read()` does."""
+    root = str(tmp_path / "t")
+    t = SnapshotTable(spark, root)
+    t.overwrite(spark.createDataFrame(
+        [(1, "a:b"), (2, "plain"), (3, None)], "k long, p string"),
+        partition_col="p")
+    native = sorted(((r["k"], r["p"]) for r in t.read().collect()))
+    assert native == [(1, "a:b"), (2, "plain"), (3, None)]
+    q = (
+        spark.readStream.format("snapshot_table").load(root)
+        .writeStream.format("memory").queryName("esc_tail")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    for df in (spark.read.format("snapshot_table").load(root),
+               spark.sql("select * from esc_tail")):
+        assert sorted((r["k"], r["p"]) for r in df.collect()) == native
+
+
 def test_batch_format_honors_column_mapping(reg, spark, tmp_path):
     """Renamed columns surface under their logical names (not nulls),
     dropped columns disappear."""

@@ -4,7 +4,7 @@ the write paths that route through them, and the ledger precondition.
 The Hadoop backend is exercised on file:// URIs — Spark's bundled
 LocalFileSystem resolves through the identical scheme->FileSystem
 lookup an hdfs:// or s3a:// path would take, so the JVM round-trip,
-Path handling, and rename/delete/list semantics are the real code
+Path handling, and create/delete/list semantics are the real code
 path, just on local disk.
 """
 
@@ -26,18 +26,15 @@ from pixelspark.storage import (
 
 def _contract(st, base: str) -> None:
     """The ops every backend must get right, run against `base`."""
-    a, b = f"{base}/a", f"{base}/b"
+    a = f"{base}/a"
     assert not st.exists(a)
-    st.mkdirs(f"{a}/sub")
+    assert st.write_text_atomic(f"{a}/sub/f.json", "{}")  # creates parents
     assert st.exists(a)
     assert st.list(a) == ["sub"]
     assert not st.has_parquet(a)
-    st.rename(a, b)
-    assert not st.exists(a) and st.exists(b)
-    assert st.list(b) == ["sub"]
-    st.delete(b)
-    assert not st.exists(b)
-    assert st.list(b) == []  # missing dir lists empty, never raises
+    st.delete(a)
+    assert not st.exists(a)
+    assert st.list(a) == []  # missing dir lists empty, never raises
 
 
 def test_local_storage_contract(tmp_path):
@@ -144,17 +141,6 @@ def test_ledger_precondition_rejects_unknown_scheme(tmp_path):
             ledger_precondition(uri)
     # file:// and scheme-less still pass the probe
     ledger_precondition(f"file://{tmp_path}/ledger2")
-
-
-def test_local_rename_bare_relative_dst(tmp_path, monkeypatch):
-    """A bare relative destination has an empty dirname; rename must
-    not call os.makedirs('') (FileNotFoundError)."""
-    from pixelspark.storage import LocalStorage
-
-    monkeypatch.chdir(tmp_path)
-    os.makedirs("srcdir")
-    LocalStorage().rename("srcdir", "dstdir")
-    assert os.path.isdir("dstdir") and not os.path.exists("srcdir")
 
 
 def test_snapshot_commit_swap_on_hadoop_backend(spark, tmp_path):

@@ -240,7 +240,7 @@ def test_commit_metadata_cost_is_flat_in_table_age(spark, tmp_path):
     """Each public write resolves the table head once and hands it down:
     `append`, a fresh and a replayed `append_once`, a dv `merge` and a
     rewrite `delete` each cost one manifest read and one `_manifests/`
-    listing, a matview refresh at most five reads — and every count is
+    listing, a matview refresh at most four reads — and every count is
     the same on a 1-version table as on a 200-version one."""
     from pixelspark.ops import matview as MV
 
@@ -279,7 +279,7 @@ def test_commit_metadata_cost_is_flat_in_table_age(spark, tmp_path):
     for op in ("append", "append_once", "append_once replay", "dv merge",
                "delete"):
         assert fresh[op] == (1, 1), (op, fresh[op])
-    assert fresh["refresh"][0] <= 5, fresh["refresh"]
+    assert fresh["refresh"][0] <= 4, fresh["refresh"]
     assert aged == fresh
 
 
@@ -1418,6 +1418,80 @@ def test_poll_changes_at_least_once_cursor(spark, tbl, tmp_path):
     assert [r["k"] for r in ch3.collect()] == [2]  # only the new commit
     ack3()
     assert tbl.poll_changes(cursor)[0] is None
+
+
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("crash_at", range(6))
+def test_poll_changes_ack_is_crash_atomic(spark, tbl, tmp_path, monkeypatch,
+                                          crash_at):
+    """A crash at any storage call of an ack leaves the old cursor or
+    the new one: the next poll re-delivers at most the acked window,
+    never the whole history from version 0."""
+    cursor = str(tmp_path / "consumer.cursor")
+    tbl.append(_df(spark, [(1, "a")]))
+    tbl.poll_changes(cursor)[1]()
+    tbl.append(_df(spark, [(2, "b")]))
+    ch, ack = tbl.poll_changes(cursor)
+    assert [r["k"] for r in ch.collect()] == [2]
+    calls = []
+    for name, fn in list(vars(LocalStorage).items()):
+        if callable(fn) and not name.startswith("_"):
+            def crashing(self, *args, _fn=fn, **kwargs):
+                calls.append(_fn.__name__)
+                if len(calls) > crash_at:
+                    raise _Crash
+                return _fn(self, *args, **kwargs)
+
+            monkeypatch.setattr(LocalStorage, name, crashing)
+    try:
+        ack()
+    except _Crash:
+        pass
+    monkeypatch.undo()
+    again, _ = tbl.poll_changes(cursor)
+    got = [] if again is None else [r["k"] for r in again.collect()]
+    assert got in ([], [2]), (calls, got)
+
+
+def test_poll_changes_honours_single_file_cursor(spark, tbl, tmp_path):
+    """A cursor in the older single-file format (`{"version": N}` at
+    the cursor path itself) is honoured, and the next ack replaces it
+    with a versioned one."""
+    cursor = str(tmp_path / "consumer.cursor")
+    tbl.append(_df(spark, [(1, "a")]))
+    tbl.append(_df(spark, [(2, "b")]))
+    with open(cursor, "w", encoding="utf-8") as f:
+        json.dump({"version": 1}, f)
+    ch, ack = tbl.poll_changes(cursor)
+    assert [r["k"] for r in ch.collect()] == [2]
+    ack()
+    assert sorted(n for n in os.listdir(tmp_path) if n.startswith("consumer")) == [
+        "consumer.cursor.v2"]
+    assert tbl.poll_changes(cursor)[0] is None
+
+
+def test_poll_changes_refuses_cursor_below_vacuum_retention(spark, tbl, tmp_path):
+    """The changes after a cursor's version go with its manifest: once
+    vacuum prunes it, the poll refuses instead of mis-delivering."""
+    cursor = str(tmp_path / "consumer.cursor")
+    tbl.append(_df(spark, [(1, "a")]))
+    tbl.poll_changes(cursor)[1]()  # cursor at v1
+    tbl.append(_df(spark, [(2, "b")]))
+    tbl.append(_df(spark, [(3, "c")]))
+    tbl.vacuum(keep_versions=1)
+    with pytest.raises(FileNotFoundError, match="vacuum retention"):
+        tbl.poll_changes(cursor)
+
+
+def test_vacuum_keep_versions_zero_keeps_newest_manifest(spark, tbl):
+    for k in (1, 2, 3):
+        tbl.append(_df(spark, [(k, "x")]))
+    tbl.vacuum(keep_versions=0)
+    assert tbl.versions() == [3]
+    assert sorted(r["k"] for r in tbl.read().collect()) == [1, 2, 3]
 
 
 def test_merge_rejects_duplicate_source_keys(spark, tbl):
